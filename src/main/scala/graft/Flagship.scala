@@ -40,19 +40,23 @@ object Flagship {
     WebPages.benchZones(spark, NZones).write.mode("overwrite").parquet(s"$dir-zones")
   }
 
+  /** the variants [[run]] accepts */
+  val Variants = Seq("jtsfast", "box")
+
   /** One flagship pass over materialized input; returns the result count.
-    * Variants: "jtsfast" (default — primitive-arg probe into a per-thread
-    * cached STRtree of prepared 32-gon polygons, plan stays in whole-stage
-    * codegen), "jts" (mapPartitions row path), "box" (pure-arithmetic
-    * envelope refine). */
+    * Variants: "jtsfast" (default — the broadcast [[graft.ops.PipIndex]]
+    * probe over 32-gon polygons, exact packed-ring test, plan stays in
+    * whole-stage codegen), "box" (pure-arithmetic envelope refine). */
   def run(spark: SparkSession, dir: String, variant: String = "jtsfast"): Long = {
     import spark.implicits._
+    require(Variants.contains(variant),
+      s"unknown flagship variant '$variant'; valid variants: ${Variants.mkString(", ")}")
     val feats = spark.read.parquet(dir)
     val joined = variant match {
       case "box" =>
         val zones = spark.read.parquet(s"$dir-zones")
         SpatialJoins.pointInBox(feats, zones, ci, Level, broadcastBoxes = true)
-      case "jts" | "jtsfast" =>
+      case "jtsfast" =>
         // 32-gon zones inflated 3×: ~1 candidate per point — the
         // compute-dense realistic shape (complex polygon layers), not a
         // bandwidth microbench
@@ -71,10 +75,7 @@ object Flagship {
             (r.getLong(0),
               graft.geo.JtsGeo.toWkb(graft.geo.JtsGeo.factory.createPolygon(coords)))
           }.toDF("poly_id", "wkb")
-        if (variant == "jtsfast")
-          SpatialJoins.pointInPolygonBroadcastFast(feats.select("x", "y"), zones)
-        else
-          SpatialJoins.pointInPolygonBroadcast(feats.select("x", "y"), zones)
+        SpatialJoins.pointInPolygonBroadcastFast(feats.select("x", "y"), zones)
     }
     joined
       .withColumn("tile_id", ci.encodeCol(col("x"), col("y"), Level))

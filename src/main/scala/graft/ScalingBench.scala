@@ -161,7 +161,7 @@ object ScalingBench {
 
     case "bench" =>
       val (cores, dir) = (args(1).toInt, args(2))
-      val variant = if (args.length > 3) args(3) else "jts"
+      val variant = if (args.length > 3) args(3) else "jtsfast"
       val trials = if (args.length > 4) args(4).toInt else 2
       val spark = session(cores)
       spark.sparkContext.setLogLevel("WARN")

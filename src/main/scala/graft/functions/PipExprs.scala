@@ -1,36 +1,29 @@
 package graft.functions
 
-import graft.ops.PipTreeCache
+import graft.ops.PipIndex
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** kernel wrapper for the broadcast-STRtree point-in-polygon probe —
-  * delegates to [[PipTreeCache.probe]] (per-thread prepared trees,
-  * thread-confined probe state) */
-final class PipProbeKernel(bcId: Long, bc: Broadcast[Array[(Long, Array[Byte])]])
-  extends Serializable {
-  def apply(x: Double, y: Double): GenericArrayData =
-    new GenericArrayData(PipTreeCache.probe(bcId, bc, x, y))
+/** probe kernel: reads the broadcast [[PipIndex]] once per copy, i.e. per task */
+final class PipProbeKernel(bc: Broadcast[PipIndex]) extends Serializable {
+  @transient private lazy val index = bc.value
+  def apply(x: Double, y: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(index.covering(x, y))
 }
 
-/** The flagship PIP probe as a native expression (round 6): the round-5
-  * spelling was a ScalaUDF, which keeps whole-stage codegen but pays
-  * Double boxing on both arguments and a Catalyst converter on the
-  * returned id array — per scanned row, i.e. 80 M times per flagship
-  * pass. This expression receives PRIMITIVE doubles in generated code
-  * and returns ArrayData directly; the probe kernel itself is unchanged
-  * ([[PipTreeCache.probe]]), so hit sets are identical. */
-case class PipProbe(left: Expression, right: Expression,
-                    bcId: Long, bc: Broadcast[Array[(Long, Array[Byte])]])
+/** The flagship PIP probe as a native expression: generated code passes
+  * PRIMITIVE doubles (a ScalaUDF boxed both per scanned row) and gets the
+  * covering ids of [[PipIndex.covering]] as unboxed array data. */
+case class PipProbe(left: Expression, right: Expression, bc: Broadcast[PipIndex])
   extends BinaryExpression {
 
-  @transient private lazy val kernel = new PipProbeKernel(bcId, bc)
+  @transient private lazy val kernel = new PipProbeKernel(bc)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -46,8 +39,7 @@ case class PipProbe(left: Expression, right: Expression,
     kernel.apply(a.asInstanceOf[Double], b.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kern = ctx.addReferenceObj("pipKern", new PipProbeKernel(bcId, bc),
-      classOf[PipProbeKernel].getName)
+    val kern = ctx.addReferenceObj("pipKern", new PipProbeKernel(bc), classOf[PipProbeKernel].getName)
     nullSafeCodeGen(ctx, ev, (x, y) => s"${ev.value} = $kern.apply($x, $y);")
   }
 
@@ -57,8 +49,7 @@ case class PipProbe(left: Expression, right: Expression,
 }
 
 object PipExprs {
-  /** matching poly ids of a point against the broadcast prepared-STRtree */
-  def pipProbe(x: Column, y: Column, bcId: Long,
-               bc: Broadcast[Array[(Long, Array[Byte])]]): Column =
-    Bridge.column(PipProbe(Bridge.expression(x), Bridge.expression(y), bcId, bc))
+  /** ids of the polygons of the broadcast index that cover the point */
+  def pipProbe(x: Column, y: Column, bc: Broadcast[PipIndex]): Column =
+    Bridge.column(PipProbe(Bridge.expression(x), Bridge.expression(y), bc))
 }

@@ -1,7 +1,6 @@
 package graft.geo
 
 import org.locationtech.jts.geom._
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.geom.util.GeometryFixer
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 import org.locationtech.jts.operation.union.UnaryUnionOp
@@ -37,8 +36,6 @@ object JtsGeo {
   def toWkb(g: Geometry): Array[Byte] = wkbW.get.write(g)
   def fromWkt(s: String): Geometry = wktR.get.read(s)
   def toWkt(g: Geometry): String = wktW.get.write(g)
-
-  def prepare(g: Geometry): PreparedGeometry = PreparedGeometryFactory.prepare(g)
 
   def point(x: Double, y: Double): Point = factory.createPoint(new Coordinate(x, y))
 

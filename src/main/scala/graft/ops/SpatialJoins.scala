@@ -1,13 +1,8 @@
 package graft.ops
 
-import graft.geo.{CellIndex, JtsGeo}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.geo.CellIndex
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.locationtech.jts.geom.prep.PreparedGeometry
-import org.locationtech.jts.index.strtree.STRtree
-
-import scala.jdk.CollectionConverters._
 
 /** Cell-grid spatial joins (SURVEY.md §2.3 J1/J7, §4.1-2).
   *
@@ -22,12 +17,10 @@ import scala.jdk.CollectionConverters._
   * over its covering cells, so each qualifying pair appears exactly once —
   * no post-join dedup (and no extra shuffle for it).
   *
-  * Refine paths:
-  *  - pure-arithmetic for boxes (whole-stage codegen, zero JTS),
-  *  - per-partition JTS with prepared-geometry cache for real polygons,
-  *  - broadcast STRtree (`pointInPolygonBroadcast`) when the polygon side
-  *    fits on one executor — the "broadcast-or-partitioned" pair the
-  *    north_star names.
+  * Refine paths: pure arithmetic for boxes (whole-stage codegen, zero JTS),
+  * and the exact [[PipIndex]] test for polygons in the two arms the north_star
+  * names: partitioned (`pointInPolygon`, both sides shuffled by cell) and
+  * broadcast (`pointInPolygonBroadcastFast`, one driver-built index).
   */
 object SpatialJoins {
 
@@ -51,9 +44,8 @@ object SpatialJoins {
 
   /** Point-in-polygon with partitioned refine. `polys` carries
     * (`poly_id`:long, `wkb`:binary, `xmin`,`ymin`,`xmax`,`ymax`). Output:
-    * point columns + `poly_id`. The equi-join shuffles both sides by cell;
-    * refine parses each polygon once per task (keyed cache of prepared
-    * geometries) — the partitioned arm for when neither side broadcasts. */
+    * point columns + `poly_id`. The equi-join shuffles both sides by cell; refine packs
+    * each polygon once per task into a grid-less [[PipIndex]] (too few probes for a grid). */
   def pointInPolygon(points: DataFrame, polys: DataFrame, ci: CellIndex, level: Int): DataFrame = {
     val p = points.withColumn("_cell", ci.encodeCol(col("x"), col("y"), level))
     val b = polys
@@ -61,102 +53,26 @@ object SpatialJoins {
         explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level)))
       .select(col("_cell"), col("poly_id"), col("wkb"))
     val joined = p.join(b, "_cell").drop("_cell")
-
-    val outSchema = StructType(joined.schema.filterNot(f => f.name == "wkb"))
-    val xI = joined.schema.fieldIndex("x"); val yI = joined.schema.fieldIndex("y")
-    val wI = joined.schema.fieldIndex("wkb"); val idI = joined.schema.fieldIndex("poly_id")
-    val keep = joined.schema.indices.filterNot(_ == wI)
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
+    val Seq(xI, yI, idI, wI) = Seq("x", "y", "poly_id", "wkb").map(joined.schema.fieldIndex)
     joined.mapPartitions { it =>
-      val cache = new java.util.HashMap[Long, PreparedGeometry]()
+      val packed = new java.util.HashMap[Long, PipIndex]()
       it.filter { r =>
-        val pg = cache.computeIfAbsent(r.getLong(idI),
-          _ => JtsGeo.prepare(JtsGeo.fromWkb(r.getAs[Array[Byte]](wI))))
-        pg.covers(JtsGeo.point(r.getDouble(xI), r.getDouble(yI)))
-      }.map(r => Row.fromSeq(keep.map(r.get)))
-    }
+        val id = r.getLong(idI)
+        packed.computeIfAbsent(id, _ => PipIndex.fromWkb(Array((id, r.getAs[Array[Byte]](wI))), cells = false))
+          .covering(r.getDouble(xI), r.getDouble(yI)).nonEmpty
+      }
+    }(org.apache.spark.sql.Encoders.row(joined.schema)).drop("wkb")
   }
 
-  /** Point-in-polygon with the polygon side broadcast and an STRtree probed
-    * per partition — no shuffle of the point side at all. Preferred when the
-    * polygon layer is a dim-table (tile layers, zone layers).
-    *
-    * Hot-loop discipline (this is the 100 TB fast path): the probe point and
-    * its envelope are reused across rows (`geometryChanged()` resets cached
-    * envelopes), tree hits go through an `ItemVisitor` (no per-row ArrayList),
-    * and output rows are built from positional arrays — per-row garbage is
-    * a single small array, which is what lets 32 allocating threads scale. */
-  def pointInPolygonBroadcast(points: DataFrame, polys: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    val polyRows = polys.select("poly_id", "wkb").collect()
-    val bc = spark.sparkContext.broadcast(polyRows.map(r =>
-      (r.getLong(0), r.getAs[Array[Byte]](1))))
-
-    val outSchema = points.schema.add("poly_id", LongType, nullable = false)
-    val n = points.schema.length
-    val xI = points.schema.fieldIndex("x"); val yI = points.schema.fieldIndex("y")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    points.mapPartitions { it =>
-      val tree = new STRtree()
-      bc.value.foreach { case (id, wkb) =>
-        val g = JtsGeo.fromWkb(wkb)
-        tree.insert(g.getEnvelopeInternal, (id, JtsGeo.prepare(g)))
-      }
-      if (bc.value.nonEmpty) tree.build()
-      val coord = new org.locationtech.jts.geom.Coordinate(0, 0)
-      val pt = JtsGeo.factory.createPoint(coord)
-      val env = new org.locationtech.jts.geom.Envelope()
-      val hits = new java.util.ArrayList[Long](4)
-      val visitor = new org.locationtech.jts.index.ItemVisitor {
-        override def visitItem(item: AnyRef): Unit = {
-          val (id, pg) = item.asInstanceOf[(Long, PreparedGeometry)]
-          if (pg.covers(pt)) hits.add(id)
-        }
-      }
-      it.flatMap { r =>
-        coord.x = r.getDouble(xI); coord.y = r.getDouble(yI)
-        pt.geometryChanged()
-        env.init(coord.x, coord.x, coord.y, coord.y)
-        hits.clear()
-        tree.query(env, visitor)
-        if (hits.isEmpty) Iterator.empty
-        else {
-          // materialize eagerly: `hits` and the upstream row are reused
-          // buffers — deferred access would read the next row's state
-          val m = hits.size
-          val out = new Array[Row](m)
-          var k = 0
-          while (k < m) {
-            val arr = new Array[Any](n + 1)
-            var i = 0
-            while (i < n) { arr(i) = r.get(i); i += 1 }
-            arr(n) = hits.get(k)
-            out(k) = Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-            k += 1
-          }
-          out.iterator
-        }
-      }
-    }
-  }
-
-  /** Fast-path broadcast PIP: a primitive-arg function probes a
-    * per-executor cached STRtree and returns the matching poly ids; the
-    * surrounding plan (scan → explode → aggregate) stays in whole-stage
-    * codegen, so per-row garbage is one small array on hit and a shared
-    * empty array on miss — ~3× less allocation churn than the
-    * `mapPartitions` row-codec path, which is what the 100 TB scan feeds.
-    * Output: point columns + `poly_id`. */
+  /** Point-in-polygon with the polygon side built into one [[PipIndex]] on
+    * the driver and broadcast; the native `PipProbe` reads it once per task,
+    * so the plan stays in whole-stage codegen and the point side is never
+    * shuffled. For dim-table layers (tiles, zones). Output: point columns +
+    * `poly_id`. */
   def pointInPolygonBroadcastFast(points: DataFrame, polys: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    val polyRows = polys.select("poly_id", "wkb").collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-    val bc = spark.sparkContext.broadcast(polyRows)
-    // native expression (round 6): primitive-double args straight from the
-    // columnar scan into the probe — the previous ScalaUDF boxed both
-    // coordinates and converter-copied the result array per scanned row
-    points.withColumn("poly_id",
-      explode(graft.functions.PipExprs.pipProbe(col("x"), col("y"), bc.id, bc)))
+    val rows = polys.select("poly_id", "wkb").collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
+    val bc = points.sparkSession.sparkContext.broadcast(PipIndex.fromWkb(rows))
+    points.withColumn("poly_id", explode(graft.functions.PipExprs.pipProbe(col("x"), col("y"), bc)))
   }
 
   /** Skew-aware point-in-box (north_rule "salted repartitioning + adaptive

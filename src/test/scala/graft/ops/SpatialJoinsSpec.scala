@@ -1,11 +1,15 @@
 package graft.ops
 
-import graft.SparkSpec
-import graft.geo.CellIndex
+import graft.{PropHelpers, SparkSpec}
+import graft.geo.{CellIndex, JtsGeo}
 import graft.io.WebPages
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.{Coordinate, Geometry, Polygon}
+import org.locationtech.jts.geom.prep.PreparedGeometryFactory
+import org.scalacheck.Gen
 
-class SpatialJoinsSpec extends SparkSpec {
+class SpatialJoinsSpec extends SparkSpec with PropHelpers {
   lazy val ci = CellIndex.Unit20
 
   lazy val pages = WebPages.pages(spark, 2000, 8)
@@ -55,20 +59,144 @@ class SpatialJoinsSpec extends SparkSpec {
     assert(got == closed)
   }
 
-  test("pointInPolygonBroadcast matches the partitioned path") {
-    val a = SpatialJoins.pointInPolygon(pts, zones, ci, 5)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = SpatialJoins.pointInPolygonBroadcast(pts, zones)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b && a.nonEmpty)
+  /** JTS `PreparedGeometry.covers` by brute force: the oracle for both arms */
+  private def jtsCovers(pts: Seq[(Long, Double, Double)], polys: Seq[(Long, Geometry)]): Set[(Long, Long)] = {
+    val prepared = polys.map { case (id, g) => (id, PreparedGeometryFactory.prepare(g)) }
+    (for ((pid, x, y) <- pts; (id, pg) <- prepared if pg.covers(JtsGeo.point(x, y))) yield (pid, id)).toSet
   }
 
-  test("pointInPolygonBroadcastFast (codegen probe) matches the row path") {
-    val a = SpatialJoins.pointInPolygonBroadcast(pts, zones)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = SpatialJoins.pointInPolygonBroadcastFast(pts, zones)
-      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b && b.nonEmpty)
+  private def layer(polys: Seq[(Long, Geometry)]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    polys.map { case (id, g) =>
+      val e = g.getEnvelopeInternal
+      (id, JtsGeo.toWkb(g), e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
+    }.toDF("poly_id", "wkb", "xmin", "ymin", "xmax", "ymax")
+  }
+
+  /** (partitioned, broadcast) hit pairs */
+  private def bothArms(pts: Seq[(Long, Double, Double)],
+                       polys: Seq[(Long, Geometry)]): (Set[(Long, Long)], Set[(Long, Long)]) = {
+    val s = spark
+    import s.implicits._
+    val (p, l) = (pts.toDF("pid", "x", "y"), layer(polys))
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val rows = df.select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.length == rows.toSet.size, "duplicate pair emission")
+      rows.toSet
+    }
+    (pairs(SpatialJoins.pointInPolygon(p, l, ci, 15)), pairs(SpatialJoins.pointInPolygonBroadcastFast(p, l)))
+  }
+
+  /** vertices, edge midpoints and thirds of every ring */
+  private def ringPoints(g: Geometry): Seq[(Double, Double)] =
+    (0 until g.getNumGeometries).flatMap { i =>
+      val p = g.getGeometryN(i).asInstanceOf[Polygon]
+      (p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)).flatMap { r =>
+        r.getCoordinates.sliding(2).flatMap { case Array(a, b) =>
+          Seq(0.0, 1.0 / 3, 0.5, 2.0 / 3).map(t => (a.x + (b.x - a.x) * t, a.y + (b.y - a.y) * t))
+        }
+      }
+    }
+
+  test("both PIP arms equal JTS covers on vertices, edges, holes, multipolygons and rectangles") {
+    val polys: Seq[(Long, Geometry)] = Seq(
+      1L -> JtsGeo.box(1000, 1000, 1010, 1020), // JTS's isRectangle shortcut
+      2L -> JtsGeo.fromWkt("POLYGON ((1100 1000, 1140 1000, 1140 1040, 1120 1050, 1100 1040, 1100 1000), " +
+        "(1110 1010, 1110 1030, 1130 1030, 1130 1010, 1110 1010))"),
+      3L -> JtsGeo.fromWkt("MULTIPOLYGON (((1200 1000, 1230 1000, 1215 1025, 1200 1000)), " +
+        "((1240 1000, 1270 1000, 1270 1030, 1260 1030, 1260 1010, 1250 1010, 1250 1030, 1240 1030, 1240 1000)))"),
+      4L -> JtsGeo.fromWkt("POLYGON ((1300.5 1000.25, 1330.75 1010.5, 1320.125 1040.875, 1295.3 1030.1, 1300.5 1000.25))"),
+      5L -> JtsGeo.box(1005, 1005, 1050, 1015), // overlaps 1: two hits per point
+      // invalid: holes reaching past the shell, which alone bounds JTS's envelope
+      6L -> JtsGeo.fromWkt("POLYGON ((1400 1000, 1420 1000, 1420 1020, 1400 1020, 1400 1000), " +
+        "(1410 1005, 1430 1005, 1430 1015, 1410 1015, 1410 1005), (1435 1000, 1455 1000, 1455 1020, 1435 1000))"),
+      7L -> JtsGeo.fromWkt("POLYGON ((1500 1010, 1510 1000, 1520 1010, 1510 1020, 1500 1010), " +
+        "(1515 1001, 1530 1001, 1530 1019, 1515 1019, 1515 1001))"),
+      8L -> JtsGeo.box(1540, 990, 1550, 1030)) // widens the grid past 6 and 7
+    val onRings = polys.flatMap { case (_, g) => ringPoints(g) }
+    val lattice = for (x <- 995 to 1555; y <- 985 to 1055) yield (x.toDouble, y.toDouble)
+    val offLattice = lattice.map { case (x, y) => (x + 0.5, y + 0.25) }
+    val nudged = onRings.flatMap { case (x, y) => Seq((math.nextUp(x), y), (x, math.nextDown(y))) }
+    val pts = (onRings ++ lattice ++ offLattice ++ nudged).zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val want = jtsCovers(pts, polys)
+    val (part, bcast) = bothArms(pts, polys)
+    assert(part == want)
+    assert(bcast == want)
+    // every case is exercised: holes and gaps reject, rings and overlaps hit
+    assert(want.map(_._2) == (1L to 8L).toSet)
+    assert(!want.contains((pts.find(p => p._2 == 1120.0 && p._3 == 1020.0).get._1, 2L)))
+  }
+
+  test("property: both PIP arms equal JTS covers over random valid polygons") {
+    val polys = scala.collection.mutable.ArrayBuffer.empty[(Long, Geometry)]
+    val pts = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double)]
+    forAll(Gen.choose(0L, Long.MaxValue), Gen.choose(4, 24), Gen.oneOf(true, false), Gen.choose(0, 2)) {
+      (seed, nv, integral, kind) =>
+        val rnd = new scala.util.Random(seed)
+        val k = polys.length
+        // centres 70 apart, radii up to 60: neighbours overlap
+        val (cx, cy) = (5000.0 + (k % 10) * 70, 5000.0 + (k / 10) * 70)
+        def round(v: Double) = if (integral) math.rint(v) else v
+        def star(x0: Double, y0: Double, n: Int, r0: Double, r1: Double, ccw: Boolean) = {
+          val cs = (0 until n).map { i =>
+            val a = 2 * math.Pi * (i + 0.1 + 0.8 * rnd.nextDouble()) / n * (if (ccw) 1 else -1)
+            val r = r0 + (r1 - r0) * rnd.nextDouble()
+            new Coordinate(round(x0 + r * math.cos(a)), round(y0 + r * math.sin(a)))
+          }
+          JtsGeo.factory.createLinearRing((cs :+ cs.head.copy()).toArray)
+        }
+        val shell = star(cx, cy, nv, 30, 60, ccw = true)
+        val poly =
+          if (kind == 1 && nv >= 8) JtsGeo.factory.createPolygon(shell, Array(star(cx, cy, 8, 6, 15, ccw = false)))
+          else JtsGeo.factory.createPolygon(shell)
+        val g: Geometry =
+          if (kind == 2) JtsGeo.factory.createMultiPolygon(Array(poly,
+            JtsGeo.factory.createPolygon(star(cx + 140, cy, nv, 10, 25, ccw = true))))
+          else poly
+        if (g.isValid) {
+          polys += (k.toLong -> g)
+          val e = g.getEnvelopeInternal
+          val inBox = Seq.fill(40)((round(e.getMinX - 2 + (e.getWidth + 4) * rnd.nextDouble()),
+            round(e.getMinY - 2 + (e.getHeight + 4) * rnd.nextDouble())))
+          (ringPoints(g) ++ inBox).foreach { case (x, y) => pts += ((pts.length.toLong, x, y)) }
+        }
+    }
+    assert(polys.length >= 60, s"only ${polys.length} valid polygons")
+    val want = jtsCovers(pts.toSeq, polys.toSeq)
+    val (part, bcast) = bothArms(pts.toSeq, polys.toSeq)
+    assert(part == want)
+    assert(bcast == want)
+  }
+
+  test("a non-areal geometry in the polygon layer raises IllegalArgumentException naming its poly_id") {
+    val s = spark
+    import s.implicits._
+    val pts = Seq((0L, 1005.0, 1005.0)).toDF("pid", "x", "y")
+    for (bad <- Seq(JtsGeo.point(1005, 1005), JtsGeo.fromWkt("LINESTRING (1000 1000, 1010 1010)"))) {
+      val polys = layer(Seq(1L -> JtsGeo.box(1000, 1000, 1010, 1010), 7L -> bad))
+      val e = intercept[IllegalArgumentException](SpatialJoins.pointInPolygonBroadcastFast(pts, polys))
+      assert(e.getMessage.contains("poly_id 7"))
+      // the partitioned arm packs polygons in its tasks: the task's error is the cause
+      val t = intercept[Exception](SpatialJoins.pointInPolygon(pts, polys, ci, 15).collect())
+      val iae = Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i }
+      assert(iae.exists(_.getMessage.contains("poly_id 7")), t)
+    }
+  }
+
+  test("an empty polygon layer gives an empty result in both PIP arms") {
+    val (part, bcast) = bothArms(Seq((0L, 1005.0, 1005.0), (1L, 0.0, 0.0)), Seq.empty)
+    assert(part.isEmpty && bcast.isEmpty)
+  }
+
+  test("a NaN coordinate gives no hit in both PIP arms") {
+    val polys = Seq(1L -> JtsGeo.box(0, 0, 4096, 4096), 2L -> JtsGeo.box(1000, 1000, 1010, 1010))
+    val nan = Double.NaN
+    val pts = Seq((0L, nan, 1005.0), (1L, 1005.0, nan), (2L, nan, nan), (3L, 1005.0, 1005.0))
+    val (part, bcast) = bothArms(pts, polys)
+    assert(part == Set((3L, 1L), (3L, 2L)))
+    assert(bcast == part)
   }
 
   test("pointInBoxSalted output is identical to pointInBox under heavy skew") {
