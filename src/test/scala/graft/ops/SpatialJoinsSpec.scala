@@ -59,6 +59,14 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
     assert(got == closed)
   }
 
+  test("pointInPolygonBroadcast matches the partitioned path") {
+    val a = SpatialJoins.pointInPolygon(pts, zones, ci, 5)
+      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val b = SpatialJoins.pointInPolygonBroadcastFast(pts, zones)
+      .select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(a == b && a.nonEmpty)
+  }
+
   /** JTS `PreparedGeometry.covers` by brute force: the oracle for both arms */
   private def jtsCovers(pts: Seq[(Long, Double, Double)], polys: Seq[(Long, Geometry)]): Set[(Long, Long)] = {
     val prepared = polys.map { case (id, g) => (id, PreparedGeometryFactory.prepare(g)) }
