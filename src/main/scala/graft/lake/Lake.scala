@@ -1,10 +1,15 @@
 package graft.lake
 
+import java.util.UUID
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, NumericType, StructType}
 
-import scala.util.Try
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-emulation table layer (SURVEY.md §4.6, S9, O9). No Iceberg jar
   * exists in the offline sandbox, so the engine provides the same contract
@@ -12,139 +17,133 @@ import scala.util.Try
   * Iceberg catalog can adopt the data files unchanged outside the sandbox:
   *
   * {{{
-  *   <root>/<table>/data/snap-<id>/part-*.parquet   — immutable snapshot data
-  *   <root>/<table>/_meta/snap-<id>.json            — manifest: rows, stats
-  *   <root>/_lineage/                               — per-stage metrics rows
-  *   <root>/_checkpoints/                           — completed-stage marks
+  *   <root>/<table>/data/snap-<id>-<uuid>/part-*.parquet — snapshot data, written once
+  *   <root>/<table>/_meta/snap-<id>.json                 — manifest: the commit point
   * }}}
   *
-  * Capabilities the north_rule names:
-  *  - snapshot append + time-travel read (`asOf`),
-  *  - per-snapshot min/max column stats → snapshot pruning on read,
-  *  - per-partition lineage metrics (rows/bytes) for every stage,
-  *  - checkpointed, idempotent, resumable stages (`runStage` skips work whose
-  *    snapshot already exists — the reference's resume() rescans output dirs,
-  *    batch_geojson2coco.py:40-64).
+  * A snapshot exists iff its manifest does: the manifest (data directory,
+  * rows, bytes, wall time, per-partition rows and bytes, schema, stats) is
+  * written to a temp file and renamed into `_meta/`, and that rename is the
+  * commit (the single commit point of Delta Lake's log, VLDB 2020). A crash
+  * before it leaves an orphan directory and temp file that no reader lists.
+  *
+  * It gives snapshot append, time-travel reads (`asOf`), min/max stats →
+  * snapshot pruning, per-partition lineage of every stage, and resumable
+  * stages: `runStage` reads a committed stage back instead of recomputing it
+  * (the reference's resume() rescans output dirs, batch_geojson2coco.py:40-64).
   */
 final class Lake(val root: String, spark: SparkSession) {
 
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs = new Path(root).getFileSystem(conf)
+  private val json = new ObjectMapper()
 
   private def metaDir(table: String) = new Path(s"$root/$table/_meta")
-  private def dataDir(table: String, snap: Long) = s"$root/$table/data/snap-$snap"
+  private def ls(dir: String): Seq[Path] =
+    Seq(new Path(dir)).filter(fs.exists).flatMap(p => fs.listStatus(p).map(_.getPath))
 
-  // ---------- snapshots ----------
+  private val Manifest = """snap-(\d+)\.json""".r
+  def snapshotIds(table: String): Seq[Long] =
+    ls(s"$root/$table/_meta").map(_.getName).collect { case Manifest(n) => n.toLong }.sorted
 
-  def snapshotIds(table: String): Seq[Long] = {
-    val dir = metaDir(table)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case s if s.startsWith("snap-") && s.endsWith(".json") =>
-        s.stripPrefix("snap-").stripSuffix(".json").toLong
-      }.sorted.toSeq
-  }
-
-  /** Append `df` as a new immutable snapshot; records row count and min/max
-    * stats for `statsCols` in the manifest. Returns the snapshot id. */
+  /** Append `df` as a new snapshot; returns its id. The write is the only
+    * Spark job: rows, bytes and schema come from the part files' parquet
+    * footers, and the min/max stats of `statsCols` from an [[Observation]]
+    * on the write. A schema other than the table's committed one is rejected. */
   def writeSnapshot(df: DataFrame, table: String, statsCols: Seq[String] = Seq.empty): Long = {
-    val snap = snapshotIds(table).lastOption.getOrElse(-1L) + 1
-    val dir = dataDir(table, snap)
-    df.write.mode("errorifexists").parquet(dir)
-    val written = spark.read.parquet(dir)
-    val rows = written.count()
-    // numeric stats are stored as JSON numbers and compared numerically at
-    // prune time — a stringified compare would order "9" > "10" and
-    // incorrectly skip matching snapshots (silently missing rows)
-    val stats = statsCols.flatMap { c =>
-      val numeric = written.schema(c).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      val r = written.agg(min(col(c)).cast("string"), max(col(c)).cast("string")).head()
-      if (r.isNullAt(0)) None else Some((c, r.getString(0), r.getString(1), numeric))
+    val t0 = System.nanoTime()
+    val snaps = snapshotIds(table)
+    snaps.lastOption.map(s => schemaOf(manifest(table, s)).catalogString).foreach { committed =>
+      require(committed == df.schema.catalogString, s"schema ${df.schema.catalogString} " +
+        s"differs from the committed schema $committed of table $table")
     }
-    val statsJson = stats.map { case (c, lo, hi, numeric) =>
-      if (numeric) s""""$c":{"min":$lo,"max":$hi,"num":true}"""
-      else s""""$c":{"min":${jstr(lo)},"max":${jstr(hi)},"num":false}"""
-    }.mkString("{", ",", "}")
-    val manifest =
-      s"""{"snapshot":$snap,"table":${jstr(table)},"rows":$rows,"stats":$statsJson}"""
-    val out = fs.create(new Path(metaDir(table), s"snap-$snap.json"), false)
-    out.write(manifest.getBytes("UTF-8")); out.close()
+    val snap = snaps.lastOption.getOrElse(-1L) + 1
+    val data = s"data/snap-$snap-${UUID.randomUUID()}"
+    val obs = Observation()
+    val aggs = statsCols.indices.flatMap(i => Seq(min(col(statsCols(i))).cast("string").as(s"min$i"),
+      max(col(statsCols(i))).cast("string").as(s"max$i")))
+    (if (aggs.isEmpty) df else df.observe(obs, aggs.head, aggs.tail: _*))
+      .write.parquet(s"$root/$table/$data")
+    // (write partition id, rows, bytes, Spark schema json) per part file
+    val files = fs.listStatus(new Path(s"$root/$table/$data"))
+      .filter(_.getPath.getName.startsWith("part-")).map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try (st.getPath.getName.split('-')(1).toInt, r.getRecordCount, st.getLen,
+          r.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
+      }
+    val m = json.createObjectNode().put("snapshot", snap).put("table", table).put("data", data)
+      .put("rows", files.map(_._2).sum).put("bytes", files.map(_._3).sum)
+    val parts = m.putArray("partitions")
+    files.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (p, ps) =>
+      parts.addObject().put("id", p).put("rows", ps.map(_._2).sum).put("bytes", ps.map(_._3).sum)
+    }
+    m.set[JsonNode]("schema", json.readTree(files.headOption.fold(df.schema.json)(_._4)))
+    // numeric stats are JSON numbers compared numerically at prune time: a
+    // string compare orders "9" > "10" and would skip matching snapshots
+    val stats = m.putObject("stats")
+    lazy val observed = obs.get
+    statsCols.zipWithIndex.foreach { case (c, i) => (observed(s"min$i"), observed(s"max$i")) match {
+      case (lo: String, hi: String) if df.schema(c).dataType.isInstanceOf[NumericType] =>
+        stats.putObject(c).put("min", lo.toDouble).put("max", hi.toDouble).put("num", true)
+      case (lo: String, hi: String) => stats.putObject(c).put("min", lo).put("max", hi).put("num", false)
+      case _ => // all null: no stats, the snapshot is never pruned on `c`
+    } }
+    m.put("wall_s", (System.nanoTime() - t0) / 1e9)
+    val tmp = new Path(metaDir(table), s"_tmp-${UUID.randomUUID()}.json")
+    val out = fs.create(tmp, false); try out.write(json.writeValueAsBytes(m)) finally out.close()
+    if (!fs.rename(tmp, new Path(metaDir(table), s"snap-$snap.json")))
+      throw new java.io.IOException(s"could not commit snapshot $snap of table $table")
     snap
   }
 
-  private def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  def manifest(table: String, snap: Long): String = {
+  def manifest(table: String, snap: Long): JsonNode = {
     val in = fs.open(new Path(metaDir(table), s"snap-$snap.json"))
-    val bytes = org.apache.commons.io.IOUtils.toByteArray(in); in.close()
-    new String(bytes, "UTF-8")
+    try json.readTree(in) finally in.close()
   }
+  private def schemaOf(m: JsonNode) = DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType]
 
   /** Read the table as of snapshot `asOf` (inclusive; default latest).
     * `prune` is an optional (col, lo, hi) predicate evaluated against the
     * manifests' min/max stats — snapshots that cannot match are never
-    * scanned (the partition-pruning analog, SURVEY.md §4 J7). */
+    * scanned (the partition-pruning analog, SURVEY.md §4 J7). Only data
+    * directories named by committed manifests are read, with their schema. */
   def readTable(table: String, asOf: Long = Long.MaxValue,
                 prune: Option[(String, String, String)] = None): DataFrame = {
-    val snaps0 = snapshotIds(table).filter(_ <= asOf)
-    val snaps = prune match {
-      case None => snaps0
-      case Some((c, lo, hi)) => snaps0.filter { s =>
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = mapper.readTree(manifest(table, s))
-        val stat = if (root.has("stats")) root.get("stats").get(c) else null
-        if (stat == null) true // no stats for the column → cannot prune
-        else if (stat.get("num").asBoolean())
-          stat.get("min").asDouble() <= hi.toDouble && stat.get("max").asDouble() >= lo.toDouble
-        else stat.get("min").asText() <= hi && stat.get("max").asText() >= lo
-      }
-    }
-    if (snaps.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(snaps.map(dataDir(table, _)): _*)
+    val metas = snapshotIds(table).filter(_ <= asOf).map(manifest(table, _))
+    val kept = prune.fold(metas) { case (c, lo, hi) => metas.filter { m =>
+      val stat = m.path("stats").get(c)
+      if (stat == null) true // no stats for the column → cannot prune
+      else if (stat.get("num").asBoolean())
+        stat.get("min").asDouble() <= hi.toDouble && stat.get("max").asDouble() >= lo.toDouble
+      else stat.get("min").asText() <= hi && stat.get("max").asText() >= lo
+    } }
+    if (kept.isEmpty) spark.emptyDataFrame
+    else spark.read.schema(schemaOf(kept.last))
+      .parquet(kept.map(m => s"$root/$table/${m.get("data").asText}"): _*)
   }
 
-  // ---------- lineage ----------
-
-  /** Append per-partition metrics for a stage (north_rule lineage). */
-  def recordLineage(jobId: String, stage: String, df: DataFrame): Unit = {
+  /** Per-partition rows and bytes of every stage's write (north_rule
+    * lineage): (partitionId, rows, bytes, jobId, stage), from the manifests. */
+  def lineage(): DataFrame = {
     import spark.implicits._
-    val rowsPerPartition = df
-      .groupBy(spark_partition_id().as("partitionId"))
-      .agg(count(lit(1)).as("rows"))
-      .withColumn("jobId", lit(jobId))
-      .withColumn("stage", lit(stage))
-    rowsPerPartition.write.mode("append").parquet(s"$root/_lineage")
+    (for (j <- ls(root).map(_.getName); s <- ls(s"$root/$j").map(_.getName);
+          snap <- snapshotIds(s"$j/$s"); q <- manifest(s"$j/$s", snap).get("partitions").asScala)
+      yield (q.get("id").asInt, q.get("rows").asLong, q.get("bytes").asLong, j, s))
+      .toDF("partitionId", "rows", "bytes", "jobId", "stage")
   }
 
-  def lineage(): DataFrame =
-    if (fs.exists(new Path(s"$root/_lineage"))) spark.read.parquet(s"$root/_lineage")
-    else spark.emptyDataFrame
+  /** stages of `jobId` with a committed snapshot */
+  def completedStages(jobId: String): Set[String] =
+    ls(s"$root/$jobId").map(_.getName).filter(s => snapshotIds(s"$jobId/$s").nonEmpty).toSet
 
-  // ---------- checkpoint / resume ----------
-
-  def completedStages(jobId: String): Set[String] = {
-    val p = new Path(s"$root/_checkpoints/$jobId")
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName).toSet
-  }
-
-  def markComplete(jobId: String, stage: String): Unit =
-    fs.create(new Path(s"$root/_checkpoints/$jobId/$stage"), true).close()
-
-  /** Idempotent stage execution: if `stage` completed for `jobId`, read its
-    * snapshot back instead of recomputing (kill-and-resume equivalence —
-    * O9). The body must be deterministic for exact resume semantics. */
+  /** Idempotent stage: complete iff it has a committed manifest, and then read
+    * back instead of recomputed (kill-and-resume equivalence — O9); else the
+    * body runs once, in the write. The body must be deterministic. */
   def runStage(jobId: String, stage: String)(body: => DataFrame): DataFrame = {
     val table = s"$jobId/$stage"
-    if (completedStages(jobId).contains(stage)) {
-      readTable(table)
-    } else {
-      val df = body
-      writeSnapshot(df, table)
-      recordLineage(jobId, stage, df)
-      markComplete(jobId, stage)
-      readTable(table)
-    }
+    if (snapshotIds(table).isEmpty) writeSnapshot(body, table)
+    readTable(table)
   }
 }
 

@@ -12,14 +12,16 @@ import org.apache.spark.sql.Dataset
   * subprocesses with a resume() directory scan and a final concatenation
   * with global id re-indexing — its `--no-workers > 1` path raises
   * NotImplementedError. Here the work list is data: each pair runs as
-  * checkpointed Lake stages (skipped when already complete — kill/resume
-  * equivalence), per-stage lineage rows are recorded, and the concat is
-  * [[CocoOps.concat]]'s shift-based re-indexing.
+  * Lake stages, each one write published by one manifest (a stage with a
+  * committed manifest is read back, not recomputed — kill/resume
+  * equivalence); the manifests carry each stage's per-partition rows and
+  * bytes ([[Lake.lineage]]), and the concat is [[CocoOps.concat]]'s
+  * shift-based re-indexing.
   */
 object BatchPipeline {
 
   /** Run geojson2coco for every (raster, features) pair, resumably; returns
-    * the concatenated dataset. `jobId` keys the checkpoint namespace. */
+    * the concatenated dataset. `jobId` keys the stage namespace. */
   def run(lake: Lake, jobId: String,
           pairs: Seq[(RasterMeta, Dataset[Feature])],
           params: GeojsonToCoco.Params): CocoTables = {

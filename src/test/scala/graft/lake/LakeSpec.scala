@@ -1,7 +1,12 @@
 package graft.lake
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 class LakeSpec extends SparkSpec {
 
@@ -69,14 +74,105 @@ class LakeSpec extends SparkSpec {
     assert(lake.completedStages("job1") == Set("stage1", "stage2"))
   }
 
+  /** total size of the parquet part files under `dir` */
+  def partBytes(dir: String): Long = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).map(Files.size).sum
+    finally s.close()
+  }
+
   test("lineage rows record per-partition counts per stage") {
+    val lake = freshLake()
+    val body = spark.range(0, 100, 1, 4).where(col("id") < 10 || col("id") % 3 === 0).toDF()
+    lake.runStage("j", "s")(body)
+    val expected = body.groupBy(spark_partition_id()).count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val lin = lake.lineage().where(col("jobId") === "j" && col("stage") === "s")
+    assert(lin.select("partitionId", "rows").collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      expected)
+    val bytes = partBytes(s"${lake.root}/j/s/data")
+    assert(bytes > 0 && lin.agg(sum("bytes")).head.getLong(0) == bytes)
+    // the manifest carries rows, bytes and the write's wall time
+    val m = lake.manifest("j/s", 0)
+    assert(m.get("rows").asLong == expected.values.sum && m.get("bytes").asLong == bytes &&
+      m.get("wall_s").asDouble > 0)
+  }
+
+  test("a stage's Lake work is one Spark job, its write; a resumed stage runs none") {
+    val lake = freshLake()
+    val body = spark.range(0, 50, 1, 3).select((col("id") * 2).as("x"))
+    val (_, jobs) = JobCounter.count(spark.sparkContext)(lake.runStage("j", "s")(body))
+    assert(jobs == 1)
+    val (back, resumeJobs) = JobCounter.count(spark.sparkContext)(lake.runStage("j", "s")(body))
+    assert(resumeJobs == 0)
+    assert(back.schema.fieldNames.toSeq == Seq("x") && back.count() == 50)
+  }
+
+  test("the stage body executes once per stage") {
     val spark2 = spark
     import spark2.implicits._
     val lake = freshLake()
-    lake.runStage("j", "s")(spark.range(0, 100, 1, 4).toDF("id"))
-    val lin = lake.lineage()
-    assert(lin.where(col("jobId") === "j" && col("stage") === "s")
-      .agg(sum("rows")).head.getLong(0) == 100L)
+    val rowsSeen = spark.sparkContext.longAccumulator("rowsSeen")
+    // a typed map: the optimizer cannot prune it out of a re-execution
+    val body = spark.range(0, 10, 1, 2).map { x => rowsSeen.add(1); x.longValue }.toDF("id")
+    val r = lake.runStage("j", "s")(body)
+    assert(r.count() == 10 && rowsSeen.value == 10L, "the body ran more than once")
+  }
+
+  test("crash after the manifest commit: resume returns exactly the one-shot rows") {
+    val lake = freshLake()
+    // the stage's snapshot committed, then the run died before anything else
+    lake.writeSnapshot(spark.range(0, 10).toDF("id"), "j/s")
+    var runs = 0
+    val r = lake.runStage("j", "s") { runs += 1; spark.range(0, 10).toDF("id") }
+    assert(runs == 0 && r.count() == 10)
+    assert(lake.snapshotIds("j/s") == Seq(0L) && lake.completedStages("j") == Set("s"))
+  }
+
+  test("crash before the manifest commit: the rerun runs the body once and succeeds") {
+    val lake = freshLake()
+    // an orphan data directory and an orphan temp manifest, nothing committed
+    spark.range(0, 7).toDF("id").write.parquet(s"${lake.root}/j/s/data/snap-0")
+    Files.createDirectories(Paths.get(s"${lake.root}/j/s/_meta"))
+    Files.write(Paths.get(s"${lake.root}/j/s/_meta/_tmp-crashed.json"), "{\"snap".getBytes("UTF-8"))
+    assert(lake.completedStages("j").isEmpty && lake.readTable("j/s").isEmpty)
+    var runs = 0
+    val r = lake.runStage("j", "s") { runs += 1; spark.range(0, 10).toDF("id") }
+    assert(runs == 1 && r.count() == 10)
+    assert(lake.snapshotIds("j/s") == Seq(0L))
+  }
+
+  test("readTable ignores an uncommitted data directory") {
+    val lake = freshLake()
+    lake.writeSnapshot(spark.range(0, 3).toDF("id"), "t")
+    spark.range(100, 150).toDF("id").write.parquet(s"${lake.root}/t/data/snap-1-uncommitted")
+    assert(lake.readTable("t").count() == 3)
+    assert(lake.snapshotIds("t") == Seq(0L))
+  }
+
+  test("writeSnapshot rejects a schema other than the table's committed one") {
+    val spark2 = spark
+    import spark2.implicits._
+    val lake = freshLake()
+    lake.writeSnapshot(Seq((1L, "a")).toDF("id", "v"), "t")
+    val e = intercept[IllegalArgumentException] {
+      lake.writeSnapshot(Seq(("b", 2L)).toDF("v", "id"), "t")
+    }
+    assert(e.getMessage.contains("table t") && e.getMessage.contains("struct<id:bigint,v:string>") &&
+      e.getMessage.contains("struct<v:string,id:bigint>"), e.getMessage)
+    // nullability alone is no schema change
+    lake.writeSnapshot(Seq((Option(3L), "c")).toDF("id", "v"), "t")
+    assert(lake.snapshotIds("t") == Seq(0L, 1L) && lake.readTable("t").count() == 2)
+  }
+
+  test("writeSnapshot with stats runs one job: the stats are observed on the write") {
+    val lake = freshLake()
+    val df = spark.range(0, 40, 1, 4).select((col("id") + 5).as("id"), concat(lit("k"), col("id")).as("v"))
+    val (snap, jobs) = JobCounter.count(spark.sparkContext)(lake.writeSnapshot(df, "t", Seq("id", "v")))
+    assert(jobs == 1)
+    val stats = lake.manifest("t", snap).get("stats")
+    assert(stats.get("id").get("min").asDouble == 5.0 && stats.get("id").get("max").asDouble == 44.0)
+    assert(stats.get("v").get("min").asText == "k0" && stats.get("v").get("max").asText == "k9")
   }
 
   test("quantized embedding layout: round trip, distortion bound, 4x-smaller files") {
