@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 focused benchmark (guide §1.4) — NOT part of the frozen driver
   * harness ([[Bench]] is unchanged): measures a NAMED SUBSET of the
   * declared queries with more repeats than the sweep's best-of-2, so
@@ -11,26 +9,17 @@ import org.apache.spark.sql.SparkSession
   * pruning via the no-op sink (`df.write.format("noop")`).
   *
   * Usage: runMain graft.BenchExtra <sfDir> <repeats> <count|noop> [q1,q2,…]
-  * Prints one JSON line: {"mode":"benchextra","queries":{name:[s,…],…}}
+  * Prints one JSON line: {"mode":"benchextra","queries":{name:[s,…],…}};
+  * a failed repeat is `null`, never a time.
   */
 object BenchExtra {
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val repeats = args(1).toInt
     val action = args(2)
     val wanted: Set[String] =
       if (args.length > 3) args(3).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
+    val spark = Measure.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     // same session warmup as the sweep
     Seq("lineitem", "documents", "embeddings", "orders", "events").foreach { t =>
@@ -42,24 +31,26 @@ object BenchExtra {
       spark.sparkContext.setJobDescription(s"benchextra: $name")
       val secs = (1 to repeats).map { _ =>
         val t0 = System.nanoTime()
-        try {
+        val ok = try {
           val df = fn(spark, sfDir)
           if (action == "noop") df.write.format("noop").mode("overwrite").save()
           else df.count()
+          true
         } catch { case e: Throwable =>
           // LOUD failure marker — a silently-timed crash reads as a
           // miraculous speed-up (learned the hard way in round 6)
           println(s"""{"mode":"benchextra","FAILED":"$name","err":"${
             e.toString.take(120).replace('"', '\'')}"}""")
+          false
         }
         val s = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
-        s
+        if (ok) Some(s) else None
       }
       name -> secs
     }
     val qJson = out.map { case (k, v) =>
-      "\"" + k + "\":[" + v.map(fmt).mkString(",") + "]"
+      "\"" + k + "\":[" + v.map(_.fold("null")(Measure.fmt)).mkString(",") + "]"
     }.mkString("{", ",", "}")
     println(s"""{"mode":"benchextra","action":"$action","queries":$qJson}""")
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Round-6 optimization evidence tool (guide §1.1/§7.2): dumps
@@ -18,13 +17,7 @@ object PlanDump {
     val tag = args(2)
     val wanted: Set[String] =
       if (args.length > 3) args(3).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Measure.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -21,23 +21,14 @@ import org.apache.spark.sql.SparkSession
   *   bench <cores> <dir> [variant]   — run the flagship, print one JSON line
   */
 object ScalingBench {
-
-  /** locale-proof formatting (the f-interpolator uses the default locale;
-    * comma-decimal locales would corrupt the parsed JSON) */
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  import Measure.fmt
 
   /** SPARK_GRAFT_MASTER overrides the master — e.g.
     * `local-cluster[4,8,8192]` for multi-JVM executor emulation where each
     * "node" owns its own heap/GC/JIT (the closest this single VM gets to a
     * real N vs 4N executor cluster). Default stays in-process local[N]. */
-  private def session(cores: Int): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
-    .config("spark.sql.shuffle.partitions", cores)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.host", "localhost")
-    .getOrCreate()
+  private def session(cores: Int): SparkSession =
+    Measure.session(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"), cores)
 
   def main(args: Array[String]): Unit = args(0) match {
     case "gen" =>

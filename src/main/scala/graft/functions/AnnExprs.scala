@@ -2,78 +2,29 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Native expression tier for the ANN index-build kernels (round-6
-  * optimization; guide §1.2 step 2 / §4.1): the IVF list assignment, PQ
-  * encode and PQ LUT projections previously ran as `mapPartitions` row
-  * kernels — every corpus row paid the full row codec
-  * (DeserializeToObject → Scala kernel → SerializeFromObject, visible as
-  * three extra operators per side in the round-5 q63/q70/q71 plans) and
-  * the stage fell out of whole-stage codegen. Each expression here wraps
-  * the UNCHANGED JVM kernel (`Similarity.nearestIn`,
-  * `Quantize.pqEncodeKernel/pqLutKernel`) behind a Catalyst expression
-  * whose generated code calls the kernel directly on the columnar input —
-  * identical arithmetic (same object code in both eval modes, trivially
-  * bit-identical to the round-5 path), no row codec, and the projection
-  * fuses into the surrounding scan/join stage.
+  * optimization): the IVF list assignment, PQ encode and PQ LUT
+  * projections previously ran as `mapPartitions` row kernels — every
+  * corpus row paid the full row codec (DeserializeToObject → Scala kernel
+  * → SerializeFromObject, three extra operators per side in the round-5
+  * q63/q70/q71 plans) and the stage fell out of whole-stage codegen. Each
+  * expression here is one [[VecKernels]] call around the UNCHANGED JVM
+  * kernel (`Similarity.nearestIn`, `Quantize.pqEncodeKernel/pqLutKernel`),
+  * made by `nullSafeEval` and, as a static call, by the generated code —
+  * identical arithmetic in both eval modes, no row codec, and the
+  * projection fuses into the surrounding scan/join stage.
   *
-  * The centroid/codebook tables ride along as codegen reference objects
-  * (same pattern as [[BytesSdcDist]]'s SDC table): nLists·dim floats —
-  * broadcast-trivial at any realistic geometry (16×64 at the gate; think
-  * 4096×768 ≈ 12 MB at production scale, shipped once per executor with
-  * the task binary, not per row). */
-
-/** kernel wrapper: m nearest IVF list ids of an embedding, by exact
-  * cosine (desc, list asc) — delegates to [[graft.ops.Similarity.nearestIn]] */
-final class NearestListsKernel(
-    cents: Array[(Int, Array[Float], Double)], m: Int) extends Serializable {
-  def apply(v: ArrayData): ArrayData =
-    new GenericArrayData(graft.ops.Similarity.nearestIn(cents, v.toFloatArray(), m))
-}
-
-/** kernel wrapper: PQ codes (one int per subspace) — delegates to
-  * [[graft.ops.Quantize.pqEncodeKernel]] */
-final class PqEncodeKernelWrap(
-    cb: Array[Array[Array[Float]]]) extends Serializable {
-  def apply(v: ArrayData): ArrayData =
-    new GenericArrayData(graft.ops.Quantize.pqEncodeKernel(v.toFloatArray(), cb))
-}
-
-/** kernel wrapper: PQ codes packed as signed bytes (the at-rest layout) */
-final class PqEncodeBytesKernelWrap(
-    cb: Array[Array[Array[Float]]]) extends Serializable {
-  def apply(v: ArrayData): Array[Byte] = {
-    val codes = graft.ops.Quantize.pqEncodeKernel(v.toFloatArray(), cb)
-    val out = new Array[Byte](codes.length)
-    var i = 0
-    while (i < codes.length) { out(i) = codes(i).toByte; i += 1 }
-    out
-  }
-}
-
-/** kernel wrapper: per-query ADC lookup table (m × ksub subspace L2s) —
-  * delegates to [[graft.ops.Quantize.pqLutKernel]] */
-final class PqLutKernelWrap(
-    cb: Array[Array[Array[Float]]]) extends Serializable {
-  def apply(v: ArrayData): ArrayData =
-    new GenericArrayData(graft.ops.Quantize.pqLutKernel(v.toFloatArray(), cb)
-      .map(row => new GenericArrayData(row): AnyRef))
-}
-
-/** shared shape for the kernel-backed unary expressions over
-  * `array<float>` embeddings */
-private[functions] trait FloatVecKernelExpr extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs an array<float> argument, got ${dt.simpleString}")
-  }
-}
+  * The centroid/codebook table rides along as one codegen reference
+  * object (same pattern as [[BytesSdcDist]]'s SDC table): nLists·dim
+  * floats — broadcast-trivial at any realistic geometry (16×64 at the
+  * gate; think 4096×768 ≈ 12 MB at production scale, shipped once per
+  * executor with the task binary, not per row). */
 
 /** `array<int>` of the `m` nearest IVF list ids (exact cosine desc, list
   * asc — [[graft.ops.Similarity.nearestIn]] verbatim). */
@@ -81,20 +32,13 @@ case class FloatVecNearestLists(child: Expression,
                                 cents: Array[(Int, Array[Float], Double)],
                                 m: Int)
   extends FloatVecKernelExpr {
-  @transient private lazy val kernel = new NearestListsKernel(cents, m)
-
+  override protected def kernel: String = "nearestLists"
+  override protected def kernelArgs(ctx: CodegenContext): String =
+    s", ${ctx.addReferenceObj("cents", cents, "scala.Tuple3[]")}, $m"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "float_vec_nearest_lists"
-
   override protected def nullSafeEval(a: Any): Any =
-    kernel.apply(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kern = ctx.addReferenceObj("nearestKern", new NearestListsKernel(cents, m),
-      classOf[NearestListsKernel].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $kern.apply($a);")
-  }
-
+    VecKernels.nearestLists(a.asInstanceOf[ArrayData], cents, m)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -103,42 +47,32 @@ case class FloatVecNearestLists(child: Expression,
   * ([[graft.ops.Quantize.pqEncodeKernel]] verbatim). */
 case class FloatVecPqEncode(child: Expression, cb: Array[Array[Array[Float]]])
   extends FloatVecKernelExpr {
-  @transient private lazy val kernel = new PqEncodeKernelWrap(cb)
-
+  override protected def kernel: String = "pqEncode"
+  override protected def kernelArgs(ctx: CodegenContext): String =
+    s", ${ctx.addReferenceObj("codebook", cb, "float[][][]")}"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "float_vec_pq_encode"
-
   override protected def nullSafeEval(a: Any): Any =
-    kernel.apply(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kern = ctx.addReferenceObj("pqEncKern", new PqEncodeKernelWrap(cb),
-      classOf[PqEncodeKernelWrap].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $kern.apply($a);")
-  }
-
+    VecKernels.pqEncode(a.asInstanceOf[ArrayData], cb)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** PQ encode to the BINARY at-rest layout: one signed byte per subspace
-  * (same kernel as [[FloatVecPqEncode]], packed — requires ksub ≤ 128). */
+  * (same kernel as [[FloatVecPqEncode]], packed). A codebook with more
+  * than 128 entries per subspace would wrap codes to negative bytes, so
+  * it is refused when the expression is built. */
 case class FloatVecPqEncodeBytes(child: Expression, cb: Array[Array[Array[Float]]])
   extends FloatVecKernelExpr {
-  @transient private lazy val kernel = new PqEncodeBytesKernelWrap(cb)
-
+  require(cb.forall(_.length <= 128),
+    s"ksub=${cb.map(_.length).max} exceeds the signed-byte code range of the binary layout")
+  override protected def kernel: String = "pqEncodeBytes"
+  override protected def kernelArgs(ctx: CodegenContext): String =
+    s", ${ctx.addReferenceObj("codebook", cb, "float[][][]")}"
   override def dataType: DataType = BinaryType
   override def prettyName: String = "float_vec_pq_encode_bytes"
-
   override protected def nullSafeEval(a: Any): Any =
-    kernel.apply(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kern = ctx.addReferenceObj("pqEncBKern", new PqEncodeBytesKernelWrap(cb),
-      classOf[PqEncodeBytesKernelWrap].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $kern.apply($a);")
-  }
-
+    VecKernels.pqEncodeBytes(a.asInstanceOf[ArrayData], cb)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -147,21 +81,14 @@ case class FloatVecPqEncodeBytes(child: Expression, cb: Array[Array[Array[Float]
   * L2 distances ([[graft.ops.Quantize.pqLutKernel]] verbatim). */
 case class FloatVecPqLut(child: Expression, cb: Array[Array[Array[Float]]])
   extends FloatVecKernelExpr {
-  @transient private lazy val kernel = new PqLutKernelWrap(cb)
-
+  override protected def kernel: String = "pqLut"
+  override protected def kernelArgs(ctx: CodegenContext): String =
+    s", ${ctx.addReferenceObj("codebook", cb, "float[][][]")}"
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def prettyName: String = "float_vec_pq_lut"
-
   override protected def nullSafeEval(a: Any): Any =
-    kernel.apply(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kern = ctx.addReferenceObj("pqLutKern", new PqLutKernelWrap(cb),
-      classOf[PqLutKernelWrap].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $kern.apply($a);")
-  }
-
+    VecKernels.pqLut(a.asInstanceOf[ArrayData], cb)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -254,7 +181,8 @@ object AnnExprs {
   def pqEncode(v: Column, cb: Array[Array[Array[Float]]]): Column =
     Bridge.column(FloatVecPqEncode(Bridge.expression(v), cb))
 
-  /** PQ codes packed as BINARY (at-rest layout, ksub ≤ 128). */
+  /** PQ codes packed as BINARY (at-rest layout); refuses ksub > 128 with
+    * an IllegalArgumentException. */
   def pqEncodeBytes(v: Column, cb: Array[Array[Array[Float]]]): Column =
     Bridge.column(FloatVecPqEncodeBytes(Bridge.expression(v), cb))
 

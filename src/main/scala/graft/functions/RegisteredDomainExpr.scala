@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** PSL registered-domain (eTLD+1) as a single JVM expression.
   *
-  * The column-expression spelling ([[graft.ops.Urls.registeredDomainRef]])
-  * is a CASE tower over per-label-count `isin` probes; at the full
+  * The column-expression spelling (kept as a test helper for UrlsSpec's
+  * parity check) is a CASE tower over per-label-count `isin` probes; at the full
   * ~1235-rule snapshot the tower pushed whole-stage codegen past janino's
   * 64 KB method limit, silently dropping the ENTIRE stage (q54's link
   * graph) to the interpreted path. This expression replaces the tower

@@ -4,81 +4,66 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for embedding math — the builder brief's
-  * preferred extension tier (custom `Expression` WITH `doGenCode`, above
-  * any UDF): the generated code is a primitive float loop inlined into
-  * whole-stage codegen, so vector scoring stays inside the same generated
-  * function as the surrounding join/filter — no HOF interpreter, no row
-  * codec, no boxing.
+/** Shared shape of the three dot expressions — native Catalyst
+  * expressions for embedding math, the extension tier above any UDF:
+  * inside whole-stage codegen the generated code calls the kernel
+  * directly on the columnar input, so vector scoring stays in the same
+  * generated function as the surrounding join/filter — no HOF
+  * interpreter, no row codec, no boxing. Each dot has one kernel in
+  * [[VecKernels]], which both eval modes call.
   *
-  * [[FloatVecDot]] replaces the `aggregate(zip_with(...))` higher-order
-  * fold (measured ~45 µs/pair in round 2 — the reason the broadcast arms
-  * carry hand-written JVM kernels) with the SAME left-to-right IEEE-754
-  * accumulation: each element pair is widened to double, multiplied, and
-  * added in index order, so results are bit-identical to both the HOF
-  * form and the JVM kernels (asserted in VecExprsSpec / SimilaritySpec).
-  * Contract: null-free `array<float>` inputs of equal length (embedding
-  * columns); a null ARRAY yields null (BinaryExpression null-safety), and
+  * Contract: null-free, equal-length inputs (embedding or code
+  * columns). A null input yields null (BinaryExpression null-safety), and
   * a LENGTH MISMATCH yields null too — matching the HOF twin, where
   * `zip_with` pads the shorter array with nulls and the `aggregate` fold
   * then returns null — rather than a plausible-looking truncated dot. */
-case class FloatVecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
+private[functions] trait VecDotExpr extends BinaryExpression {
+  /** the [[VecKernels]] method over two inputs of equal length */
+  protected def kernel: String
+  /** the type both inputs must have, and its name in the type-check error */
+  protected def accepts(dt: DataType): Boolean
+  protected def inputName: String
+  /** Java source for an input's length */
+  protected def lengthOf(v: String): String
 
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isFloatArray(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (accepts(left.dataType) && accepts(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"float_vec_dot needs two array<float> arguments, got " +
+      s"$prettyName needs two $inputName arguments, got " +
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if (${lengthOf(a)} != ${lengthOf(b)}) ${ev.isNull} = true;
+         |else ${ev.value} = ${VecKernels.Name}.$kernel($a, $b);""".stripMargin)
+}
+
+/** [[VecKernels.floatDot]] over `array<float>`: the same left-to-right
+  * IEEE-754 accumulation as the `aggregate(zip_with(...))` higher-order
+  * fold (measured ~45 µs/pair in round 2), so results are bit-identical
+  * to it (asserted in VecExprsSpec / SimilaritySpec). */
+case class FloatVecDot(left: Expression, right: Expression) extends VecDotExpr {
+  override protected def kernel: String = "floatDot"
+  override protected def accepts(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
   }
-
+  override protected def inputName: String = "array<float>"
+  override protected def lengthOf(v: String): String = s"$v.numElements()"
   override def dataType: DataType = DoubleType
-
   override def prettyName: String = "float_vec_dot"
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    acc
+    if (x.numElements() != y.numElements()) null else VecKernels.floatDot(x, y)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -86,275 +71,124 @@ case class FloatVecDot(left: Expression, right: Expression)
 }
 
 /** [[FloatVecDot]]'s integer sibling for quantized-code arrays
-  * (`array<long>`, e.g. [[graft.ops.Quantize]] SQ8 codes): Σ a_i·b_i as a
-  * primitive long loop in whole-stage codegen. Integer arithmetic — the
-  * result is exactly the HOF fold's by definition (no rounding anywhere);
-  * caller guarantees products/sums fit a Long (SQ8: |code| ≤ 127). A
-  * length mismatch yields null, like [[FloatVecDot]]. */
-case class LongVecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isLongArray(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"long_vec_dot needs two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  * (`array<long>`, e.g. [[graft.ops.Quantize]] SQ8 codes): Σ a_i·b_i in
+  * long arithmetic, exact by definition; the caller guarantees products
+  * and sums fit a Long (SQ8: |code| ≤ 127). */
+case class LongVecDot(left: Expression, right: Expression) extends VecDotExpr {
+  override protected def kernel: String = "longDot"
+  override protected def accepts(dt: DataType): Boolean = dt match {
+    case ArrayType(LongType, _) => true
+    case _ => false
   }
-
+  override protected def inputName: String = "array<bigint>"
+  override protected def lengthOf(v: String): String = s"$v.numElements()"
   override def dataType: DataType = LongType
-
   override def prettyName: String = "long_vec_dot"
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += x.getLong(i) * y.getLong(i)
-      i += 1
-    }
-    acc
+    if (x.numElements() != y.numElements()) null else VecKernels.longDot(x, y)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
+/** Integer dot product DIRECTLY over two BINARY SQ8 code columns (signed
+  * bytes widened to long) — quantized scoring straight off the at-rest
+  * layout, no array materialization per row. */
+case class BytesVecDot(left: Expression, right: Expression) extends VecDotExpr {
+  override protected def kernel: String = "bytesDot"
+  override protected def accepts(dt: DataType): Boolean = dt == BinaryType
+  override protected def inputName: String = "binary"
+  override protected def lengthOf(v: String): String = s"$v.length"
+  override def dataType: DataType = LongType
+  override def prettyName: String = "bytes_vec_dot"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[Array[Byte]]
+    val y = b.asInstanceOf[Array[Byte]]
+    if (x.length != y.length) null else VecKernels.bytesDot(x, y)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Shared shape of the unary expressions over an `array<float>` embedding:
+  * the type check, and generated code that is one static call
+  * `VecKernels.kernel(input[, kernelArgs])`. */
+private[functions] trait FloatVecKernelExpr extends UnaryExpression {
+  /** the [[VecKernels]] method the expression evaluates */
+  protected def kernel: String
+  /** Java source of the kernel's arguments after the input, each led by
+    * ", " (tables are added to `ctx` as reference objects) */
+  protected def kernelArgs(ctx: CodegenContext): String = ""
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs an array<float> argument, got ${dt.simpleString}")
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = kernelArgs(ctx)
+    defineCodeGen(ctx, ev, a => s"${VecKernels.Name}.$kernel($a$args)")
+  }
+}
+
 /** SQ8 scalar quantization of an `array<float>` embedding to `array<long>`
-  * codes in ONE pass per row: scale = max(max|v_i|, 1e-30)/127, then
-  * code_i = floor(v_i/scale + 0.5) — the exact IEEE-754 op sequence of the
-  * column-HOF reference twin ([[graft.ops.Quantize.sq8CodesRef]], which
-  * the DuckDB oracle replays), but with the scale computed ONCE instead of
-  * re-evaluating the array_max scan inside the per-element lambda (O(d)
-  * vs O(d²) per vector — invisible at the gated 16 dims, dominant at
-  * 768+). Bit-parity with the twin asserted in QuantizeSpec. Input
-  * contract: elements FINITE (no NaN) — the native max scan skips NaN
-  * (`>` is false) while the twin's `array_max` orders NaN greatest, so
-  * NaN-bearing vectors diverge between the two spellings (and the twin's
-  * long cast of NaN errors under ANSI). Holds for [[FloatVecSq8Recon]]
-  * and [[FloatVecSq8Bytes]] too (same scale scan). */
-case class FloatVecSq8(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"float_vec_sq8 needs an array<float> argument, got ${dt.simpleString}")
-  }
-
+  * codes ([[VecKernels.sq8Codes]]): scale = max(max|v_i|, 1e-30)/127,
+  * then code_i = floor(v_i/scale + 0.5) — the exact IEEE-754 op sequence
+  * of the column-HOF spelling the DuckDB oracle replays, but with the
+  * scale computed ONCE instead of re-evaluating the array_max scan inside
+  * the per-element lambda (O(d) vs O(d²) per vector — invisible at the
+  * gated 16 dims, dominant at 768+). Bit-parity with the HOF spelling
+  * asserted in QuantizeSpec. Input contract: elements FINITE (see
+  * [[VecKernels.sq8Scale]]); the same holds for [[FloatVecSq8Recon]] and
+  * [[FloatVecSq8Bytes]], which share the scale scan. */
+case class FloatVecSq8(child: Expression) extends FloatVecKernelExpr {
+  override protected def kernel: String = "sq8Codes"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
   override def prettyName: String = "float_vec_sq8"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < n) {
-      val ab = math.abs(x.getFloat(i).toDouble)
-      if (ab > mx) mx = ab
-      i += 1
-    }
-    val s = math.max(mx, 1e-30) / 127.0
-    val out = new Array[Long](n)
-    i = 0
-    while (i < n) {
-      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5).toLong
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val mx = ctx.freshName("mx")
-      val s = ctx.freshName("s")
-      val arr = ctx.freshName("arr")
-      val ab = ctx.freshName("ab")
-      s"""
-         |int $n = $a.numElements();
-         |double $mx = Double.NEGATIVE_INFINITY;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $ab = java.lang.Math.abs((double) $a.getFloat($i));
-         |  if ($ab > $mx) $mx = $ab;
-         |}
-         |double $s = java.lang.Math.max($mx, 1e-30) / 127.0;
-         |long[] $arr = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $arr[$i] = (long) java.lang.Math.floor((double) $a.getFloat($i) / $s + 0.5);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-       """.stripMargin
-    })
-
+  override protected def nullSafeEval(a: Any): Any =
+    VecKernels.sq8Codes(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** SQ8 de-quantization v̂_i = code_i · scale as one pass per row (scale
-  * recomputed from the ORIGINAL float vector exactly as [[FloatVecSq8]]
-  * does, codes implied) — the distortion-bound twin of the quantizer with
-  * the same single-scan scale fix. Output `array<double>`. */
-case class FloatVecSq8Recon(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"float_vec_sq8_recon needs an array<float> argument, got ${dt.simpleString}")
-  }
-
+/** SQ8 de-quantization v̂_i = code_i · scale ([[VecKernels.sq8Recon]]),
+  * output `array<double>`: the distortion-bound twin of the quantizer. */
+case class FloatVecSq8Recon(child: Expression) extends FloatVecKernelExpr {
+  override protected def kernel: String = "sq8Recon"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
   override def prettyName: String = "float_vec_sq8_recon"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < n) {
-      val ab = math.abs(x.getFloat(i).toDouble)
-      if (ab > mx) mx = ab
-      i += 1
-    }
-    val s = math.max(mx, 1e-30) / 127.0
-    val out = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5) * s
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val mx = ctx.freshName("mx")
-      val s = ctx.freshName("s")
-      val arr = ctx.freshName("arr")
-      val ab = ctx.freshName("ab")
-      s"""
-         |int $n = $a.numElements();
-         |double $mx = Double.NEGATIVE_INFINITY;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $ab = java.lang.Math.abs((double) $a.getFloat($i));
-         |  if ($ab > $mx) $mx = $ab;
-         |}
-         |double $s = java.lang.Math.max($mx, 1e-30) / 127.0;
-         |double[] $arr = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $arr[$i] = java.lang.Math.floor((double) $a.getFloat($i) / $s + 0.5) * $s;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-       """.stripMargin
-    })
-
+  override protected def nullSafeEval(a: Any): Any =
+    VecKernels.sq8Recon(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** [[FloatVecSq8]]'s AT-REST sibling: the SQ8 codes packed as BINARY —
-  * one signed byte per dimension (codes are in [-127, 127] by
-  * construction), so a parquet embedding table stores exactly d bytes
-  * per vector instead of 4d float bytes. Same scale/floor op sequence as
-  * [[FloatVecSq8]] (byte-parity asserted in QuantizeSpec). */
-case class FloatVecSq8Bytes(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"float_vec_sq8_bytes needs an array<float> argument, got ${dt.simpleString}")
-  }
-
+/** [[FloatVecSq8]]'s AT-REST sibling ([[VecKernels.sq8Bytes]]): the SQ8
+  * codes packed as BINARY, one signed byte per dimension (codes are in
+  * [-127, 127] by construction), so a parquet embedding table stores d
+  * bytes per vector instead of 4d float bytes. */
+case class FloatVecSq8Bytes(child: Expression) extends FloatVecKernelExpr {
+  override protected def kernel: String = "sq8Bytes"
   override def dataType: DataType = BinaryType
-
   override def prettyName: String = "float_vec_sq8_bytes"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < n) {
-      val ab = math.abs(x.getFloat(i).toDouble)
-      if (ab > mx) mx = ab
-      i += 1
-    }
-    val s = math.max(mx, 1e-30) / 127.0
-    val out = new Array[Byte](n)
-    i = 0
-    while (i < n) {
-      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5).toByte
-      i += 1
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val mx = ctx.freshName("mx")
-      val s = ctx.freshName("s")
-      val arr = ctx.freshName("arr")
-      val ab = ctx.freshName("ab")
-      s"""
-         |int $n = $a.numElements();
-         |double $mx = Double.NEGATIVE_INFINITY;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $ab = java.lang.Math.abs((double) $a.getFloat($i));
-         |  if ($ab > $mx) $mx = $ab;
-         |}
-         |double $s = java.lang.Math.max($mx, 1e-30) / 127.0;
-         |byte[] $arr = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $arr[$i] = (byte) java.lang.Math.floor((double) $a.getFloat($i) / $s + 0.5);
-         |}
-         |${ev.value} = $arr;
-       """.stripMargin
-    })
-
+  override protected def nullSafeEval(a: Any): Any =
+    VecKernels.sq8Bytes(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Unpack BINARY SQ8 codes back to `array<long>` (signed bytes widened) —
-  * the read-side bridge from the at-rest layout to the `array<long>`
-  * scoring tier ([[LongVecDot]]). */
+/** Unpack BINARY SQ8 codes back to `array<long>`
+  * ([[VecKernels.bytesToLongs]]) — the read-side bridge from the at-rest
+  * layout to the `array<long>` scoring tier ([[LongVecDot]]). */
 case class Sq8BytesToLongs(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -364,91 +198,23 @@ case class Sq8BytesToLongs(child: Expression) extends UnaryExpression {
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
   override def prettyName: String = "sq8_bytes_to_longs"
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val out = new Array[Long](x.length)
-    var i = 0
-    while (i < x.length) { out(i) = x(i).toLong; i += 1 }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(a: Any): Any =
+    VecKernels.bytesToLongs(a.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val arr = ctx.freshName("arr")
-      s"""
-         |long[] $arr = new long[$a.length];
-         |for (int $i = 0; $i < $a.length; $i++) {
-         |  $arr[$i] = (long) $a[$i];
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${VecKernels.Name}.bytesToLongs($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Integer dot product DIRECTLY over two BINARY SQ8 code columns (signed
-  * bytes, widened to long) — quantized scoring straight off the at-rest
-  * layout, no array materialization per row. Null on length mismatch,
-  * like the other dot expressions. */
-case class BytesVecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"bytes_vec_dot needs two binary arguments, got ${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "bytes_vec_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length) return null
-    var acc = 0L
-    var i = 0
-    while (i < x.length) { acc += x(i).toLong * y(i).toLong; i += 1 }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.length != $b.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $a.length; $i++) {
-         |    $acc += (long) $a[$i] * (long) $b[$i];
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** PQ symmetric-distance (SDC) scoring directly over two BINARY code
   * columns: dist = Σ_s tbl[s][a_s][b_s], the per-subspace codebook-pair
   * L2 table flattened to one double array (`flat((s·ksub + a_s)·ksub +
   * b_s)`) and looped in subspace order — the identical left-to-right
-  * fold the HOF spelling and the JVM twin compute, inlined into
+  * fold the HOF spelling computes, inlined into
   * whole-stage codegen (the HOF pays an interpreted lambda + three
   * nested `element_at`s per subspace per PAIR on the hottest path of a
   * PQ self-join). The table rides along as a codegen reference object —
@@ -519,93 +285,30 @@ case class BytesSdcDist(left: Expression, right: Expression,
 }
 
 /** All `bands` SRP-LSH band keys of an `array<float>` embedding in ONE
-  * expression evaluation: key b packs `rowsPerBand` sign bits of the
-  * deterministic hyperplane projections for planes
-  * [b·rowsPerBand, (b+1)·rowsPerBand). Identical IEEE-754 op sequence to
-  * [[graft.ops.Similarity.bandKeyKernel]] and the column-HOF
-  * [[graft.ops.Similarity.bandKeyCol]] (plane component
-  * ((p·2654435761 + i·40503) mod 1000)/1000 − 0.5, left-to-right double
-  * fold) — bit-parity asserted in SimilaritySpec — but inlined into
-  * whole-stage codegen: signature generation stays in the same generated
-  * function as the projection, no HOF interpreter per (vector, plane) and
-  * no mapPartitions row codec. Output `array<long>` of length `bands`. */
+  * expression evaluation ([[VecKernels.srpKeys]]): key b packs
+  * `rowsPerBand` sign bits of the deterministic hyperplane projections
+  * for planes [b·rowsPerBand, (b+1)·rowsPerBand), with the op order of
+  * the column-HOF band key the DuckDB oracle replays (bit-parity
+  * asserted in SimilaritySpec). Signature generation stays in the same
+  * generated function as the projection: no HOF interpreter per (vector,
+  * plane) and no mapPartitions row codec. Output `array<long>` of length
+  * `bands`. */
 case class FloatVecSrpKeys(child: Expression, bands: Int, rowsPerBand: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"float_vec_srp_keys needs an array<float> argument, got ${dt.simpleString}")
-  }
-
+  extends FloatVecKernelExpr {
+  override protected def kernel: String = "srpKeys"
+  override protected def kernelArgs(ctx: CodegenContext): String =
+    s", $bands, $rowsPerBand"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
   override def prettyName: String = "float_vec_srp_keys"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var key = 0L
-      var j = 0
-      while (j < rowsPerBand) {
-        val p = (b * rowsPerBand + j).toLong
-        var proj = 0.0
-        var i = 0
-        while (i < n) {
-          val pc = ((p * 2654435761L + i * 40503L) % 1000L).toDouble / 1000.0 - 0.5
-          proj += x.getFloat(i).toDouble * pc
-          i += 1
-        }
-        if (proj > 0) key |= (1L << j)
-        j += 1
-      }
-      out(b) = key
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val arr = ctx.freshName("arr")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val pc = ctx.freshName("pc")
-      val proj = ctx.freshName("proj")
-      val key = ctx.freshName("key")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $arr = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $key = 0L;
-         |  for (int $j = 0; $j < $rowsPerBand; $j++) {
-         |    long $p = (long) ($b * $rowsPerBand + $j);
-         |    double $proj = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $pc = (double) (($p * 2654435761L + $i * 40503L) % 1000L) / 1000.0 - 0.5;
-         |      $proj += (double) $a.getFloat($i) * $pc;
-         |    }
-         |    if ($proj > 0) $key |= (1L << $j);
-         |  }
-         |  $arr[$b] = $key;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-       """.stripMargin
-    })
-
+  override protected def nullSafeEval(a: Any): Any =
+    VecKernels.srpKeys(a.asInstanceOf[ArrayData], bands, rowsPerBand)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object VecExprs {
   /** dot(a, b) over `array<float>` columns as a codegen'd native
-    * expression — bit-identical to the HOF fold and the JVM kernels. */
+    * expression — bit-identical to the HOF fold. */
   def dotF(a: Column, b: Column): Column =
     Bridge.column(FloatVecDot(Bridge.expression(a), Bridge.expression(b)))
 
@@ -627,7 +330,7 @@ object VecExprs {
     Bridge.column(FloatVecSq8Recon(Bridge.expression(a)))
 
   /** All SRP-LSH band keys of an `array<float>` column in one codegen'd
-    * pass ([[FloatVecSrpKeys]]) — bit-identical to the kernel/HOF twins. */
+    * pass ([[FloatVecSrpKeys]]) — bit-identical to the column-HOF band key. */
   def srpKeys(a: Column, bands: Int, rowsPerBand: Int): Column =
     Bridge.column(FloatVecSrpKeys(Bridge.expression(a), bands, rowsPerBand))
 

@@ -1,0 +1,175 @@
+package graft.functions
+
+import graft.ops.{Quantize, Similarity}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+
+/** The one spelling of each native vector expression's per-element loop.
+  * An expression's `nullSafeEval` calls its kernel here, and its
+  * `doGenCode` emits one static call to the same method (`$Name.kernel(…)`:
+  * Scala gives an `object` with no companion class static forwarders,
+  * the way Spark's generated code calls `DateTimeUtils`). Interpreted and
+  * generated evaluation therefore run the same loop, and the IEEE-754 op
+  * order of each result is fixed in one place.
+  *
+  * Kernels take non-null inputs and return primitives or fresh arrays,
+  * never a boxed value: the null rules (a null input, a dot's length
+  * mismatch) stay in the expressions, as one check before the call.
+  * `spark.sql.codegen.factoryMode=NO_CODEGEN` runs the interpreted path
+  * (switching off `spark.sql.codegen.wholeStage` alone still compiles
+  * each expression). */
+object VecKernels {
+
+  /** class that generated code calls the kernels on */
+  private[functions] val Name: String = getClass.getName.stripSuffix("$")
+
+  /** Σ x_i·y_i over equal-length `array<float>`s: each pair widened to
+    * double, multiplied, and added left to right from 0.0 — the op order
+    * of the `aggregate(zip_with(...))` fold, so results are bit-identical
+    * to it. */
+  def floatDot(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
+    acc
+  }
+
+  /** Σ x_i·y_i over equal-length `array<long>`s (exact integer sum). */
+  def longDot(x: ArrayData, y: ArrayData): Long = {
+    val n = x.numElements()
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += x.getLong(i) * y.getLong(i)
+      i += 1
+    }
+    acc
+  }
+
+  /** Σ x_i·y_i over equal-length signed-byte codes, widened to long. */
+  def bytesDot(x: Array[Byte], y: Array[Byte]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < x.length) { acc += x(i).toLong * y(i).toLong; i += 1 }
+    acc
+  }
+
+  /** SQ8 scale max(max|v_i|, 1e-30)/127: one scan, max seeded with −∞.
+    * A NaN element is skipped (`>` is false), so inputs must be finite to
+    * match the column-HOF spelling, whose `array_max` orders NaN greatest. */
+  def sq8Scale(x: ArrayData): Double = {
+    val n = x.numElements()
+    var mx = Double.NegativeInfinity
+    var i = 0
+    while (i < n) {
+      val ab = math.abs(x.getFloat(i).toDouble)
+      if (ab > mx) mx = ab
+      i += 1
+    }
+    math.max(mx, 1e-30) / 127.0
+  }
+
+  /** SQ8 codes floor(v_i/scale + 0.5) ∈ [-127, 127] as `array<long>`. */
+  def sq8Codes(x: ArrayData): ArrayData = {
+    val s = sq8Scale(x)
+    val out = new Array[Long](x.numElements())
+    var i = 0
+    while (i < out.length) {
+      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5).toLong
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** SQ8 reconstruction code_i·scale as `array<double>`. */
+  def sq8Recon(x: ArrayData): ArrayData = {
+    val s = sq8Scale(x)
+    val out = new Array[Double](x.numElements())
+    var i = 0
+    while (i < out.length) {
+      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5) * s
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** SQ8 codes packed one signed byte per dimension. */
+  def sq8Bytes(x: ArrayData): Array[Byte] = {
+    val s = sq8Scale(x)
+    val out = new Array[Byte](x.numElements())
+    var i = 0
+    while (i < out.length) {
+      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5).toByte
+      i += 1
+    }
+    out
+  }
+
+  /** signed-byte codes widened to `array<long>` */
+  def bytesToLongs(x: Array[Byte]): ArrayData = {
+    val out = new Array[Long](x.length)
+    var i = 0
+    while (i < x.length) { out(i) = x(i).toLong; i += 1 }
+    new GenericArrayData(out)
+  }
+
+  /** One SRP-LSH band key: `rowsPerBand` sign bits of the projections on
+    * planes [band·rowsPerBand, (band+1)·rowsPerBand), bit j set when
+    * projection j is > 0. Plane component
+    * ((p·2654435761 + i·40503) mod 1000)/1000 − 0.5, projection folded
+    * left to right in double — the op order of the column-HOF band key
+    * the DuckDB oracle replays. */
+  def srpBandKey(x: ArrayData, band: Int, rowsPerBand: Int): Long = {
+    val n = x.numElements()
+    var key = 0L
+    var j = 0
+    while (j < rowsPerBand) {
+      val p = (band * rowsPerBand + j).toLong
+      var proj = 0.0
+      var i = 0
+      while (i < n) {
+        val pc = ((p * 2654435761L + i * 40503L) % 1000L).toDouble / 1000.0 - 0.5
+        proj += x.getFloat(i).toDouble * pc
+        i += 1
+      }
+      if (proj > 0) key |= (1L << j)
+      j += 1
+    }
+    key
+  }
+
+  /** all `bands` band keys ([[srpBandKey]]) as `array<long>` */
+  def srpKeys(x: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) { out(b) = srpBandKey(x, b, rowsPerBand); b += 1 }
+    new GenericArrayData(out)
+  }
+
+  /** `m` nearest IVF list ids ([[graft.ops.Similarity.nearestIn]]) */
+  def nearestLists(x: ArrayData, cents: Array[(Int, Array[Float], Double)],
+                   m: Int): ArrayData =
+    new GenericArrayData(Similarity.nearestIn(cents, x.toFloatArray(), m))
+
+  /** PQ codes ([[graft.ops.Quantize.pqEncodeKernel]]) as `array<int>` */
+  def pqEncode(x: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData =
+    new GenericArrayData(Quantize.pqEncodeKernel(x.toFloatArray(), cb))
+
+  /** PQ codes packed one signed byte per subspace (ksub ≤ 128) */
+  def pqEncodeBytes(x: ArrayData, cb: Array[Array[Array[Float]]]): Array[Byte] = {
+    val codes = Quantize.pqEncodeKernel(x.toFloatArray(), cb)
+    val out = new Array[Byte](codes.length)
+    var i = 0
+    while (i < codes.length) { out(i) = codes(i).toByte; i += 1 }
+    out
+  }
+
+  /** per-query ADC table ([[graft.ops.Quantize.pqLutKernel]]) as
+    * `array<array<double>>` */
+  def pqLut(x: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData =
+    new GenericArrayData(Quantize.pqLutKernel(x.toFloatArray(), cb)
+      .map(row => new GenericArrayData(row): AnyRef))
+}

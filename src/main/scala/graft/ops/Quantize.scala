@@ -23,11 +23,10 @@ import org.apache.spark.sql.functions._
   *
   * Quantization itself runs as the native codegen'd
   * [[graft.functions.FloatVecSq8]] expression — ONE scale scan per row;
-  * the column-HOF spellings ([[sq8CodesRef]]/[[sq8ReconstructRef]]) stay
-  * as the SQL-portable reference twins (bit-parity asserted in
-  * QuantizeSpec) but re-evaluate the array_max scan inside the
-  * per-element lambda (O(d²) per vector — the reason they are not the
-  * production path at embedding dims of 768+).
+  * the SQL-portable column-HOF spelling the DuckDB oracle replays
+  * (bit-parity asserted in QuantizeSpec, in both eval modes) re-evaluates
+  * the array_max scan inside the per-element lambda (O(d²) per vector —
+  * the reason it is not the production path at embedding dims of 768+).
   */
 object Quantize {
 
@@ -37,13 +36,6 @@ object Quantize {
 
   /** int8 codes as a long array — native one-scan expression */
   def sq8Codes(vec: Column): Column = graft.functions.VecExprs.sq8(vec)
-
-  /** column-HOF reference twin of [[sq8Codes]] (the shape the DuckDB
-    * oracle replays); O(d²) per vector — spec/oracle use only. */
-  def sq8CodesRef(vec: Column): Column = {
-    val s = sq8Scale(vec)
-    transform(vec, x => floor(x.cast("double") / s + 0.5).cast("long"))
-  }
 
   /** integer self-dot Σ c_i² of a code array (native codegen'd loop) */
   private def codeNorm2(codes: Column): Column =
@@ -69,7 +61,7 @@ object Quantize {
     * query over candidate pairs, deterministic tie-break (score order,
     * then pid asc). One definition so a tie-break or rank change cannot
     * drift between the seven search variants. */
-  private def rankTopK(pairs: DataFrame, orderCol: String, ascending: Boolean,
+  private[ops] def rankTopK(pairs: DataFrame, orderCol: String, ascending: Boolean,
                        k: Int, outCols: Seq[String]): DataFrame = {
     val ord = if (ascending) col(orderCol).asc else col(orderCol).desc
     val w = Window.partitionBy("qid").orderBy(ord, col("pid").asc)
@@ -80,19 +72,10 @@ object Quantize {
   /** ADC distance column shared by [[annPq]]/[[annIvfPq]]: the native
     * codegen'd [[graft.functions.IntVecAdcDist]] — m table lookups folded
     * left-to-right from 0.0 in subspace order, inlined into the join's
-    * whole-stage codegen (round 6; the HOF spelling below is the
-    * SQL-portable reference twin, bit-parity asserted in QuantizeSpec). */
+    * whole-stage codegen (round 6; bit-parity with the SQL-portable HOF
+    * spelling asserted in AnnExprsSpec). */
   private def adcDistCol(codes: Column, lut: Column): Column =
     graft.functions.AnnExprs.adcDist(codes, lut)
-
-  /** column-HOF reference twin of [[adcDistCol]] (the exact grouping the
-    * DuckDB oracle's `list_reduce` replays: 1-based `element_at` per
-    * code, left-to-right fold from 0.0) — spec/oracle use only; a
-    * CodegenFallback interpreted per pair, which is why the native
-    * expression is the production path. */
-  def adcDistColRef(codes: Column, lut: Column): Column =
-    aggregate(zip_with(codes, lut, (c, l) => element_at(l, c + lit(1))),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Quantized brute-force cosine top-k within blocks: quantize → block
     * self-join → INTEGER dot per pair → one divide+sqrt for the score.
@@ -446,8 +429,8 @@ object Quantize {
     * codegen reference object; the packed bytes are the join payload —
     * no unpack projection). Self-search shape of [[annPq]]; distances
     * equal the L2 between the two PQ reconstructions (subspace-blocked
-    * — asserted in LakeSpec; bit-parity with the HOF twin
-    * [[annPqSdcRef]] in both eval modes — QuantizeSpec). Output
+    * — asserted in LakeSpec; bit-parity with the SQL-portable HOF
+    * spelling in both eval modes — QuantizeSpec). Output
     * (qid, rnk, pid, dist), dist ASC, ties pid ASC. */
   def annPqSdc(quant: DataFrame, cb: Array[Array[Array[Float]]],
                idCol: String, codesCol: String, k: Int,
@@ -464,36 +447,6 @@ object Quantize {
       case None => col("a.id") =!= col("b.id")
     }
     val dist = graft.functions.VecExprs.sdcDist(col("a.c"), col("b.c"), pqSdcTable(cb))
-    val pairs = e.as("a").join(e.as("b"), joinCond)
-      .select(col("a.id").as("qid"), col("b.id").as("pid"), dist.as("dist"))
-    rankTopK(pairs, "dist", ascending = true, k, Seq("qid", "rnk", "pid", "dist"))
-  }
-
-  /** Column-HOF reference twin of [[annPqSdc]]'s scoring (interpreted
-    * lambda + three nested `element_at`s per subspace per pair — the
-    * SQL-portable spelling; bit-parity with the native path asserted in
-    * QuantizeSpec). Spec/oracle use only. */
-  def annPqSdcRef(quant: DataFrame, cb: Array[Array[Array[Float]]],
-                  idCol: String, codesCol: String, k: Int,
-                  blockCol: Option[String] = None): DataFrame = {
-    val m = cb.length
-    val tbl = typedLit(pqSdcTable(cb).map(_.map(_.toSeq).toSeq).toSeq)
-    val cols = Seq(col(idCol).cast("long").as("id"),
-      graft.functions.VecExprs.sq8BytesToLongs(col(codesCol)).as("c")) ++
-      blockCol.map(c => col(c).as("blk"))
-    val e = quant.select(cols: _*)
-    val joinCond = blockCol match {
-      case Some(_) => col("a.blk") === col("b.blk") && col("a.id") =!= col("b.id")
-      case None => col("a.id") =!= col("b.id")
-    }
-    // dist = Σ_s tbl[s][qc_s][pc_s] — all 1-based element_at, fold from 0.0
-    val dist = aggregate(
-      transform(sequence(lit(0), lit(m - 1)), s =>
-        element_at(
-          element_at(element_at(tbl, s + lit(1)),
-            element_at(col("a.c"), s + lit(1)).cast("int") + lit(1)),
-          element_at(col("b.c"), s + lit(1)).cast("int") + lit(1))),
-      lit(0.0), (acc, x) => acc + x)
     val pairs = e.as("a").join(e.as("b"), joinCond)
       .select(col("a.id").as("qid"), col("b.id").as("pid"), dist.as("dist"))
     rankTopK(pairs, "dist", ascending = true, k, Seq("qid", "rnk", "pid", "dist"))
@@ -534,41 +487,8 @@ object Quantize {
       Seq("qid", "rnk", "pid", "qdot", "cos_q"))
   }
 
-  /** JVM twin of [[graft.functions.FloatVecSq8]] + the integer self-norm:
-    * (codes, Σc²) in one pass — identical IEEE-754 op sequence (same
-    * NegativeInfinity-seeded max scan, same max(·,1e-30)/127 scale, same
-    * floor(+0.5)), asserted bit-equal to the native expression in
-    * QuantizeSpec. Used where quantization happens inside a
-    * partition-local kernel ([[annIvfSq8]]'s assignment pass). */
-  def sq8Kernel(v: Array[Float]): (Array[Long], Long) = {
-    var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < v.length) {
-      val ab = math.abs(v(i).toDouble)
-      if (ab > mx) mx = ab
-      i += 1
-    }
-    val s = math.max(mx, 1e-30) / 127.0
-    val out = new Array[Long](v.length)
-    var n2 = 0L
-    i = 0
-    while (i < v.length) {
-      val c = math.floor(v(i).toDouble / s + 0.5).toLong
-      out(i) = c
-      n2 += c * c
-      i += 1
-    }
-    (out, n2)
-  }
-
   /** De-quantized reconstruction v̂_i = code_i · scale — for the
     * distortion bound |v − v̂| ≤ scale/2 the spec asserts. Native
     * one-scan expression. */
   def sq8Reconstruct(vec: Column): Column = graft.functions.VecExprs.sq8Recon(vec)
-
-  /** column-HOF reference twin of [[sq8Reconstruct]] — spec use only. */
-  def sq8ReconstructRef(vec: Column): Column = {
-    val s = sq8Scale(vec)
-    transform(sq8CodesRef(vec), c => c.cast("double") * s)
-  }
 }

@@ -49,32 +49,14 @@ object Similarity extends Serializable {
       .select("qid", "rnk", "pid", "cos")
   }
 
-  /** Deterministic pseudo-random hyperplane component for SRP-LSH:
-    * plane(p, i) ∈ [-0.5, 0.5), a pure hash-mix of (plane, dim) — identical
-    * in any engine, no RNG state. */
-  private def planeComponent(p: Column, i: Column): Column =
-    (pmod(p * 2654435761L + i * 40503L, lit(1000L)).cast("double") / 1000.0) - 0.5
-
   /** SRP-LSH bucket signature: `nPlanes` sign bits packed into one Long.
     * Vectors in the same bucket are cosine-close with high probability.
     * Runs as the native codegen'd [[graft.functions.FloatVecSrpKeys]]
     * expression (one band of nPlanes bits) — bit-identical to the
-    * column-HOF twin [[srpSignatureRef]], asserted in SimilaritySpec. */
+    * column-HOF band key the DuckDB oracle replays, asserted in
+    * SimilaritySpec. */
   def srpSignature(vec: Column, nPlanes: Int): Column =
     element_at(graft.functions.VecExprs.srpKeys(vec, 1, nPlanes), 1)
-
-  /** Column-HOF reference twin of [[srpSignature]] (the SQL-portable
-    * spelling the DuckDB oracles replay); interprets a lambda per
-    * (vector, plane) — spec/oracle use only. */
-  def srpSignatureRef(vec: Column, nPlanes: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        transform(vec, (x, i) => x.cast("double") * planeComponent(lit(p.toLong), i.cast("long"))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** LSH-bucketed ANN: candidates share an SRP bucket, then exact cosine
     * re-rank within bucket. Returns (qid, rnk, pid, cos) with rnk ≤ k —
@@ -95,18 +77,28 @@ object Similarity extends Serializable {
       .select("qid", "rnk", "pid", "cos")
   }
 
-  /** One band's SRP key: `rowsPerBand` sign bits from planes
-    * [band·rowsPerBand, (band+1)·rowsPerBand), packed into a Long. Pure
-    * column arithmetic — reproducible in the DuckDB oracle. */
-  def bandKeyCol(vec: Column, band: Column, rowsPerBand: Int): Column = {
-    val bits = (0 until rowsPerBand).map { j =>
-      val p = (band * rowsPerBand + j).cast("long")
-      val proj = aggregate(
-        transform(vec, (x, i) => x.cast("double") * planeComponent(p, i.cast("long"))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
+  /** Banded SRP-LSH candidate pairs — the candidate stage shared by
+    * [[annLshBanded]] and the end-to-end near-dup pipeline
+    * ([[Dedup.nearDupGroups]]). Distinct (a, b) with a < b; the self-join
+    * is an EQUI-join on (band, bandkey), never all-pairs. */
+  def lshCandidatePairs(emb: DataFrame, idCol: String, vecCol: String,
+                        bands: Int, rowsPerBand: Int): DataFrame = {
+    val e = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    // ALL band keys in one native expression evaluation per vector
+    // ([[graft.functions.FloatVecSrpKeys]]), then posexplode to the
+    // (id, band, bkey) layout — signature generation stays in whole-stage
+    // codegen end to end (the previous mapPartitions kernel paid the row
+    // codec on every vector)
+    val sigs = e.select(col("id"),
+      posexplode(graft.functions.VecExprs.srpKeys(col("v"), bands, rowsPerBand))
+        .as(Seq("band", "bkey")))
+    // rename on independent projections — same-lineage self-joins silently
+    // mis-resolve the a<b predicate
+    val left = sigs.select(col("id").as("a"), col("band"), col("bkey"))
+    val right = sigs.select(col("id").as("b"), col("band"), col("bkey"))
+    left.join(right, Seq("band", "bkey"))
+      .where(col("a") < col("b"))
+      .select("a", "b").distinct()
   }
 
   /** Banded multi-table SRP-LSH ANN — the scale path. `bands` independent
@@ -120,53 +112,6 @@ object Similarity extends Serializable {
     * never all-pairs; the re-rank scores only candidate pairs with the JVM
     * fold kernel. At 100 TB the (band, bandkey) join shuffles both sides by
     * key like any other equi-join; no stage is quadratic in the corpus. */
-  /** JVM twin of [[bandKeyCol]] — identical IEEE754 op sequence (same
-    * products, same left-to-right fold), ~10× faster than evaluating the
-    * interpreted higher-order-function expression per (vector, band): HOFs
-    * do not participate in whole-stage codegen. Cross-checked equal to the
-    * column form in SimilaritySpec. */
-  def bandKeyKernel(v: Array[Float], band: Int, rowsPerBand: Int): Long = {
-    var key = 0L
-    var j = 0
-    while (j < rowsPerBand) {
-      val p = (band * rowsPerBand + j).toLong
-      var proj = 0.0
-      var i = 0
-      while (i < v.length) {
-        val pc = ((p * 2654435761L + i * 40503L) % 1000L).toDouble / 1000.0 - 0.5
-        proj += v(i).toDouble * pc
-        i += 1
-      }
-      if (proj > 0) key |= (1L << j)
-      j += 1
-    }
-    key
-  }
-
-  /** Banded SRP-LSH candidate pairs — the candidate stage shared by
-    * [[annLshBanded]] and the end-to-end near-dup pipeline
-    * ([[Dedup.nearDupGroups]]). Distinct (a, b) with a < b; the self-join
-    * is an EQUI-join on (band, bandkey), never all-pairs. */
-  def lshCandidatePairs(emb: DataFrame, idCol: String, vecCol: String,
-                        bands: Int, rowsPerBand: Int): DataFrame = {
-    val e = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    // ALL band keys in one native expression evaluation per vector
-    // ([[graft.functions.FloatVecSrpKeys]], bit-identical to
-    // [[bandKeyKernel]]), then posexplode to the (id, band, bkey) layout —
-    // signature generation stays in whole-stage codegen end to end (the
-    // previous mapPartitions kernel paid the row codec on every vector)
-    val sigs = e.select(col("id"),
-      posexplode(graft.functions.VecExprs.srpKeys(col("v"), bands, rowsPerBand))
-        .as(Seq("band", "bkey")))
-    // rename on independent projections — same-lineage self-joins silently
-    // mis-resolve the a<b predicate
-    val left = sigs.select(col("id").as("a"), col("band"), col("bkey"))
-    val right = sigs.select(col("id").as("b"), col("band"), col("bkey"))
-    left.join(right, Seq("band", "bkey"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
-
   def annLshBanded(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                    bands: Int, rowsPerBand: Int): DataFrame = {
     // round 6: the directed candidate set {(a,b), (b,a) : a,b share a

@@ -107,7 +107,7 @@ object Urls {
     * multi-label suffixes need listing because the PSL default rule makes
     * every unknown TLD its own suffix. Parsed once per JVM into
     * (exact suffixes, wildcard parents for `*.x` rules, `!` exceptions). */
-  private lazy val (pslExact, pslWildcardParents, pslExceptions) = {
+  private[ops] lazy val (pslExact, pslWildcardParents, pslExceptions) = {
     val src = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/public_suffix_snapshot.dat"), "UTF-8")
     try {
@@ -120,7 +120,7 @@ object Urls {
   }
 
   /** longest suffix (in labels) any snapshot rule can produce */
-  private lazy val pslMaxLabels: Int =
+  private[ops] lazy val pslMaxLabels: Int =
     (pslExact.map(_.count(_ == '.') + 1) ++
       pslWildcardParents.map(_.count(_ == '.') + 2)).max
 
@@ -134,41 +134,9 @@ object Urls {
     * 64 KB method limit at the full ~1235-rule snapshot, dropping entire
     * stages to the interpreted path — the expression keeps the stage
     * codegen'd and interprets only this call. Bit-parity with the tower
-    * asserted in UrlsSpec. A host that IS a public suffix (or a single
+    * (kept as a test helper) asserted in UrlsSpec. A host that IS a public suffix (or a single
     * label, or an all-numeric IPv4 literal) passes through unchanged. */
   def registeredDomain(hostCol: Column): Column =
     graft.functions.RegisteredDomain.column(
       hostCol, pslExact, pslWildcardParents, pslExceptions, pslMaxLabels)
-
-  /** Column-expression reference twin of [[registeredDomain]] — per-label-
-    * count `isin` probes in a CASE tower; generated-code size grows with
-    * the rule count (the 64 KB hazard above), so spec/parity use only. */
-  def registeredDomainRef(hostCol: Column): Column = {
-    val labels = split(hostCol, "\\.")
-    val n = size(labels)
-    def lastK(k: Int): Column = concat_ws(".", slice(labels, -k, k))
-    def inSet(c: Column, s: Set[String]): Column =
-      if (s.isEmpty) lit(false) else c.isin(s.toSeq: _*)
-    def isPublicSuffix(k: Int): Column = {
-      val exactHit = inSet(lastK(k), pslExact.filter(_.count(_ == '.') == k - 1))
-      val wildHit =
-        if (k < 2) lit(false)
-        else inSet(lastK(k - 1), pslWildcardParents.filter(_.count(_ == '.') == k - 2)) &&
-          !inSet(lastK(k), pslExceptions)
-      exactHit || wildHit
-    }
-    // default rule (suffix = bare TLD) as the base; wrap with longer
-    // candidate suffixes so the LONGEST matching rule is checked first.
-    // Exception rules (`!x.y.z`) are handled explicitly: per the PSL
-    // algorithm the matching exception IS the registrable domain (its
-    // public suffix is the exception minus the leftmost label) — falling
-    // through to the default rule would be wrong whenever the exception's
-    // parent is not a bare TLD (e.g. !city.kawasaki.jp under *.kawasaki.jp)
-    val base = when(n >= 2, lastK(2)).otherwise(hostCol)
-    val psl = (2 to pslMaxLabels).foldLeft(base) { (acc, k) =>
-      when(n >= k && inSet(lastK(k), pslExceptions), lastK(k))
-        .otherwise(when(n >= k + 1 && isPublicSuffix(k), lastK(k + 1)).otherwise(acc))
-    }
-    when(hostCol.rlike("^[0-9.]+$"), hostCol).otherwise(psl)
-  }
 }

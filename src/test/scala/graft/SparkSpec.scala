@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -23,4 +23,25 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     s
   }
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `df` backed by an RDD. The optimizer evaluates a projection or filter
+    * straight over a local Seq while planning (ConvertToLocalRelation),
+    * through `eval`, so generated code would never run on it. */
+  def rddBacked(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
+
+  /** Runs `f` on the interpreted expression path and restores both
+    * settings after: `factoryMode=NO_CODEGEN` makes projections and
+    * predicates call each expression's `eval`, and `wholeStage=false`
+    * keeps whole-stage codegen out. Switching `wholeStage` off alone
+    * still compiles every expression. */
+  def withInterpretedEval[T](f: => T): T = {
+    val settings = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -42,11 +42,11 @@ class QuantizeSpec extends SparkSpec {
 
   test("native sq8 expressions are bit-identical to the column-HOF twins, both modes") {
     def check(): Unit = {
-      val rows = emb.select(
+      val rows = rddBacked(emb).select(
           Quantize.sq8Codes(col("embedding")).as("c"),
-          Quantize.sq8CodesRef(col("embedding")).as("cref"),
+          RefTwins.sq8CodesRef(col("embedding")).as("cref"),
           Quantize.sq8Reconstruct(col("embedding")).as("r"),
-          Quantize.sq8ReconstructRef(col("embedding")).as("rref"))
+          RefTwins.sq8ReconstructRef(col("embedding")).as("rref"))
         .collect()
       rows.length shouldBe 200
       rows.foreach { r =>
@@ -58,20 +58,7 @@ class QuantizeSpec extends SparkSpec {
       }
     }
     check()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try check()
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-  }
-
-  test("sq8Kernel (JVM twin) matches the native expression codes and norms") {
-    val rows = emb.select(col("vec_id"), col("embedding"),
-        Quantize.sq8Codes(col("embedding")).as("c"))
-      .collect()
-    rows.foreach { r =>
-      val (codes, n2) = Quantize.sq8Kernel(r.getSeq[Float](1).toArray)
-      codes.toSeq shouldBe r.getSeq[Long](2)
-      n2 shouldBe codes.map(c => c * c).sum
-    }
+    withInterpretedEval(check())
   }
 
   test("IVF-SQ8 scores candidates exactly like brute-force SQ8, with high recall") {
@@ -104,7 +91,7 @@ class QuantizeSpec extends SparkSpec {
   test("binary at-rest codes: byte parity, round trip, and dot parity, both modes") {
     import graft.functions.VecExprs
     def check(): Unit = {
-      val rows = emb.select(
+      val rows = rddBacked(emb).select(
           Quantize.sq8Codes(col("embedding")).as("c"),
           Quantize.sq8Bytes(col("embedding")).as("b"),
           Quantize.bytesToCodes(Quantize.sq8Bytes(col("embedding"))).as("rt"))
@@ -116,7 +103,7 @@ class QuantizeSpec extends SparkSpec {
         r.getSeq[Long](2) shouldBe codes
       }
       // dotB over packed bytes == dotL over long codes
-      val a = emb.select(col("vec_id"),
+      val a = rddBacked(emb).select(col("vec_id"),
         Quantize.sq8Codes(col("embedding")).as("c"),
         Quantize.sq8Bytes(col("embedding")).as("b"))
       val d = a.select(
@@ -126,9 +113,7 @@ class QuantizeSpec extends SparkSpec {
       d.foreach(r => r.getLong(0) shouldBe r.getLong(1))
     }
     check()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try check()
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    withInterpretedEval(check())
   }
 
   test("annSq8FromCodes over the at-rest layout is bit-identical to annSq8") {
@@ -284,16 +269,14 @@ class QuantizeSpec extends SparkSpec {
       val native = Quantize.annPqSdc(quant, cb, "vec_id", "codes", 3, Some("blk"))
         .collect().map(r => (r.getLong(0), r.getInt(1)) ->
           (r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3)))).toMap
-      val ref = Quantize.annPqSdcRef(quant, cb, "vec_id", "codes", 3, Some("blk"))
+      val ref = RefTwins.annPqSdcRef(quant, cb, "vec_id", "codes", 3, Some("blk"))
         .collect().map(r => (r.getLong(0), r.getInt(1)) ->
           (r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3)))).toMap
       native shouldBe ref
       native.nonEmpty shouldBe true
     }
     check()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try check()
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    withInterpretedEval(check())
   }
 
   test("IVF-PQ rerank = exact cosine order restricted to the PQ candidates") {

@@ -1,0 +1,110 @@
+package graft.ops
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+/** SQL-portable column spellings of the native expressions, the shapes
+  * the DuckDB oracles replay. Each is interpreted per row or per pair, so
+  * none is a production path; the specs use them to prove bit-parity of
+  * the native expressions. */
+object RefTwins {
+
+  /** Deterministic pseudo-random hyperplane component for SRP-LSH:
+    * plane(p, i) ∈ [-0.5, 0.5), a pure hash-mix of (plane, dim) — identical
+    * in any engine, no RNG state. */
+  private def planeComponent(p: Column, i: Column): Column =
+    (pmod(p * 2654435761L + i * 40503L, lit(1000L)).cast("double") / 1000.0) - 0.5
+
+  /** One band's SRP key: `rowsPerBand` sign bits from planes
+    * [band·rowsPerBand, (band+1)·rowsPerBand), packed into a Long, of
+    * [[Similarity.srpSignature]] and `FloatVecSrpKeys`. */
+  def bandKeyCol(vec: Column, band: Column, rowsPerBand: Int): Column = {
+    val bits = (0 until rowsPerBand).map { j =>
+      val p = (band * rowsPerBand + j).cast("long")
+      val proj = aggregate(
+        transform(vec, (x, i) => x.cast("double") * planeComponent(p, i.cast("long"))),
+        lit(0.0), (acc, v) => acc + v)
+      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
+    }
+    bits.reduce(_ + _)
+  }
+
+  /** [[Quantize.sq8Codes]]; re-scans for the scale per element, O(d²). */
+  def sq8CodesRef(vec: Column): Column = {
+    val s = Quantize.sq8Scale(vec)
+    transform(vec, x => floor(x.cast("double") / s + 0.5).cast("long"))
+  }
+
+  /** [[Quantize.sq8Reconstruct]] */
+  def sq8ReconstructRef(vec: Column): Column = {
+    val s = Quantize.sq8Scale(vec)
+    transform(sq8CodesRef(vec), c => c.cast("double") * s)
+  }
+
+  /** ADC distance of `AnnExprs.adcDist`, in the exact grouping the DuckDB
+    * oracle's `list_reduce` replays: 1-based `element_at` per code,
+    * left-to-right fold from 0.0. */
+  def adcDistColRef(codes: Column, lut: Column): Column =
+    aggregate(zip_with(codes, lut, (c, l) => element_at(l, c + lit(1))),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** [[Quantize.annPqSdc]] with the SDC sum as a lambda over three nested
+    * `element_at`s per subspace per pair. */
+  def annPqSdcRef(quant: DataFrame, cb: Array[Array[Array[Float]]],
+                  idCol: String, codesCol: String, k: Int,
+                  blockCol: Option[String] = None): DataFrame = {
+    val m = cb.length
+    val tbl = typedLit(Quantize.pqSdcTable(cb).map(_.map(_.toSeq).toSeq).toSeq)
+    val cols = Seq(col(idCol).cast("long").as("id"),
+      graft.functions.VecExprs.sq8BytesToLongs(col(codesCol)).as("c")) ++
+      blockCol.map(c => col(c).as("blk"))
+    val e = quant.select(cols: _*)
+    val joinCond = blockCol match {
+      case Some(_) => col("a.blk") === col("b.blk") && col("a.id") =!= col("b.id")
+      case None => col("a.id") =!= col("b.id")
+    }
+    // dist = Σ_s tbl[s][qc_s][pc_s] — all 1-based element_at, fold from 0.0
+    val dist = aggregate(
+      transform(sequence(lit(0), lit(m - 1)), s =>
+        element_at(
+          element_at(element_at(tbl, s + lit(1)),
+            element_at(col("a.c"), s + lit(1)).cast("int") + lit(1)),
+          element_at(col("b.c"), s + lit(1)).cast("int") + lit(1))),
+      lit(0.0), (acc, x) => acc + x)
+    val pairs = e.as("a").join(e.as("b"), joinCond)
+      .select(col("a.id").as("qid"), col("b.id").as("pid"), dist.as("dist"))
+    Quantize.rankTopK(pairs, "dist", ascending = true, k, Seq("qid", "rnk", "pid", "dist"))
+  }
+
+  /** [[Urls.registeredDomain]] as per-label-count `isin` probes in a CASE
+    * tower; generated-code size grows with the rule count. */
+  def registeredDomainRef(hostCol: Column): Column = {
+    import Urls.{pslExact, pslExceptions, pslMaxLabels, pslWildcardParents}
+    val labels = split(hostCol, "\\.")
+    val n = size(labels)
+    def lastK(k: Int): Column = concat_ws(".", slice(labels, -k, k))
+    def inSet(c: Column, s: Set[String]): Column =
+      if (s.isEmpty) lit(false) else c.isin(s.toSeq: _*)
+    def isPublicSuffix(k: Int): Column = {
+      val exactHit = inSet(lastK(k), pslExact.filter(_.count(_ == '.') == k - 1))
+      val wildHit =
+        if (k < 2) lit(false)
+        else inSet(lastK(k - 1), pslWildcardParents.filter(_.count(_ == '.') == k - 2)) &&
+          !inSet(lastK(k), pslExceptions)
+      exactHit || wildHit
+    }
+    // default rule (suffix = bare TLD) as the base; wrap with longer
+    // candidate suffixes so the LONGEST matching rule is checked first.
+    // Exception rules (`!x.y.z`) are handled explicitly: per the PSL
+    // algorithm the matching exception IS the registrable domain (its
+    // public suffix is the exception minus the leftmost label) — falling
+    // through to the default rule would be wrong whenever the exception's
+    // parent is not a bare TLD (e.g. !city.kawasaki.jp under *.kawasaki.jp)
+    val base = when(n >= 2, lastK(2)).otherwise(hostCol)
+    val psl = (2 to pslMaxLabels).foldLeft(base) { (acc, k) =>
+      when(n >= k && inSet(lastK(k), pslExceptions), lastK(k))
+        .otherwise(when(n >= k + 1 && isPublicSuffix(k), lastK(k + 1)).otherwise(acc))
+    }
+    when(hostCol.rlike("^[0-9.]+$"), hostCol).otherwise(psl)
+  }
+}

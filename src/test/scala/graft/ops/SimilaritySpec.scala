@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.VecKernels
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -140,39 +142,38 @@ class SimilaritySpec extends SparkSpec {
     c1 shouldBe c2
   }
 
-  test("bandKeyKernel is bit-identical to the column-expression band key") {
+  test("srpBandKey is bit-identical to the column-expression band key") {
     val fromCol = emb.select(col("vec_id"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .join(emb, "vec_id")
-      .withColumn("bkey", Similarity.bandKeyCol(col("embedding"), col("band"), 6))
+      .withColumn("bkey", RefTwins.bandKeyCol(col("embedding"), col("band"), 6))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(3)).toMap
     val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     for ((id, v) <- vecs; b <- 0 until 4) {
-      assert(fromCol((id, b)) == Similarity.bandKeyKernel(v, b, 6), s"vec $id band $b")
+      assert(fromCol((id, b)) == VecKernels.srpBandKey(new GenericArrayData(v), b, 6),
+        s"vec $id band $b")
     }
   }
 
   test("native srpKeys is bit-identical to kernel, HOF band key and HOF signature, both modes") {
     def check(): Unit = {
-      val rows = emb.select(col("vec_id"), col("embedding"),
+      val rows = rddBacked(emb).select(col("vec_id"), col("embedding"),
           graft.functions.VecExprs.srpKeys(col("embedding"), 4, 6).as("keys"),
           Similarity.srpSignature(col("embedding"), 10).as("sig"),
-          Similarity.srpSignatureRef(col("embedding"), 10).as("sigref"))
+          RefTwins.bandKeyCol(col("embedding"), lit(0), 10).as("sigref"))
         .collect()
       rows.length shouldBe 200
       rows.foreach { r =>
-        val v = r.getSeq[Float](1).toArray
+        val v = new GenericArrayData(r.getSeq[Float](1).toArray)
         val keys = r.getSeq[Long](2)
         (0 until 4).foreach { b =>
-          assert(keys(b) == Similarity.bandKeyKernel(v, b, 6), s"band $b")
+          assert(keys(b) == VecKernels.srpBandKey(v, b, 6), s"band $b")
         }
         r.getLong(3) shouldBe r.getLong(4) // native signature == HOF twin
       }
     }
     check()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try check()
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    withInterpretedEval(check())
   }
 
   test("scorePairsJoin is bit-identical to scorePairsBroadcast (the scale re-rank arm)") {

@@ -149,7 +149,7 @@ class UrlsSpec extends SparkSpec {
       "co.uk", "192.168.0.1", "deep.a.b.c.example.org")
     val df = hosts.toDF("h")
     val native = df.select(Urls.registeredDomain(col("h"))).collect().map(_.getString(0))
-    val ref = df.select(Urls.registeredDomainRef(col("h"))).collect().map(_.getString(0))
+    val ref = df.select(RefTwins.registeredDomainRef(col("h"))).collect().map(_.getString(0))
     native.toSeq shouldBe ref.toSeq
     // and across a generated corpus exercising label counts 1..6
     val gen = (0 until 300).map { i =>
@@ -157,7 +157,7 @@ class UrlsSpec extends SparkSpec {
         case 0 => ".com"; case 1 => ".co.uk"; case 2 => ".kawasaki.jp" })
     }.toDF("h")
     val ng = gen.select(Urls.registeredDomain(col("h"))).collect().map(_.getString(0))
-    val rg = gen.select(Urls.registeredDomainRef(col("h"))).collect().map(_.getString(0))
+    val rg = gen.select(RefTwins.registeredDomainRef(col("h"))).collect().map(_.getString(0))
     ng.toSeq shouldBe rg.toSeq
   }
 }
