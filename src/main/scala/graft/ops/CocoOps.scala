@@ -195,6 +195,11 @@ object CocoOps {
   /** Concatenate datasets with dense global ids (A11 prefix-sum shifts, no
     * sequential driver loop) and category dedup-by-name with id remap (O7).
     * File names get the reference's `{i}_` prefix (batch_geojson2coco.py:394).
+    * The last part is never counted: its count feeds no offset. Categories
+    * are dimension-sized, so they are merged on the driver: each name keeps
+    * its first (part, id) row, and the merged ids follow that order. The
+    * merged categories and the id remap are local Datasets, whose counts
+    * and broadcasts start no job.
     */
   def concat(parts: Seq[CocoTables]): CocoTables = {
     require(parts.nonEmpty)
@@ -203,10 +208,8 @@ object CocoOps {
 
     // per-dataset counts → offsets (counts are tiny metadata; shift columns
     // keep id assignment fully distributed)
-    val imgCounts = parts.map(_.images.count())
-    val annCounts = parts.map(_.annotations.count())
-    val imgOff = imgCounts.scanLeft(0L)(_ + _)
-    val annOff = annCounts.scanLeft(0L)(_ + _)
+    val imgOff = parts.init.map(_.images.count()).scanLeft(0L)(_ + _)
+    val annOff = parts.init.map(_.annotations.count()).scanLeft(0L)(_ + _)
 
     val images = parts.zipWithIndex.map { case (p, i) =>
       p.images.toDF()
@@ -214,22 +217,17 @@ object CocoOps {
         .withColumn("fileName", concat_ws("", lit(s"${i}_"), col("fileName")))
     }.reduce(_ unionByName _).as[CocoImage]
 
-    // categories: dedup by name keeping the first dataset's id ordering
+    // categories: (part, id, name, supercategory) in (part, id) order; the
+    // first row of each name gives its merged id and supercategory
     val allCats = parts.zipWithIndex.map { case (p, i) =>
-      p.categories.toDF().withColumn("ds", lit(i))
-    }.reduce(_ unionByName _)
-    val catByName = allCats
-      .groupBy("name").agg(min(struct(col("ds"), col("id"))).as("first"),
-        first(col("supercategory")).as("supercategory"))
-      .withColumn("ds0", col("first.ds")).withColumn("id0", col("first.id"))
-    // dense ids without a global window (categories are usually dim-sized,
-    // but a no-partition row_number still single-partitions and warns)
-    val newCats = Ids.denseId(catByName, "newId", Seq("ds0", "id0"))
-      .withColumn("id", col("newId").cast("int"))
-      .select(col("id"), col("name"), col("supercategory"))
-    val catRemap = allCats.select(col("ds").as("rds"), col("id").as("oldId"), col("name"))
-      .join(newCats.select(col("name"), col("id").as("newCatId")), "name")
-      .select("rds", "oldId", "newCatId")
+      p.categories.toDF().select(lit(i).as("ds"), col("id"), col("name"), col("supercategory"))
+    }.reduce(_ unionByName _).as[(Int, Int, String, String)].collect().sortBy(c => (c._1, c._2))
+    val newCats = allCats.distinctBy(_._3).zipWithIndex.map { case ((_, _, name, sup), i) =>
+      CocoCategory(i, name, sup)
+    }
+    val newId = newCats.map(c => c.name -> c.id).toMap
+    val catRemap = spark.createDataset(allCats.map(c => (c._1, c._2, newId(c._3))))
+      .toDF("rds", "oldId", "newCatId")
 
     val annotations = parts.zipWithIndex.map { case (p, i) =>
       p.annotations.toDF()
@@ -265,6 +263,6 @@ object CocoOps {
       a ++ b ++ mergedLicenses
     }
 
-    CocoTables(images, annotations, newCats.as[CocoCategory], extras)
+    CocoTables(images, annotations, spark.createDataset(newCats.toSeq), extras)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * partition. This operator keeps the same output with a scalable plan:
   *
   * 1. range-repartition + in-partition sort by the order columns,
-  * 2. one cheap count-per-partition job,
+  * 2. one cheap count-per-partition job (none for one partition: offset 0),
   * 3. per-partition prefix-sum offsets broadcast, ids = offset + local rank.
   *
   * Exactness requires the order key to be a total order (unique); ties
@@ -28,8 +28,9 @@ object Ids {
     * q08/q10/q27/q44). Same auto-select idiom as
     * [[Similarity.BroadcastVecBytes]]: the decision comes from Catalyst's
     * size estimate, so corpus-scale inputs keep the full partition count —
-    * this is a size threshold, not a local-core-count tune. Override per
-    * session with `graft.ids.singlePartitionBytes`. */
+    * this is a size threshold, not a local-core-count tune (an under-estimate
+    * puts the whole input into one sorted partition). Override per session
+    * with `graft.ids.singlePartitionBytes`. */
   val SinglePartitionBytes: Long = 64L << 20
 
   def denseId(df: DataFrame, idName: String, orderCols: Seq[String],
@@ -53,14 +54,10 @@ object Ids {
     val sorted = df.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
     val rdd = sorted.rdd
 
-    // pass 1: rows per partition (cheap: count(1) per partition)
-    val counts = rdd.mapPartitionsWithIndex { (p, it) =>
-      Iterator((p, it.size.toLong))
-    }.collect().toMap
-
-    val nParts = (counts.keySet + (-1)).max + 1
-    val offsets = new Array[Long](math.max(nParts, 0) + 1)
-    for (p <- 0 until nParts) offsets(p + 1) = offsets(p) + counts.getOrElse(p, 0L)
+    // pass 1, only with several partitions (one partition's offset is 0):
+    // rows per partition, collected in partition order → prefix sums
+    val offsets = if (parts == 1) Array(0L)
+      else rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(0L)(_ + _)
     val bc = spark.sparkContext.broadcast(offsets)
 
     // pass 2: emit offset + local ordinal over the SAME RDD instance

@@ -16,7 +16,8 @@ import org.apache.spark.sql.Dataset
   * committed manifest is read back, not recomputed — kill/resume
   * equivalence); the manifests carry each stage's per-partition rows and
   * bytes ([[Lake.lineage]]), and the concat is [[CocoOps.concat]]'s
-  * shift-based re-indexing.
+  * shift-based re-indexing (no count of the last part, categories merged
+  * on the driver): one raster runs six Spark jobs.
   */
 object BatchPipeline {
 

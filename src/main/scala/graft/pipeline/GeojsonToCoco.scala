@@ -47,9 +47,12 @@ object GeojsonToCoco {
       CocoImage(i.toLong, s"${t.tileName}.png", t.height, t.width)
     }
 
-    // categories: first-appearance factorization over featureId order (A1)
-    val catRows = features.groupBy("zoneName").agg(min("featureId").as("first"))
-      .orderBy("first").select("zoneName").as[String].collect()
+    // categories: first-appearance factorization over featureId order (A1),
+    // one job of per-partition (zone, min featureId), merged on the driver
+    val catRows = features.select("zoneName", "featureId").as[(String, Long)]
+      .mapPartitions(_.foldLeft(Map.empty[String, Long]) { case (m, (z, f)) =>
+        m.updated(z, m.get(z).fold(f)(math.min(_, f))) }.iterator)
+      .collect().groupMapReduce(_._1)(_._2)(math.min).toSeq.sortBy(_.swap).map(_._1)
     val categories = catRows.zipWithIndex.map { case (name, i) =>
       CocoCategory(i, name.drop(p.trimClass), name.drop(p.trimClass))
     }

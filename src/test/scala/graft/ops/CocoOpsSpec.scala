@@ -7,18 +7,21 @@ import org.apache.spark.sql.functions._
 
 class CocoOpsSpec extends SparkSpec {
 
-  def mkTables(nImgs: Int, idOffset: Long = 0, catNames: Seq[String] = Seq("a", "b")): CocoTables = {
+  /** a part whose annotations cycle through its categories' ids, with the
+    * categories in the given row order */
+  def part(nImgs: Int, annsPerImg: Int, cats: Seq[CocoCategory]): CocoTables = {
     val spark2 = spark
     import spark2.implicits._
     val imgs = (0 until nImgs).map(i => CocoImage(i.toLong, s"tile_$i.png", 10, 10))
-    val anns = (0 until nImgs * 2).map { i =>
-      CocoAnnotation(i.toLong, (i / 2).toLong, i % catNames.length,
+    val anns = (0 until nImgs * annsPerImg).map { i =>
+      CocoAnnotation(i.toLong, (i / annsPerImg).toLong, cats(i % cats.length).id,
         Array(0.0, 0, 1, 0, 1, 1, 0, 0), Array(0.0, 0, 1, 1), 0.5)
     }
-    val cats = catNames.zipWithIndex.map { case (n, i) => CocoCategory(i, n, n) }
-    CocoTables(spark.createDataset(imgs), spark.createDataset(anns),
-      spark.createDataset(cats))
+    CocoTables(spark.createDataset(imgs), spark.createDataset(anns), spark.createDataset(cats))
   }
+
+  def mkTables(nImgs: Int, catNames: Seq[String] = Seq("a", "b")): CocoTables =
+    part(nImgs, 2, catNames.zipWithIndex.map { case (n, i) => CocoCategory(i, n, n) })
 
   test("hashSplit partitions images disjointly and semi-joins annotations") {
     val t = mkTables(50)
@@ -127,5 +130,43 @@ class CocoOpsSpec extends SparkSpec {
     // annotation↔image referential integrity holds
     assert(all.annotations.toDF().join(all.images.toDF().select(col("id").as("imageId")),
       Seq("imageId"), "left_anti").isEmpty)
+  }
+
+  test("concat of 3 unequal parts: dense disjoint ids, first-appearance categories, right names") {
+    def cat(id: Int, name: String) = CocoCategory(id, name, s"sup-$name")
+    val parts = Seq(
+      part(4, 3, Seq(cat(1, "b"), cat(0, "a"))),
+      part(1, 5, Seq(cat(0, "c"), cat(1, "a"))),
+      part(3, 2, Seq(cat(2, "c"), cat(0, "b"), cat(1, "d"))))
+    val all = CocoOps.concat(parts)
+    val imgs = all.images.collect()
+    val anns = all.annotations.collect()
+    imgs.map(_.id).sorted.toSeq shouldBe (0L until 8L)
+    anns.map(_.id).sorted.toSeq shouldBe (0L until 23L)
+    // merged ids follow the first (part, id) of each name
+    all.categories.collect().sortBy(_.id).map(c => (c.id, c.name, c.supercategory)).toSeq shouldBe
+      Seq((0, "a", "sup-a"), (1, "b", "sup-b"), (2, "c", "sup-c"), (3, "d", "sup-d"))
+    val catName = all.categories.collect().map(c => c.id -> c.name).toMap
+    val byId = anns.map(a => a.id -> a).toMap
+    val imgOff = Seq(0L, 4L, 5L)
+    val annOff = Seq(0L, 12L, 17L)
+    for ((p, i) <- parts.zipWithIndex) {
+      val names = p.categories.collect().map(c => c.id -> c.name).toMap
+      p.annotations.collect().foreach { a =>
+        val got = byId(annOff(i) + a.id)
+        got.imageId shouldBe imgOff(i) + a.imageId
+        catName(got.categoryId) shouldBe names(a.categoryId)
+      }
+    }
+    imgs.filter(_.fileName.startsWith("2_")).map(_.id).sorted.toSeq shouldBe (5L until 8L)
+  }
+
+  test("concat: a merged category takes the supercategory of its first (part, id) row") {
+    val all = CocoOps.concat(Seq(
+      part(1, 2, Seq(CocoCategory(1, "a", "late"), CocoCategory(0, "a", "first"))),
+      part(1, 2, Seq(CocoCategory(0, "a", "other"), CocoCategory(1, "c", "c")))))
+    all.categories.collect().sortBy(_.id).map(c => (c.id, c.name, c.supercategory)).toSeq shouldBe
+      Seq((0, "a", "first"), (1, "c", "c"))
+    all.annotations.collect().map(_.categoryId).toSet shouldBe Set(0, 1)
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,16 +28,29 @@ class IdsSpec extends SparkSpec {
   }
 
   test("stats-adaptive single-partition arm assigns identical ids (round 6)") {
+    // distinct keys over 8 input partitions, no shuffle before denseId's own
     val df = spark.range(0, 5000, 1, 8).toDF("k")
       .withColumn("k", pmod(col("k") * 48271L, lit(99991L)))
-      .distinct()
-    def ids(thresholdBytes: Long): Set[(Long, Long)] = {
+    val sc = spark.sparkContext
+    // (ids, jobs of the denseId call, jobs of the collect); adaptive
+    // execution runs the range exchange when denseId takes the RDD
+    def run(thresholdBytes: Long): (Set[(Long, Long)], Int, Int) = {
       spark.conf.set("graft.ids.singlePartitionBytes", thresholdBytes.toString)
-      try Ids.denseId(df, "id", Seq("k"))
-        .select("k", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally spark.conf.unset("graft.ids.singlePartitionBytes")
+      try {
+        val (out, callJobs) = JobCounter.count(sc)(Ids.denseId(df, "id", Seq("k")))
+        val (ids, collectJobs) = JobCounter.count(sc)(
+          out.select("k", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+        (ids, callJobs, collectJobs)
+      } finally spark.conf.unset("graft.ids.singlePartitionBytes")
     }
     // force the single-partition arm vs the multi-partition arm: same ids
-    assert(ids(Long.MaxValue) == ids(0L))
+    val (one, oneCall, oneCollect) = run(Long.MaxValue)
+    val (multi, multiCall, multiCollect) = run(0L)
+    one shouldBe multi
+    one.map(_._2) shouldBe (0L until 5000L).toSet
+    // one partition: the exchange, then the emit pass; no sample, no count
+    (oneCall, oneCollect) shouldBe ((1, 1))
+    // several partitions: sample, exchange and count, then the emit pass
+    (multiCall, multiCollect) shouldBe ((3, 1))
   }
 }

@@ -147,15 +147,16 @@ class UrlsSpec extends SparkSpec {
       "city.kawasaki.jp", "x.city.kawasaki.jp", "www.ck", "a.www.ck",
       "mybucket.s3.amazonaws.com", "x.blogspot.com", "single",
       "co.uk", "192.168.0.1", "deep.a.b.c.example.org")
-    val df = hosts.toDF("h")
+    // RDD-backed, so the projections run through generated code
+    val df = rddBacked(hosts.toDF("h"))
     val native = df.select(Urls.registeredDomain(col("h"))).collect().map(_.getString(0))
     val ref = df.select(RefTwins.registeredDomainRef(col("h"))).collect().map(_.getString(0))
     native.toSeq shouldBe ref.toSeq
     // and across a generated corpus exercising label counts 1..6
-    val gen = (0 until 300).map { i =>
+    val gen = rddBacked((0 until 300).map { i =>
       (0 to i % 6).map(j => s"l$j").mkString(".") + (i % 3 match {
         case 0 => ".com"; case 1 => ".co.uk"; case 2 => ".kawasaki.jp" })
-    }.toDF("h")
+    }.toDF("h"))
     val ng = gen.select(Urls.registeredDomain(col("h"))).collect().map(_.getString(0))
     val rg = gen.select(RefTwins.registeredDomainRef(col("h"))).collect().map(_.getString(0))
     ng.toSeq shouldBe rg.toSeq

@@ -3,8 +3,10 @@ package graft.pipeline
 import graft.SparkSpec
 import graft.geo.JtsGeo
 import graft.io.Coco
+import graft.lake.Lake
 import graft.model.{Feature, RasterMeta}
 import graft.ops.Tiling
+import org.apache.spark.JobCounter
 
 /** Golden round-trip fixtures (SURVEY.md §5.1): a tiny deterministic world —
   * one raster's metadata, hand-placed polygons (inside, tile-straddler,
@@ -177,5 +179,45 @@ class RoundTripSpec extends SparkSpec {
     assert(back(2).segmentation == null, "RLE stays null (not representable as a ring)")
     assert(back(3).segmentation == null, "absent stays null")
     assert(back(2).iscrowd == 1 && back(3).iscrowd == 1)
+  }
+
+  def freshLake(): Lake = new Lake(java.nio.file.Files.createTempDirectory("lake").toString, spark)
+
+  test("one raster: BatchPipeline.run and the coco2geojson collect start few Spark jobs") {
+    val spark2 = spark
+    import spark2.implicits._
+    val sc = spark.sparkContext
+    val (t, runJobs) = JobCounter.count(sc)(BatchPipeline.run(freshLake(), "job",
+      Seq(raster -> features), GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)))
+    val tiles = Tiling.tilesFor(raster, 40, 40).map(m => m.copy(tileName = s"0_${m.tileName}")).toDS()
+    val (out, c2gJobs) = JobCounter.count(sc)(CocoToGeojson.run(t, tiles, CocoToGeojson.Params()).collect())
+    out.map(_.getString(1)).toSet shouldBe Set("building", "road")
+    // run: category list, annotation ids' range exchange, three stage
+    // writes, concat's category collect
+    runJobs should be <= 6
+    c2gJobs should be <= 6
+  }
+
+  test("BatchPipeline over 3 rasters: a resume on the same job id returns the one-shot tables") {
+    // three rasters of unequal feature counts and different first classes
+    val pairs = Seq(
+      raster.copy(rasterId = "r0") -> features,
+      raster.copy(rasterId = "r1") -> features.filter(_.featureId == 1),
+      raster.copy(rasterId = "r2") -> features.filter(_.featureId != 1))
+    val params = GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)
+    val lake = freshLake()
+    def rows(t: Coco.CocoTables) = (
+      t.images.collect().map(i => (i.id, i.fileName)).sorted.toSeq,
+      t.annotations.collect().map(a => (a.id, a.imageId, a.categoryId, a.segmentation.toSeq,
+        a.area)).sortBy(_._1).toSeq,
+      t.categories.collect().map(c => (c.id, c.name)).sorted.toSeq)
+    val oneShot = rows(BatchPipeline.run(lake, "job", pairs, params))
+    val resumed = rows(BatchPipeline.run(lake, "job", pairs, params))
+    resumed shouldBe oneShot
+    oneShot._1.map(_._1) shouldBe (0L until 18L)
+    oneShot._2.map(_._1) shouldBe (0L until 10L)
+    oneShot._3 shouldBe Seq((0, "building"), (1, "road"))
+    // r1 holds only the road feature: its local category 0 maps to "road"
+    oneShot._2.filter(a => a._2 >= 6 && a._2 < 12).map(_._3).toSet shouldBe Set(1)
   }
 }
