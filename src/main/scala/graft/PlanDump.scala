@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Round-6 optimization evidence tool (guide §1.1/§7.2): dumps
-  * `.explain("formatted")` for the named queries (or every non-streaming
-  * query) to `<outDir>/<name>_<tag>.txt`. Runs OUTSIDE the frozen
+/** Round-6 optimization evidence tool (guide §1.1/§7.2): runs the named
+  * queries (or every non-streaming query) and dumps each one's final
+  * adaptive plan, `.explain("formatted")` after `collect()`, to
+  * `<outDir>/<name>_<tag>.txt`. Runs OUTSIDE the frozen
   * bench/verify harness — purely a plan-inspection aid for
   * plans/r06/<query>_{before,after}.txt.
   *
@@ -28,6 +29,9 @@ object PlanDump {
     qs.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
+        // run the query first: the adaptive plan is final (and carries its
+        // WholeStageCodegen `*(n)` markers) only after an action on `df`
+        df.collect()
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)

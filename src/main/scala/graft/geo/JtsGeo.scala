@@ -2,9 +2,8 @@ package graft.geo
 
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.util.GeometryFixer
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
+import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
 import org.locationtech.jts.operation.union.UnaryUnionOp
-import org.locationtech.jts.simplify.DouglasPeuckerSimplifier
 import org.locationtech.jts.algorithm.MinimumDiameter
 
 import scala.jdk.CollectionConverters._
@@ -30,12 +29,10 @@ object JtsGeo {
   private val wkbR = ThreadLocal.withInitial[WKBReader](() => new WKBReader(factory))
   private val wkbW = ThreadLocal.withInitial[WKBWriter](() => new WKBWriter(2))
   private val wktR = ThreadLocal.withInitial[WKTReader](() => new WKTReader(factory))
-  private val wktW = ThreadLocal.withInitial[WKTWriter](() => new WKTWriter())
 
   def fromWkb(b: Array[Byte]): Geometry = wkbR.get.read(b)
   def toWkb(g: Geometry): Array[Byte] = wkbW.get.write(g)
   def fromWkt(s: String): Geometry = wktR.get.read(s)
-  def toWkt(g: Geometry): String = wktW.get.write(g)
 
   def point(x: Double, y: Double): Point = factory.createPoint(new Coordinate(x, y))
 
@@ -51,13 +48,6 @@ object JtsGeo {
     val pts = flat.grouped(2).map(p => new Coordinate(p(0), p(1))).toArray
     val closed = if (pts.nonEmpty && pts.head != pts.last) pts :+ pts.head.copy() else pts
     factory.createPolygon(closed)
-  }
-
-  /** Exterior ring back to the flat [x1,y1,…] layout. */
-  def flatExterior(g: Geometry): Array[Double] = g match {
-    case p: Polygon =>
-      p.getExteriorRing.getCoordinates.dropRight(1).flatMap(c => Array(c.x, c.y))
-    case other => other.getCoordinates.flatMap(c => Array(c.x, c.y))
   }
 
   /** Clip to a tile box, reference `gpd.clip` semantics (coordinates.py:184-191):
@@ -94,10 +84,6 @@ object JtsGeo {
   def simplify(g: Geometry, tol: Double): Geometry =
     org.locationtech.jts.simplify.TopologyPreservingSimplifier.simplify(g, tol)
 
-  /** Douglas-Peucker (shapely preserve_topology=False path). */
-  def simplifyDp(g: Geometry, tol: Double): Geometry =
-    DouglasPeuckerSimplifier.simplify(g, tol)
-
   def minimumRotatedRectangle(g: Geometry): Geometry =
     MinimumDiameter.getMinimumRectangle(g)
 
@@ -110,19 +96,5 @@ object JtsGeo {
     val b1 = g.buffer(1e-7)
     if (b1.isValid && !b1.isEmpty) return b1
     GeometryFixer.fix(g)
-  }
-
-  /** Shoelace area of a flat ring — matches `Polygon(...).area`
-    * (reference coco.py:259) without building a JTS object. */
-  def shoelace(flat: Seq[Double]): Double = {
-    val n = flat.length / 2
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val j = (i + 1) % n
-      s += flat(2 * i) * flat(2 * j + 1) - flat(2 * j) * flat(2 * i + 1)
-      i += 1
-    }
-    math.abs(s) / 2.0
   }
 }

@@ -1,5 +1,8 @@
 package graft.geo
 
+import org.locationtech.jts.geom.{Coordinate, CoordinateSequence, Geometry, LineString, Polygon}
+import org.locationtech.jts.geom.util.GeometryTransformer
+
 /** From-scratch projection math for the CRS pairs the reference actually
   * uses (SURVEY.md P7; no proj4 jar exists in the sandbox):
   *  - EPSG:4326 ↔ EPSG:3857 closed-form spherical Mercator
@@ -7,7 +10,8 @@ package graft.geo
   *  - EPSG:4326 ↔ UTM via Transverse Mercator Krüger series
   *    (reference area filter, coordinates.py:194-198);
   *  - `estimateUtmZone` reproducing geopandas `estimate_utm_crs`: zone from
-  *    the layer bounds' centroid (coordinates.py:195).
+  *    the layer bounds' centroid (coordinates.py:195);
+  *  - `crsHop`: the one place that maps a layer CRS code to its lon/lat hop.
   * Pure double math — usable inside kernels and as column expressions.
   */
 object Proj {
@@ -111,8 +115,8 @@ object Proj {
     * zone — the reference estimates one UTM CRS for the whole layer
     * (`geojson.estimate_utm_crs()`, coordinates.py:195) and filters every
     * clipped part by its area in that CRS (coordinates.py:194-198). */
-  def utmPolygonArea(poly: org.locationtech.jts.geom.Polygon, zone: Int, north: Boolean): Double = {
-    def ringArea(ring: org.locationtech.jts.geom.LineString): Double = {
+  def utmPolygonArea(poly: Polygon, zone: Int, north: Boolean): Double = {
+    def ringArea(ring: LineString): Double = {
       val cs = ring.getCoordinates
       if (cs.length < 4) return 0.0
       val pts = cs.map(c => utmForward(c.y, c.x, zone, north))
@@ -233,19 +237,51 @@ object Proj {
     case _ => None
   }
 
-  /** Shoelace area of a lat/lon ring after projecting to its estimated UTM —
-    * the reference's area-filter semantics (coordinates.py:194-198). */
-  def utmRingArea(latLonFlat: Seq[Double]): Double = {
-    if (latLonFlat.length < 6) return 0.0
-    val lons = latLonFlat.grouped(2).map(_.head).toSeq
-    val lats = latLonFlat.grouped(2).map(_.last).toSeq
-    val (zone, north) = estimateUtmZone(lons.min, lats.min, lons.max, lats.max)
-    val pts = lons.zip(lats).map { case (lo, la) => utmForward(la, lo, zone, north) }
-    var s = 0.0
-    for (i <- pts.indices) {
-      val j = (i + 1) % pts.length
-      s += pts(i)._1 * pts(j)._2 - pts(j)._1 * pts(i)._2
+  // ---------- the regularisation hop: layer CRS ↔ lon/lat ----------
+
+  /** A vertex transform (x, y) → (x', y'). */
+  type XY = (Double, Double) => (Double, Double)
+
+  /** (toLonLat, fromLonLat) vertex transforms of a layer CRS: the reference
+    * reprojects to EPSG:4326 before simplify/orthogonalise (tolerance in
+    * degrees) and back (coco2geojson.py:342-353). EPSG:3857 is the
+    * closed-form Mercator, EPSG:326xx/327xx UTM zone xx north/south
+    * (coordinates.py:56-71), and every [[projectedCrs]] code its conic.
+    * None when the layer is already lon/lat (EPSG:4326), has no CRS or an
+    * unknown one: the hop is the identity (tolerance in layer units). */
+  def crsHop(layerCrs: Option[String]): Option[(XY, XY)] = {
+    val Utm = "EPSG:32([67])([0-9]{2})".r
+    def hop(toLonLat: XY, fromLonLat: XY) = Some((toLonLat, fromLonLat))
+    layerCrs.flatMap {
+      case "EPSG:3857" =>
+        hop((x, y) => (invMercatorLon(x), invMercatorLat(y)),
+          (lon, lat) => (mercatorX(lon), mercatorY(lat)))
+      case Utm(hemi, zoneS) =>
+        val zone = zoneS.toInt
+        val north = hemi == "6"
+        hop((e, n) => utmInverse(e, n, zone, north).swap,
+          (lon, lat) => utmForward(lat, lon, zone, north))
+      case code =>
+        projectedCrs(code).flatMap(conic =>
+          hop((x, y) => conic.inverse(x, y).swap, (lon, lat) => conic.forward(lat, lon)))
     }
-    math.abs(s) / 2
+  }
+
+  /** Apply a vertex transform to every coordinate of `g`, keeping its
+    * structure (rings, holes, parts). */
+  def transformCoords(g: Geometry, f: XY): Geometry = {
+    val edit = new GeometryTransformer {
+      override def transformCoordinates(cs: CoordinateSequence, parent: Geometry) = {
+        val out = new Array[Coordinate](cs.size)
+        var i = 0
+        while (i < cs.size) {
+          val (x, y) = f(cs.getX(i), cs.getY(i))
+          out(i) = new Coordinate(x, y)
+          i += 1
+        }
+        JtsGeo.factory.getCoordinateSequenceFactory.create(out)
+      }
+    }
+    edit.transform(g)
   }
 }

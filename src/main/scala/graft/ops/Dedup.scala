@@ -90,15 +90,19 @@ object Dedup {
     * The exploded-layout twin above re-aggregates by (id, band) — one
     * whole extra exchange of the signature table — because the row
     * layout has already lost the per-id grouping. Identical rows
-    * (asserted in DedupSpec). */
-  private def bandedKeysFromSigs(sigs: DataFrame): DataFrame =
+    * (asserted in DedupSpec) for even-length signatures; an odd-length
+    * signature's last minimum is left unbanded, and a signature shorter
+    * than 2 gives no band rows. */
+  private def bandedKeysFromSigs(sigs: DataFrame): DataFrame = {
+    val bands = (size(col("sig")) / 2).cast("int")
     sigs.select(col("id"),
         posexplode(transform(
-          sequence(lit(0), (size(col("sig")) / 2).cast("int") - 1),
+          when(bands > 0, sequence(lit(0), bands - 1)),
           b => element_at(col("sig"), b * 2 + 1) * MersennePrime +
             element_at(col("sig"), b * 2 + 2)))
           .as(Seq("band", "bandkey")))
       .select(col("id"), col("band").cast("int").as("band"), col("bandkey"))
+  }
 
   /** LSH candidate pairs from MinHash signatures. Output distinct (a, b)
     * with a < b — EVERY colliding pair, for pipelines that score each

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * partition. This operator keeps the same output with a scalable plan:
   *
   * 1. range-repartition + in-partition sort by the order columns,
-  * 2. one cheap count-per-partition job (none for one partition: offset 0),
-  * 3. per-partition prefix-sum offsets broadcast, ids = offset + local rank.
+  * 2. Spark's own `RDD.zipWithIndex`: one job counts partitions 0..n−2
+  *    (none for one partition: its offset is 0), and each row's id is its
+  *    partition's prefix-sum offset + its local rank.
   *
   * Exactness requires the order key to be a total order (unique); ties
   * would make the id assignment partition-dependent — same caveat as
@@ -44,28 +45,13 @@ object Ids {
     val cols = orderCols.map(col)
     // RangePartitioner samples with a per-RDD seed, so two separately
     // planned executions of the same Dataset can land rows on different
-    // partitions in the count pass vs the emit pass. Dropping to ONE RDD
-    // instance pins one partitioning for both passes (the sample job runs
-    // once, the exchange's shuffle files are written once and re-read by
-    // both jobs as skipped stages) WITHOUT persisting anything — the
-    // previous MEMORY_AND_DISK persist here pinned a cached copy per call
-    // until LRU eviction (GeoJson/Shapefile/vocab each call this once per
-    // read; long sessions accumulated storage).
+    // partitions in the count pass vs the emit pass. zipWithIndex counts and
+    // emits over ONE RDD instance, which pins one partitioning for both
+    // passes (the sample job runs once, the exchange's shuffle files are
+    // written once and re-read by both jobs as skipped stages) without
+    // persisting anything.
     val sorted = df.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
-    val rdd = sorted.rdd
-
-    // pass 1, only with several partitions (one partition's offset is 0):
-    // rows per partition, collected in partition order → prefix sums
-    val offsets = if (parts == 1) Array(0L)
-      else rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-
-    // pass 2: emit offset + local ordinal over the SAME RDD instance
-    val outSchema = sorted.schema.add(idName, LongType, nullable = false)
-    val out = rdd.mapPartitionsWithIndex { (p, it) =>
-      var i = bc.value(p)
-      it.map { r => val o = Row.fromSeq(r.toSeq :+ i); i += 1; o }
-    }
-    spark.createDataFrame(out, outSchema)
+    val out = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+    spark.createDataFrame(out, sorted.schema.add(idName, LongType, nullable = false))
   }
 }

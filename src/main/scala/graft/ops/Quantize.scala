@@ -226,9 +226,12 @@ object Quantize {
     // scoring tier (annPq/annIvfPq) supports the standard 8-bit FAISS
     // geometry up to ksub = 256 (ADVICE r05: the signed-byte cap is a
     // property of the storage tier, not of PQ itself)
-    require(ksub >= 1 && ksub <= 256, s"ksub=$ksub out of range [1,256]")
+    requireKsub(ksub)
     pqCodebooksFromSeeds(Similarity.ivfCentroids(e, ksub), m)
   }
+
+  private def requireKsub(ksub: Int): Unit =
+    require(ksub >= 1 && ksub <= 256, s"ksub=$ksub out of range [1,256]")
 
   /** Slice an existing hash-strided seed draw (the first `ksub` rows of
     * any [[Similarity.ivfCentroids]] result — the draw is prefix-stable)
@@ -353,6 +356,7 @@ object Quantize {
   def annIvfPq(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                nLists: Int, nProbe: Int, m: Int, ksub: Int): DataFrame = {
     import graft.functions.AnnExprs
+    requireKsub(ksub)
     val e = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     // round 6: ONE hash-strided TakeOrdered draw serves both the coarse
     // quantizer (first nLists seeds) and the PQ codebooks (first ksub) —

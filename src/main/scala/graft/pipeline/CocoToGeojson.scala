@@ -1,169 +1,112 @@
 package graft.pipeline
 
-import graft.geo.{Affine, GeomCols, JtsGeo}
-import graft.io.Coco
+import graft.geo.{Affine, JtsGeo, Orthogonalise, Proj}
+import graft.io.{Coco, Georeference}
 import graft.model.TileMeta
 import graft.ops.GeomUnionAgg
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.locationtech.jts.geom.{Geometry, Polygon}
 
 /** coco2geojson pipeline (reference scripts/coco2geojson.py:188-367 traced in
-  * SURVEY.md §3.2): annotations ⋈ images (broadcast) → marginal flag (P15,
-  * quirk preserved) → tile_name join against tile metadata (J3) → pixel
-  * segmentation → world polygon at pixel centres (P4, y/x swap of
-  * coordinates.py:102-104) → per-class geometry union (A2, the custom
-  * Aggregator replacing the reference's sequential per-class loop) → explode
-  * parts → shape regularisation (G1/G2/G7: MRR overrides simplify).
+  * SURVEY.md §3.2), one typed pass over the annotations:
+  *
+  *  1. dimension tables on the driver: image id → tile affine (tile name
+  *     from the image file name, P13; tile metadata by name, J3) and
+  *     category id → name (J4) — per-raster tables, collected, not joined;
+  *  2. pixel segmentation → world polygon at pixel centres (P4, y/x swap of
+  *     coordinates.py:102-104);
+  *  3. per-class geometry union (A2, the custom Aggregator replacing the
+  *     reference's sequential per-class loop);
+  *  4. explode parts → shape regularisation (G1/G2/G7: MRR overrides
+  *     simplify) → class name.
+  *
+  * Dropped, like the reference's inner joins drop them: an annotation whose
+  * image has no tile or whose category has no name. Skipped, since they add
+  * no area to the union: a null segmentation (RLE or absent, see
+  * [[Coco.read]]) and a ring of zero area (fewer than 3 vertices or all on
+  * one line), which is not a valid polygon to hand to the union.
+  *
+  * A tile name that appears twice in `tiles` is refused with an
+  * IllegalArgumentException: its images would have two affines.
   *
   * Output: one row per merged polygon part with (zone_code, zone_name, wkb).
   */
 object CocoToGeojson {
 
   final case class Params(
-      tileSearchMargin: Double = 0.0,
       simplifyTolerance: Double = 0.0,
       minimumRotatedRectangle: Boolean = false,
       orthogonalise: Boolean = false,
       /** Layer CRS for the reference's regularisation hop: it reprojects to
         * EPSG:4326 before simplify/orthogonalise (tolerance is in degrees!)
-        * and back (coco2geojson.py:342-353). "EPSG:3857" enables the
-        * closed-form Mercator hop; "EPSG:326xx"/"EPSG:327xx" (UTM zone xx
-        * north/south — the reference's own common raster CRS,
-        * coordinates.py:56-71) the Transverse-Mercator hop; "EPSG:4326"
-        * means already lon/lat; None skips the hop (tolerance interpreted
-        * in layer units — documented deviation). */
+        * and back (coco2geojson.py:342-353). The codes with a hop are
+        * listed at [[Proj.crsHop]]; EPSG:4326 means already lon/lat; None
+        * or an unknown code skips the hop (tolerance interpreted in layer
+        * units — documented deviation). */
       layerCrs: Option[String] = None)
-
-  /** (toLonLat, fromLonLat) vertex transforms for a layer CRS, or identity
-    * when the CRS is unknown/absent. */
-  private[pipeline] def crsHop(layerCrs: Option[String])
-      : ((Double, Double) => (Double, Double), (Double, Double) => (Double, Double)) = {
-    val Utm = "EPSG:32([67])([0-9]{2})".r
-    layerCrs match {
-      case Some("EPSG:3857") =>
-        ((x, y) => (graft.geo.Proj.invMercatorLon(x), graft.geo.Proj.invMercatorLat(y)),
-         (lon, lat) => (graft.geo.Proj.mercatorX(lon), graft.geo.Proj.mercatorY(lat)))
-      case Some(Utm(hemi, zoneS)) =>
-        val zone = zoneS.toInt
-        val north = hemi == "6"
-        ((e, n) => { val (lat, lon) = graft.geo.Proj.utmInverse(e, n, zone, north); (lon, lat) },
-         (lon, lat) => graft.geo.Proj.utmForward(lat, lon, zone, north))
-      case Some(code) if graft.geo.Proj.projectedCrs(code).isDefined =>
-        // Lambert/Albers national grids (Lambert-93, CONUS/Australian Albers)
-        val conic = graft.geo.Proj.projectedCrs(code).get
-        ((x, y) => { val (lat, lon) = conic.inverse(x, y); (lon, lat) },
-         (lon, lat) => conic.forward(lat, lon))
-      case _ => ((x, y) => (x, y), (x, y) => (x, y))
-    }
-  }
 
   def run(tables: Coco.CocoTables, tiles: Dataset[TileMeta], p: Params): DataFrame = {
     val spark = tables.annotations.sparkSession
+    import spark.implicits._
 
-    // J2: annotations ⋈ images — images is the dim side, broadcast
-    val imgs = tables.images.toDF()
-      .select(col("id").as("imageId"), col("fileName"))
-      // P13: tile_name from file name (coco2geojson.py:306-308)
-      .withColumn("tileName", graft.io.Georeference.tileNameCol(col("fileName")))
-    val ann = tables.annotations.toDF()
-      .join(broadcast(imgs), "imageId")
-
-    // P15 marginal flag (deprecated upstream; replicated, default margin 0)
-    val tilesDf = tiles.toDF()
-    val joined = ann.join(broadcast(tilesDf), "tileName")
-      .withColumn("marginal", GeomCols.marginalCol(
-        element_at(col("bbox"), 1), element_at(col("bbox"), 2),
-        element_at(col("bbox"), 3), element_at(col("bbox"), 4),
-        col("width").cast("double"), col("height").cast("double"),
-        lit(p.tileSearchMargin)))
-
-    // P4: pixel segmentation → world polygon (pixel-centre law) as WKB
-    val outSchema = StructType(Seq(
-      StructField("categoryId", IntegerType), StructField("wkb", BinaryType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val segI = joined.schema.fieldIndex("segmentation")
-    val catI = joined.schema.fieldIndex("categoryId")
-    val aI = joined.schema.fieldIndex("a"); val bI = joined.schema.fieldIndex("b")
-    val cI = joined.schema.fieldIndex("c"); val dI = joined.schema.fieldIndex("d")
-    val eI = joined.schema.fieldIndex("e"); val fI = joined.schema.fieldIndex("f")
-    val worldPolys = joined.mapPartitions { it =>
-      it.map { r =>
-        val seg = r.getSeq[Double](segI)
-        val aff = Affine(r.getDouble(aI), r.getDouble(bI), r.getDouble(cI),
-          r.getDouble(dI), r.getDouble(eI), r.getDouble(fI))
-        // reference pixel_segmentation_to_spatial_rio: pairs are (x=col,
-        // y=row); xy(row, col) at the pixel centre
-        val coords = seg.grouped(2).map { pair =>
-          val (x, y) = aff.pixelToWorld(pair.head, pair.last)
-          Array(x, y)
-        }.toArray.flatten
-        Row(r.getInt(catI), JtsGeo.toWkb(JtsGeo.polygonFromFlat(coords.toIndexedSeq)))
-      }
+    val tileAffine: Map[String, Affine] = tiles.collect().groupBy(_.tileName).map {
+      case (name, Array(t)) => name -> Affine(t.a, t.b, t.c, t.d, t.e, t.f)
+      case (name, _) =>
+        throw new IllegalArgumentException(s"tile name '$name' appears more than once in tiles")
     }
+    val imageAffine: Map[Long, Affine] = tables.images
+      .select(col("id"), Georeference.tileNameCol(col("fileName")))
+      .as[(Long, String)].collect()
+      .flatMap { case (id, tileName) => tileAffine.get(tileName).map(id -> _) }.toMap
+    val names: Map[Int, String] =
+      tables.categories.select("id", "name").as[(Int, String)].collect().toMap
+
+    // P4: reference pixel_segmentation_to_spatial_rio — pairs are (x=col,
+    // y=row), mapped by xy(row, col) at the pixel centre
+    val worldPolys = tables.annotations.select("imageId", "categoryId", "segmentation")
+      .as[(Long, Int, Array[Double])]
+      .flatMap { case (imageId, categoryId, seg) =>
+        for {
+          aff <- imageAffine.get(imageId)
+          if names.contains(categoryId) && seg != null && seg.length >= 6
+          pixel = JtsGeo.polygonFromFlat(seg.toIndexedSeq)
+          if pixel.getArea > 0
+        } yield (categoryId, JtsGeo.toWkb(Proj.transformCoords(pixel, aff.pixelToWorld)))
+      }
+
+    val hop =
+      if (p.simplifyTolerance > 0 || p.orthogonalise || p.minimumRotatedRectangle)
+        Proj.crsHop(p.layerCrs)
+      else None
 
     // A2: per-class union, then explode multipolygon parts (O8)
-    val unioned = worldPolys.groupBy("categoryId")
-      .agg(GeomUnionAgg.union(col("wkb")).as("uwkb"))
-
-    // CRS hop for regularisation (reference semantics: tolerance in degrees)
-    val (toLL, fromLL) = crsHop(p.layerCrs)
-    val toLonLat: org.locationtech.jts.geom.Geometry => org.locationtech.jts.geom.Geometry =
-      g => transformCoords(g, toLL)
-    val fromLonLat: org.locationtech.jts.geom.Geometry => org.locationtech.jts.geom.Geometry =
-      g => transformCoords(g, fromLL)
-    val hop = p.layerCrs.exists(_ != "EPSG:4326") &&
-      (p.simplifyTolerance > 0 || p.orthogonalise || p.minimumRotatedRectangle)
-
-    val parts = unioned.mapPartitions { it =>
-      it.flatMap { r =>
-        val g = JtsGeo.fromWkb(r.getAs[Array[Byte]](1))
-        JtsGeo.explodePolygons(g).map { part0 =>
-          val part = if (hop) toLonLat(part0) else part0
-          // G7 regularise: MRR wins over simplify+orthogonalise
-          // (coco.py:441-447 precedence)
-          val reg =
-            if (p.minimumRotatedRectangle) JtsGeo.minimumRotatedRectangle(part)
-            else {
-              val simplified =
-                if (p.simplifyTolerance > 0) JtsGeo.simplify(part, p.simplifyTolerance)
-                else part
-              if (p.orthogonalise) simplified match {
-                case poly: org.locationtech.jts.geom.Polygon =>
-                  graft.geo.Orthogonalise(poly)
-                case other => other
-              } else simplified
-            }
-          Row(r.getInt(0), JtsGeo.toWkb(if (hop) fromLonLat(reg) else reg))
+    worldPolys.toDF("categoryId", "wkb").groupBy("categoryId")
+      .agg(GeomUnionAgg.union(col("wkb")))
+      .as[(Int, Array[Byte])]
+      .flatMap { case (categoryId, wkb) =>
+        JtsGeo.explodePolygons(JtsGeo.fromWkb(wkb)).map { part =>
+          val reg = hop match {
+            case Some((toLonLat, fromLonLat)) =>
+              Proj.transformCoords(regularise(Proj.transformCoords(part, toLonLat), p), fromLonLat)
+            case None => regularise(part, p)
+          }
+          (categoryId, names(categoryId), JtsGeo.toWkb(reg))
         }
       }
-    }
-
-    // J4: category names
-    parts.join(broadcast(tables.categories.toDF()
-        .select(col("id").as("categoryId"), col("name").as("zone_name"))),
-      "categoryId")
-      .select(col("categoryId").as("zone_code"), col("zone_name"), col("wkb"))
+      .toDF("zone_code", "zone_name", "wkb")
   }
 
-  /** Apply a coordinate transform vertex-wise, preserving polygon structure. */
-  private def transformCoords(g: org.locationtech.jts.geom.Geometry,
-      f: (Double, Double) => (Double, Double)): org.locationtech.jts.geom.Geometry = {
-    val edit = new org.locationtech.jts.geom.util.GeometryTransformer {
-      override def transformCoordinates(
-          cs: org.locationtech.jts.geom.CoordinateSequence,
-          parent: org.locationtech.jts.geom.Geometry) = {
-        val out = new Array[org.locationtech.jts.geom.Coordinate](cs.size)
-        var i = 0
-        while (i < cs.size) {
-          val (x, y) = f(cs.getX(i), cs.getY(i))
-          out(i) = new org.locationtech.jts.geom.Coordinate(x, y)
-          i += 1
-        }
-        JtsGeo.factory.getCoordinateSequenceFactory.create(out)
+  /** G7 regularise: MRR wins over simplify + orthogonalise (coco.py:441-447
+    * precedence). */
+  private def regularise(part: Geometry, p: Params): Geometry =
+    if (p.minimumRotatedRectangle) JtsGeo.minimumRotatedRectangle(part)
+    else {
+      val simplified =
+        if (p.simplifyTolerance > 0) JtsGeo.simplify(part, p.simplifyTolerance) else part
+      simplified match {
+        case poly: Polygon if p.orthogonalise => Orthogonalise(poly)
+        case other => other
       }
     }
-    edit.transform(g)
-  }
 }

@@ -48,12 +48,44 @@ class ProjSpec extends SparkSpec with PropHelpers {
     assert(Proj.estimateUtmZone(-180.0, 10.0, -180.0, 10.0)._1 == 1)
   }
 
-  test("utmRingArea: 1km square near the equator has ~1e6 m2 area") {
+  test("utmPolygonArea: 1km square near the equator has ~1e6 m2 area") {
     // ~0.009 degrees of lat ≈ 1 km
     val d = 0.0089932
-    val ring = Seq(30.0, 0.0, 30.0 + d, 0.0, 30.0 + d, d, 30.0, d)
-    val a = Proj.utmRingArea(ring)
+    val square = JtsGeo.polygonFromFlat(Seq(30.0, 0.0, 30.0 + d, 0.0, 30.0 + d, d, 30.0, d))
+    val (zone, north) = Proj.estimateUtmZone(30.0, 0.0, 30.0 + d, d)
+    val a = Proj.utmPolygonArea(square, zone, north)
     assert(math.abs(a - 1e6) / 1e6 < 0.01, s"area $a")
+  }
+
+  test("crsHop round-trips a point for every CRS family; lon/lat, absent and unknown CRSs have none") {
+    // (layer CRS, a lon/lat point inside its area of use)
+    val families = Seq(
+      "EPSG:3857" -> (151.2, -33.8),
+      "EPSG:32633" -> (15.3, 52.1), // UTM zone 33 north
+      "EPSG:32756" -> (151.2, -33.8), // UTM zone 56 south
+      "EPSG:2154" -> (2.35, 48.85),
+      "EPSG:5070" -> (-96.0, 37.0),
+      "EPSG:3577" -> (151.2, -33.8))
+    for ((code, (lon, lat)) <- families) {
+      val (toLonLat, fromLonLat) = Proj.crsHop(Some(code)).getOrElse(fail(s"$code has no hop"))
+      val (x, y) = fromLonLat(lon, lat)
+      // projected meters, not degrees
+      assert(math.abs(x) > 1000 || math.abs(y) > 1000, s"$code: ($x, $y)")
+      val (lon2, lat2) = toLonLat(x, y)
+      assert(math.abs(lon2 - lon) < 1e-7 && math.abs(lat2 - lat) < 1e-7,
+        s"$code: ($lon, $lat) -> ($lon2, $lat2)")
+    }
+    for (crs <- Seq(Some("EPSG:4326"), None, Some("EPSG:9999"), Some("local")))
+      Proj.crsHop(crs) shouldBe None
+  }
+
+  test("transformCoords maps every vertex and keeps rings and holes") {
+    val withHole = JtsGeo.box(0, 0, 10, 10).difference(JtsGeo.box(2, 2, 4, 4))
+    val moved = Proj.transformCoords(withHole, (x, y) => (x + 100, 2 * y))
+    moved.getGeometryType shouldBe "Polygon"
+    moved.asInstanceOf[org.locationtech.jts.geom.Polygon].getNumInteriorRing shouldBe 1
+    moved.getEnvelopeInternal shouldBe new org.locationtech.jts.geom.Envelope(100, 110, 0, 20)
+    moved.getArea shouldBe 2 * withHole.getArea
   }
 
   // ---------- conic projections ----------

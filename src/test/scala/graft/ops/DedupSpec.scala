@@ -63,6 +63,17 @@ class DedupSpec extends SparkSpec {
     assert(viaSigs == viaRows)
   }
 
+  test("lshComponentEdgesFromSigs: signatures shorter than 2 give no band rows") {
+    val spark2 = spark
+    import spark2.implicits._
+    // ids 1 and 2 share their only band; 3's odd tail and 4, 5 are unbanded
+    val sigs = Seq(1L -> Seq(7L, 9L), 2L -> Seq(7L, 9L), 3L -> Seq(7L, 9L, 11L),
+      4L -> Seq(7L), 5L -> Seq.empty[Long]).toDF("id", "sig")
+    val edges = Dedup.lshComponentEdgesFromSigs(sigs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    edges shouldBe Set((1L, 2L), (1L, 3L))
+  }
+
   test("ngramJaccard matches brute force") {
     val got = Dedup.ngramJaccard(docs, "doc_id", "text", 3, 1000L)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3)))).toMap

@@ -252,6 +252,18 @@ class QuantizeSpec extends SparkSpec {
     assert(recall >= 0.5, s"mean IVF-PQ recall@3 vs brute-force PQ-ADC = $recall")
   }
 
+  test("annIvfPq refuses ksub outside [1,256] with annPq's error") {
+    val (m, nLists, nProbe) = (4, 16, 4)
+    for (ksub <- Seq(0, 300)) {
+      val viaPq = intercept[IllegalArgumentException](
+        Quantize.annPq(emb, "vec_id", "embedding", 3, m, ksub))
+      val viaIvf = intercept[IllegalArgumentException](
+        Quantize.annIvfPq(emb, "vec_id", "embedding", 3, nLists, nProbe, m, ksub))
+      viaIvf.getMessage shouldBe viaPq.getMessage
+      viaIvf.getMessage should include(s"ksub=$ksub")
+    }
+  }
+
   test("native SDC scoring is bit-identical to the HOF twin, both eval modes") {
     val spark2 = spark
     import spark2.implicits._
