@@ -24,8 +24,9 @@ import org.locationtech.jts.geom.{Geometry, Polygon}
   * Dropped, like the reference's inner joins drop them: an annotation whose
   * image has no tile or whose category has no name. Skipped, since they add
   * no area to the union: a null segmentation (RLE or absent, see
-  * [[Coco.read]]) and a ring of zero area (fewer than 3 vertices or all on
-  * one line), which is not a valid polygon to hand to the union.
+  * [[Coco.read]]), an odd-length one (a lone coordinate is no vertex, so
+  * the ring is malformed) and a ring of zero area (fewer than 3 vertices or
+  * all on one line), which is not a valid polygon to hand to the union.
   *
   * A tile name that appears twice in `tiles` is refused with an
   * IllegalArgumentException: its images would have two affines.
@@ -69,7 +70,7 @@ object CocoToGeojson {
       .flatMap { case (imageId, categoryId, seg) =>
         for {
           aff <- imageAffine.get(imageId)
-          if names.contains(categoryId) && seg != null && seg.length >= 6
+          if names.contains(categoryId) && seg != null && seg.length >= 6 && seg.length % 2 == 0
           pixel = JtsGeo.polygonFromFlat(seg.toIndexedSeq)
           if pixel.getArea > 0
         } yield (categoryId, JtsGeo.toWkb(Proj.transformCoords(pixel, aff.pixelToWorld)))

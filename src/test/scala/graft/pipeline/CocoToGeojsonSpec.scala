@@ -35,12 +35,13 @@ class CocoToGeojsonSpec extends SparkSpec {
       .sortBy(_._1)
   }
 
-  test("null segmentations and zero-area rings are skipped: their class keeps its area") {
+  test("null, odd-length and zero-area segmentations are skipped: their class keeps its area") {
     val t = tables(
       ann(0, 0, 0, square),
       ann(1, 0, 0, null), // RLE or absent segmentation (Coco.read)
       ann(2, 0, 0, Array(1, 1, 3, 3)), // two vertices
       ann(3, 0, 0, Array(1, 1, 2, 2, 3, 3)), // three vertices on one line
+      ann(5, 0, 0, Array(5, 35, 25, 35, 25, 15, 5)), // odd length: a lone tail coordinate
       ann(4, 0, 1, null)) // a class with no ring at all has no output row
     run(t, tile) shouldBe Seq((0, "building", 1600.0))
   }
