@@ -3,6 +3,7 @@ package graft.lake
 import java.util.UUID
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -62,12 +63,16 @@ final class Lake(val root: String, spark: SparkSession) {
     val obs = Observation()
     val aggs = statsCols.indices.flatMap(i => Seq(min(col(statsCols(i))).cast("string").as(s"min$i"),
       max(col(statsCols(i))).cast("string").as(s"max$i")))
+    // the manifest rename is the commit point: no _SUCCESS marker
     (if (aggs.isEmpty) df else df.observe(obs, aggs.head, aggs.tail: _*))
-      .write.parquet(s"$root/$table/$data")
-    // (write partition id, rows, bytes, Spark schema json) per part file
+      .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(s"$root/$table/$data")
+    // (write partition id, rows, bytes, Spark schema json) per part file;
+    // read options from `conf`, not from a fresh Configuration per file
+    val readOpts = HadoopReadOptions.builder(conf).build()
     val files = fs.listStatus(new Path(s"$root/$table/$data"))
       .filter(_.getPath.getName.startsWith("part-")).map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), readOpts)
         try (st.getPath.getName.split('-')(1).toInt, r.getRecordCount, st.getLen,
           r.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
         finally r.close()

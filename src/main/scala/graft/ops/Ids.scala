@@ -11,9 +11,12 @@ import org.apache.spark.sql.types._
   * partition. This operator keeps the same output with a scalable plan:
   *
   * 1. range-repartition + in-partition sort by the order columns,
-  * 2. Spark's own `RDD.zipWithIndex`: one job counts partitions 0..n−2
-  *    (none for one partition: its offset is 0), and each row's id is its
-  *    partition's prefix-sum offset + its local rank.
+  * 2. with one partition, `monotonically_increasing_id`: in partition 0 it
+  *    is the row position, and the call plans without running a job;
+  * 3. with several, Spark's own `RDD.zipWithIndex`: one job counts
+  *    partitions 0..n−2, and each row's id is its partition's prefix-sum
+  *    offset + its local rank. Taking the RDD runs the sample and the
+  *    exchange inside the call.
   *
   * Exactness requires the order key to be a total order (unique); ties
   * would make the id assignment partition-dependent — same caveat as
@@ -43,15 +46,18 @@ object Ids {
       else if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)) 1
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val cols = orderCols.map(col)
-    // RangePartitioner samples with a per-RDD seed, so two separately
-    // planned executions of the same Dataset can land rows on different
-    // partitions in the count pass vs the emit pass. zipWithIndex counts and
-    // emits over ONE RDD instance, which pins one partitioning for both
-    // passes (the sample job runs once, the exchange's shuffle files are
-    // written once and re-read by both jobs as skipped stages) without
-    // persisting anything.
     val sorted = df.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
-    val out = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    spark.createDataFrame(out, sorted.schema.add(idName, LongType, nullable = false))
+    if (parts == 1) sorted.withColumn(idName, monotonically_increasing_id())
+    else {
+      // RangePartitioner samples with a per-RDD seed, so two separately
+      // planned executions of the same Dataset can land rows on different
+      // partitions in the count pass vs the emit pass. zipWithIndex counts
+      // and emits over ONE RDD instance, which pins one partitioning for both
+      // passes (the sample job runs once, the exchange's shuffle files are
+      // written once and re-read by both jobs as skipped stages) without
+      // persisting anything.
+      val out = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+      spark.createDataFrame(out, sorted.schema.add(idName, LongType, nullable = false))
+    }
   }
 }

@@ -98,6 +98,15 @@ class LakeSpec extends SparkSpec {
       m.get("wall_s").asDouble > 0)
   }
 
+  test("a committed snapshot dir holds only part files and their checksums") {
+    val lake = freshLake()
+    lake.runStage("j", "s")(spark.range(0, 10, 1, 2).toDF())
+    val dir = Paths.get(lake.root, "j", "s", lake.manifest("j/s", 0).get("data").asText)
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    names.filterNot(_.matches("""\.?part-.*\.parquet(\.crc)?""")) shouldBe empty
+    names.count(_.startsWith("part-")) shouldBe 2
+  }
+
   test("a stage's Lake work is one Spark job, its write; a resumed stage runs none") {
     val lake = freshLake()
     val body = spark.range(0, 50, 1, 3).select((col("id") * 2).as("x"))

@@ -33,7 +33,8 @@ class IdsSpec extends SparkSpec {
       .withColumn("k", pmod(col("k") * 48271L, lit(99991L)))
     val sc = spark.sparkContext
     // (ids, jobs of the denseId call, jobs of the collect); adaptive
-    // execution runs the range exchange when denseId takes the RDD
+    // execution runs the range exchange when the multi-partition arm takes
+    // the RDD, and at the collect for the one-partition arm
     def run(thresholdBytes: Long): (Set[(Long, Long)], Int, Int) = {
       spark.conf.set("graft.ids.singlePartitionBytes", thresholdBytes.toString)
       try {
@@ -48,8 +49,9 @@ class IdsSpec extends SparkSpec {
     val (multi, multiCall, multiCollect) = run(0L)
     one shouldBe multi
     one.map(_._2) shouldBe (0L until 5000L).toSet
-    // one partition: the exchange, then the emit pass; no sample, no count
-    (oneCall, oneCollect) shouldBe ((1, 1))
+    // one partition: nothing in the call; the collect runs the exchange,
+    // then the emit pass; no sample, no count
+    (oneCall, oneCollect) shouldBe ((0, 2))
     // several partitions: sample, exchange and count, then the emit pass
     (multiCall, multiCollect) shouldBe ((3, 1))
   }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.geo.JtsGeo
 import graft.lake.Lake
 import graft.model.{Feature, RasterMeta}
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 
 class BatchPipelineSpec extends SparkSpec {
@@ -42,5 +43,48 @@ class BatchPipelineSpec extends SparkSpec {
 
     // lineage captured rows for each stage
     assert(lake.lineage().where(col("jobId") === "job").count() >= 6)
+  }
+
+  def freshLake(): Lake = new Lake(java.nio.file.Files.createTempDirectory("bp").toString, spark)
+  val p = GeojsonToCoco.Params(tileWidth = 80, tileHeight = 80)
+
+  test("a raster id that appears twice in one batch is refused, naming the id") {
+    val pairs = Seq((raster("rA", 1000.0), features(1000.0)),
+      (raster("rB", 5000.0), features(5000.0)), (raster("rA", 9000.0), features(9000.0)))
+    val lake = freshLake()
+    val e = intercept[IllegalArgumentException](BatchPipeline.run(lake, "job", pairs, p))
+    e.getMessage should include("rA")
+    lake.completedStages("job") shouldBe empty
+  }
+
+  test("every job of the concurrent stages carries the caller's job group") {
+    // 4 rasters: 12 stages on a pool of at most 4 threads, reused across stages
+    val pairs = (0 until 4).map { i => val west = 1000.0 + 4000 * i
+      (raster(s"r$i", west), features(west)) }
+    val lake = freshLake()
+    // 16 tiles per raster; the feature straddles 4 of them
+    val small = GeojsonToCoco.Params(tileWidth = 20, tileHeight = 20)
+    val (out, inGroup, all) =
+      JobCounter.countAll(spark.sparkContext)(BatchPipeline.run(lake, "job", pairs, small))
+    lake.completedStages("job").size shouldBe 12
+    inGroup should be > 12 // at least the 12 stage writes
+    inGroup shouldBe all
+    out.annotations.count() shouldBe 16
+    // the driver-built images and categories tables are one part file each
+    lake.lineage().where(!col("stage").endsWith("_annotations")).count() shouldBe 8
+  }
+
+  test("a failed stage is rethrown only after the other stages have committed") {
+    // malformed WKB: the category list reads no geometry, so only the
+    // annotations stage, which parses it, fails
+    val bad = {
+      val spark2 = spark
+      import spark2.implicits._
+      Seq(Feature(0, Array[Byte](1, 2, 3), 1010, 1900, 1050, 1950, "building")).toDS()
+    }
+    val lake = freshLake()
+    intercept[org.apache.spark.SparkException](
+      BatchPipeline.run(lake, "job", Seq((raster("r", 1000.0), bad)), p))
+    lake.completedStages("job") shouldBe Set("r_images", "r_categories")
   }
 }
