@@ -9,9 +9,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * TRUE bitstream video format — every frame is an independent JPEG — so
   * together with the JDK's built-in JPEG codec this gives the multimodal
   * pipeline a second real video path (alongside the GIF89a codec in
-  * [[graft.ops.Gif]]): the `FakeCodec` stub now stands in ONLY for
-  * interframe-coded bitstreams (H.264/VP9), whose codecs do not ship in
-  * this sandbox.
+  * [[graft.ops.Gif]]). Interframe-coded bitstreams (H.264/VP9) have no
+  * codec here: [[graft.ops.Multimodal]] gives such rows null metadata.
   *
   * Layout written/parsed (all sizes little-endian, chunks word-aligned):
   * {{{

@@ -2,7 +2,7 @@ package graft.io
 
 import graft.geo.Affine
 import graft.model.RasterMeta
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** jpeg2tiff georeferencing (reference scripts/jpeg2tiff.py:53-105,
@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
 object Georeference {
 
   /** P14 kernel: numeric-prefix id from the file base name
-    * (jpeg2tiff.py:66-71) — pure built-in expressions, codegen'd. */
+    * (jpeg2tiff.py:66-71) — pure built-in expressions, codegen'd. Null
+    * when the name has no leading digits (or more than a long holds). */
   def numericIdCol(path: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_extract(element_at(split(path, "/"), -1), "^([0-9]+)", 1).cast("long")
+    regexp_extract(element_at(split(path, "/"), -1), "^([0-9]+)", 1).try_cast("long")
 
   /** P13 kernel: tile name = file base name without extension
     * (coco2geojson.py:306-308). */
@@ -26,20 +27,18 @@ object Georeference {
 
   /** `images`: (path:string, width:int, height:int) rows;
     * `bounds`: (id:long, west,south,east,north:double, crs:string).
-    * Join key: leading digits of the file base name (jpeg2tiff.py:66-71). */
-  def fromBoundsTable(images: DataFrame, bounds: DataFrame): DataFrame = {
-    val withId = images.withColumn("id", numericIdCol(col("path")))
-    withId.join(bounds, "id")
-      .withColumn("a", (col("east") - col("west")) / col("width"))
-      .withColumn("e", -(col("north") - col("south")) / col("height"))
+    * Join key: leading digits of the file base name (jpeg2tiff.py:66-71);
+    * an image without them, or without a bounds row, is dropped. Each
+    * row's affine is [[Affine.fromBounds]] of its bounds and size. */
+  def fromBoundsTable(images: DataFrame, bounds: DataFrame): Dataset[RasterMeta] = {
+    import images.sparkSession.implicits._
+    images.withColumn("id", numericIdCol(col("path")))
+      .join(bounds, "id")
       .select(col("path").as("rasterId"), col("width"), col("height"),
-        col("a"), lit(0.0).as("b"), col("west").as("c"),
-        lit(0.0).as("d"), col("e"), col("north").as("f"), col("crs"))
+        ((col("east") - col("west")) / col("width")).as("a"), lit(0.0).as("b"),
+        col("west").as("c"), lit(0.0).as("d"),
+        (-((col("north") - col("south")) / col("height"))).as("e"),
+        col("north").as("f"), col("crs"))
+      .as[RasterMeta]
   }
-
-  /** Typed form of one joined row (matches [[Affine.fromBounds]]). */
-  def toRasterMeta(r: org.apache.spark.sql.Row): RasterMeta =
-    RasterMeta(r.getString(0), r.getInt(1), r.getInt(2), r.getDouble(3),
-      r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7),
-      r.getDouble(8), r.getString(9))
 }

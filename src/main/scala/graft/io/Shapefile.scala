@@ -15,12 +15,12 @@ import java.nio.{ByteBuffer, ByteOrder}
   * Technical Description, 1998) — no GDAL/fiona exists in this sandbox.
   *
   * Read path is distributed: `binaryFile` scan of the `.shp` payloads, a
-  * same-stem equi-join to the sibling `.dbf` attribute tables (dBASE III)
-  * and optional `.prj` WKT, then per-pair parsing in `flatMap`. One
-  * shapefile is one task (the format is a single-file container — at fleet
-  * scale inputs arrive as many files, which is exactly what scales out);
-  * featureIds are globally dense in (path, record) order like
-  * [[GeoJson.read]].
+  * same-stem equi-join to the sibling `.dbf` attribute tables (dBASE III),
+  * then per-pair parsing in `flatMap`. One shapefile is one task (the
+  * format is a single-file container — at fleet scale inputs arrive as
+  * many files, which is exactly what scales out); featureIds are globally
+  * dense in (path, record) order like [[GeoJson.read]]. The `.prj` is not
+  * read: the caller names the layer CRS (`GeojsonToCoco.Params.layerCrs`).
   *
   * Shape types: Point (1), PolyLine (3), Polygon (5), MultiPoint (8) and
   * their Z/M variants (11/13/15/18 — Z/M values ignored). Polygon ring
@@ -171,7 +171,7 @@ object Shapefile {
 
   // ---------- distributed read ----------
 
-  /** Read .shp(+.dbf,+.prj) files under `path` into the typed Feature
+  /** Read .shp(+.dbf) files under `path` into the typed Feature
     * layout. `path` may be a directory or glob; sibling files pair by stem. */
   def read(spark: SparkSession, path: String, classColumn: String = "class",
            classDefault: String = "class"): Dataset[Feature] = {
@@ -200,16 +200,6 @@ object Shapefile {
     graft.ops.Ids.denseId(local, "featureId", Seq("path", "i"))
       .drop("path", "i")
       .as[Feature]
-  }
-
-  /** The layer CRS from the first .prj (WKT), if present. */
-  def readPrjWkt(spark: SparkSession, path: String): Option[String] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val prj = spark.read.format("binaryFile").option("pathGlobFilter", "*.prj")
-      .load(path).select(col("path"), col("content"))
-      .as[(String, Array[Byte])].collect().sortBy(_._1)
-    prj.headOption.map(p => new String(p._2, "US-ASCII").trim)
   }
 
   // ---------- minimal writer (round-trip tests; polygons only) ----------

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -147,11 +147,6 @@ object Warc {
       }
     }
   }
-
-  /** Directory of .warc/.warc.gz files → record rows. */
-  def readFiles(spark: SparkSession, glob: String): DataFrame =
-    records(spark.read.format("binaryFile").load(glob)
-      .select(col("path"), col("content")))
 
   /** Strip the HTTP response envelope from a WARC response body — real
     * Common-Crawl response records carry `HTTP/1.1 200 OK\r\nheaders...

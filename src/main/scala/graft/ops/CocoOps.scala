@@ -3,8 +3,7 @@ package graft.ops
 import graft.io.Coco
 import graft.io.Coco.CocoTables
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** COCO dataset analytics: split (reference scripts/coco_split.py),
@@ -15,7 +14,8 @@ object CocoOps {
 
   // ---------- split (coco_split.py) ----------
 
-  /** Random train/test split of images with annotation semi-joins (O2+J10).
+  /** Random train/test split of images with annotation semi-joins
+    * (O2 + J10, coco_split.py:141).
     * Seeded and deterministic for a fixed partitioning of `images`. */
   def randomSplit(t: CocoTables, trainFraction: Double, seed: Long): (CocoTables, CocoTables) = {
     val Array(trainImgs, testImgs) =
@@ -23,62 +23,23 @@ object CocoOps {
     (subsetByImages(t, trainImgs), subsetByImages(t, testImgs))
   }
 
-  /** Engine-portable deterministic split: hash of image id (reproducible on
-    * any engine/partitioning, unlike randomSplit). */
-  def hashSplit(t: CocoTables, trainPct: Int): (CocoTables, CocoTables) = {
-    val spark = t.images.sparkSession
-    import spark.implicits._
-    val train = t.images.where(pmod(col("id") * 2654435761L, lit(100L)) < trainPct)
-    val test = t.images.where(pmod(col("id") * 2654435761L, lit(100L)) >= trainPct)
-    (subsetByImages(t, train), subsetByImages(t, test))
-  }
-
-  /** Stratified multilabel split approximation (O3): singleton-category
-    * images dropped first (coco_split.py:100-108), then per-category
-    * percent_rank over seeded rand. */
-  def stratifiedSplit(t: CocoTables, trainFraction: Double, seed: Long): (CocoTables, CocoTables) = {
-    val spark = t.images.sparkSession
-    import spark.implicits._
-    val catCounts = t.annotations.groupBy("categoryId").agg(count(lit(1)).as("n"))
-    val nonSingleton = t.annotations.toDF()
-      .join(broadcast(catCounts.where(col("n") > 1)), Seq("categoryId"), "left_semi")
-    val imgCat = nonSingleton.select(col("imageId"), col("categoryId")).distinct()
-    val w = Window.partitionBy("categoryId").orderBy(rand(seed))
-    val ranked = imgCat.withColumn("pr", percent_rank().over(w))
-      .join(broadcast(catCounts), "categoryId")
-    // iterative stratification assigns by the rarest label first — greedy
-    // approximation: each image follows the split slot of its least-frequent
-    // category (tie: smallest id)
-    val rarest = Window.partitionBy("imageId").orderBy(col("n").asc, col("categoryId").asc)
-    val assign = ranked.withColumn("rk", row_number().over(rarest))
-      .where(col("rk") === 1)
-      .select(col("imageId"),
-        when(col("pr") <= trainFraction, 1).otherwise(0).as("train"))
-    val trainImgs = t.images.toDF().join(assign.where(col("train") === 1)
-      .select(col("imageId").as("id")), Seq("id"), "left_semi").as[CocoImage]
-    val testImgs = t.images.toDF().join(assign.where(col("train") === 0)
-      .select(col("imageId").as("id")), Seq("id"), "left_semi").as[CocoImage]
-    (subsetByImages(t, trainImgs), subsetByImages(t, testImgs))
-  }
-
-  /** EXACT port of the reference's multi-class split
-    * (scripts/coco_split.py:110-137): iterative stratification (Sechidis
-    * et al. 2011, the algorithm behind skmultilearn's
-    * `iterative_train_test_split`) over ANNOTATION rows, one label per
-    * annotation (`np.array([annotation_categories]).T`). Categories with
-    * ≤1 annotation are removed first (the reference's "bottleneck 1" —
-    * they cannot be split), each side's images are the ones its
-    * annotations reference (reference `filter_images`), categories pass
-    * through whole.
+  /** Stratified multilabel split (O3): an EXACT port of the reference's
+    * multi-class split (scripts/coco_split.py:94-137), iterative
+    * stratification (Sechidis et al. 2011, the algorithm behind
+    * skmultilearn's `iterative_train_test_split`) over ANNOTATION rows,
+    * one label per annotation (`np.array([annotation_categories]).T`).
+    * Categories with ≤1 annotation are removed first (the reference's
+    * "bottleneck 1" — they cannot be split), each side's images are the
+    * ones its annotations reference (reference `filter_images`),
+    * categories pass through whole.
     *
     * The assignment loop is DRIVER-side over (annId, categoryId) pairs —
     * faithful to the reference's single-file contract and fine up to
-    * ~10^8 annotations (12 bytes/row); at fleet scale use
-    * [[stratifiedSplit]], the distributed greedy approximation.
+    * ~10^8 annotations (12 bytes/row).
     * Tie-breaks (equal desired counts) follow skmultilearn: a seeded
     * uniform pick, so a fixed seed is deterministic. */
-  def iterativeStratifiedSplitExact(t: CocoTables, trainFraction: Double,
-                                    seed: Long): (CocoTables, CocoTables) = {
+  def stratifiedSplit(t: CocoTables, trainFraction: Double,
+                      seed: Long): (CocoTables, CocoTables) = {
     val spark = t.images.sparkSession
     import spark.implicits._
     val catCounts = t.annotations.groupBy("categoryId").agg(count(lit(1)).as("n"))
@@ -150,16 +111,6 @@ object CocoOps {
   }
 
   // ---------- balance (coco_balance.py) ----------
-
-  def countsPerCategory(t: CocoTables): DataFrame =
-    t.annotations.groupBy("categoryId").agg(count(lit(1)).as("n")) // A4
-
-  def pivotImageCategory(t: CocoTables): DataFrame = // A6
-    t.annotations.groupBy("imageId").pivot("categoryId").count().na.fill(0)
-
-  def imagesPerCategory(t: CocoTables): DataFrame = // A7
-    t.annotations.groupBy("categoryId")
-      .agg(collect_set(col("imageId")).as("image_ids"))
 
   /** Cap over-represented categories: subsample images of the most frequent
     * category down to `cap` images, drop the rest (O4 + J9 anti-join —

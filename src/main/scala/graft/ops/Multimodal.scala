@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (builder brief): image/audio/video payloads
@@ -18,15 +17,18 @@ import org.apache.spark.sql.types._
   * hand-rolled animated-GIF codec ([[Gif]]: GIF-variant LZW, frame
   * delays, disposal, interlace, frame rendering) and a Motion-JPEG AVI
   * codec ([[graft.io.Avi]]: AVI RIFF container + per-frame JDK JPEG
-  * decode, a TRUE bitstream format). `FakeCodec` remains only as the
-  * documented stand-in for INTERFRAME-coded bitstreams (H.264/VP9 — no
-  * such codec ships in this container); swapping it for javacv/ffmpeg is
-  * a one-function change.
+  * decode, a TRUE bitstream format). A payload that none of these codecs
+  * reads (an `image` ImageIO rejects, a `video` that is neither GIF nor
+  * AVI, e.g. an interframe-coded H.264/VP9 stream) yields nulls, not a
+  * task failure: a null `meta` from [[decodeMeta]], a null `rgb_mean`
+  * from [[channelStats]], no row from [[extractFrames]], and an unchanged
+  * row from [[resizePayload]].
   */
 object Multimodal {
 
   /** REAL image codec over the JDK's ImageIO (PNG/JPEG/BMP/GIF). */
   object JdkImage {
+    /** The decoded image, or null when no ImageIO reader accepts the bytes. */
     def decode(payload: Array[Byte]): java.awt.image.BufferedImage =
       javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
 
@@ -59,9 +61,11 @@ object Multimodal {
       encodePng(img)
     }
 
-    /** Real resample keeping aspect, bounded by maxSide; re-encoded PNG. */
+    /** Real resample keeping aspect, bounded by maxSide; re-encoded PNG.
+      * An undecodable payload is returned unchanged. */
     def resize(payload: Array[Byte], maxSide: Int): Array[Byte] = {
       val img = decode(payload)
+      if (img == null) return payload
       val scale = math.min(1.0, maxSide.toDouble / math.max(img.getWidth, img.getHeight))
       if (scale >= 1.0) return payload
       val (w, h) = (math.max(1, (img.getWidth * scale).toInt),
@@ -75,9 +79,10 @@ object Multimodal {
     }
 
     /** Mean R/G/B over the decoded pixels — the feature-extract stage with
-      * a real decoder behind it. */
+      * a real decoder behind it; null for an undecodable payload. */
     def channelMeans(payload: Array[Byte]): Array[Double] = {
       val img = decode(payload)
+      if (img == null) return null
       var (r, gSum, b) = (0L, 0L, 0L)
       var y = 0
       while (y < img.getHeight) {
@@ -92,43 +97,6 @@ object Multimodal {
       val n = img.getWidth.toLong * img.getHeight
       Array(r.toDouble / n, gSum.toDouble / n, b.toDouble / n)
     }
-  }
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType), StructField("kind", StringType),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("frames", IntegerType))))))
-
-  /** STUB decoder — deterministic fake standing in for an image/video codec
-    * (none ships in this sandbox). Header layout: bytes 0-3 width, 4-7
-    * height, 8-11 frames (big-endian), rest = payload. */
-  object FakeCodec {
-    def decodeDims(payload: Array[Byte]): (Int, Int, Int) = {
-      def be(off: Int) =
-        ((payload(off) & 0xFF) << 24) | ((payload(off + 1) & 0xFF) << 16) |
-          ((payload(off + 2) & 0xFF) << 8) | (payload(off + 3) & 0xFF)
-      (be(0), be(4), be(8))
-    }
-    def encode(width: Int, height: Int, frames: Int, body: Array[Byte]): Array[Byte] = {
-      val h = java.nio.ByteBuffer.allocate(12).putInt(width).putInt(height).putInt(frames)
-      h.array() ++ body
-    }
-  }
-
-  /** Deterministic synthetic media table derived from row ids. */
-  def syntheticMedia(spark: org.apache.spark.sql.SparkSession, n: Long,
-                     parts: Int = 8): DataFrame = {
-    import spark.implicits._
-    spark.range(0, n, 1, parts).map { id =>
-      val w = 64 + (id % 8).toInt * 16
-      val h = 48 + (id % 5).toInt * 16
-      val frames = 1 + (id % 4).toInt
-      val body = Array.tabulate((id % 50).toInt + 10)(i => ((id * 31 + i) % 256).toByte)
-      (id, if (id % 3 == 0) "video" else "image",
-        FakeCodec.encode(w, h, frames, body))
-    }.toDF("media_id", "kind", "payload")
   }
 
   /** Deterministic synthetic media table with REAL payloads for BOTH
@@ -192,8 +160,7 @@ object Multimodal {
   /** REAL audio codec: RIFF/WAVE PCM16 little-endian (the dominant
     * uncompressed interchange format), hand-rolled over the public RIFF
     * spec — decode, encode, frame-decimating downsample, and per-channel
-    * stats. Audio is now a REAL modality next to images; only video keeps
-    * the documented fake. */
+    * stats. */
   object Wav {
     /** Mono/stereo PCM16 WAV bytes from interleaved samples. */
     def encode(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
@@ -298,11 +265,11 @@ object Multimodal {
     }
   }
 
-  /** DECODE stage with real codecs on every modality: stills via ImageIO
-    * (frames = 1), video via the hand-rolled animated-GIF decoder
-    * ([[Gif]], frames = real frame count); non-GIF video payloads fall
-    * back to the documented fake (true bitstream codecs don't ship here). */
-  def decodeMetaReal(media: DataFrame): DataFrame = {
+  /** DECODE stage: binary payload → `meta` (width, height, frames)
+    * struct. Stills decode via ImageIO (frames = 1), video via the
+    * animated-GIF ([[Gif]]) or MJPEG-AVI ([[graft.io.Avi]]) codec (frames =
+    * real frame count). `meta` is null when no codec reads the payload. */
+  def decodeMeta(media: DataFrame): DataFrame = {
     val schema = StructType(media.schema.fields :+ StructField("meta", StructType(Seq(
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("frames", IntegerType)))))
@@ -315,16 +282,14 @@ object Multimodal {
         val meta = r.getString(kIdx) match {
           case "image" =>
             val img = JdkImage.decode(payload)
-            Row(img.getWidth, img.getHeight, 1)
+            if (img == null) null else Row(img.getWidth, img.getHeight, 1)
           case _ if Gif.isGif(payload) =>
             val g = Gif.decode(payload)
             Row(g.width, g.height, g.frames.length)
           case _ if graft.io.Avi.isAvi(payload) =>
             val v = graft.io.Avi.parse(payload)
             Row(v.width, v.height, v.frames.length)
-          case _ =>
-            val (w, h, f) = FakeCodec.decodeDims(payload)
-            Row(w, h, f)
+          case _ => null
         }
         Row.fromSeq(r.toSeq :+ meta)
       }
@@ -335,7 +300,8 @@ object Multimodal {
     * frame of each GIF video row → one output row with the frame's
     * centisecond timestamp, mean R/G/B, and the frame re-encoded as PNG
     * (the training-pipeline "frame sample → still" path). Image rows pass
-    * through as frame 0 of their own payload. */
+    * through as frame 0 of their own payload; rows no codec reads emit
+    * nothing. */
   def extractFrames(media: DataFrame, everyK: Int): DataFrame = {
     require(everyK >= 1, "everyK must be >= 1")
     val schema = StructType(Seq(
@@ -381,8 +347,8 @@ object Multimodal {
                 JdkImage.encodePng(JdkImage.decode(jpeg)))
             }
           case "image" =>
-            Seq(Row(id, "image", 0, 0,
-              JdkImage.channelMeans(payload).toSeq, payload))
+            Option(JdkImage.channelMeans(payload)).toSeq
+              .map(m => Row(id, "image", 0, 0, m.toSeq, payload))
           case _ => Seq.empty[Row]
         }
       }
@@ -390,7 +356,8 @@ object Multimodal {
   }
 
   /** RESIZE stage with real payload rewrite for images (area-averaging
-    * resample, PNG re-encode); video rows pass through untouched. */
+    * resample, PNG re-encode); video rows and undecodable images pass
+    * through untouched. */
   def resizePayload(media: DataFrame, maxSide: Int): DataFrame = {
     val pIdx = media.schema.fieldIndex("payload")
     val kIdx = media.schema.fieldIndex("kind")
@@ -405,7 +372,8 @@ object Multimodal {
     }
   }
 
-  /** FEATURE stage with a real decoder: mean R/G/B per image payload. */
+  /** FEATURE stage with a real decoder: mean R/G/B per image payload
+    * (null for non-image rows and undecodable images). */
   def channelStats(media: DataFrame): DataFrame = {
     val schema = media.schema.add("rgb_mean", ArrayType(DoubleType))
     val pIdx = media.schema.fieldIndex("payload")
@@ -418,54 +386,6 @@ object Multimodal {
             JdkImage.channelMeans(r.getAs[Array[Byte]](pIdx))
           else null
         Row.fromSeq(r.toSeq :+ means)
-      }
-    }
-  }
-
-  /** DECODE stage: binary payload → metadata struct (batch kernel over
-    * partitions; the fake codec call is the swap point for a real one). */
-  def decodeMeta(media: DataFrame): DataFrame = {
-    val schema = StructType(media.schema.fields :+ StructField("meta", StructType(Seq(
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("frames", IntegerType)))))
-    val pIdx = media.schema.fieldIndex("payload")
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, f) = FakeCodec.decodeDims(r.getAs[Array[Byte]](pIdx))
-        Row.fromSeq(r.toSeq :+ Row(w, h, f))
-      }
-    }
-  }
-
-  /** RESIZE stage: pure metadata transform (no payload rewrite needed for
-    * bookkeeping pipelines); clamps to the target box keeping aspect. */
-  def resizeMeta(decoded: DataFrame, maxSide: Int): DataFrame =
-    decoded.withColumn("scale",
-        least(lit(1.0), lit(maxSide) / greatest(col("meta.width"), col("meta.height"))))
-      .withColumn("out_width", floor(col("meta.width") * col("scale")).cast("int"))
-      .withColumn("out_height", floor(col("meta.height") * col("scale")).cast("int"))
-      .drop("scale")
-
-  /** FRAME-SAMPLE stage: every k-th frame index per video row (explode),
-    * images pass through with frame 0. */
-  def sampleFrames(decoded: DataFrame, everyK: Int): DataFrame =
-    decoded.withColumn("frame_idx",
-      explode(sequence(lit(0), greatest(col("meta.frames") - 1, lit(0)), lit(everyK))))
-
-  /** FEATURE stage: deterministic per-payload fingerprint over the body
-    * bytes (stands in for an embedding extractor; batch shape identical). */
-  def fingerprint(media: DataFrame): DataFrame = {
-    val schema = media.schema.add("fp", LongType, nullable = false)
-    val pIdx = media.schema.fieldIndex("payload")
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.mapPartitions { it =>
-      it.map { r =>
-        val b = r.getAs[Array[Byte]](pIdx)
-        var acc = 1125899906842597L % (1L << 56)
-        var i = 12 // skip fake header
-        while (i < b.length) { acc = (acc * 31 + (b(i) & 0xFF)) % (1L << 56); i += 1 }
-        Row.fromSeq(r.toSeq :+ acc)
       }
     }
   }

@@ -97,22 +97,25 @@ object RasterTiles {
     }
   }
 
-  /** Sink: write each tile payload (and optional png) as files under `dir`
-    * — executor-side writes, one directory per raster stem. */
-  def writeTileFiles(tiles: DataFrame, dir: String, writePng: Boolean = false): Unit = {
-    val withPng = tiles.schema.fieldNames.contains("png")
-    val cols = Seq("tileName", "tiff") ++ (if (withPng && writePng) Seq("png") else Nil)
+  /** Sink (S6, reference save_tiles): write each tile's `tiff` payload,
+    * and its `png` when that column exists, as `<tileName>.tif`/`.png`
+    * under `<dir>/<stem of rasterId>/` — executor-side writes. Tile names
+    * repeat across rasters cut on one grid, so each raster gets its own
+    * directory. */
+  def writeTileFiles(tiles: DataFrame, dir: String): Unit = {
+    val cols = Seq("rasterId", "tileName", "tiff") ++
+      tiles.schema.fieldNames.filter(_ == "png")
     tiles.select(cols.map(col): _*).foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
-        val base = new java.io.File(dir)
-        base.mkdirs()
         it.foreach { r =>
-          val name = r.getString(0)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$dir/$name.tif"), r.getAs[Array[Byte]](1))
-          if (r.length > 2)
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"$dir/$name.png"), r.getAs[Array[Byte]](2))
+          val base = r.getString(0).split('/').last
+          val dot = base.lastIndexOf('.')
+          val out = java.nio.file.Paths.get(dir, if (dot > 0) base.take(dot) else base)
+          java.nio.file.Files.createDirectories(out)
+          val name = r.getString(1)
+          java.nio.file.Files.write(out.resolve(s"$name.tif"), r.getAs[Array[Byte]](2))
+          if (r.length > 3)
+            java.nio.file.Files.write(out.resolve(s"$name.png"), r.getAs[Array[Byte]](3))
         }
     }
   }

@@ -36,7 +36,7 @@ object MultimodalQueries {
         (id, "video", Multimodal.syntheticAvi(id,
           32 + (id % 4).toInt * 16, 32 + (id % 3).toInt * 16))
       }.toDF("media_id", "kind", "payload")
-      val meta = Multimodal.decodeMetaReal(media)
+      val meta = Multimodal.decodeMeta(media)
         .select(col("media_id"), col("meta.width").as("width"),
           col("meta.height").as("height"), col("meta.frames").as("n_frames"))
       Multimodal.extractFrames(media, everyK = 2)

@@ -78,7 +78,7 @@ class AviSpec extends SparkSpec {
     import spark2.implicits._
     val media = Seq((7L, "video", Multimodal.syntheticAvi(7L, 48, 48)))
       .toDF("media_id", "kind", "payload")
-    val meta = Multimodal.decodeMetaReal(media)
+    val meta = Multimodal.decodeMeta(media)
       .select("meta.width", "meta.height", "meta.frames").head()
     meta.getInt(0) shouldBe 48
     meta.getInt(1) shouldBe 48

@@ -167,4 +167,26 @@ class GeoTiffSpec extends SparkSpec {
       im.getWidth == r.getInt(4) && im.getHeight == r.getInt(5)
     })
   }
+
+  test("writeTileFiles puts each raster's tiles in its own directory") {
+    val src = java.nio.file.Files.createTempDirectory("tiffs")
+    java.nio.file.Files.write(src.resolve("r1.tif"), tiffBytes)
+    java.nio.file.Files.write(src.resolve("r2.tif"), GeoTiff.write(w, h, bands,
+      pixels(w, h, bands).map(b => (b ^ 0x5A).toByte), pa, 0, pc, 0, pe, pf))
+    val tiles = RasterTiles.pngSidecars(RasterTiles.cutTiles(spark, src.toString, 32, 32))
+    val out = java.nio.file.Files.createTempDirectory("tile-files")
+    RasterTiles.writeTileFiles(tiles, out.toString)
+
+    val rows = tiles.select("rasterId", "tileName", "tiff", "png").collect()
+    // both rasters are cut on the same grid, so every tile name occurs twice
+    assert(rows.length == 8 && rows.map(_.getString(1)).distinct.length == 4)
+    rows.foreach { r =>
+      val stem = r.getString(0).split('/').last.stripSuffix(".tif")
+      val tileDir = out.resolve(stem)
+      val tif = java.nio.file.Files.readAllBytes(tileDir.resolve(r.getString(1) + ".tif"))
+      val png = java.nio.file.Files.readAllBytes(tileDir.resolve(r.getString(1) + ".png"))
+      assert(tif.toSeq == r.getAs[Array[Byte]](2).toSeq, s"$stem/${r.getString(1)}.tif")
+      assert(png.toSeq == r.getAs[Array[Byte]](3).toSeq, s"$stem/${r.getString(1)}.png")
+    }
+  }
 }

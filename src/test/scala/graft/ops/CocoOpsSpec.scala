@@ -23,46 +23,17 @@ class CocoOpsSpec extends SparkSpec {
   def mkTables(nImgs: Int, catNames: Seq[String] = Seq("a", "b")): CocoTables =
     part(nImgs, 2, catNames.zipWithIndex.map { case (n, i) => CocoCategory(i, n, n) })
 
-  test("hashSplit partitions images disjointly and semi-joins annotations") {
-    val t = mkTables(50)
-    val (tr, te) = CocoOps.hashSplit(t, 80)
-    val trIds = tr.images.collect().map(_.id).toSet
-    val teIds = te.images.collect().map(_.id).toSet
-    assert(trIds.intersect(teIds).isEmpty)
-    assert(trIds.union(teIds).size == 50)
-    val trAnnImgs = tr.annotations.collect().map(_.imageId).toSet
-    assert(trAnnImgs.subsetOf(trIds))
-    assert(tr.annotations.count() + te.annotations.count() == 100)
-  }
-
   test("randomSplit is seeded-deterministic") {
     val t = mkTables(50)
-    val (a1, _) = CocoOps.randomSplit(t, 0.7, seed = 42)
+    val (a1, b1) = CocoOps.randomSplit(t, 0.7, seed = 42)
     val (a2, _) = CocoOps.randomSplit(t, 0.7, seed = 42)
-    assert(a1.images.collect().map(_.id).toSet == a2.images.collect().map(_.id).toSet)
-  }
-
-  test("stratifiedSplit drops singleton categories and splits per class") {
-    val spark2 = spark
-    import spark2.implicits._
-    val t = mkTables(40)
-    // add a singleton category 'z' on image 0
-    val anns2 = t.annotations.toDF()
-      .unionByName(Seq((1000L, 0L, 2, Seq(0.0), Seq(0.0), 0.0, 0))
-        .toDF("id", "imageId", "categoryId", "segmentation", "bbox", "area", "iscrowd"))
-      .as[CocoAnnotation]
-    val cats2 = t.categories.toDF()
-      .unionByName(Seq((2, "z", "z")).toDF("id", "name", "supercategory"))
-      .as[CocoCategory]
-    val t2 = CocoTables(t.images, anns2, cats2)
-    val (tr, te) = CocoOps.stratifiedSplit(t2, 0.5, seed = 7)
-    val trN = tr.images.count(); val teN = te.images.count()
-    assert(trN + teN == 40) // all images kept (none was singleton-only)
-    assert(trN >= 14 && teN >= 14, s"imbalanced: $trN/$teN") // ~50/50 split
-    // no annotation of category z should be required to survive both sides —
-    // just check subset integrity
-    assert(tr.annotations.toDF().join(tr.images.toDF().select(col("id").as("imageId")),
-      Seq("imageId"), "left_anti").isEmpty)
+    val trIds = a1.images.collect().map(_.id).toSet
+    assert(trIds == a2.images.collect().map(_.id).toSet)
+    // the sides partition the images; annotations follow their image (J10)
+    val teIds = b1.images.collect().map(_.id).toSet
+    assert(trIds.intersect(teIds).isEmpty && trIds.union(teIds).size == 50)
+    assert(a1.annotations.collect().map(_.imageId).toSet.subsetOf(trIds))
+    assert(a1.annotations.count() + b1.annotations.count() == 100)
   }
 
   test("iterativeStratifiedSplitExact: per-category counts within 1 of the desired ratio") {
@@ -81,7 +52,7 @@ class CocoOpsSpec extends SparkSpec {
     val cats = (0 until 4).map(i => CocoCategory(i, s"c$i", ""))
     val t = CocoTables(spark.createDataset(imgs), spark.createDataset(anns),
       spark.createDataset(cats))
-    val (tr, te) = CocoOps.iterativeStratifiedSplitExact(t, 0.7, seed = 11)
+    val (tr, te) = CocoOps.stratifiedSplit(t, 0.7, seed = 11)
     val trAnns = tr.annotations.collect()
     val teAnns = te.annotations.collect()
     // singleton category 3 dropped entirely (coco_split.py "bottleneck 1")
@@ -97,7 +68,7 @@ class CocoOpsSpec extends SparkSpec {
     assert(tr.images.collect().map(_.id).toSet == trAnns.map(_.imageId).toSet)
     assert(te.images.collect().map(_.id).toSet == teAnns.map(_.imageId).toSet)
     // seeded determinism
-    val (tr2, _) = CocoOps.iterativeStratifiedSplitExact(t, 0.7, seed = 11)
+    val (tr2, _) = CocoOps.stratifiedSplit(t, 0.7, seed = 11)
     assert(tr2.annotations.collect().map(_.id).toSet == trAnns.map(_.id).toSet)
   }
 

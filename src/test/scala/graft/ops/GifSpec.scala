@@ -97,7 +97,7 @@ class GifSpec extends SparkSpec {
 
   test("Spark pipeline: decodeMetaReal + extractFrames over GIF video rows") {
     val media = Multimodal.syntheticMediaPng(spark, 30, parts = 4)
-    val meta = Multimodal.decodeMetaReal(media)
+    val meta = Multimodal.decodeMeta(media)
     val vid = meta.filter("kind = 'video'").collect()
     vid.length shouldBe 10
     vid.foreach { r =>

@@ -5,47 +5,15 @@ import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
 
-  lazy val media = Multimodal.syntheticMedia(spark, 200, parts = 8)
-
-  test("decode stage recovers the typed metadata struct from binary payloads") {
-    val d = Multimodal.decodeMeta(media)
-    assert(d.count() == 200)
-    val r = d.where(col("media_id") === 9).select("meta.width", "meta.height", "meta.frames").head
-    assert(r.getInt(0) == 64 + (9 % 8) * 16)
-    assert(r.getInt(1) == 48 + (9 % 5) * 16)
-    assert(r.getInt(2) == 1 + (9 % 4))
-  }
-
-  test("resize keeps aspect and clamps to the target box") {
-    val d = Multimodal.resizeMeta(Multimodal.decodeMeta(media), maxSide = 64)
-    val bad = d.where(col("out_width") > 64 || col("out_height") > 64 ||
-      col("out_width") <= 0 || col("out_height") <= 0)
-    assert(bad.isEmpty)
-    // a 64-wide image stays 64
-    assert(d.where(col("meta.width") === 64 && col("meta.height") <= 64)
-      .select("out_width").head.getInt(0) == 64)
-  }
-
-  test("frame sampling explodes every k-th frame, images yield frame 0") {
-    val d = Multimodal.sampleFrames(Multimodal.decodeMeta(media), everyK = 2)
-    val perId = d.groupBy("media_id").count()
-      .join(Multimodal.decodeMeta(media).select("media_id", "meta.frames"), "media_id")
-      .collect()
-    perId.foreach { r =>
-      val expect = (r.getInt(2) + 1) / 2 // frames 1..4 sampled every 2
-      assert(r.getLong(1) == expect, s"media ${r.getLong(0)}")
-    }
-  }
-
   test("real PNG modality: decode, resample, channel stats via the JDK codec") {
     val png = Multimodal.syntheticMediaPng(spark, 60, parts = 4)
-    val d = Multimodal.decodeMetaReal(png)
+    val d = Multimodal.decodeMeta(png)
     assert(d.count() == 60)
     // image dims come from the actual PNG header, not a fake layout
     val r = d.where(col("media_id") === 1).select("meta.width", "meta.height").head
     assert(r.getInt(0) == 16 + 1 * 4 && r.getInt(1) == 12 + 1 * 4)
     // real resample: payload re-encoded, decoded dims shrink into the box
-    val resized = Multimodal.decodeMetaReal(
+    val resized = Multimodal.decodeMeta(
       Multimodal.resizePayload(png, maxSide = 10))
     val badRows = resized.where(col("kind") === "image" &&
       (col("meta.width") > 10 || col("meta.height") > 10))
@@ -58,8 +26,8 @@ class MultimodalSpec extends SparkSpec {
       val m = row.getSeq[Double](0)
       m.length == 3 && m.forall(v => v >= 0 && v <= 255)
     })
-    // videos keep the documented fake-codec path
-    assert(d.where(col("kind") === "video" && col("meta.frames") >= 1).count() ==
+    // the GIF videos decode through the real codec too
+    assert(d.where(col("kind") === "video" && col("meta.frames") >= 2).count() ==
       d.where(col("kind") === "video").count())
   }
 
@@ -108,11 +76,31 @@ class MultimodalSpec extends SparkSpec {
     assert(stats(1).isNullAt(3))
   }
 
-  test("fingerprint is deterministic across partitionings") {
-    val a = Multimodal.fingerprint(media.repartition(2))
-      .select("media_id", "fp").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Multimodal.fingerprint(media.repartition(13))
-      .select("media_id", "fp").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b && a.size == 200)
+  test("payloads no codec reads give null meta and stats, not a task failure") {
+    val spark2 = spark
+    import spark2.implicits._
+    val png = Multimodal.JdkImage.syntheticPng(3, 8, 6)
+    val notImage = "not an image".getBytes("US-ASCII")
+    val media = rddBacked(Seq(
+      (1L, "video", Array[Byte](1, 2, 3, 4, 5)),
+      (2L, "image", notImage),
+      (3L, "image", png)).toDF("media_id", "kind", "payload"))
+
+    val meta = Multimodal.decodeMeta(media).select("media_id", "meta").collect().map { r =>
+      r.getLong(0) -> Option(r.getStruct(1)).map(m => (m.getInt(0), m.getInt(1), m.getInt(2)))
+    }.toMap
+    assert(meta == Map(1L -> None, 2L -> None, 3L -> Some((8, 6, 1))))
+
+    val means = Multimodal.channelStats(media).select("media_id", "rgb_mean").collect()
+      .map(r => r.getLong(0) -> r.isNullAt(1)).toMap
+    assert(means == Map(1L -> true, 2L -> true, 3L -> false))
+
+    val resized = Multimodal.resizePayload(media, maxSide = 4).collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](2).toSeq).toMap
+    assert(resized(1L) == Seq[Byte](1, 2, 3, 4, 5) && resized(2L) == notImage.toSeq)
+    assert(resized(3L) != png.toSeq)
+
+    val frames = Multimodal.extractFrames(media, everyK = 1).select("media_id").collect()
+    assert(frames.map(_.getLong(0)).toSeq == Seq(3L))
   }
 }
