@@ -70,9 +70,11 @@ object JtsGeo {
     case _ => Seq.empty
   }
 
-  /** Cascaded union with a pinned merge order (sort by WKB bytes) so results
-    * are reproducible across partitionings — GEOS/JTS union is associative
-    * but float-sensitive (SURVEY.md §7 hard-part 2). */
+  /** One cascaded union of `gs`, in the order given; an empty polygon for
+    * none. JTS union is float-sensitive to input order (SURVEY.md §7
+    * hard-part 2), so the caller pins the order to get reproducible bytes:
+    * [[graft.ops.GeomUnionAgg.union]] passes its inputs sorted by WKB
+    * bytes. */
   def unionAll(gs: Seq[Geometry]): Geometry =
     if (gs.isEmpty) factory.createPolygon()
     else UnaryUnionOp.union(gs.asJava)

@@ -29,16 +29,18 @@ object Georeference {
     * `bounds`: (id:long, west,south,east,north:double, crs:string).
     * Join key: leading digits of the file base name (jpeg2tiff.py:66-71);
     * an image without them, or without a bounds row, is dropped. Each
-    * row's affine is [[Affine.fromBounds]] of its bounds and size. */
+    * row's affine is [[Affine.fromBounds]] of its bounds and size, so a
+    * bounds row with `east == west` or `north == south` fails the task as a
+    * singular affine. */
   def fromBoundsTable(images: DataFrame, bounds: DataFrame): Dataset[RasterMeta] = {
     import images.sparkSession.implicits._
     images.withColumn("id", numericIdCol(col("path")))
       .join(bounds, "id")
-      .select(col("path").as("rasterId"), col("width"), col("height"),
-        ((col("east") - col("west")) / col("width")).as("a"), lit(0.0).as("b"),
-        col("west").as("c"), lit(0.0).as("d"),
-        (-((col("north") - col("south")) / col("height"))).as("e"),
-        col("north").as("f"), col("crs"))
-      .as[RasterMeta]
+      .select("path", "width", "height", "west", "south", "east", "north", "crs")
+      .as[(String, Int, Int, Double, Double, Double, Double, String)]
+      .map { case (path, width, height, west, south, east, north, crs) =>
+        val t = Affine.fromBounds(west, south, east, north, width, height)
+        RasterMeta(path, width, height, t.a, t.b, t.c, t.d, t.e, t.f, crs)
+      }
   }
 }

@@ -1,67 +1,31 @@
 package graft.ops
 
 import graft.geo.JtsGeo
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{collect_list, sort_array, udf}
 
-/** Distributed per-group geometry union — the engine's one custom UDAF
-  * (SURVEY.md A2/G10; reference `unary_union` per class at
-  * scripts/coco2geojson.py:136, a sequential per-class Python loop there).
+/** Per-group geometry union (SURVEY.md A2/G10): the reference's one
+  * `unary_union` over all of a class's polygons (scripts/coco2geojson.py:136).
   *
-  * Spark's partial/final aggregation contract parallelizes it for free:
-  * `reduce` accumulates WKB blobs per partition and compacts through JTS
-  * cascaded union once the buffer exceeds `compactEvery` (bounding memory),
-  * `merge` combines partial unions, `finish` performs the last union.
+  * `collect_list` gathers the group's WKB through Spark's partial/final
+  * aggregation, `sort_array` orders it by the bytes (unsigned,
+  * lexicographic), and one [[JtsGeo.unionAll]] cascaded union merges it.
   *
-  * Determinism (SURVEY.md §7 hard-part 2, precisely stated): sorting each
-  * buffer by WKB bytes pins the merge order WITHIN a compaction, but the
-  * grouping of inputs into compactions still follows the partitioning, and
-  * GEOS union is float-sensitive to association — so output across different
-  * partitionings is topologically equal but not guaranteed bit-identical.
-  * Exact cross-run determinism holds when (a) the group fits one compaction
-  * (≤ `compactEvery` rows, the common per-class case), or (b) the caller
-  * fixes the partitioning. Downstream consumers (GeoJSON write, area
-  * oracles) depend only on the geometry, not the byte encoding.
+  * Null inputs are skipped; a group whose inputs are all null gives null.
+  *
+  * Determinism: the result is `JtsGeo.unionAll` of the group's non-null
+  * inputs decoded in byte order, so its WKB depends only on the multiset of
+  * input bytes: it is byte-identical under any partitioning or row order.
+  *
+  * Memory: the task that finishes a group holds all of the group's input
+  * WKB at once, then the decoded geometries and their union.
   */
-class GeomUnionAgg(compactEvery: Int = 256)
-    extends Aggregator[Array[Byte], Array[Array[Byte]], Array[Byte]] {
-
-  override def zero: Array[Array[Byte]] = Array.empty
-
-  override def reduce(buf: Array[Array[Byte]], wkb: Array[Byte]): Array[Array[Byte]] =
-    maybeCompact(buf :+ wkb)
-
-  override def merge(a: Array[Array[Byte]], b: Array[Array[Byte]]): Array[Array[Byte]] =
-    maybeCompact(a ++ b)
-
-  override def finish(buf: Array[Array[Byte]]): Array[Byte] =
-    if (buf.isEmpty) null else compact(buf).head
-
-  private def maybeCompact(buf: Array[Array[Byte]]): Array[Array[Byte]] =
-    if (buf.length >= compactEvery) compact(buf) else buf
-
-  private def compact(buf: Array[Array[Byte]]): Array[Array[Byte]] = {
-    val sorted = buf.sortWith(GeomUnionAgg.lexLt)
-    Array(JtsGeo.toWkb(JtsGeo.unionAll(sorted.map(JtsGeo.fromWkb).toSeq)))
-  }
-
-  override def bufferEncoder: Encoder[Array[Array[Byte]]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Array[Byte]]]()
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
 object GeomUnionAgg {
-  /** Column form: `df.groupBy(...).agg(GeomUnionAgg.union(col("wkb")))`. */
-  def union(wkb: Column): Column =
-    org.apache.spark.sql.functions.udaf(new GeomUnionAgg()).apply(wkb)
 
-  private[ops] def lexLt(a: Array[Byte], b: Array[Byte]): Boolean = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      if (a(i) != b(i)) return (a(i) & 0xFF) < (b(i) & 0xFF)
-      i += 1
-    }
-    a.length < b.length
+  private val unionSorted = udf { (wkbs: Seq[Array[Byte]]) =>
+    if (wkbs.isEmpty) null else JtsGeo.toWkb(JtsGeo.unionAll(wkbs.map(JtsGeo.fromWkb)))
   }
+
+  /** Column form: `df.groupBy(...).agg(GeomUnionAgg.union(col("wkb")))`. */
+  def union(wkb: Column): Column = unionSorted(sort_array(collect_list(wkb)))
 }

@@ -43,17 +43,35 @@ class GeomUnionSpec extends SparkSpec {
     def run(parts: Int) = rows.toDF("g", "wkb").repartition(parts)
       .groupBy("g").agg(GeomUnionAgg.union(col("wkb")).as("u"))
       .head.getAs[Array[Byte]](1)
-    val a = JtsGeo.fromWkb(run(1)); val b = JtsGeo.fromWkb(run(7))
-    assert(a.getArea == b.getArea)
-    assert(a.equalsExact(b) || a.norm().equalsExact(b.norm()))
+    assert(java.util.Arrays.equals(run(1), run(7)))
   }
 
-  test("empty-geometry handling: null inputs would not occur; single geom passes through") {
+  test("a 2,100-row group over 7 partitions equals one sorted unionAll") {
     val spark2 = spark
     import spark2.implicits._
-    val one = Seq((1L, JtsGeo.toWkb(JtsGeo.box(0, 0, 5, 5)))).toDF("g", "wkb")
-    val u = JtsGeo.fromWkb(one.groupBy("g").agg(GeomUnionAgg.union(col("wkb")).as("u"))
-      .head.getAs[Array[Byte]](1))
-    assert(u.getArea == 25.0)
+    // overlapping boxes at non-integer coordinates, so the union's bytes
+    // depend on the order JTS merges them in
+    val wkbs = (0 until 2100).map { i =>
+      val x = (i * 104729L % 20000L) / 3.0; val y = (i * 7919L % 20000L) / 7.0
+      JtsGeo.toWkb(JtsGeo.box(x, y, x + 150.5 + i % 13, y + 90.25 + i % 11))
+    }
+    val got = wkbs.map(w => (1L, w)).toDF("g", "wkb").repartition(7)
+      .groupBy("g").agg(GeomUnionAgg.union(col("wkb")).as("u"))
+      .head.getAs[Array[Byte]](1)
+    val sorted = wkbs.sortWith((a, b) => java.util.Arrays.compareUnsigned(a, b) < 0)
+    val expect = JtsGeo.toWkb(JtsGeo.unionAll(sorted.map(JtsGeo.fromWkb)))
+    assert(java.util.Arrays.equals(got, expect))
+  }
+
+  test("nulls are skipped and all-null gives null; one geom passes through") {
+    val spark2 = spark
+    import spark2.implicits._
+    val box = JtsGeo.toWkb(JtsGeo.box(0, 0, 5, 5))
+    val df = Seq((1L, box), (1L, null), (2L, null), (3L, box)).toDF("g", "wkb")
+    val got = df.groupBy("g").agg(GeomUnionAgg.union(col("wkb")).as("u"))
+      .as[(Long, Array[Byte])].collect().toMap
+    assert(JtsGeo.fromWkb(got(1L)).getArea == 25.0)
+    assert(got(2L) == null)
+    assert(JtsGeo.fromWkb(got(3L)).getArea == 25.0)
   }
 }
