@@ -148,26 +148,14 @@ private[functions] trait FloatVecKernelExpr extends UnaryExpression {
   * the per-element lambda (O(d) vs O(d²) per vector — invisible at the
   * gated 16 dims, dominant at 768+). Bit-parity with the HOF spelling
   * asserted in QuantizeSpec. Input contract: elements FINITE (see
-  * [[VecKernels.sq8Scale]]); the same holds for [[FloatVecSq8Recon]] and
-  * [[FloatVecSq8Bytes]], which share the scale scan. */
+  * [[VecKernels.sq8Scale]]); the same holds for [[FloatVecSq8Bytes]],
+  * which shares the scale scan. */
 case class FloatVecSq8(child: Expression) extends FloatVecKernelExpr {
   override protected def kernel: String = "sq8Codes"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "float_vec_sq8"
   override protected def nullSafeEval(a: Any): Any =
     VecKernels.sq8Codes(a.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SQ8 de-quantization v̂_i = code_i · scale ([[VecKernels.sq8Recon]]),
-  * output `array<double>`: the distortion-bound twin of the quantizer. */
-case class FloatVecSq8Recon(child: Expression) extends FloatVecKernelExpr {
-  override protected def kernel: String = "sq8Recon"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "float_vec_sq8_recon"
-  override protected def nullSafeEval(a: Any): Any =
-    VecKernels.sq8Recon(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -324,10 +312,6 @@ object VecExprs {
     * scan per row, bit-identical to the column-HOF twin. */
   def sq8(a: Column): Column =
     Bridge.column(FloatVecSq8(Bridge.expression(a)))
-
-  /** SQ8 reconstruction of an `array<float>` column ([[FloatVecSq8Recon]]). */
-  def sq8Recon(a: Column): Column =
-    Bridge.column(FloatVecSq8Recon(Bridge.expression(a)))
 
   /** All SRP-LSH band keys of an `array<float>` column in one codegen'd
     * pass ([[FloatVecSrpKeys]]) — bit-identical to the column-HOF band key. */

@@ -84,18 +84,6 @@ object VecKernels {
     new GenericArrayData(out)
   }
 
-  /** SQ8 reconstruction code_i·scale as `array<double>`. */
-  def sq8Recon(x: ArrayData): ArrayData = {
-    val s = sq8Scale(x)
-    val out = new Array[Double](x.numElements())
-    var i = 0
-    while (i < out.length) {
-      out(i) = math.floor(x.getFloat(i).toDouble / s + 0.5) * s
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** SQ8 codes packed one signed byte per dimension. */
   def sq8Bytes(x: ArrayData): Array[Byte] = {
     val s = sq8Scale(x)

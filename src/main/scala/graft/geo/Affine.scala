@@ -27,10 +27,6 @@ final case class Affine(a: Double, b: Double, c: Double, d: Double, e: Double, f
   def pixelToWorld(col: Double, row: Double): (Double, Double) =
     (c + a * (col + 0.5) + b * (row + 0.5), f + d * (col + 0.5) + e * (row + 0.5))
 
-  /** Forward at exact (non-centre) pixel coordinate — used for tile corners. */
-  def pixelToWorldCorner(col: Double, row: Double): (Double, Double) =
-    (c + a * col + b * row, f + d * col + e * row)
-
   /** Inverse + floor — reference `geotiff.index(x, y)` → (row, col). */
   def worldToPixel(x: Double, y: Double): (Long, Long) = {
     val (fc, fr) = worldToFrac(x, y)
@@ -42,11 +38,6 @@ final case class Affine(a: Double, b: Double, c: Double, d: Double, e: Double, f
     val dx = x - c; val dy = y - f
     ((e * dx - b * dy) / det, (a * dy - d * dx) / det)
   }
-
-  /** The affine of a tile cut at pixel offset (colOff, rowOff) of this raster
-    * — translation composition, reference tiles.py:82 semantics. */
-  def forTile(colOff: Long, rowOff: Long): Affine =
-    Affine(a, b, c + a * colOff + b * rowOff, d, e, f + d * colOff + e * rowOff)
 
   // ---------- Column forms ----------
 

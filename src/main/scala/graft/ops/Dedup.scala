@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: vocab assignment is a groupBy+window over distinct tokens
   * (shuffle ∝ vocab size, not corpus size); MinHash signatures are one
-  * explode + hash-agg; LSH candidate generation is a self-equi-join on
-  * (band, bandkey) — never an all-pairs cross join.
+  * hash-agg to an array per doc; band keys are a projection of that array;
+  * LSH grouping is an aggregate + equi-join on (band, bandkey) — never an
+  * all-pairs cross join.
   */
 object Dedup {
 
@@ -44,56 +45,30 @@ object Dedup {
       .select("id", "vid")
 
 
-  /** MinHash signatures: numHashes universal-hash minima per doc.
+  /** MinHash signatures: numHashes universal-hash minima per doc, as
+    * (id, sig) with sig(j) the j-th minimum.
     * h_j(v) = ((v+1)·(2654435761 + 2j) + j·7919) mod (2^31−1).
     * Two traps this form avoids (both found by the planted-pair spec):
     * the multiplier must exceed the modulus so products wrap (a small one
     * keeps the map order-preserving → MinHash degrades to "hash of the
     * smallest vid"), and v=0 must not be a fixed point (v+1 shift) — else
-    * every doc containing vocab id 0 shares one signature. Output (id,j,mh).
+    * every doc containing vocab id 0 shares one signature.
     *
     * Implemented as a typed partial/final [[MinhashAgg]]: one hash-agg
     * shuffle keyed by doc id, each token folding its numHashes minima into
     * a primitive long[] buffer — no numHashes× row explode (the previous
     * column form shuffled `numHashes · |tokens|` rows; same shuffle-IO fix
-    * as SimHash in round 2). The signature array then explodes to the
-    * (id, j, mh) layout LSH banding and the q27 oracle consume. */
+    * as SimHash in round 2). */
   def minhash(tokenVids: DataFrame, numHashes: Int): DataFrame =
-    minhashSigs(tokenVids, numHashes)
-      .select(col("id"), posexplode(col("sig")).as(Seq("j", "mh")))
-      .select(col("id"), col("j").cast("int").as("j"), col("mh"))
-
-  /** MinHash signatures in their ARRAY form: (id, sig) with sig(j) the
-    * j-th universal-hash minimum — the typed [[MinhashAgg]] output before
-    * [[minhash]]'s posexplode to the (id, j, mh) row layout. Round-6
-    * addition: band keys are a pure PROJECTION of this array
-    * ([[bandedKeysFromSigs]]), so LSH pipelines that start here skip the
-    * re-aggregation shuffle the exploded layout forces. */
-  def minhashSigs(tokenVids: DataFrame, numHashes: Int): DataFrame =
     tokenVids.groupBy("id")
       .agg(MinhashAgg.udafCol(numHashes, col("vid")).as("sig"))
 
-  /** (id, band, bandkey) rows from MinHash signatures with bands of 2
-    * rows: band key packs the two minima collision-free into one Long. */
-  private def bandedKeys(signatures: DataFrame): DataFrame =
-    signatures
-      .withColumn("band", (col("j") / 2).cast("int"))
-      .withColumn("slot", col("j") % 2)
-      .groupBy("id", "band")
-      .agg(min(when(col("slot") === 0, col("mh"))).as("m0"),
-        min(when(col("slot") === 1, col("mh"))).as("m1"))
-      .withColumn("bandkey", col("m0") * MersennePrime + col("m1"))
-      .select("id", "band", "bandkey")
-
-  /** [[bandedKeys]] from the ARRAY signature form — a pure projection
-    * (round 6): band b's key packs sig(2b) and sig(2b+1); no shuffle.
-    * The exploded-layout twin above re-aggregates by (id, band) — one
-    * whole extra exchange of the signature table — because the row
-    * layout has already lost the per-id grouping. Identical rows
-    * (asserted in DedupSpec) for even-length signatures; an odd-length
+  /** (id, band, bandkey) rows from [[minhash]] signatures, bands of 2
+    * minima: band b's key packs sig(2b) and sig(2b+1) collision-free into
+    * one Long. A pure projection of the array (no shuffle); an odd-length
     * signature's last minimum is left unbanded, and a signature shorter
     * than 2 gives no band rows. */
-  private def bandedKeysFromSigs(sigs: DataFrame): DataFrame = {
+  def bandKeys(sigs: DataFrame): DataFrame = {
     val bands = (size(col("sig")) / 2).cast("int")
     sigs.select(col("id"),
         posexplode(transform(
@@ -104,40 +79,17 @@ object Dedup {
       .select(col("id"), col("band").cast("int").as("band"), col("bandkey"))
   }
 
-  /** LSH candidate pairs from MinHash signatures. Output distinct (a, b)
-    * with a < b — EVERY colliding pair, for pipelines that score each
-    * candidate (exact Jaccard / cosine verify). A bucket of k docs emits
-    * (k choose 2) pairs, so this is quadratic per bucket BY DESIGN; when
-    * the downstream only needs GROUPING, use [[lshComponentEdges]], which
-    * is connectivity-equivalent and linear. */
-  def lshCandidates(signatures: DataFrame): DataFrame = {
-    val banded = bandedKeys(signatures)
-    // rename columns on an independent projection — self-join on the same
-    // lineage silently mis-resolves `l.id < r.id` to one side
-    val left = banded.select(col("id").as("a"), col("band"), col("bandkey"))
-    val right = banded.select(col("id").as("b"), col("band"), col("bandkey"))
-    left.join(right, Seq("band", "bandkey"))
-      .where(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-  }
-
-  /** Connectivity edges from MinHash LSH buckets: each (band, bandkey)
-    * bucket contributes a STAR — bucket-min id ↔ every other member —
-    * instead of the (k choose 2) clique. The connected components are
-    * IDENTICAL (a star spans its bucket), but a k-doc bucket emits k−1
-    * edges instead of k(k−1)/2: at sf0.1 the gate graph drops from 7.8 M
-    * pairs to ~20 k edges; at corpus scale a hot band bucket stops being
-    * quadratic. One aggregation + one equi-join, both keyed by
-    * (band, bandkey). The natural input to [[connectedComponents]]. */
-  def lshComponentEdges(signatures: DataFrame): DataFrame =
-    starEdges(bandedKeys(signatures))
-
-  /** [[lshComponentEdges]] directly from the ARRAY signature form
-    * ([[minhashSigs]]) — band keys are projected, not re-aggregated:
-    * one fewer exchange of the signature table per pipeline (round 6). */
-  def lshComponentEdgesFromSigs(sigs: DataFrame): DataFrame =
-    starEdges(bandedKeysFromSigs(sigs))
+  /** Connectivity edges from MinHash LSH buckets of [[minhash]]
+    * signatures: each (band, bandkey) bucket contributes a STAR —
+    * bucket-min id ↔ every other member — instead of the (k choose 2)
+    * clique. The connected components are IDENTICAL (a star spans its
+    * bucket), but a k-doc bucket emits k−1 edges instead of k(k−1)/2: at
+    * sf0.1 the gate graph drops from 7.8 M pairs to ~20 k edges; at corpus
+    * scale a hot band bucket stops being quadratic. One aggregation + one
+    * equi-join, both keyed by (band, bandkey). The natural input to
+    * [[connectedComponents]]. */
+  def lshComponentEdges(sigs: DataFrame): DataFrame =
+    starEdges(bandKeys(sigs))
 
   /** bucket-min star edges from (id, band, bandkey) rows */
   private def starEdges(banded: DataFrame): DataFrame = {
@@ -256,7 +208,7 @@ object Dedup {
 
   /** Connected components over an undirected candidate-pair set (a, b) —
     * the dedup CLUSTERING step every near-dup pipeline needs between
-    * "candidate pairs" ([[lshCandidates]], [[ngramJaccard]],
+    * "candidate pairs" ([[lshComponentEdges]]' star edges, [[ngramJaccard]],
     * [[embeddingNearDup]]) and "keep one per group": transitive duplicates
     * (A~B, B~C) must land in ONE group even when (A,C) was never a
     * candidate. Output: (id, comp) for every node appearing in `pairs`,
@@ -410,8 +362,4 @@ object Dedup {
         coalesce(col("clean_text"), lit("")).as("clean_text"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))
   }
-
-  /** Hamming distance between two packed simhash values — bit_count of xor. */
-  def hamming(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    bit_count(a.bitwiseXOR(b))
 }

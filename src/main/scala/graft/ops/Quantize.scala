@@ -490,9 +490,4 @@ object Quantize {
     rankTopK(pairs, "cos_q", ascending = false, k,
       Seq("qid", "rnk", "pid", "qdot", "cos_q"))
   }
-
-  /** De-quantized reconstruction v̂_i = code_i · scale — for the
-    * distortion bound |v − v̂| ≤ scale/2 the spec asserts. Native
-    * one-scan expression. */
-  def sq8Reconstruct(vec: Column): Column = graft.functions.VecExprs.sq8Recon(vec)
 }

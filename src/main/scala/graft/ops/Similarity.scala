@@ -49,34 +49,6 @@ object Similarity extends Serializable {
       .select("qid", "rnk", "pid", "cos")
   }
 
-  /** SRP-LSH bucket signature: `nPlanes` sign bits packed into one Long.
-    * Vectors in the same bucket are cosine-close with high probability.
-    * Runs as the native codegen'd [[graft.functions.FloatVecSrpKeys]]
-    * expression (one band of nPlanes bits) — bit-identical to the
-    * column-HOF band key the DuckDB oracle replays, asserted in
-    * SimilaritySpec. */
-  def srpSignature(vec: Column, nPlanes: Int): Column =
-    element_at(graft.functions.VecExprs.srpKeys(vec, 1, nPlanes), 1)
-
-  /** LSH-bucketed ANN: candidates share an SRP bucket, then exact cosine
-    * re-rank within bucket. Returns (qid, rnk, pid, cos) with rnk ≤ k —
-    * approximate: recall measured against [[cosineTopK]] in the spec.
-    * Single-table: all `nPlanes` bits must match, so recall collapses as
-    * nPlanes grows — [[annLshBanded]] is the production path. */
-  def annLsh(emb: DataFrame, idCol: String, vecCol: String, k: Int, nPlanes: Int): DataFrame = {
-    import graft.functions.VecExprs
-    val e = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("n", VecExprs.normF(col("v")))
-      .withColumn("sig", srpSignature(col("v"), nPlanes))
-    val pairs = e.as("a").join(e.as("b"),
-        col("a.sig") === col("b.sig") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("qid"), col("b.id").as("pid"),
-        (VecExprs.dotF(col("a.v"), col("b.v")) / (col("a.n") * col("b.n"))).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("pid").asc)
-    pairs.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select("qid", "rnk", "pid", "cos")
-  }
-
   /** Banded SRP-LSH candidate pairs — the candidate stage shared by
     * [[annLshBanded]] and the end-to-end near-dup pipeline
     * ([[Dedup.nearDupGroups]]). Distinct (a, b) with a < b; the self-join

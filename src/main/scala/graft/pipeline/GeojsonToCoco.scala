@@ -7,7 +7,7 @@ import graft.ops.Tiling
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.index.strtree.STRtree
-import org.locationtech.jts.geom.Envelope
+import org.locationtech.jts.geom.{Envelope, Polygon}
 
 import scala.jdk.CollectionConverters._
 
@@ -79,19 +79,20 @@ object GeojsonToCoco {
     // J1 broadcast arm: STRtree over tile envelopes, JTS clip, explode parts,
     // area filter, world→pixel (floor), shoelace area + bbox on pixel ring
     val rows = features.mapPartitions { it =>
+      // each tile's clip box and affine are built once per partition
       val tree = new STRtree()
       bcTiles.value.foreach { case (t, imgId) =>
         val (x0, y0, x1, y1) = Tiling.worldEnvelope(t)
-        tree.insert(new Envelope(x0, x1, y0, y1), (t, imgId))
+        tree.insert(new Envelope(x0, x1, y0, y1),
+          (imgId, JtsGeo.box(x0, y0, x1, y1), Affine(t.a, t.b, t.c, t.d, t.e, t.f)))
       }
       val cats = bcCats.value
       it.flatMap { f =>
         val geom = JtsGeo.fromWkb(f.wkb)
         tree.query(new Envelope(f.xmin, f.xmax, f.ymin, f.ymax)).asScala
-          .map(_.asInstanceOf[(TileMeta, Long)])
-          .flatMap { case (t, imgId) =>
-            val (x0, y0, x1, y1) = Tiling.worldEnvelope(t)
-            val parts = JtsGeo.clipToBox(geom, JtsGeo.box(x0, y0, x1, y1))
+          .map(_.asInstanceOf[(Long, Polygon, Affine)])
+          .flatMap { case (imgId, box, aff) =>
+            val parts = JtsGeo.clipToBox(geom, box)
               .filter { part =>
                 val area = utmZone match {
                   case Some((z, north)) => part match {
@@ -103,7 +104,6 @@ object GeojsonToCoco {
                 }
                 area > areaFilter
               }
-            val aff = Affine(t.a, t.b, t.c, t.d, t.e, t.f)
             parts.zipWithIndex.map { case (part, partIdx) =>
               // reference spatial_polygon_to_pixel_rio: every exterior coord
               // (closing dup included) → floor pixel, stored (x=col, y=row)

@@ -185,7 +185,7 @@ object PipelineQueries {
       // 6'. MinHash-LSH near-dup over the surviving docs' text
       val voc = Dedup.vocab(exactKept, "text")
       val tv = Dedup.docTokenVids(exactKept, "pid", "text", voc)
-      val edges = Dedup.lshComponentEdgesFromSigs(Dedup.minhashSigs(tv, 8))
+      val edges = Dedup.lshComponentEdges(Dedup.minhash(tv, 8))
       val cc = Dedup.connectedComponents(edges)
       val keepers = exactKept.select(col("pid"))
         .join(cc.withColumnRenamed("id", "pid"), Seq("pid"), "left")

@@ -65,19 +65,8 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       val voc = Dedup.vocab(docs, "text")
       val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
-      // band keys as a PROJECTION of the array signature (round 6): the
-      // round-5 spelling posexploded the signature and re-aggregated by
-      // (id, band) — a second exchange of the signature table that the
-      // array form never needed. Values identical: band b packs
-      // sig(2b), sig(2b+1) exactly as the min(when(slot…)) agg did.
-      Dedup.minhashSigs(tv, 8)
-        .select(col("id").as("doc_id"),
-          posexplode(transform(
-            sequence(lit(0), (size(col("sig")) / 2).cast("int") - 1),
-            b => element_at(col("sig"), b * 2 + 1) * Dedup.MersennePrime +
-              element_at(col("sig"), b * 2 + 2)))
-            .as(Seq("band", "bandkey")))
-        .select(col("doc_id"), col("band").cast("int").as("band"), col("bandkey"))
+      Dedup.bandKeys(Dedup.minhash(tv, 8))
+        .select(col("id").as("doc_id"), col("band"), col("bandkey"))
         .orderBy("doc_id", "band")
     }),
 
@@ -110,7 +99,7 @@ object TextQueries {
         .orderBy("doc_id")
     }),
 
-    // dedup clustering: minhash → banded LSH candidate pairs → connected
+    // dedup clustering: minhash → banded LSH star edges → connected
     // components (min-label flooding), every doc labeled with its group's
     // min id; component == doc_id is the keeper predicate. The oracle runs
     // the identical chain with a recursive-CTE transitive closure.
@@ -121,7 +110,7 @@ object TextQueries {
       // star edges per bucket — connectivity-identical to the all-pairs
       // candidates, linear instead of quadratic per band bucket; band
       // keys projected from the array signature (no re-agg — round 6)
-      val edges = Dedup.lshComponentEdgesFromSigs(Dedup.minhashSigs(tv, 8))
+      val edges = Dedup.lshComponentEdges(Dedup.minhash(tv, 8))
       val cc = Dedup.connectedComponents(edges)
       docs.select(col("doc_id"))
         .join(cc.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")

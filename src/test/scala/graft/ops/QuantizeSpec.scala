@@ -22,10 +22,9 @@ class QuantizeSpec extends SparkSpec {
   }
 
   test("codes stay in [-127, 127]; reconstruction error <= scale/2") {
-    val rows = emb.select(col("vec_id"), col("embedding"),
+    val rows = rddBacked(emb).select(col("vec_id"), col("embedding"),
         Quantize.sq8Scale(col("embedding")).as("s"),
-        Quantize.sq8Codes(col("embedding")).as("c"),
-        Quantize.sq8Reconstruct(col("embedding")).as("r"))
+        Quantize.sq8Codes(col("embedding")).as("c"))
       .collect()
     rows.length shouldBe 200
     rows.foreach { r =>
@@ -33,9 +32,9 @@ class QuantizeSpec extends SparkSpec {
       val codes = r.getSeq[Long](3)
       assert(codes.forall(c => c >= -127 && c <= 127))
       val v = r.getSeq[Float](1)
-      val rec = r.getSeq[Double](4)
-      v.zip(rec).foreach { case (x, y) =>
-        assert(math.abs(x.toDouble - y) <= s / 2 + 1e-12)
+      // v̂_i = code_i · scale, the reconstruction Lake.readQuantizedEmbeddings reads
+      v.zip(codes).foreach { case (x, c) =>
+        assert(math.abs(x.toDouble - c * s) <= s / 2 + 1e-12)
       }
     }
   }
@@ -44,18 +43,10 @@ class QuantizeSpec extends SparkSpec {
     def check(): Unit = {
       val rows = rddBacked(emb).select(
           Quantize.sq8Codes(col("embedding")).as("c"),
-          RefTwins.sq8CodesRef(col("embedding")).as("cref"),
-          Quantize.sq8Reconstruct(col("embedding")).as("r"),
-          RefTwins.sq8ReconstructRef(col("embedding")).as("rref"))
+          RefTwins.sq8CodesRef(col("embedding")).as("cref"))
         .collect()
       rows.length shouldBe 200
-      rows.foreach { r =>
-        r.getSeq[Long](0) shouldBe r.getSeq[Long](1)
-        r.getSeq[Double](2).zip(r.getSeq[Double](3)).foreach { case (x, y) =>
-          assert(java.lang.Double.doubleToLongBits(x) ==
-            java.lang.Double.doubleToLongBits(y))
-        }
-      }
+      rows.foreach { r => r.getSeq[Long](0) shouldBe r.getSeq[Long](1) }
     }
     check()
     withInterpretedEval(check())

@@ -17,7 +17,7 @@ object RefTwins {
 
   /** One band's SRP key: `rowsPerBand` sign bits from planes
     * [band·rowsPerBand, (band+1)·rowsPerBand), packed into a Long, of
-    * [[Similarity.srpSignature]] and `FloatVecSrpKeys`. */
+    * `FloatVecSrpKeys`. */
   def bandKeyCol(vec: Column, band: Column, rowsPerBand: Int): Column = {
     val bits = (0 until rowsPerBand).map { j =>
       val p = (band * rowsPerBand + j).cast("long")
@@ -33,12 +33,6 @@ object RefTwins {
   def sq8CodesRef(vec: Column): Column = {
     val s = Quantize.sq8Scale(vec)
     transform(vec, x => floor(x.cast("double") / s + 0.5).cast("long"))
-  }
-
-  /** [[Quantize.sq8Reconstruct]] */
-  def sq8ReconstructRef(vec: Column): Column = {
-    val s = Quantize.sq8Scale(vec)
-    transform(sq8CodesRef(vec), c => c.cast("double") * s)
   }
 
   /** ADC distance of `AnnExprs.adcDist`, in the exact grouping the DuckDB

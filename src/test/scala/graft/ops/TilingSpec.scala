@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.geo.Affine
 import graft.model.RasterMeta
 
 class TilingSpec extends SparkSpec {
@@ -52,6 +53,14 @@ class TilingSpec extends SparkSpec {
     assert(t.c == 1000.0 + 2.0 * 10 && t.f == 2000.0 - 2.0 * 10)
     val (x0, y0, x1, y1) = Tiling.worldEnvelope(t)
     assert(x0 == 1020.0 && x1 == 1040.0 && y1 == 1980.0 && y0 == 1980.0 - 2.0 * 7)
+    // rotated raster (b, d ≠ 0, dyadic coefficients so every sum is exact):
+    // each tile pixel's centre is the parent's centre at the offset pixel
+    val rot = r.copy(b = 0.5, d = -0.25)
+    val parent = Affine(rot.a, rot.b, rot.c, rot.d, rot.e, rot.f)
+    for (t <- Tiling.tilesFor(rot, 10, 10); c <- 0 until t.width; row <- 0 until t.height) {
+      Affine(t.a, t.b, t.c, t.d, t.e, t.f).pixelToWorld(c, row) shouldBe
+        parent.pixelToWorld(t.colOff + c, t.rowOff + row)
+    }
   }
 
   test("distributed tileGrid matches the pure generator") {

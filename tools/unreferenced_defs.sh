@@ -12,6 +12,8 @@
 #
 #   <file>:<line> <name> tests=<n>
 #
+# and a last line `<n> unreferenced defs` with the number of lines above.
+#
 # Usage: tools/unreferenced_defs.sh   (from anywhere inside the repo)
 set -u
 cd "$(dirname "$0")/.."
@@ -36,4 +38,5 @@ grep -rnE '^[[:space:]]*((private|protected)(\[[A-Za-z.]+\])? |final |implicit |
       [ "$uses" -gt "$defs" ] && continue
       tests=$(code_lines "$name" "$TESTS" | wc -l)
       echo "$site $name tests=$tests"
-    done
+    done \
+  | awk '{ print } END { print NR " unreferenced defs" }'
