@@ -1,11 +1,17 @@
 package graft.geo
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 /** UDF-free column expressions over flat-segmentation polygon arrays
-  * `[x1,y1,x2,y2,…]` (the COCO layout, reference coco.py:258). Everything is
-  * built from higher-order functions so it stays inside whole-stage codegen.
+  * `[x1,y1,x2,y2,…]` (the COCO layout, reference coco.py:258), built from
+  * higher-order functions so an engine without Scala UDFs (the DuckDB
+  * oracle) can replay them. They do not run as generated code: Spark's
+  * `ArrayAggregate` is `CodegenFallback`, so each `aggregate` lambda is
+  * evaluated row by row through `eval`, inside a whole-stage stage or not.
+  * [[shoelace]] and [[bbox]] are the same sums on one ring, for code that
+  * already holds the ring; their values are bit-identical to the columns'.
   */
 object GeomCols {
 
@@ -40,6 +46,39 @@ object GeomCols {
     val maxX = reduceBy(greatest(_, _), xAt)
     val maxY = reduceBy(greatest(_, _), yAt)
     array(minX, minY, maxX - minX, maxY - minY)
+  }
+
+  /** [[shoelaceCol]] on one ring of n ≥ 1 vertices: the same signed sum of
+    * xᵢ·y₍ᵢ₊₁₎%ₙ − x₍ᵢ₊₁₎%ₙ·yᵢ in vertex order from 0.0, then `abs / 2.0`. */
+  def shoelace(seg: Array[Double]): Double = {
+    val n = seg.length / 2
+    var signed = 0.0
+    var i = 0
+    while (i < n) {
+      val j = (i + 1) % n
+      signed += seg(2 * i) * seg(2 * j + 1) - seg(2 * j) * seg(2 * i + 1)
+      i += 1
+    }
+    math.abs(signed) / 2.0
+  }
+
+  /** [[bboxCol]] on one ring of n ≥ 2 vertices: min and max in vertex order,
+    * a vertex replacing the running value only when Spark's `least` /
+    * `greatest` would (its double ordering: -0.0 equals 0.0, NaN is
+    * largest). */
+  def bbox(seg: Array[Double]): Array[Double] = {
+    val n = seg.length / 2
+    var minX = seg(0); var minY = seg(1); var maxX = minX; var maxY = minY
+    var i = 1
+    while (i < n) {
+      val x = seg(2 * i); val y = seg(2 * i + 1)
+      if (SQLOrderingUtil.compareDoubles(x, minX) < 0) minX = x
+      if (SQLOrderingUtil.compareDoubles(y, minY) < 0) minY = y
+      if (SQLOrderingUtil.compareDoubles(x, maxX) > 0) maxX = x
+      if (SQLOrderingUtil.compareDoubles(y, maxY) > 0) maxY = y
+      i += 1
+    }
+    Array(minX, minY, maxX - minX, maxY - minY)
   }
 
   /** Marginal-bbox predicate, replicated bug-for-bug from the reference

@@ -149,8 +149,10 @@ object CocoOps {
     * The last part is never counted: its count feeds no offset. Categories
     * are dimension-sized, so they are merged on the driver: each name keeps
     * its first (part, id) row, and the merged ids follow that order. The
-    * merged categories and the id remap are local Datasets, whose counts
-    * and broadcasts start no job.
+    * merged categories are a local Dataset, whose count starts no job, and
+    * each part's annotations are remapped by a `when` chain over its few
+    * category ids, not by a join. An annotation whose category id its
+    * part's categories do not name, or is null, is dropped.
     */
   def concat(parts: Seq[CocoTables]): CocoTables = {
     require(parts.nonEmpty)
@@ -177,19 +179,20 @@ object CocoOps {
       CocoCategory(i, name, sup)
     }
     val newId = newCats.map(c => c.name -> c.id).toMap
-    val catRemap = spark.createDataset(allCats.map(c => (c._1, c._2, newId(c._3))))
-      .toDF("rds", "oldId", "newCatId")
 
+    // the IN filter keeps what an inner join on the (part, old id) remap
+    // kept: an annotation with a null or unnamed category id is dropped, so
+    // every row left matches one branch of the chain
+    val catId = col("categoryId")
     val annotations = parts.zipWithIndex.map { case (p, i) =>
+      val remap = allCats.filter(_._1 == i).map(c => c._2 -> newId(c._3)).toSeq
+      val merged = remap.foldLeft(catId) { case (m, (o, n)) => when(catId === o, n).otherwise(m) }
       p.annotations.toDF()
+        .where(catId.isin(remap.map(_._1): _*))
         .withColumn("id", col("id") + annOff(i))
         .withColumn("imageId", col("imageId") + imgOff(i))
-        .withColumn("ds", lit(i))
+        .withColumn("categoryId", merged)
     }.reduce(_ unionByName _)
-      .join(broadcast(catRemap),
-        col("ds") === col("rds") && col("categoryId") === col("oldId"))
-      .drop("categoryId", "oldId", "rds", "ds")
-      .withColumnRenamed("newCatId", "categoryId")
       .select("id", "imageId", "categoryId", "segmentation", "bbox", "area", "iscrowd")
       .as[CocoAnnotation]
 

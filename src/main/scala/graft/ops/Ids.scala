@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,13 +13,25 @@ import org.apache.spark.sql.types._
   * `row_number() over (order by …)` reproduces that but collapses to one
   * partition. This operator keeps the same output with a scalable plan:
   *
-  * 1. range-repartition + in-partition sort by the order columns,
-  * 2. with one partition, `monotonically_increasing_id`: in partition 0 it
-  *    is the row position, and the call plans without running a job;
-  * 3. with several, Spark's own `RDD.zipWithIndex`: one job counts
-  *    partitions 0..n−2, and each row's id is its partition's prefix-sum
-  *    offset + its local rank. Taking the RDD runs the sample and the
-  *    exchange inside the call.
+  * 1. with one output partition, `monotonically_increasing_id` over the
+  *    input sorted in that partition: in partition 0 it is the row
+  *    position, and the call plans without running a job.
+  *    - An input that is already one partition is sorted where it is
+  *      (`coalesce(1)`, no exchange), so the consumer's action is the only
+  *      job. "Already one partition" is read off the input's physical plan
+  *      without running it: a plan with no exchange and no subquery whose
+  *      RDD has one partition (a one-file scan, a one-partition local
+  *      relation, and the narrow work over them).
+  *    - Any other input goes through `repartitionByRange(1, …)`, so the work
+  *      upstream of the exchange keeps its own tasks. Coalescing it instead
+  *      would run that work in one task: near the size threshold on 4 cores
+  *      that was 15 % slower for an 8-file `GeoJson.read` (61.7 MiB
+  *      estimate) and 2.0× slower for a 300k-feature tile clip over 8
+  *      parquet files (README).
+  * 2. with several, range-repartition + in-partition sort, then Spark's own
+  *    `RDD.zipWithIndex`: one job counts partitions 0..n−2, and each row's
+  *    id is its partition's prefix-sum offset + its local rank. Taking the
+  *    RDD runs the sample and the exchange inside the call.
   *
   * Exactness requires the order key to be a total order (unique); ties
   * would make the id assignment partition-dependent — same caveat as
@@ -24,10 +39,10 @@ import org.apache.spark.sql.types._
   */
 object Ids {
 
-  /** Plan-stats size (bytes) below which [[denseId]] range-partitions to
-    * ONE partition: RangePartitioner skips its reservoir-sample pass
-    * entirely at numPartitions == 1 (rangeBounds is empty), removing one
-    * full execution of the input subtree per call — a whole job for every
+  /** Plan-stats size (bytes) below which [[denseId]] sorts in ONE
+    * partition: no reservoir sample and no count, and for an input that is
+    * already one partition no exchange either, so no sample job and no
+    * re-plan between the exchange and its consumer — for every
     * vocab/dense-id build on a dim-sized input (round 6; measured on
     * q08/q10/q27/q44). Same auto-select idiom as
     * [[Similarity.BroadcastVecBytes]]: the decision comes from Catalyst's
@@ -46,9 +61,11 @@ object Ids {
       else if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold)) 1
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val cols = orderCols.map(col)
-    val sorted = df.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
-    if (parts == 1) sorted.withColumn(idName, monotonically_increasing_id())
-    else {
+    if (parts == 1) {
+      val one = if (isOnePartition(df)) df.coalesce(1) else df.repartitionByRange(1, cols: _*)
+      one.sortWithinPartitions(cols: _*).withColumn(idName, monotonically_increasing_id())
+    } else {
+      val sorted = df.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
       // RangePartitioner samples with a per-RDD seed, so two separately
       // planned executions of the same Dataset can land rows on different
       // partitions in the count pass vs the emit pass. zipWithIndex counts
@@ -59,5 +76,19 @@ object Ids {
       val out = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
       spark.createDataFrame(out, sorted.schema.add(idName, LongType, nullable = false))
     }
+  }
+
+  /** Whether `df` is one partition, known without running a job: its
+    * physical plan has no exchange (adaptive execution wraps every plan that
+    * has one), no cached relation (whose buffers come from a plan of their
+    * own) and no subquery, so building its RDD plans file splits and local
+    * slices on the driver and starts nothing. */
+  private def isOnePartition(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan
+    val runsJobs = plan.exists {
+      case _: Exchange | _: AdaptiveSparkPlanExec | _: InMemoryTableScanExec => true
+      case p => p.subqueries.nonEmpty
+    }
+    !runsJobs && plan.execute().getNumPartitions == 1
   }
 }

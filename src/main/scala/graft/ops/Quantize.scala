@@ -363,6 +363,9 @@ object Quantize {
     // the draw is a prefix-stable ordering, so slicing a max(nLists, ksub)
     // draw is identical to two separate draws, at half the corpus jobs
     val seeds = Similarity.ivfCentroids(e, math.max(nLists, ksub))
+    // a corpus of fewer than ksub rows would give a smaller codebook
+    require(seeds.length >= ksub,
+      s"ksub=$ksub exceeds the ${seeds.length} seeds drawn from the corpus")
     val cents = seeds.take(nLists)
     val cb = pqCodebooksFromSeeds(seeds.take(ksub), m)
     // assignment/encode/LUT as native codegen'd projections (same kernels

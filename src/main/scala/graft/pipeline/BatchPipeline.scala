@@ -27,7 +27,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * `run` returns or throws only after every stage has finished; the first
   * failure in (pair, stage) order is rethrown, the others are attached to
   * it as suppressed. The stage tables and the concat order are those of a
-  * sequential run. One raster runs six Spark jobs.
+  * sequential run. One raster whose features are one partition runs five
+  * Spark jobs: the category list, the three stage writes and the concat's
+  * category collect; features in several partitions add the annotation
+  * ids' range exchange.
   */
 object BatchPipeline {
 

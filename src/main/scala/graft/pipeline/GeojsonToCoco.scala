@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.geo.{Affine, JtsGeo}
+import graft.geo.{Affine, GeomCols, JtsGeo}
 import graft.io.Coco
 import graft.model._
 import graft.ops.Tiling
@@ -78,6 +78,7 @@ object GeojsonToCoco {
 
     // J1 broadcast arm: STRtree over tile envelopes, JTS clip, explode parts,
     // area filter, world→pixel (floor), shoelace area + bbox on pixel ring
+    // (GeomCols' scalar kernels, bit-identical to its columns)
     val rows = features.mapPartitions { it =>
       // each tile's clip box and affine are built once per partition
       val tree = new STRtree()
@@ -111,19 +112,18 @@ object GeojsonToCoco {
                 val (row, colIdx) = aff.worldToPixel(cc.x, cc.y)
                 Array(colIdx.toDouble, row.toDouble)
               }
-              (imgId, cats(f.zoneName), f.featureId, partIdx, seg)
+              (imgId, cats(f.zoneName), f.featureId, partIdx, seg,
+                GeomCols.shoelace(seg), GeomCols.bbox(seg))
             }
           }
       }
-    }.toDF("imageId", "categoryId", "featureId", "partIdx", "segmentation")
+    }.toDF("imageId", "categoryId", "featureId", "partIdx", "segmentation", "area", "bbox")
 
     // annotation ids: global dense sequence in the reference's traversal
-    // order (coordinates.py:246) — assigned via the range-partitioned
-    // prefix-sum (Ids.denseId, oracle-proven ≡ row_number by q08) instead of
-    // a global window, which would single-partition every annotation.
+    // order (coordinates.py:246) — assigned by Ids.denseId (oracle-proven
+    // ≡ row_number by q08): one sorted partition with no exchange below its
+    // size threshold, the range-partitioned prefix-sum above it.
     val anns = graft.ops.Ids.denseId(rows, "id", Seq("imageId", "featureId", "partIdx"))
-      .withColumn("area", graft.geo.GeomCols.shoelaceCol(col("segmentation")))
-      .withColumn("bbox", graft.geo.GeomCols.bboxCol(col("segmentation")))
       .select(col("id"), col("imageId"), col("categoryId"),
         col("segmentation"), col("bbox"), col("area"), lit(0).as("iscrowd"))
       .as[CocoAnnotation]

@@ -3,9 +3,14 @@ package graft.ops
 import graft.SparkSpec
 import graft.io.Coco.CocoTables
 import graft.model._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 class CocoOpsSpec extends SparkSpec {
+
+  /** plan traversal that descends into adaptive query stages */
+  private val aqe = new AdaptiveSparkPlanHelper {}
 
   /** a part whose annotations cycle through its categories' ids, with the
     * categories in the given row order */
@@ -139,5 +144,23 @@ class CocoOpsSpec extends SparkSpec {
     all.categories.collect().sortBy(_.id).map(c => (c.id, c.name, c.supercategory)).toSeq shouldBe
       Seq((0, "a", "first"), (1, "c", "c"))
     all.annotations.collect().map(_.categoryId).toSet shouldBe Set(0, 1)
+  }
+
+  test("concat drops annotations whose category its part does not name, or null, as an inner join did") {
+    val spark2 = spark
+    import spark2.implicits._
+    // ann 1 → a category id the part's categories do not name; ann 2 → null
+    def withStrays(t: CocoTables): CocoTables = t.copy(annotations = t.annotations.toDF()
+      .withColumn("categoryId", when(col("id") === 1, lit(7))
+        .when(col("id") === 2, lit(null).cast("int")).otherwise(col("categoryId")))
+      .as[CocoAnnotation])
+    // part 0 keeps its ids; part 1's ids are remapped (b → 1, c → 2)
+    val all = CocoOps.concat(Seq(withStrays(mkTables(2, Seq("a", "b"))),
+      withStrays(mkTables(2, Seq("b", "c")))))
+    val got = all.annotations.toDF().select("id", "categoryId").collect()
+      .map(r => (r.getLong(0), r.get(1))).sortBy(_._1).toSeq
+    got shouldBe Seq((0L, 0), (3L, 1), (4L, 1), (7L, 2))
+    assert(aqe.collect(all.annotations.queryExecution.executedPlan) { case j: BaseJoinExec => j }
+      .isEmpty, all.annotations.queryExecution.executedPlan)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,14 +29,14 @@ class IdsSpec extends SparkSpec {
   }
 
   test("stats-adaptive single-partition arm assigns identical ids (round 6)") {
-    // distinct keys over 8 input partitions, no shuffle before denseId's own
-    val df = spark.range(0, 5000, 1, 8).toDF("k")
+    // distinct keys, no shuffle before denseId's own
+    def keys(partitions: Int) = spark.range(0, 5000, 1, partitions).toDF("k")
       .withColumn("k", pmod(col("k") * 48271L, lit(99991L)))
     val sc = spark.sparkContext
     // (ids, jobs of the denseId call, jobs of the collect); adaptive
     // execution runs the range exchange when the multi-partition arm takes
     // the RDD, and at the collect for the one-partition arm
-    def run(thresholdBytes: Long): (Set[(Long, Long)], Int, Int) = {
+    def run(df: DataFrame, thresholdBytes: Long): (Set[(Long, Long)], Int, Int) = {
       spark.conf.set("graft.ids.singlePartitionBytes", thresholdBytes.toString)
       try {
         val (out, callJobs) = JobCounter.count(sc)(Ids.denseId(df, "id", Seq("k")))
@@ -44,13 +45,19 @@ class IdsSpec extends SparkSpec {
         (ids, callJobs, collectJobs)
       } finally spark.conf.unset("graft.ids.singlePartitionBytes")
     }
-    // force the single-partition arm vs the multi-partition arm: same ids
-    val (one, oneCall, oneCollect) = run(Long.MaxValue)
-    val (multi, multiCall, multiCollect) = run(0L)
+    // force the single-partition arm, from one input partition and from 8,
+    // vs the multi-partition arm: same ids
+    val (sorted, sortedCall, sortedCollect) = run(keys(1), Long.MaxValue)
+    val (one, oneCall, oneCollect) = run(keys(8), Long.MaxValue)
+    val (multi, multiCall, multiCollect) = run(keys(8), 0L)
+    sorted shouldBe multi
     one shouldBe multi
     one.map(_._2) shouldBe (0L until 5000L).toSet
-    // one partition: nothing in the call; the collect runs the exchange,
-    // then the emit pass; no sample, no count
+    // one input partition is sorted where it is: nothing in the call, and
+    // the collect is the only job (no sample, no exchange, no count)
+    (sortedCall, sortedCollect) shouldBe ((0, 1))
+    // one partition from 8: nothing in the call; the collect runs the
+    // exchange, then the emit pass; no sample, no count
     (oneCall, oneCollect) shouldBe ((0, 2))
     // several partitions: sample, exchange and count, then the emit pass
     (multiCall, multiCollect) shouldBe ((3, 1))

@@ -255,6 +255,14 @@ class QuantizeSpec extends SparkSpec {
     }
   }
 
+  test("annIvfPq refuses a corpus of fewer than ksub rows") {
+    val e = intercept[IllegalArgumentException](Quantize.annIvfPq(
+      emb.where(col("vec_id") < 5), "vec_id", "embedding", 3, nLists = 2, nProbe = 1,
+      m = 4, ksub = 8))
+    e.getMessage should include("ksub=8")
+    e.getMessage should include("5 seeds drawn")
+  }
+
   test("native SDC scoring is bit-identical to the HOF twin, both eval modes") {
     val spark2 = spark
     import spark2.implicits._

@@ -7,6 +7,9 @@ import graft.lake.Lake
 import graft.model.{Feature, RasterMeta}
 import graft.ops.Tiling
 import org.apache.spark.JobCounter
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Golden round-trip fixtures (SURVEY.md §5.1): a tiny deterministic world —
   * one raster's metadata, hand-placed polygons (inside, tile-straddler,
@@ -15,6 +18,9 @@ import org.apache.spark.JobCounter
   * behavior (pixel-centre vertices, per-class union re-joining
   * tile-boundary splits into one polygon). */
 class RoundTripSpec extends SparkSpec {
+
+  /** plan traversal that descends into adaptive query stages */
+  private val aqe = new AdaptiveSparkPlanHelper {}
 
   // raster: 100×80 px, 2 m pixels, north-up at (1000, 2000)
   val raster = RasterMeta("r", 100, 80, 2.0, 0, 1000.0, 0, -2.0, 2000.0, "local")
@@ -187,16 +193,34 @@ class RoundTripSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val sc = spark.sparkContext
+    // the features in one partition, as a one-file read gives them
     val (t, runJobs) = JobCounter.count(sc)(BatchPipeline.run(freshLake(), "job",
-      Seq(raster -> features), GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)))
+      Seq(raster -> features.coalesce(1)), GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)))
     val tiles = Tiling.tilesFor(raster, 40, 40).map(m => m.copy(tileName = s"0_${m.tileName}")).toDS()
     val (out, c2gJobs) = JobCounter.count(sc)(CocoToGeojson.run(t, tiles, CocoToGeojson.Params()).collect())
     out.map(_.getString(1)).toSet shouldBe Set("building", "road")
-    // run: category list, annotation ids' range exchange, three stage
-    // writes, concat's category collect; coco2geojson: the images collect
-    // for its driver-side affine map, then 3 in the per-class union's query
-    runJobs should be <= 6
+    // run: category list, three stage writes, concat's category collect;
+    // coco2geojson: the images collect for its driver-side affine map, then
+    // 3 in the per-class union's query
+    runJobs should be <= 5
     c2gJobs should be <= 4
+    // concat remaps category ids without a join
+    assert(aqe.collect(t.annotations.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j }.isEmpty, t.annotations.queryExecution.executedPlan)
+  }
+
+  test("features in one partition: the annotation stage has no exchange and the same rows") {
+    val anns = GeojsonToCoco.run(features.coalesce(1), raster,
+      GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)).annotations
+    val (got, jobs) = JobCounter.count(spark.sparkContext)(anns.collect())
+    jobs shouldBe 1
+    val plan = anns.queryExecution.executedPlan
+    assert(aqe.collect(plan) { case e: Exchange => e }.isEmpty, plan)
+    // the fixture's 4 partitions take the range exchange: the same rows
+    def rows(a: Array[graft.model.CocoAnnotation]) = a.sortBy(_.id).toSeq.map(x =>
+      (x.id, x.imageId, x.categoryId, x.segmentation.toSeq, x.bbox.toSeq, x.area))
+    rows(got) shouldBe rows(tables.annotations.collect())
+    got.length shouldBe 5
   }
 
   test("BatchPipeline over 3 rasters: a resume on the same job id returns the one-shot tables") {
