@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
   * corpus row paid the full row codec (DeserializeToObject → Scala kernel
   * → SerializeFromObject, three extra operators per side in the round-5
   * q63/q70/q71 plans) and the stage fell out of whole-stage codegen. Each
-  * expression here is one [[VecKernels]] call around the UNCHANGED JVM
-  * kernel (`Similarity.nearestIn`, `Quantize.pqEncodeKernel/pqLutKernel`),
-  * made by `nullSafeEval` and, as a static call, by the generated code —
+  * expression here is one call of its [[VecKernels]] kernel
+  * (`nearestIn`, `pqCodes`, `pqLutTable`, `adcDist`), made by
+  * `nullSafeEval` and, as a static call, by the generated code —
   * identical arithmetic in both eval modes, no row codec, and the
   * projection fuses into the surrounding scan/join stage.
   *
@@ -27,7 +27,7 @@ import org.apache.spark.sql.types._
   * executor with the task binary, not per row). */
 
 /** `array<int>` of the `m` nearest IVF list ids (exact cosine desc, list
-  * asc — [[graft.ops.Similarity.nearestIn]] verbatim). */
+  * asc — [[VecKernels.nearestIn]]). */
 case class FloatVecNearestLists(child: Expression,
                                 cents: Array[(Int, Array[Float], Double)],
                                 m: Int)
@@ -44,7 +44,7 @@ case class FloatVecNearestLists(child: Expression,
 }
 
 /** PQ encode: `array<int>` of m per-subspace argmin-L2 codes
-  * ([[graft.ops.Quantize.pqEncodeKernel]] verbatim). */
+  * ([[VecKernels.pqCodes]]). */
 case class FloatVecPqEncode(child: Expression, cb: Array[Array[Array[Float]]])
   extends FloatVecKernelExpr {
   override protected def kernel: String = "pqEncode"
@@ -78,7 +78,7 @@ case class FloatVecPqEncodeBytes(child: Expression, cb: Array[Array[Array[Float]
 }
 
 /** Per-query ADC LUT: `array<array<double>>` of m × ksub exact subspace
-  * L2 distances ([[graft.ops.Quantize.pqLutKernel]] verbatim). */
+  * L2 distances ([[VecKernels.pqLutTable]]). */
 case class FloatVecPqLut(child: Expression, cb: Array[Array[Array[Float]]])
   extends FloatVecKernelExpr {
   override protected def kernel: String = "pqLut"
@@ -93,15 +93,15 @@ case class FloatVecPqLut(child: Expression, cb: Array[Array[Array[Float]]])
     copy(child = newChild)
 }
 
-/** ADC distance: Σ_s lut[s][codes_s] — the per-pair scoring loop of
-  * [[graft.ops.Quantize.annPq]]/[[graft.ops.Quantize.annIvfPq]], as a
-  * primitive loop inlined into whole-stage codegen. Replaces the
-  * `aggregate(zip_with(codes, lut, (c,l) -> element_at(l, c+1)))`
+/** ADC distance: Σ_s lut[s][codes_s] ([[VecKernels.adcDist]]) — the
+  * per-pair scoring loop of [[graft.ops.Quantize.annPq]]/
+  * [[graft.ops.Quantize.annIvfPq]], inside whole-stage codegen. Replaces
+  * the `aggregate(zip_with(codes, lut, (c,l) -> element_at(l, c+1)))`
   * higher-order spelling (a CodegenFallback interpreted per PAIR on the
-  * hottest path of the PQ join): identical left-to-right double fold from
+  * hottest path of the PQ join): the same left-to-right double fold from
   * 0.0 in subspace order, so distances are bit-identical. NULL on a
-  * length mismatch or an out-of-range code (the ragged-input contract of
-  * every native expression in this tier). */
+  * length mismatch or an out-of-range code ([[VecKernels.adcInRange]],
+  * the ragged-input contract of every native expression in this tier). */
 case class IntVecAdcDist(left: Expression, right: Expression)
   extends BinaryExpression {
 
@@ -122,45 +122,13 @@ case class IntVecAdcDist(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val codes = a.asInstanceOf[ArrayData]
     val lut = b.asInstanceOf[ArrayData]
-    val n = codes.numElements()
-    if (n != lut.numElements()) return null
-    var acc = 0.0
-    var s = 0
-    while (s < n) {
-      val c = codes.getInt(s)
-      val row = lut.getArray(s)
-      if (c < 0 || c >= row.numElements()) return null
-      acc += row.getDouble(c)
-      s += 1
-    }
-    acc
+    if (VecKernels.adcInRange(codes, lut)) VecKernels.adcDist(codes, lut) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val row = ctx.freshName("row")
-      val acc = ctx.freshName("acc")
-      val bad = ctx.freshName("bad")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  boolean $bad = false;
-         |  for (int $s = 0; $s < $n; $s++) {
-         |    int $c = $a.getInt($s);
-         |    org.apache.spark.sql.catalyst.util.ArrayData $row = $b.getArray($s);
-         |    if ($c < 0 || $c >= $row.numElements()) { $bad = true; break; }
-         |    $acc += $row.getDouble($c);
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if (!${VecKernels.Name}.adcInRange($a, $b)) ${ev.isNull} = true;
+         |else ${ev.value} = ${VecKernels.Name}.adcDist($a, $b);""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

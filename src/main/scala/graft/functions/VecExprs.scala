@@ -199,16 +199,17 @@ case class Sq8BytesToLongs(child: Expression) extends UnaryExpression {
 }
 
 /** PQ symmetric-distance (SDC) scoring directly over two BINARY code
-  * columns: dist = Σ_s tbl[s][a_s][b_s], the per-subspace codebook-pair
-  * L2 table flattened to one double array (`flat((s·ksub + a_s)·ksub +
-  * b_s)`) and looped in subspace order — the identical left-to-right
-  * fold the HOF spelling computes, inlined into
+  * columns ([[VecKernels.sdcDist]]): dist = Σ_s tbl[s][a_s][b_s], the
+  * per-subspace codebook-pair L2 table flattened to one double array
+  * (`flat((s·ksub + a_s)·ksub + b_s)`) and folded left to right in
+  * subspace order — the fold the HOF spelling computes, inside
   * whole-stage codegen (the HOF pays an interpreted lambda + three
   * nested `element_at`s per subspace per PAIR on the hottest path of a
   * PQ self-join). The table rides along as a codegen reference object —
   * m·ksub² doubles, broadcast-trivial (2 K at the gate geometry). NULL
-  * on length mismatch (ragged-input contract of every dot in this
-  * file). */
+  * on a length mismatch or a code outside [0, ksub)
+  * ([[VecKernels.sdcInRange]]): a corrupt or codebook-mismatched at-rest
+  * byte gives null, not an index-out-of-bounds task crash. */
 case class BytesSdcDist(left: Expression, right: Expression,
                         flat: Array[Double], ksub: Int)
   extends BinaryExpression {
@@ -229,42 +230,14 @@ case class BytesSdcDist(left: Expression, right: Expression,
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[Array[Byte]]
     val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length || x.length * ksub * ksub != flat.length) return null
-    var acc = 0.0
-    var s = 0
-    while (s < x.length) {
-      // range-check the CODE VALUES too (ADVICE r05): a corrupt or
-      // codebook-mismatched at-rest byte must yield null like every other
-      // ragged input in this file, not an ArrayIndexOutOfBounds task crash
-      if (x(s) < 0 || x(s) >= ksub || y(s) < 0 || y(s) >= ksub) return null
-      acc += flat((s * ksub + x(s)) * ksub + y(s))
-      s += 1
-    }
-    acc
+    if (VecKernels.sdcInRange(x, y, flat, ksub)) VecKernels.sdcDist(x, y, flat, ksub) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tblRef = ctx.addReferenceObj("sdcTbl", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val s = ctx.freshName("s")
-      val acc = ctx.freshName("acc")
-      val bad = ctx.freshName("bad")
-      s"""
-         |if ($a.length != $b.length || $a.length * $ksub * $ksub != $tblRef.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  boolean $bad = false;
-         |  for (int $s = 0; $s < $a.length; $s++) {
-         |    if ($a[$s] < 0 || $a[$s] >= $ksub || $b[$s] < 0 || $b[$s] >= $ksub) {
-         |      $bad = true; break;
-         |    }
-         |    $acc += $tblRef[($s * $ksub + $a[$s]) * $ksub + $b[$s]];
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
+    val tbl = ctx.addReferenceObj("sdcTbl", flat, "double[]")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""if (!${VecKernels.Name}.sdcInRange($a, $b, $tbl, $ksub)) ${ev.isNull} = true;
+         |else ${ev.value} = ${VecKernels.Name}.sdcDist($a, $b, $tbl, $ksub);""".stripMargin)
   }
 
   override protected def withNewChildrenInternal(

@@ -1,6 +1,5 @@
 package graft.functions
 
-import graft.ops.{Quantize, Similarity}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** The one spelling of each native vector expression's per-element loop.
@@ -13,7 +12,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   *
   * Kernels take non-null inputs and return primitives or fresh arrays,
   * never a boxed value: the null rules (a null input, a dot's length
-  * mismatch) stay in the expressions, as one check before the call.
+  * mismatch, an out-of-range ADC or SDC code) stay in the expressions, as
+  * one check before the call. The JVM-array kernels ([[dot]], [[norm]],
+  * [[subL2]] and the IVF/PQ kernels built on them) are also the one fold
+  * that the `ops` row kernels, driver-side tables and dedup pairs call.
   * `spark.sql.codegen.factoryMode=NO_CODEGEN` runs the interpreted path
   * (switching off `spark.sql.codegen.wholeStage` alone still compiles
   * each expression). */
@@ -137,27 +139,125 @@ object VecKernels {
     new GenericArrayData(out)
   }
 
-  /** `m` nearest IVF list ids ([[graft.ops.Similarity.nearestIn]]) */
-  def nearestLists(x: ArrayData, cents: Array[(Int, Array[Float], Double)],
-                   m: Int): ArrayData =
-    new GenericArrayData(Similarity.nearestIn(cents, x.toFloatArray(), m))
-
-  /** PQ codes ([[graft.ops.Quantize.pqEncodeKernel]]) as `array<int>` */
-  def pqEncode(x: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData =
-    new GenericArrayData(Quantize.pqEncodeKernel(x.toFloatArray(), cb))
-
-  /** PQ codes packed one signed byte per subspace (ksub ≤ 128) */
-  def pqEncodeBytes(x: ArrayData, cb: Array[Array[Array[Float]]]): Array[Byte] = {
-    val codes = Quantize.pqEncodeKernel(x.toFloatArray(), cb)
-    val out = new Array[Byte](codes.length)
+  /** [[floatDot]] on JVM arrays: Σ x_i·y_i over i < x.length, each
+    * pair widened to double, added left to right from 0.0. */
+  def dot(x: Array[Float], y: Array[Float]): Double = {
+    var acc = 0.0
     var i = 0
-    while (i < codes.length) { out(i) = codes(i).toByte; i += 1 }
-    out
+    while (i < x.length) { acc += x(i).toDouble * y(i).toDouble; i += 1 }
+    acc
   }
 
-  /** per-query ADC table ([[graft.ops.Quantize.pqLutKernel]]) as
-    * `array<array<double>>` */
+  /** √[[dot]](x, x), the norm every cosine in the tree divides by */
+  def norm(x: Array[Float]): Double = math.sqrt(dot(x, x))
+
+  /** Subspace squared L2 Σ_d (x(off+d) − c(d))² over d < c.length, each
+    * difference taken in double and squared, added left to right from
+    * 0.0: the fold of PQ encode ([[pqCodes]]), the ADC table
+    * ([[pqLutTable]]) and the SDC table (`Quantize.pqSdcTable`), and the
+    * sequence the DuckDB oracle replays. */
+  def subL2(x: Array[Float], off: Int, c: Array[Float]): Double = {
+    var acc = 0.0
+    var d = 0
+    while (d < c.length) {
+      val diff = x(off + d).toDouble - c(d).toDouble
+      acc += diff * diff
+      d += 1
+    }
+    acc
+  }
+
+  /** The `m` nearest IVF list ids of `v` by cosine, [[dot]] / ([[norm]]·
+    * the centroid's norm), descending, ties to the smaller list id. */
+  def nearestIn(cents: Array[(Int, Array[Float], Double)],
+                v: Array[Float], m: Int): Array[Int] = {
+    val n = norm(v)
+    cents.map { case (li, cv, cn) => (-(dot(v, cv) / (n * cn)), li) }
+      .sorted.take(m).map(_._2)
+  }
+
+  /** `m` nearest IVF list ids ([[nearestIn]]) as `array<int>` */
+  def nearestLists(x: ArrayData, cents: Array[(Int, Array[Float], Double)],
+                   m: Int): ArrayData =
+    new GenericArrayData(nearestIn(cents, x.toFloatArray(), m))
+
+  /** PQ encode: per subspace s, the codebook entry j minimizing
+    * [[subL2]](v, s·dsub, cb(s)(j)), ties to the smallest j. */
+  def pqCodes(v: Array[Float], cb: Array[Array[Array[Float]]]): Array[Int] =
+    Array.tabulate(cb.length) { s =>
+      val off = s * cb(s)(0).length
+      var best = Double.PositiveInfinity; var bestJ = 0
+      var j = 0
+      while (j < cb(s).length) {
+        val acc = subL2(v, off, cb(s)(j))
+        if (acc < best) { best = acc; bestJ = j } // strict < keeps earliest j on ties
+        j += 1
+      }
+      bestJ
+    }
+
+  /** PQ codes ([[pqCodes]]) as `array<int>` */
+  def pqEncode(x: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData =
+    new GenericArrayData(pqCodes(x.toFloatArray(), cb))
+
+  /** PQ codes packed one signed byte per subspace (ksub ≤ 128) */
+  def pqEncodeBytes(x: ArrayData, cb: Array[Array[Array[Float]]]): Array[Byte] =
+    pqCodes(x.toFloatArray(), cb).map(_.toByte)
+
+  /** Per-query ADC table: lut(s)(j) = [[subL2]] between the query's s-th
+    * slice and codebook entry j; m×ksub doubles per query. */
+  def pqLutTable(v: Array[Float], cb: Array[Array[Array[Float]]]): Array[Array[Double]] =
+    Array.tabulate(cb.length) { s =>
+      val off = s * cb(s)(0).length
+      cb(s).map(c => subL2(v, off, c))
+    }
+
+  /** per-query ADC table ([[pqLutTable]]) as `array<array<double>>` */
   def pqLut(x: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData =
-    new GenericArrayData(Quantize.pqLutKernel(x.toFloatArray(), cb)
+    new GenericArrayData(pqLutTable(x.toFloatArray(), cb)
       .map(row => new GenericArrayData(row): AnyRef))
+
+  /** [[adcDist]]'s null rule: one code per LUT row, each in [0, row length). */
+  def adcInRange(codes: ArrayData, lut: ArrayData): Boolean = {
+    val n = codes.numElements()
+    if (n != lut.numElements()) return false
+    var s = 0
+    while (s < n) {
+      val c = codes.getInt(s)
+      if (c < 0 || c >= lut.getArray(s).numElements()) return false
+      s += 1
+    }
+    true
+  }
+
+  /** ADC distance Σ_s lut[s][codes_s], added left to right from 0.0 in
+    * subspace order; codes must pass [[adcInRange]]. */
+  def adcDist(codes: ArrayData, lut: ArrayData): Double = {
+    val n = codes.numElements()
+    var acc = 0.0
+    var s = 0
+    while (s < n) { acc += lut.getArray(s).getDouble(codes.getInt(s)); s += 1 }
+    acc
+  }
+
+  /** [[sdcDist]]'s null rule: equal-length code strings that match the
+    * m×ksub×ksub table, every code in [0, ksub). */
+  def sdcInRange(x: Array[Byte], y: Array[Byte], flat: Array[Double], ksub: Int): Boolean = {
+    if (x.length != y.length || x.length * ksub * ksub != flat.length) return false
+    var s = 0
+    while (s < x.length) {
+      if (x(s) < 0 || x(s) >= ksub || y(s) < 0 || y(s) >= ksub) return false
+      s += 1
+    }
+    true
+  }
+
+  /** SDC distance Σ_s flat((s·ksub + x_s)·ksub + y_s), added left to right
+    * from 0.0 in subspace order; codes must pass [[sdcInRange]]. */
+  def sdcDist(x: Array[Byte], y: Array[Byte], flat: Array[Double], ksub: Int): Double = {
+    var acc = 0.0
+    var s = 0
+    while (s < x.length) { acc += flat((s * ksub + x(s)) * ksub + y(s)); s += 1 }
+    acc
+  }
 }

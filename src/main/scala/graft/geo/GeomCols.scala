@@ -4,51 +4,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
-/** UDF-free column expressions over flat-segmentation polygon arrays
-  * `[x1,y1,x2,y2,…]` (the COCO layout, reference coco.py:258), built from
-  * higher-order functions so an engine without Scala UDFs (the DuckDB
-  * oracle) can replay them. They do not run as generated code: Spark's
-  * `ArrayAggregate` is `CodegenFallback`, so each `aggregate` lambda is
-  * evaluated row by row through `eval`, inside a whole-stage stage or not.
-  * [[shoelace]] and [[bbox]] are the same sums on one ring, for code that
-  * already holds the ring; their values are bit-identical to the columns'.
+/** Polygon measures over flat-segmentation rings `[x1,y1,x2,y2,…]` (the
+  * COCO layout, reference coco.py:258). [[shoelace]] and [[bbox]] run in
+  * geojson2coco's clip pass and in gate q18; the DuckDB oracle replays
+  * their sums from its own SQL.
   */
 object GeomCols {
 
-  private def xAt(seg: Column, i: Column): Column =
-    element_at(seg, (i * 2 + 1).cast("int"))
-  private def yAt(seg: Column, i: Column): Column =
-    element_at(seg, (i * 2 + 2).cast("int"))
-
   /** Shoelace polygon area (reference `Polygon(...).area`, coco.py:259;
-    * SURVEY.md P9) — `aggregate` cross-product sum over the vertex array. */
-  def shoelaceCol(seg: Column): Column = {
-    val n = (size(seg) / 2).cast("long")
-    val signed = aggregate(
-      sequence(lit(0L), n - 1),
-      lit(0.0),
-      (acc, i) => {
-        val j = (i + 1) % n
-        acc + (xAt(seg, i) * yAt(seg, j) - xAt(seg, j) * yAt(seg, i))
-      })
-    abs(signed) / 2.0
-  }
-
-  /** COCO bbox `[min_x, min_y, width, height]` from polygon bounds
-    * (reference coco.py:221-241; SURVEY.md P8). */
-  def bboxCol(seg: Column): Column = {
-    val n = (size(seg) / 2).cast("long")
-    def reduceBy(f: (Column, Column) => Column, pick: (Column, Column) => Column) =
-      aggregate(sequence(lit(1L), n - 1), pick(seg, lit(0L)),
-        (acc, i) => f(acc, pick(seg, i)))
-    val minX = reduceBy(least(_, _), xAt)
-    val minY = reduceBy(least(_, _), yAt)
-    val maxX = reduceBy(greatest(_, _), xAt)
-    val maxY = reduceBy(greatest(_, _), yAt)
-    array(minX, minY, maxX - minX, maxY - minY)
-  }
-
-  /** [[shoelaceCol]] on one ring of n ≥ 1 vertices: the same signed sum of
+    * SURVEY.md P9) of one ring of n ≥ 1 vertices: the signed sum of
     * xᵢ·y₍ᵢ₊₁₎%ₙ − x₍ᵢ₊₁₎%ₙ·yᵢ in vertex order from 0.0, then `abs / 2.0`. */
   def shoelace(seg: Array[Double]): Double = {
     val n = seg.length / 2
@@ -62,10 +26,11 @@ object GeomCols {
     math.abs(signed) / 2.0
   }
 
-  /** [[bboxCol]] on one ring of n ≥ 2 vertices: min and max in vertex order,
-    * a vertex replacing the running value only when Spark's `least` /
-    * `greatest` would (its double ordering: -0.0 equals 0.0, NaN is
-    * largest). */
+  /** COCO bbox `[min_x, min_y, width, height]` from polygon bounds
+    * (reference coco.py:221-241; SURVEY.md P8) of one ring of n ≥ 2
+    * vertices: min and max in vertex order, a vertex replacing the running
+    * value only when Spark's `least` / `greatest` would (its double
+    * ordering: -0.0 equals 0.0, NaN is largest). */
   def bbox(seg: Array[Double]): Array[Double] = {
     val n = seg.length / 2
     var minX = seg(0); var minY = seg(1); var maxX = minX; var maxY = minY

@@ -228,7 +228,7 @@ object Lake {
       s"ksub=$ksub exceeds the signed-byte code range of the binary layout")
     val cb = graft.ops.Quantize.pqCodebooks(
       emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")), m, ksub)
-    // native codegen'd encode projection (round 6 — same pqEncodeKernel,
+    // native codegen'd encode projection (round 6 — VecKernels.pqCodes,
     // no mapPartitions row codec; the scan→encode→write fuses into one
     // codegen stage)
     val quant = emb.select((Seq(col(idCol),

@@ -175,31 +175,26 @@ object Dedup {
     * ever collected to the driver. All-pairs work is quadratic per block
     * by definition, so at corpus scale feed LSH buckets
     * ([[Similarity.annLshBanded]]'s candidate stage) as the block column —
-    * never a whole-corpus block. The per-pair kernel is the same
-    * left-to-right IEEE754 fold as the oracle's column formulation
-    * (smaller id's vector is always the left operand), so cosines are
-    * bit-identical to the previous broadcast form. */
+    * never a whole-corpus block. The per-pair kernel is
+    * [[graft.functions.VecKernels.dot]], the same left-to-right IEEE754
+    * fold as the oracle's column formulation (smaller id's vector is
+    * always the left operand), so cosines are bit-identical to it. */
   def embeddingNearDup(emb: DataFrame, idCol: String, vecCol: String,
                        blockCol: String, tau: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
+    import graft.functions.VecKernels.{dot, norm}
     val rows = emb
       .select(col(blockCol).cast("string"), col(idCol).cast("long"), col(vecCol))
       .as[(String, Long, Array[Float])]
     rows.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val members = it.map { case (_, id, v) =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(s))
-      }.toArray
+      val members = it.map { case (_, id, v) => (id, v, norm(v)) }.toArray
       scala.util.Sorting.quickSort(members)(Ordering.by(_._1))
       (0 until members.length).iterator.flatMap { i =>
         val (a, av, an) = members(i)
         (i + 1 until members.length).iterator.flatMap { j =>
           val (b, bv, bn) = members(j)
-          var d = 0.0; var x = 0
-          while (x < av.length) { d += av(x).toDouble * bv(x).toDouble; x += 1 }
-          val cos = d / (an * bn)
+          val cos = dot(av, bv) / (an * bn)
           if (cos >= tau) Some((a, b, cos)) else None
         }
       }

@@ -69,14 +69,6 @@ object Quantize {
       .select(outCols.map(col): _*)
   }
 
-  /** ADC distance column shared by [[annPq]]/[[annIvfPq]]: the native
-    * codegen'd [[graft.functions.IntVecAdcDist]] — m table lookups folded
-    * left-to-right from 0.0 in subspace order, inlined into the join's
-    * whole-stage codegen (round 6; bit-parity with the SQL-portable HOF
-    * spelling asserted in AnnExprsSpec). */
-  private def adcDistCol(codes: Column, lut: Column): Column =
-    graft.functions.AnnExprs.adcDist(codes, lut)
-
   /** Quantized brute-force cosine top-k within blocks: quantize → block
     * self-join → INTEGER dot per pair → one divide+sqrt for the score.
     * Output (qid, rnk, pid, qdot, cos_q), deterministic tie-break
@@ -247,63 +239,15 @@ object Quantize {
     }
   }
 
-  /** Per-subspace argmin-L2 encoding: code_s = the codebook entry
-    * minimizing Σ_d (x_d − c_d)² (floats widened to double, left-to-
-    * right fold — the exact IEEE-754 sequence the oracle replays), ties
-    * to the SMALLEST codebook index. */
-  def pqEncodeKernel(v: Array[Float], cb: Array[Array[Array[Float]]]): Array[Int] = {
-    val m = cb.length
-    val out = new Array[Int](m)
-    var s = 0
-    while (s < m) {
-      val dsub = cb(s)(0).length
-      var best = Double.PositiveInfinity; var bestJ = 0
-      var j = 0
-      while (j < cb(s).length) {
-        val c = cb(s)(j)
-        var acc = 0.0; var d = 0
-        while (d < dsub) {
-          val diff = v(s * dsub + d).toDouble - c(d).toDouble
-          acc += diff * diff
-          d += 1
-        }
-        if (acc < best) { best = acc; bestJ = j } // strict < keeps earliest j on ties
-        j += 1
-      }
-      out(s) = bestJ
-      s += 1
-    }
-    out
-  }
-
-  /** Per-query ADC lookup table: lut(s)(j) = exact subspace L2 between
-    * the query's s-th slice and codebook entry j — same fold as
-    * [[pqEncodeKernel]]. m×ksub doubles per query (~1 KB at 8×16). */
-  def pqLutKernel(v: Array[Float], cb: Array[Array[Array[Float]]]): Array[Array[Double]] = {
-    val m = cb.length
-    Array.tabulate(m) { s =>
-      val dsub = cb(s)(0).length
-      Array.tabulate(cb(s).length) { j =>
-        val c = cb(s)(j)
-        var acc = 0.0; var d = 0
-        while (d < dsub) {
-          val diff = v(s * dsub + d).toDouble - c(d).toDouble
-          acc += diff * diff
-          d += 1
-        }
-        acc
-      }
-    }
-  }
-
   /** PQ-ADC top-k within blocks: corpus encoded ONCE to m codes per
-    * vector (partition-local kernel, broadcast codebooks — only the
-    * codes reach the join), each query carries its LUT, and the
-    * per-pair distance is a column-side HOF — m `element_at` lookups
-    * folded left-to-right, so the whole score is engine-portable and
-    * the DuckDB oracle replays draw → encode → ADC → rank end to end
-    * (q70). Output (qid, rnk, pid, dist) ranked by ADC distance ASC
-    * (dist = ||q − ŷ||², ŷ the PQ reconstruction — identity asserted
+    * vector (a codegen'd projection with the codebook as a reference
+    * object — only the codes reach the join), each query carries its LUT,
+    * and the per-pair distance is the native
+    * [[graft.functions.IntVecAdcDist]]: m table lookups folded left to
+    * right from 0.0 in subspace order, the fold the DuckDB oracle replays
+    * draw → encode → ADC → rank end to end (q70). Output (qid, rnk, pid,
+    * dist) ranked by ADC distance ASC (dist = ||q − ŷ||², ŷ the PQ
+    * reconstruction — identity asserted
     * in QuantizeSpec), ties pid ASC. Same block equi-join shape as
     * [[annSq8]]; at corpus scale the shuffled payload is m bytes of
     * code per corpus row and ~ksub·m doubles per query row. */
@@ -316,7 +260,7 @@ object Quantize {
     val cb = pqCodebooks(
       emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")), m, ksub)
     // round 6: encode/LUT as native codegen'd projections (the expressions
-    // call pqEncodeKernel/pqLutKernel verbatim — codes and tables are
+    // call VecKernels.pqCodes/pqLutTable — codes and tables are
     // unchanged; the codebook rides along as a codegen reference object)
     // instead of mapPartitions row kernels: no row codec per corpus row,
     // both sides fuse into single scan→project codegen stages.
@@ -333,7 +277,7 @@ object Quantize {
     val joined =
       if (hasBlk) queries.join(corpus, "blk").where(col("qid") =!= col("pid"))
       else queries.crossJoin(corpus).where(col("qid") =!= col("pid"))
-    val dist = adcDistCol(col("codes"), col("lut"))
+    val dist = AnnExprs.adcDist(col("codes"), col("lut"))
     val scored = joined.select(col("qid"), col("pid"), dist.as("dist"))
     rankTopK(scored, "dist", ascending = true, k, Seq("qid", "rnk", "pid", "dist"))
   }
@@ -344,8 +288,8 @@ object Quantize {
     * draw and exact-cosine assignment as [[Similarity.annIvf]] /
     * [[annIvfSq8]], so all three indexes share list structure — and
     * the surviving pairs are scored by PQ-ADC over m codes per corpus
-    * vector ([[annPq]]'s table-lookup HOF). The join moves m bytes of
-    * information per corpus row (32× under SQ8's already-4×-smaller
+    * vector ([[annPq]]'s table-lookup expression). The join moves m bytes
+    * of information per corpus row (32× under SQ8's already-4×-smaller
     * codes at D=64, m=8) and one LUT per probing query; the float
     * corpus is read once, in the encode projection, and never shuffled.
     * Output (qid, rnk, pid, dist) ranked by ADC distance ASC, ties pid
@@ -378,7 +322,7 @@ object Quantize {
         AnnExprs.pqLut(col("v"), cb).as("lut"),
         AnnExprs.nearestLists(col("v"), cents, nProbe).as("ls"))
       .select(col("qid"), col("lut"), explode(col("ls")).as("list"))
-    val dist = adcDistCol(col("codes"), col("lut"))
+    val dist = AnnExprs.adcDist(col("codes"), col("lut"))
     val scored = probes.join(lists, "list")
       .where(col("qid") =!= col("pid"))
       .select(col("qid"), col("pid"), dist.as("dist"))
@@ -405,7 +349,8 @@ object Quantize {
   }
 
   /** SDC table for PQ codes: sdc(s)(i)(j) = exact subspace L2 between
-    * codebook entries i and j (same left-to-right fold as the ADC LUT).
+    * codebook entries i and j ([[graft.functions.VecKernels.subL2]], the
+    * fold of the ADC LUT).
     * m×ksub² doubles (8×16² = 2 K at the gate geometry; at production
     * dims think 96 subspaces × 128² = 1.6 M — still broadcast-trivial;
     * ksub is capped at 128 by the signed-byte code layout, see
@@ -417,15 +362,7 @@ object Quantize {
   def pqSdcTable(cb: Array[Array[Array[Float]]]): Array[Array[Array[Double]]] =
     cb.map { entries =>
       Array.tabulate(entries.length) { i =>
-        Array.tabulate(entries.length) { j =>
-          var acc = 0.0; var d = 0
-          while (d < entries(i).length) {
-            val diff = entries(i)(d).toDouble - entries(j)(d).toDouble
-            acc += diff * diff
-            d += 1
-          }
-          acc
-        }
+        entries.map(c => graft.functions.VecKernels.subL2(entries(i), 0, c))
       }
     }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.functions.VecKernels.{dot, nearestIn, norm}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,29 +9,21 @@ import org.apache.spark.sql.functions._
   * (`array<float>`), per the builder brief: brute-force cosine top-k as the
   * correctness baseline, and a sign-random-projection (SRP) LSH-bucketed
   * variant as the scale path. Per-pair dot products on the hot join paths
-  * run as the native codegen'd [[graft.functions.FloatVecDot]] expression;
-  * the `aggregate`/`zip_with` higher-order [[dot]] stays as the
-  * SQL-portable reference form (same left-to-right double fold — the two
-  * are bit-identical, spec-asserted — and the shape the DuckDB oracle
-  * replays via `list_reduce`). UDF-free, deterministic either way.
+  * run as the native codegen'd [[graft.functions.FloatVecDot]] expression,
+  * and the row kernels call the same fold on JVM arrays
+  * ([[graft.functions.VecKernels.dot]]/`norm`): each float widened to
+  * double, added left to right from 0.0, the fold the DuckDB oracle
+  * replays via `list_reduce`. Deterministic on every path.
   */
 object Similarity extends Serializable {
-
-  /** Left-to-right dot product of two array columns (cast to double). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Brute-force cosine top-k: every pair scored via a self-join keyed by a
     * blocking column when supplied (else true cross product — only for
     * baseline/oracle scale). Output (qid, rnk, pid, cos). Deterministic
     * tie-break (cos desc, pid asc). The per-pair dot runs as the native
-    * codegen'd [[graft.functions.FloatVecDot]] expression (same
-    * left-to-right IEEE-754 fold as the [[dot]] HOF and the broadcast JVM
-    * kernels — bit-identical, asserted in the specs — but inlined into
-    * whole-stage codegen instead of interpreting a lambda per pair). */
+    * codegen'd [[graft.functions.FloatVecDot]] expression (the same
+    * left-to-right IEEE-754 fold as the broadcast JVM kernels —
+    * bit-identical, asserted in the specs — inside whole-stage codegen). */
   def cosineTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                  blockCol: Option[String] = None): DataFrame = {
     import graft.functions.VecExprs
@@ -110,37 +103,6 @@ object Similarity extends Serializable {
       .select("qid", "rnk", "pid", "cos")
   }
 
-  /** IVF-Flat ANN (the brief's second scale path next to LSH): a coarse
-    * quantizer of `nLists` deterministic centroids — the vectors with the
-    * smallest `mix(id) = (id·2654435761) mod (2^31−1)`, i.e. a seeded
-    * hash-strided sample of the corpus, k-means-free so results are
-    * reproducible across engines/runs. Unlike first-N-by-id (which on
-    * id-clustered data draws all centroids from one region and lets a
-    * single list absorb the corpus), the hash draw is uniform over the id
-    * space regardless of insertion order; selection is a distributed
-    * top-nLists (TakeOrdered), never a full sort or collect. Every vector
-    * is assigned to its nearest centroid, and each query probes its
-    * `nProbe` nearest lists with an exact cosine re-rank inside them. The
-    * probe is an EQUI-join on list id — never all-pairs; at corpus scale
-    * the lists shard by key like any join, nLists scales with √corpus so
-    * list sizes stay bounded, and `maxListSize` salts any residual hot
-    * list into (list, salt) sub-keys — candidate-set-preserving, output
-    * identical (asserted in the spec). Recall measured vs brute force in
-    * the spec. */
-  /** Nearest `m` centroid list ids by cosine (desc, list asc tie-break).
-    * Also the kernel behind [[graft.functions.FloatVecNearestLists]]. */
-  private[graft] def nearestIn(cents: Array[(Int, Array[Float], Double)],
-                               v: Array[Float], m: Int): Array[Int] = {
-    var s = 0.0; var d = 0
-    while (d < v.length) { s += v(d).toDouble * v(d).toDouble; d += 1 }
-    val n = math.sqrt(s)
-    cents.map { case (li, cv, cn) =>
-      var dot = 0.0; var i = 0
-      while (i < v.length) { dot += v(i).toDouble * cv(i).toDouble; i += 1 }
-      (-(dot / (n * cn)), li) // cosine desc
-    }.sorted.take(m).map(_._2)
-  }
-
   /** fixed-point scale for the deterministic k-means reduction */
   private val KmFx = 1048576.0 // 2^20
 
@@ -157,17 +119,12 @@ object Similarity extends Serializable {
   def ivfCentroids(e: DataFrame, nLists: Int,
                    kmeansIters: Int = 0): Array[(Int, Array[Float], Double)] = {
     val spark = e.sparkSession
-    def withNorm(i: Int, v: Array[Float]): (Int, Array[Float], Double) = {
-      var s = 0.0; var d = 0
-      while (d < v.length) { s += v(d).toDouble * v(d).toDouble; d += 1 }
-      (i, v, math.sqrt(s))
-    }
     var cents = e
       .withColumn("mix", pmod(col("id") * lit(2654435761L), lit(2147483647L)))
       .orderBy("mix", "id").limit(nLists)
       .collect()
       .map(r => r.getSeq[Float](1).toArray)
-      .zipWithIndex.map { case (v, i) => withNorm(i, v) }
+      .zipWithIndex.map { case (v, i) => (i, v, norm(v)) }
     var iter = 0
     while (iter < kmeansIters) {
       val bc = spark.sparkContext.broadcast(cents)
@@ -193,7 +150,7 @@ object Similarity extends Serializable {
             rows.foreach { r =>
               nv(r.getInt(1)) = ((r.getLong(2).toDouble / r.getLong(3)) / KmFx).toFloat
             }
-            withNorm(li, nv)
+            (li, nv, norm(nv))
           case None => (li, oldV, oldN)
         }
       }
@@ -202,6 +159,23 @@ object Similarity extends Serializable {
     cents
   }
 
+  /** IVF-Flat ANN (the brief's second scale path next to LSH): a coarse
+    * quantizer of `nLists` deterministic centroids — the vectors with the
+    * smallest `mix(id) = (id·2654435761) mod (2^31−1)`, i.e. a seeded
+    * hash-strided sample of the corpus, k-means-free so results are
+    * reproducible across engines/runs. Unlike first-N-by-id (which on
+    * id-clustered data draws all centroids from one region and lets a
+    * single list absorb the corpus), the hash draw is uniform over the id
+    * space regardless of insertion order; selection is a distributed
+    * top-nLists (TakeOrdered), never a full sort or collect. Every vector
+    * is assigned to its nearest centroid, and each query probes its
+    * `nProbe` nearest lists with an exact cosine re-rank inside them. The
+    * probe is an EQUI-join on list id — never all-pairs; at corpus scale
+    * the lists shard by key like any join, nLists scales with √corpus so
+    * list sizes stay bounded, and `maxListSize` salts any residual hot
+    * list into (list, salt) sub-keys — candidate-set-preserving, output
+    * identical (asserted in the spec). Recall measured vs brute force in
+    * the spec. */
   def annIvf(emb: DataFrame, idCol: String, vecCol: String, k: Int,
              nLists: Int, nProbe: Int, maxListSize: Int = Int.MaxValue,
              kmeansIters: Int = 0): DataFrame = {
@@ -210,7 +184,7 @@ object Similarity extends Serializable {
     val e = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     val cents = ivfCentroids(e, nLists, kmeansIters)
     // round 6: list assignment as a native codegen'd projection (the
-    // expression calls [[nearestIn]] verbatim — identical list ids) in
+    // expression calls VecKernels.nearestIn — identical list ids) in
     // place of the mapPartitions row kernels, AND the probe join now
     // carries only (list, id) — the round-5 shape shuffled both sides'
     // FLOAT VECTORS through the join and then dropped them unread
@@ -274,10 +248,9 @@ object Similarity extends Serializable {
   /** Exact cosine for candidate (qid, pid) pairs with the vector table
     * JOINED onto the pairs — the corpus-scale path: two equi-joins key the
     * pairs by each endpoint (AQE picks shuffle-hash/broadcast per side from
-    * runtime stats), nothing is ever collected to the driver. The per-row
-    * kernel repeats [[scorePairsBroadcast]]'s left-to-right IEEE754 folds
-    * (dot, then each norm as sum-of-squares + sqrt), so the two arms are
-    * bit-identical — asserted in SimilaritySpec. */
+    * runtime stats), nothing is ever collected to the driver. Each row
+    * calls the same dot and norm kernels as [[scorePairsBroadcast]], so the
+    * two arms are bit-identical — asserted in SimilaritySpec. */
   def scorePairsJoin(pairs: DataFrame, emb: DataFrame, idCol: String,
                      vecCol: String): DataFrame = {
     val vecs = emb.select(col(idCol).cast("long").as("_vid"), col(vecCol).as("_v"))
@@ -296,27 +269,18 @@ object Similarity extends Serializable {
         val p = r.getLong(1)
         val qv = r.getSeq[Float](2).toArray
         val pv = r.getSeq[Float](3).toArray
-        var d = 0.0; var qs = 0.0; var ps = 0.0
-        var i = 0
-        while (i < qv.length) {
-          d += qv(i).toDouble * pv(i).toDouble
-          i += 1
-        }
-        i = 0
-        while (i < qv.length) { qs += qv(i).toDouble * qv(i).toDouble; i += 1 }
-        i = 0
-        while (i < pv.length) { ps += pv(i).toDouble * pv(i).toDouble; i += 1 }
-        Row(q, p, d / (math.sqrt(qs) * math.sqrt(ps)))
+        Row(q, p, dot(qv, pv) / (norm(qv) * norm(pv)))
       }
     }
   }
 
   /** Exact cosine for candidate (qid, pid) pairs via a broadcast id→vector
-    * map and a primitive JVM fold — bit-identical to [[dot]]/[[norm]] (same
-    * left-to-right IEEE754 accumulation over the same doubles), ~50× faster
-    * than evaluating the `zip_with`/`aggregate` HOF per pair. Driver-memory
-    * bound by construction — only [[scorePairs]] should call it, which
-    * routes anything past [[BroadcastVecBytes]] to [[scorePairsJoin]]. */
+    * map and the JVM fold kernels ([[graft.functions.VecKernels.dot]]/
+    * `norm`), ~50× faster than evaluating a `zip_with`/`aggregate` HOF per
+    * pair. A pair with a null id or an id that `emb` lacks is dropped, as
+    * [[scorePairsJoin]]'s inner joins drop it. Driver-memory bound by
+    * construction — only [[scorePairs]] should call it, which routes
+    * anything past [[BroadcastVecBytes]] to [[scorePairsJoin]]. */
   def scorePairsBroadcast(pairs: DataFrame, emb: DataFrame, idCol: String,
                           vecCol: String): DataFrame = {
     val spark = emb.sparkSession
@@ -328,25 +292,19 @@ object Similarity extends Serializable {
       org.apache.spark.sql.types.StructField("pid", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType)))
     implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    pairs.select(col("qid").cast("long"), col("pid").cast("long")).mapPartitions { it =>
+    val ids = pairs.select(col("qid").cast("long"), col("pid").cast("long")).na.drop()
+    ids.mapPartitions { it =>
       val m = bc.value
       val norms = new java.util.HashMap[Long, java.lang.Double]()
-      def normOf(id: Long): Double = {
+      def normOf(id: Long, v: Array[Float]): Double = {
         val cached = norms.get(id)
         if (cached != null) cached.doubleValue()
-        else {
-          val v = m(id)
-          var s = 0.0; var i = 0
-          while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-          val n = math.sqrt(s); norms.put(id, n); n
-        }
+        else { val n = norm(v); norms.put(id, n); n }
       }
-      it.map { r =>
+      it.flatMap { r =>
         val (q, p) = (r.getLong(0), r.getLong(1))
-        val (qv, pv) = (m(q), m(p))
-        var s = 0.0; var i = 0
-        while (i < qv.length) { s += qv(i).toDouble * pv(i).toDouble; i += 1 }
-        Row(q, p, s / (normOf(q) * normOf(p)))
+        for (qv <- m.get(q); pv <- m.get(p))
+          yield Row(q, p, dot(qv, pv) / (normOf(q, qv) * normOf(p, pv)))
       }
     }
   }
@@ -370,7 +328,9 @@ object Similarity extends Serializable {
 
   /** Brute-force cosine top-k with the block side broadcast — identical
     * output to [[cosineTopK]] (asserted in the spec) with zero shuffles:
-    * scan → per-row scan of the broadcast block → local top-k. Driver-
+    * scan → per-row scan of the broadcast block → local top-k. A row whose
+    * block is null is neither query nor candidate, as in the join arm's
+    * `a.blk === b.blk`. Driver-
     * memory bound by construction (collects the vector table) — only
     * [[cosineTopKAuto]] should call it, which routes anything past
     * [[BroadcastVecBytes]] to the distributed formulation. */
@@ -379,18 +339,13 @@ object Similarity extends Serializable {
     val spark = emb.sparkSession
     val selCols = Seq(col(idCol).cast("long").as("id"), col(vecCol).as("v")) ++
       blockCol.map(c => col(c).cast("string").as("blk"))
-    val sel = emb.select(selCols: _*)
+    val all = emb.select(selCols: _*)
+    val sel = if (blockCol.isDefined) all.where(col("blk").isNotNull) else all
     val grouped = sel.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
         if (blockCol.isDefined) r.getString(2) else ""))
       .groupBy(_._3)
-      .map { case (blk, rows) =>
-        blk -> rows.map { case (id, v, _) =>
-          var s = 0.0; var i = 0
-          while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-          (id, v, math.sqrt(s))
-        }
-      }
+      .map { case (blk, rows) => blk -> rows.map { case (id, v, _) => (id, v, norm(v)) } }
     val bc = spark.sparkContext.broadcast(grouped)
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
@@ -404,14 +359,10 @@ object Similarity extends Serializable {
         val qid = r.getLong(0)
         val qv = r.getSeq[Float](1).toArray
         val blk = if (r.length > 2) r.getString(2) else ""
-        var s = 0.0; var i = 0
-        while (i < qv.length) { s += qv(i).toDouble * qv(i).toDouble; i += 1 }
-        val qn = math.sqrt(s)
+        val qn = norm(qv)
         val cands = groups(blk)
         val scored = cands.iterator.filter(_._1 != qid).map { case (pid, pv, pn) =>
-          var d = 0.0; var j = 0
-          while (j < qv.length) { d += qv(j).toDouble * pv(j).toDouble; j += 1 }
-          (d / (qn * pn), pid)
+          (dot(qv, pv) / (qn * pn), pid)
         }.toArray
         java.util.Arrays.sort(scored, Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long]))
         scored.iterator.take(k).zipWithIndex.map { case ((cos, pid), rk) =>

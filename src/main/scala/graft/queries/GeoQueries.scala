@@ -97,20 +97,22 @@ object GeoQueries {
     // exact integer arithmetic, so the JTS path is oracle-checkable)
     "q17_clip" -> ((s, dir) => clipZonesToTiles(s)),
 
-    // P8/P9/P10: segmentation array → shoelace area + COCO bbox, UDF-free
+    // P8/P9/P10: segmentation array → shoelace area + COCO bbox, by the
+    // scalar kernels that geojson2coco's clip pass runs
     "q18_shoelace" -> ((s, dir) => {
+      import s.implicits._
       val d = docPoints(t(s, dir, "documents"))
         .withColumn("w", (col("doc_id") * 13 % 400 + 100).cast("double"))
         .withColumn("h", (col("doc_id") * 17 % 400 + 100).cast("double"))
         .withColumn("seg", array(
           col("x"), col("y") - col("h"), col("x") + col("w"), col("y"),
           col("x"), col("y") + col("h"), col("x") - col("w"), col("y")))
-      d.select(col("doc_id"),
-          GeomCols.shoelaceCol(col("seg")).as("area"),
-          element_at(GeomCols.bboxCol(col("seg")), 1).as("bx"),
-          element_at(GeomCols.bboxCol(col("seg")), 2).as("by"),
-          element_at(GeomCols.bboxCol(col("seg")), 3).as("bw"),
-          element_at(GeomCols.bboxCol(col("seg")), 4).as("bh"))
+      d.select(col("doc_id"), col("seg")).as[(Long, Array[Double])]
+        .map { case (id, seg) =>
+          val b = GeomCols.bbox(seg)
+          (id, GeomCols.shoelace(seg), b(0), b(1), b(2), b(3))
+        }
+        .toDF("doc_id", "area", "bx", "by", "bw", "bh")
         .orderBy("doc_id")
     }),
 

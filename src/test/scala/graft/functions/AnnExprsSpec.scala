@@ -23,7 +23,7 @@ class AnnExprsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Int](1).toArray, r.getSeq[Float](2).toArray))
     for (rows <- Seq(run(), withInterpretedEval(run()))) {
       rows.foreach { case (id, ls, v) =>
-        ls should contain theSameElementsInOrderAs Similarity.nearestIn(cents, v, 3)
+        ls should contain theSameElementsInOrderAs VecKernels.nearestIn(cents, v, 3)
       }
     }
   }
@@ -37,11 +37,11 @@ class AnnExprsSpec extends SparkSpec {
     for (rows <- Seq(run(), withInterpretedEval(run()))) {
       rows.foreach { r =>
         val v = r.getSeq[Float](4).toArray
-        val want = Quantize.pqEncodeKernel(v, cb)
+        val want = VecKernels.pqCodes(v, cb)
         r.getSeq[Int](1).toArray should contain theSameElementsInOrderAs want
         r.getAs[Array[Byte]](2) should contain theSameElementsInOrderAs want.map(_.toByte)
         val lut = r.getSeq[scala.collection.Seq[Double]](3).map(_.toArray).toArray
-        val wantLut = Quantize.pqLutKernel(v, cb)
+        val wantLut = VecKernels.pqLutTable(v, cb)
         lut.length shouldBe wantLut.length
         lut.zip(wantLut).foreach { case (a, b) =>
           a.zip(b).foreach { case (x, y) =>

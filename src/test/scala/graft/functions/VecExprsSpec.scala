@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.ops.Similarity
+import graft.ops.RefTwins
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -36,7 +36,7 @@ class VecExprsSpec extends SparkSpec {
   test("dotF is bit-identical to the aggregate/zip_with HOF fold") {
     val rows = vecs.select(col("id"),
         VecExprs.dotF(col("a"), col("b")).as("native"),
-        Similarity.dot(col("a"), col("b")).as("hof"))
+        RefTwins.dot(col("a"), col("b")).as("hof"))
       .collect()
     rows.length shouldBe 500
     rows.foreach { r =>
@@ -112,5 +112,27 @@ class VecExprsSpec extends SparkSpec {
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("EvalProbe ran eval")) shouldBe true
     run() shouldBe (0L until 10L).toArray // both settings restored
+  }
+
+  test("array dot and norm kernels are bit-identical to floatDot, with -0.0 and subnormals") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val specials = Array(-0.0f, 0.0f, Float.MinPositiveValue, -Float.MinPositiveValue,
+      1.0e-39f, -3.5e-40f, 1.0f, -2.5f, 3.0e38f)
+    val rnd = new scala.util.Random(20261019L)
+    def draw(n: Int) = Array.fill(n) {
+      if (rnd.nextInt(3) == 0) specials(rnd.nextInt(specials.length))
+      else (rnd.nextGaussian() * math.pow(10, rnd.nextInt(12) - 6)).toFloat
+    }
+    val cases = Seq((Array(-0.0f, -0.0f), Array(1.0f, -0.0f)),
+      (Array(Float.MinPositiveValue), Array(Float.MinPositiveValue))) ++
+      (0 until 300).map { _ => val n = rnd.nextInt(24); (draw(n), draw(n)) }
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    cases.foreach { case (x, y) =>
+      val (ux, uy) = (UnsafeArrayData.fromPrimitiveArray(x), UnsafeArrayData.fromPrimitiveArray(y))
+      withClue(s"${x.mkString(",")} · ${y.mkString(",")}") {
+        bits(VecKernels.dot(x, y)) shouldBe bits(VecKernels.floatDot(ux, uy))
+        bits(VecKernels.norm(x)) shouldBe bits(math.sqrt(VecKernels.floatDot(ux, ux)))
+      }
+    }
   }
 }

@@ -1,11 +1,13 @@
 package graft.geo
 
 import graft.SparkSpec
+import graft.ops.RefTwins
 import org.apache.spark.sql.functions._
 
 import java.lang.Double.doubleToRawLongBits
 
-/** The scalar shoelace and bbox kernels against their column forms. */
+/** The shoelace and bbox ring kernels against their column forms in
+  * [[graft.ops.RefTwins]]. */
 class GeomColsSpec extends SparkSpec {
 
   /** closed rings (first vertex repeated): star-shaped, so concave, with
@@ -31,7 +33,7 @@ class GeomColsSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val got = rddBacked(rings.zipWithIndex.map { case (r, i) => (i, r) }.toDF("i", "seg"))
-      .select(col("i"), GeomCols.shoelaceCol(col("seg")), GeomCols.bboxCol(col("seg")))
+      .select(col("i"), RefTwins.shoelaceCol(col("seg")), RefTwins.bboxCol(col("seg")))
       .collect()
     got.length shouldBe rings.length
     got.foreach { r =>

@@ -263,7 +263,7 @@ class LakeSpec extends SparkSpec {
     val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](2).toArray).toMap
     back.select("vec_id", "codes").collect().foreach { r =>
       r.getAs[Array[Byte]](1).toSeq shouldBe
-        graft.ops.Quantize.pqEncodeKernel(vecs(r.getLong(0)), cb).map(_.toByte).toSeq
+        graft.functions.VecKernels.pqCodes(vecs(r.getLong(0)), cb).map(_.toByte).toSeq
     }
     // SDC search straight off the layout, no float IO: distances equal the
     // L2 between the two reconstructions (subspace-blocked fold)
@@ -271,8 +271,8 @@ class LakeSpec extends SparkSpec {
       .collect()
     top.length shouldBe 2000
     top.take(200).foreach { r =>
-      val ca = graft.ops.Quantize.pqEncodeKernel(vecs(r.getLong(0)), cb)
-      val cp = graft.ops.Quantize.pqEncodeKernel(vecs(r.getLong(2)), cb)
+      val ca = graft.functions.VecKernels.pqCodes(vecs(r.getLong(0)), cb)
+      val cp = graft.functions.VecKernels.pqCodes(vecs(r.getLong(2)), cb)
       val tbl = graft.ops.Quantize.pqSdcTable(cb)
       var dist = 0.0
       for (s0 <- 0 until m) dist += tbl(s0)(ca(s0))(cp(s0))

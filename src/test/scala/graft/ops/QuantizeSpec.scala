@@ -148,7 +148,7 @@ class QuantizeSpec extends SparkSpec {
     // vector's PQ reconstruction ŷ (subspace-blocked summation)
     got.foreach { r =>
       val (q, p) = (vecs(r.getLong(0)), vecs(r.getLong(2)))
-      val codes = Quantize.pqEncodeKernel(p, cb)
+      val codes = graft.functions.VecKernels.pqCodes(p, cb)
       val dsub = q.length / m
       var dist = 0.0
       for (s <- 0 until m) {
@@ -215,8 +215,8 @@ class QuantizeSpec extends SparkSpec {
       emb.select(col("vec_id").as("id"), col("embedding").as("v")), m, ksub)
     val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     def adc(q: Array[Float], p: Array[Float]): Double = {
-      val codes = Quantize.pqEncodeKernel(p, cb)
-      val lut = Quantize.pqLutKernel(q, cb)
+      val codes = graft.functions.VecKernels.pqCodes(p, cb)
+      val lut = graft.functions.VecKernels.pqLutTable(q, cb)
       var dist = 0.0; var s = 0
       while (s < m) { dist += lut(s)(codes(s)); s += 1 }
       dist
@@ -273,7 +273,7 @@ class QuantizeSpec extends SparkSpec {
     val quant = emb.mapPartitions { it =>
       it.map { r =>
         (r.getLong(0), r.getLong(0) % 10,
-          Quantize.pqEncodeKernel(r.getSeq[Float](1).toArray, bcCb.value).map(_.toByte))
+          graft.functions.VecKernels.pqCodes(r.getSeq[Float](1).toArray, bcCb.value).map(_.toByte))
       }
     }.toDF("vec_id", "blk", "codes")
     def check(): Unit = {
@@ -351,5 +351,35 @@ class QuantizeSpec extends SparkSpec {
     val reranked = got.map { case (q, rs) => q -> rs.map(_._1).toSet }
     assert(recallOf(reranked) >= recallOf(unreranked),
       s"rerank recall ${recallOf(reranked)} < unreranked ${recallOf(unreranked)}")
+  }
+
+  test("subL2 gives the PQ encode, LUT and SDC table values of a per-subspace fold") {
+    import graft.functions.VecKernels
+    val (m, ksub) = (4, 8)
+    val cb = Quantize.pqCodebooks(
+      emb.select(col("vec_id").as("id"), col("embedding").as("v")), m, ksub)
+    val dsub = cb(0)(0).length
+    // Σ_d (a(off+d) − b(d))², each difference in double, left to right from 0.0
+    def fold(a: Array[Float], off: Int, b: Array[Float]): Double =
+      (0 until dsub).foldLeft(0.0) { (acc, d) =>
+        val diff = a(off + d).toDouble - b(d).toDouble
+        acc + diff * diff
+      }
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    val queries = emb.collect().map(_.getSeq[Float](1).toArray) ++ Seq(
+      Array.fill(m * dsub)(-0.0f), Array.fill(m * dsub)(Float.MinPositiveValue),
+      Array.tabulate(m * dsub)(d => if (d % 2 == 0) 1.0e-39f else -3.0e5f))
+    queries.foreach { q =>
+      val lut = VecKernels.pqLutTable(q, cb)
+      val codes = VecKernels.pqCodes(q, cb)
+      for (s <- 0 until m) {
+        val want = cb(s).map(c => fold(q, s * dsub, c))
+        lut(s).map(bits).toSeq shouldBe want.map(bits).toSeq
+        codes(s) shouldBe want.indexOf(want.min) // ties to the smallest index
+      }
+    }
+    val sdc = Quantize.pqSdcTable(cb)
+    for (s <- 0 until m; i <- 0 until ksub)
+      sdc(s)(i).map(bits).toSeq shouldBe cb(s).map(c => bits(fold(cb(s)(i), 0, c))).toSeq
   }
 }

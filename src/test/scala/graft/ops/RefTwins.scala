@@ -9,6 +9,47 @@ import org.apache.spark.sql.functions._
   * the native expressions. */
 object RefTwins {
 
+  /** Left-to-right dot product of two array columns (cast to double), of
+    * `VecExprs.dotF` and `VecKernels.dot`. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  def norm(a: Column): Column = sqrt(dot(a, a))
+
+  private def xAt(seg: Column, i: Column): Column =
+    element_at(seg, (i * 2 + 1).cast("int"))
+  private def yAt(seg: Column, i: Column): Column =
+    element_at(seg, (i * 2 + 2).cast("int"))
+
+  /** [[graft.geo.GeomCols.shoelace]] as an `aggregate` cross-product sum
+    * over the vertex array. */
+  def shoelaceCol(seg: Column): Column = {
+    val n = (size(seg) / 2).cast("long")
+    val signed = aggregate(
+      sequence(lit(0L), n - 1),
+      lit(0.0),
+      (acc, i) => {
+        val j = (i + 1) % n
+        acc + (xAt(seg, i) * yAt(seg, j) - xAt(seg, j) * yAt(seg, i))
+      })
+    abs(signed) / 2.0
+  }
+
+  /** [[graft.geo.GeomCols.bbox]] as `least`/`greatest` folds over the
+    * vertex array. */
+  def bboxCol(seg: Column): Column = {
+    val n = (size(seg) / 2).cast("long")
+    def reduceBy(f: (Column, Column) => Column, pick: (Column, Column) => Column) =
+      aggregate(sequence(lit(1L), n - 1), pick(seg, lit(0L)),
+        (acc, i) => f(acc, pick(seg, i)))
+    val minX = reduceBy(least(_, _), xAt)
+    val minY = reduceBy(least(_, _), yAt)
+    val maxX = reduceBy(greatest(_, _), xAt)
+    val maxY = reduceBy(greatest(_, _), yAt)
+    array(minX, minY, maxX - minX, maxY - minY)
+  }
+
   /** Deterministic pseudo-random hyperplane component for SRP-LSH:
     * plane(p, i) ∈ [-0.5, 0.5), a pure hash-mix of (plane, dim) — identical
     * in any engine, no RNG state. */

@@ -194,9 +194,36 @@ class SimilaritySpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")
-    val r = df.select(Similarity.dot(col("a"), col("b")).as("d"),
-      Similarity.norm(col("a")).as("n")).head
+    val r = df.select(RefTwins.dot(col("a"), col("b")).as("d"),
+      RefTwins.norm(col("a")).as("n")).head
     assert(r.getDouble(0) == 32.0)
     assert(r.getDouble(1) == math.sqrt(14.0))
+  }
+
+  test("cosineTopK arms agree on a null block: its rows are neither query nor candidate") {
+    val spark2 = spark
+    import spark2.implicits._
+    val df = rddBacked(Seq(
+      (1L, Array(1f, 0f), Option("a")), (2L, Array(1f, 1f), Option("a")),
+      (3L, Array(0f, 1f), Option.empty[String]), (4L, Array(1f, 2f), Option.empty[String])
+    ).toDF("id", "v", "blk"))
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val joinArm = rows(Similarity.cosineTopK(df, "id", "v", 3, Some("blk")))
+    joinArm.map(r => (r._1, r._3)) shouldBe Set((1L, 2L), (2L, 1L))
+    rows(Similarity.cosineTopKBroadcast(df, "id", "v", 3, Some("blk"))) shouldBe joinArm
+  }
+
+  test("scorePairs arms drop a pair whose id is not in emb") {
+    val spark2 = spark
+    import spark2.implicits._
+    val pairs = rddBacked(Seq[(Option[Long], Option[Long])]((Some(0L), Some(1L)),
+      (Some(0L), Some(999L)), (Some(999L), Some(2L)), (None, Some(2L)), (Some(3L), Some(4L)))
+      .toDF("qid", "pid"))
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val joinArm = rows(Similarity.scorePairsJoin(pairs, emb, "vec_id", "embedding"))
+    joinArm.map(r => (r._1, r._2)) shouldBe Set((0L, 1L), (3L, 4L))
+    rows(Similarity.scorePairsBroadcast(pairs, emb, "vec_id", "embedding")) shouldBe joinArm
   }
 }
