@@ -2,6 +2,7 @@ package graft.lake
 
 import java.util.UUID
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -22,11 +23,12 @@ import scala.jdk.CollectionConverters._
   *   <root>/<table>/_meta/snap-<id>.json                 — manifest: the commit point
   * }}}
   *
-  * A snapshot exists iff its manifest does: the manifest (data directory,
-  * rows, bytes, wall time, per-partition rows and bytes, schema, stats) is
-  * written to a temp file and renamed into `_meta/`, and that rename is the
-  * commit (the single commit point of Delta Lake's log, VLDB 2020). A crash
-  * before it leaves an orphan directory and temp file that no reader lists.
+  * A snapshot exists iff its manifest does: the manifest (snapshot id, table,
+  * data directory, rows, bytes, per-partition rows and bytes, schema, stats,
+  * the writer's `meta` JSON and wall time) is written to a temp file and
+  * renamed into `_meta/`, and that rename is the commit (the single commit
+  * point of Delta Lake's log, VLDB 2020). A crash before it leaves an orphan
+  * directory and temp file that no reader lists.
   *
   * It gives snapshot append, time-travel reads (`asOf`), min/max stats →
   * snapshot pruning, per-partition lineage of every stage, and resumable
@@ -50,8 +52,13 @@ final class Lake(val root: String, spark: SparkSession) {
   /** Append `df` as a new snapshot; returns its id. The write is the only
     * Spark job: rows, bytes and schema come from the part files' parquet
     * footers, and the min/max stats of `statsCols` from an [[Observation]]
-    * on the write. A schema other than the table's committed one is rejected. */
-  def writeSnapshot(df: DataFrame, table: String, statsCols: Seq[String] = Seq.empty): Long = {
+    * on the write. A schema other than the table's committed one is rejected.
+    * `meta` is small driver-side JSON that the manifest carries, so the
+    * rename that commits the rows commits it too; it is evaluated after the
+    * write and read back as `manifest(table, snap).get("meta")` (an empty
+    * object when not given). */
+  def writeSnapshot(df: DataFrame, table: String, statsCols: Seq[String] = Seq.empty,
+                    meta: => JsonNode = JsonNodeFactory.instance.objectNode()): Long = {
     val t0 = System.nanoTime()
     val snaps = snapshotIds(table)
     snaps.lastOption.map(s => schemaOf(manifest(table, s)).catalogString).foreach { committed =>
@@ -94,6 +101,7 @@ final class Lake(val root: String, spark: SparkSession) {
       case (lo: String, hi: String) => stats.putObject(c).put("min", lo).put("max", hi).put("num", false)
       case _ => // all null: no stats, the snapshot is never pruned on `c`
     } }
+    m.set[JsonNode]("meta", meta)
     m.put("wall_s", (System.nanoTime() - t0) / 1e9)
     val tmp = new Path(metaDir(table), s"_tmp-${UUID.randomUUID()}.json")
     val out = fs.create(tmp, false); try out.write(json.writeValueAsBytes(m)) finally out.close()
@@ -144,10 +152,13 @@ final class Lake(val root: String, spark: SparkSession) {
 
   /** Idempotent stage: complete iff it has a committed manifest, and then read
     * back instead of recomputed (kill-and-resume equivalence — O9); else the
-    * body runs once, in the write. The body must be deterministic. */
-  def runStage(jobId: String, stage: String)(body: => DataFrame): DataFrame = {
+    * body runs once, in the write, and `meta` once after it, into the
+    * manifest of the stage's table `<jobId>/<stage>`. Neither runs on a
+    * resume. The body must be deterministic. */
+  def runStage(jobId: String, stage: String,
+               meta: => JsonNode = JsonNodeFactory.instance.objectNode())(body: => DataFrame): DataFrame = {
     val table = s"$jobId/$stage"
-    if (snapshotIds(table).isEmpty) writeSnapshot(body, table)
+    if (snapshotIds(table).isEmpty) writeSnapshot(body, table, meta = meta)
     readTable(table)
   }
 }

@@ -147,12 +147,14 @@ object CocoOps {
     * sequential driver loop) and category dedup-by-name with id remap (O7).
     * File names get the reference's `{i}_` prefix (batch_geojson2coco.py:394).
     * The last part is never counted: its count feeds no offset. Categories
-    * are dimension-sized, so they are merged on the driver: each name keeps
-    * its first (part, id) row, and the merged ids follow that order. The
-    * merged categories are a local Dataset, whose count starts no job, and
-    * each part's annotations are remapped by a `when` chain over its few
-    * category ids, not by a join. An annotation whose category id its
-    * part's categories do not name, or is null, is dropped.
+    * are dimension-sized, so each part's are collected and merged on the
+    * driver: each name keeps its first (part, id) row, and the merged ids
+    * follow that order. The merged categories are a local Dataset: their
+    * `collect()` starts no Spark job, though a `count()` starts two (AQE
+    * plans a partial and a final aggregate). Each part's annotations are
+    * remapped by a `when` chain over its few category ids, not by a join.
+    * An annotation whose category id its part's categories do not name, or
+    * is null, is dropped.
     */
   def concat(parts: Seq[CocoTables]): CocoTables = {
     require(parts.nonEmpty)
@@ -172,9 +174,9 @@ object CocoOps {
 
     // categories: (part, id, name, supercategory) in (part, id) order; the
     // first row of each name gives its merged id and supercategory
-    val allCats = parts.zipWithIndex.map { case (p, i) =>
-      p.categories.toDF().select(lit(i).as("ds"), col("id"), col("name"), col("supercategory"))
-    }.reduce(_ unionByName _).as[(Int, Int, String, String)].collect().sortBy(c => (c._1, c._2))
+    val allCats = parts.zipWithIndex.flatMap { case (p, i) =>
+      p.categories.collect().map(c => (i, c.id, c.name, c.supercategory))
+    }.sortBy(c => (c._1, c._2))
     val newCats = allCats.distinctBy(_._3).zipWithIndex.map { case ((_, _, name, sup), i) =>
       CocoCategory(i, name, sup)
     }

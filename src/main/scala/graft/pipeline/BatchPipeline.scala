@@ -2,41 +2,51 @@ package graft.pipeline
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.io.Coco.CocoTables
 import graft.lake.Lake
 import graft.model._
 import graft.ops.CocoOps
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** Batch orchestration (reference scripts/batch_geojson2coco.py:307-519,
   * SURVEY.md §3.3): the reference loops (raster, vector) pairs through
   * subprocesses with a resume() directory scan and a final concatenation
   * with global id re-indexing — its `--no-workers > 1` path raises
-  * NotImplementedError. Here the work list is data: each pair runs as
-  * three Lake stages (images, annotations, categories), each one write
-  * published by one manifest (a stage with a committed manifest is read
-  * back, not recomputed — kill/resume equivalence); the manifests carry
-  * each stage's per-partition rows and bytes ([[Lake.lineage]]), and the
-  * concat is [[CocoOps.concat]]'s shift-based re-indexing (no count of the
+  * NotImplementedError. Here the work list is data: each pair runs as one
+  * Lake stage, `<raster>_annotations`. Its manifest is the raster's commit
+  * point: besides the annotation table's data directory, rows, bytes,
+  * per-partition rows and bytes ([[Lake.lineage]]), schema and wall time,
+  * its `meta` holds the raster's COCO images and categories rows, so one
+  * rename commits all three tables of a raster or none of them. A raster
+  * with a committed manifest is read back, not recomputed (kill/resume
+  * equivalence); one committed without images and categories in its `meta`
+  * is refused, not recomputed. A fresh run reads back what it committed, as
+  * a resume does: the annotations from the Lake, the images and categories
+  * decoded from the manifest into local Datasets, which no Spark job writes
+  * or scans. The concat is [[CocoOps.concat]]'s shift-based re-indexing (no count of the
   * last part, categories merged on the driver).
   *
-  * Concurrency: the stages of all pairs run at once, on a pool of
-  * min(3 × pairs, defaultParallelism) threads that each call creates from
-  * the calling thread, so every stage job carries the caller's Spark local
-  * properties (job group, description, scheduler pool) and active session.
-  * `run` returns or throws only after every stage has finished; the first
-  * failure in (pair, stage) order is rethrown, the others are attached to
-  * it as suppressed. The stage tables and the concat order are those of a
-  * sequential run. One raster whose features are one partition runs five
-  * Spark jobs: the category list, the three stage writes and the concat's
-  * category collect; features in several partitions add the annotation
-  * ids' range exchange.
+  * Concurrency: the rasters run at once, on a pool of min(pairs,
+  * defaultParallelism) threads that each call creates from the calling
+  * thread, so every stage job carries the caller's Spark local properties
+  * (job group, description, scheduler pool) and active session. `run`
+  * returns or throws only after every raster has finished; the first
+  * failure in raster order is rethrown, the others are attached to it as
+  * suppressed. The tables and the concat order are those of a sequential
+  * run. One raster whose features are one partition runs two Spark jobs:
+  * the category list and the annotation write; features in several
+  * partitions add the annotation ids' range exchange. Its resume runs none.
   */
 object BatchPipeline {
 
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
   /** Run geojson2coco for every (raster, features) pair, resumably; returns
     * the concatenated dataset. `jobId` keys the stage namespace and each
-    * raster id its stage tables, so raster ids must be distinct. */
+    * raster id its stage table, so raster ids must be distinct. */
   def run(lake: Lake, jobId: String,
           pairs: Seq[(RasterMeta, Dataset[Feature])],
           params: GeojsonToCoco.Params): CocoTables = {
@@ -47,23 +57,30 @@ object BatchPipeline {
     val spark = pairs.head._2.sparkSession
     import spark.implicits._
 
-    val stages = pairs.flatMap { case (raster, feats) =>
-      // stages are idempotent: a completed pair is read back, not recomputed;
-      // the first stage that needs the tables computes them, the others wait
+    def commit(raster: RasterMeta, feats: Dataset[Feature]): Callable[CocoTables] = () => {
+      val stage = s"${raster.rasterId}_annotations"
+      // the body and the meta share one geojson2coco run; neither runs on a resume
       lazy val tables = GeojsonToCoco.run(feats, raster, params)
-      def stage(name: String)(body: => DataFrame): Callable[DataFrame] =
-        () => lake.runStage(jobId, s"${raster.rasterId}_$name")(body)
-      Seq(stage("images")(tables.images.toDF()), stage("annotations")(tables.annotations.toDF()),
-        stage("categories")(tables.categories.toDF()))
+      val anns = lake.runStage(jobId, stage, json.valueToTree[JsonNode](Map(
+        "images" -> tables.images.collect(), "categories" -> tables.categories.collect())))(
+        tables.annotations.toDF())
+      val table = s"$jobId/$stage"
+      val dims = lake.manifest(table, lake.snapshotIds(table).last).path("meta")
+      require(dims.has("images") && dims.has("categories"),
+        s"stage $table is committed without its images and categories; run the batch under a new job id")
+      CocoTables(spark.createDataset(json.treeToValue(dims.get("images"), classOf[Array[CocoImage]]).toSeq),
+        anns.as[CocoAnnotation],
+        spark.createDataset(json.treeToValue(dims.get("categories"), classOf[Array[CocoCategory]]).toSeq))
     }
+    val rasters = pairs.map { case (raster, feats) => commit(raster, feats) }
     // submit creates the threads on this thread, so they inherit its local
     // properties; the threads of a shared pool would carry stale ones
-    val threads = math.min(stages.size, spark.sparkContext.defaultParallelism)
+    val threads = math.min(rasters.size, spark.sparkContext.defaultParallelism)
     val pool = Executors.newFixedThreadPool(threads,
       (r: Runnable) => { val t = new Thread(r, s"batch-$jobId"); t.setDaemon(true); t })
-    // wait for every started stage, also when interrupted: a stage still
+    // wait for every started raster, also when interrupted: a stage still
     // writing after run ends would race a resume of the same table
-    val futures = try stages.map(pool.submit(_)) finally {
+    val futures = try rasters.map(pool.submit(_)) finally {
       pool.shutdown()
       var interrupted = false
       while (!pool.isTerminated)
@@ -78,8 +95,6 @@ object BatchPipeline {
       failures.tail.foreach(first.addSuppressed)
       throw first
     }
-    CocoOps.concat(futures.map(_.get()).grouped(3).map { case Seq(imgs, anns, cats) =>
-      CocoTables(imgs.as[CocoImage], anns.as[CocoAnnotation], cats.as[CocoCategory])
-    }.toSeq)
+    CocoOps.concat(futures.map(_.get()))
   }
 }

@@ -128,12 +128,11 @@ object GeojsonToCoco {
         col("segmentation"), col("bbox"), col("area"), lit(0).as("iscrowd"))
       .as[CocoAnnotation]
 
-    // the driver-built dimension tables are one partition each: one part
-    // file per Lake stage instead of one per default-parallelism slice
+    // the dimension tables are local Datasets: their collect starts no job
     Coco.CocoTables(
-      spark.createDataset(images).coalesce(1),
+      spark.createDataset(images),
       anns,
-      spark.createDataset(categories.toSeq).coalesce(1),
+      spark.createDataset(categories.toSeq),
       // reference writes an MIT default when no license is supplied
       // (scripts/geojson2coco.py:222-228)
       extras = Map("license" -> Coco.DefaultLicenseJson))

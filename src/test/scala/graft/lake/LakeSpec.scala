@@ -151,6 +151,45 @@ class LakeSpec extends SparkSpec {
     assert(lake.snapshotIds("j/s") == Seq(0L))
   }
 
+  def metaOf(text: String) = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+
+  test("meta round-trips through the manifest; a snapshot without meta reads back as empty") {
+    val lake = freshLake()
+    val meta = metaOf("""{"images":[{"id":0,"fileName":"a.png"}],"n":12345678901}""")
+    val s0 = lake.writeSnapshot(spark.range(0, 3).toDF("id"), "t", meta = meta)
+    lake.manifest("t", s0).get("meta") shouldBe meta
+    val s1 = lake.writeSnapshot(spark.range(3, 5).toDF("id"), "t")
+    assert(lake.manifest("t", s1).get("meta").isEmpty)
+  }
+
+  test("a stage's meta runs once, after its body, on a fresh stage and never on a resume") {
+    val lake = freshLake()
+    val calls = scala.collection.mutable.Buffer.empty[String]
+    def stage() = lake.runStage("j", "s", { calls += "meta"; metaOf("""{"k":1}""") }) {
+      calls += "body"; spark.range(0, 4).toDF("id")
+    }
+    stage().count() shouldBe 4
+    calls shouldBe Seq("body", "meta")
+    stage().count() shouldBe 4
+    calls shouldBe Seq("body", "meta")
+    lake.manifest("j/s", 0).get("meta") shouldBe metaOf("""{"k":1}""")
+  }
+
+  test("crash before the manifest commit: neither the data nor the meta is visible") {
+    val lake = freshLake()
+    // the run dies between the data write and the rename: the meta throws
+    intercept[IllegalStateException] {
+      lake.runStage("j", "s", throw new IllegalStateException("crash")) { spark.range(0, 7).toDF("id") }
+    }
+    assert(lake.completedStages("j").isEmpty && lake.readTable("j/s").isEmpty)
+    assert(Files.list(Paths.get(s"${lake.root}/j/s/data")).count() == 1) // the orphan
+    var runs = 0
+    val r = lake.runStage("j", "s", metaOf("""{"k":2}""")) { runs += 1; spark.range(0, 10).toDF("id") }
+    assert(runs == 1 && r.count() == 10)
+    lake.snapshotIds("j/s") shouldBe Seq(0L)
+    lake.manifest("j/s", 0).get("meta") shouldBe metaOf("""{"k":2}""")
+  }
+
   test("readTable ignores an uncommitted data directory") {
     val lake = freshLake()
     lake.writeSnapshot(spark.range(0, 3).toDF("id"), "t")

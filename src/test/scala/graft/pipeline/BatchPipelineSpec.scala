@@ -35,14 +35,14 @@ class BatchPipelineSpec extends SparkSpec {
     assert(out.annotations.collect().map(_.id).sorted.toSeq == Seq(0L, 1L))
     assert(out.categories.count() == 1) // "building" deduped by name
 
-    // all 6 stages checkpointed; rerun must read back, not recompute
-    assert(lake.completedStages("job").size == 6)
+    // one stage per raster checkpointed; rerun must read back, not recompute
+    assert(lake.completedStages("job") == Set("rA_annotations", "rB_annotations"))
     val out2 = BatchPipeline.run(lake, "job", pairs, p)
     assert(out2.annotations.collect().map(a => (a.id, a.imageId, a.area)).toSet ==
       out.annotations.collect().map(a => (a.id, a.imageId, a.area)).toSet)
 
     // lineage captured rows for each stage
-    assert(lake.lineage().where(col("jobId") === "job").count() >= 6)
+    assert(lake.lineage().where(col("jobId") === "job").count() >= 2)
   }
 
   def freshLake(): Lake = new Lake(java.nio.file.Files.createTempDirectory("bp").toString, spark)
@@ -58,7 +58,7 @@ class BatchPipelineSpec extends SparkSpec {
   }
 
   test("every job of the concurrent stages carries the caller's job group") {
-    // 4 rasters: 12 stages on a pool of at most 4 threads, reused across stages
+    // 4 rasters: 4 stages on a pool of at most 4 threads
     val pairs = (0 until 4).map { i => val west = 1000.0 + 4000 * i
       (raster(s"r$i", west), features(west)) }
     val lake = freshLake()
@@ -66,25 +66,47 @@ class BatchPipelineSpec extends SparkSpec {
     val small = GeojsonToCoco.Params(tileWidth = 20, tileHeight = 20)
     val (out, inGroup, all) =
       JobCounter.countAll(spark.sparkContext)(BatchPipeline.run(lake, "job", pairs, small))
-    lake.completedStages("job").size shouldBe 12
-    inGroup should be > 12 // at least the 12 stage writes
+    lake.completedStages("job").size shouldBe 4
+    inGroup should be >= 8 // at least the 4 category lists and the 4 annotation writes
     inGroup shouldBe all
     out.annotations.count() shouldBe 16
-    // the driver-built images and categories tables are one part file each
-    lake.lineage().where(!col("stage").endsWith("_annotations")).count() shouldBe 8
+    // the images and categories ride in the manifests: no part file holds them
+    lake.lineage().where(!col("stage").endsWith("_annotations")).count() shouldBe 0
+    out.images.count() shouldBe 64
   }
 
   test("a failed stage is rethrown only after the other stages have committed") {
-    // malformed WKB: the category list reads no geometry, so only the
-    // annotations stage, which parses it, fails
+    // malformed WKB: the category list reads no geometry, so the raster
+    // fails in its annotation write, before its manifest commits anything
     val bad = {
       val spark2 = spark
       import spark2.implicits._
       Seq(Feature(0, Array[Byte](1, 2, 3), 1010, 1900, 1050, 1950, "building")).toDS()
     }
     val lake = freshLake()
-    intercept[org.apache.spark.SparkException](
-      BatchPipeline.run(lake, "job", Seq((raster("r", 1000.0), bad)), p))
-    lake.completedStages("job") shouldBe Set("r_images", "r_categories")
+    intercept[org.apache.spark.SparkException](BatchPipeline.run(lake, "job",
+      Seq((raster("bad", 1000.0), bad), (raster("good", 5000.0), features(5000.0))), p))
+    lake.completedStages("job") shouldBe Set("good_annotations")
+  }
+
+  test("a stage committed without images and categories is refused on resume, naming it") {
+    val lake = freshLake()
+    lake.writeSnapshot(spark.range(0, 1).toDF("id"), "job/rA_annotations")
+    val e = intercept[IllegalArgumentException](
+      BatchPipeline.run(lake, "job", Seq((raster("rA", 1000.0), features(1000.0))), p))
+    e.getMessage should include("job/rA_annotations")
+  }
+
+  test("a raster whose features all lie outside it commits zero annotations with its images and categories") {
+    val lake = freshLake()
+    val pairs = Seq((raster("out", 1000.0), features(9000.0)))
+    def rows(t: graft.io.Coco.CocoTables) =
+      (t.images.collect().toSeq, t.annotations.collect().length, t.categories.collect().toSeq)
+    val fresh = rows(BatchPipeline.run(lake, "job", pairs, p))
+    fresh._1.map(_.fileName) shouldBe Seq("0_tile_0-0.png")
+    fresh._2 shouldBe 0
+    fresh._3.map(_.name) shouldBe Seq("building")
+    lake.manifest("job/out_annotations", 0).get("rows").asLong shouldBe 0
+    rows(BatchPipeline.run(lake, "job", pairs, p)) shouldBe fresh
   }
 }

@@ -193,17 +193,28 @@ class RoundTripSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val sc = spark.sparkContext
+    val lake = freshLake()
     // the features in one partition, as a one-file read gives them
-    val (t, runJobs) = JobCounter.count(sc)(BatchPipeline.run(freshLake(), "job",
-      Seq(raster -> features.coalesce(1)), GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)))
+    val pairs = Seq(raster -> features.coalesce(1))
+    val params = GeojsonToCoco.Params(tileWidth = 40, tileHeight = 40)
+    val (t, runJobs) = JobCounter.count(sc)(BatchPipeline.run(lake, "job", pairs, params))
+    // the images and categories are local Datasets
+    val ((imgs, cats), dimJobs) = JobCounter.count(sc)((t.images.collect(), t.categories.collect()))
+    (imgs.length, cats.length) shouldBe ((6, 2))
+    dimJobs shouldBe 0
     val tiles = Tiling.tilesFor(raster, 40, 40).map(m => m.copy(tileName = s"0_${m.tileName}")).toDS()
     val (out, c2gJobs) = JobCounter.count(sc)(CocoToGeojson.run(t, tiles, CocoToGeojson.Params()).collect())
     out.map(_.getString(1)).toSet shouldBe Set("building", "road")
-    // run: category list, three stage writes, concat's category collect;
-    // coco2geojson: the images collect for its driver-side affine map, then
-    // 3 in the per-class union's query
-    runJobs should be <= 5
-    c2gJobs should be <= 4
+    // run: the category list and the annotation write; coco2geojson: the
+    // per-class union's query, its shuffle stage and its result (the tiles,
+    // images and categories, all local, are collected without a job)
+    runJobs should be <= 2
+    c2gJobs should be <= 2
+    // a resume reads the annotations back and decodes the rest from the manifest
+    val (back, resumeJobs) = JobCounter.count(sc)(BatchPipeline.run(lake, "job", pairs, params))
+    resumeJobs shouldBe 0
+    back.images.collect().toSeq shouldBe imgs.toSeq
+    back.categories.collect().toSeq shouldBe cats.toSeq
     // concat remaps category ids without a join
     assert(aqe.collect(t.annotations.queryExecution.executedPlan) {
       case j: BaseJoinExec => j }.isEmpty, t.annotations.queryExecution.executedPlan)
