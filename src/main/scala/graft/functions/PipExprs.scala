@@ -9,17 +9,37 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
-/** probe kernel: reads the broadcast [[PipIndex]] once per copy, i.e. per task */
+/** Probe kernel: reads the broadcast [[PipIndex]] once per copy, i.e. per task.
+  * Each call returns a fresh `UnsafeArrayData` of exactly the covering ids, in
+  * layer order: the index writes them, and the element count, into the value's
+  * own backing words (the header is the count and one null word per 64
+  * elements). No buffer is reused across rows, so a consumer may keep the
+  * value (`max`, `first`, `collect_list`). Every point that no polygon covers
+  * gets the one shared, immutable [[PipProbeKernel.NoHits]]. */
 final class PipProbeKernel(bc: Broadcast[PipIndex]) extends Serializable {
   @transient private lazy val index = bc.value
-  def apply(x: Double, y: Double): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(index.covering(x, y))
+  def apply(x: Double, y: Double): ArrayData = {
+    val words = index.covering(x, y, PipProbeKernel.headerWords)
+    if (words == null) return PipProbeKernel.NoHits
+    val a = new UnsafeArrayData
+    a.pointTo(words, Platform.LONG_ARRAY_OFFSET, 8 * words.length)
+    a
+  }
+}
+
+object PipProbeKernel {
+  /** the probe of a point that no polygon covers */
+  val NoHits: ArrayData = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+  /** words of an `UnsafeArrayData` header over `m` elements */
+  private val headerWords: Int => Int = m => UnsafeArrayData.calculateHeaderPortionInBytes(m) / 8
 }
 
 /** The flagship PIP probe as a native expression: generated code passes
   * PRIMITIVE doubles (a ScalaUDF boxed both per scanned row) and gets the
-  * covering ids of [[PipIndex.covering]] as unboxed array data. */
+  * covering ids of [[PipIndex.covering]] as unboxed array data, a fresh value
+  * per covered point and one shared empty value otherwise ([[PipProbeKernel]]). */
 case class PipProbe(left: Expression, right: Expression, bc: Broadcast[PipIndex])
   extends BinaryExpression {
 

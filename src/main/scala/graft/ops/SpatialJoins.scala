@@ -45,7 +45,8 @@ object SpatialJoins {
   /** Point-in-polygon with partitioned refine. `polys` carries
     * (`poly_id`:long, `wkb`:binary, `xmin`,`ymin`,`xmax`,`ymax`). Output:
     * point columns + `poly_id`. The equi-join shuffles both sides by cell; refine packs
-    * each polygon once per task into a grid-less [[PipIndex]] (too few probes for a grid). */
+    * each polygon once per task into a grid-less [[PipIndex]] (too few probes for a grid)
+    * and keeps a pair when [[PipIndex.covers]] holds, which allocates nothing per pair. */
   def pointInPolygon(points: DataFrame, polys: DataFrame, ci: CellIndex, level: Int): DataFrame = {
     val p = points.withColumn("_cell", ci.encodeCol(col("x"), col("y"), level))
     val b = polys
@@ -59,7 +60,7 @@ object SpatialJoins {
       it.filter { r =>
         val id = r.getLong(idI)
         packed.computeIfAbsent(id, _ => PipIndex.fromWkb(Array((id, r.getAs[Array[Byte]](wI))), cells = false))
-          .covering(r.getDouble(xI), r.getDouble(yI)).nonEmpty
+          .covers(r.getDouble(xI), r.getDouble(yI))
       }
     }(org.apache.spark.sql.Encoders.row(joined.schema)).drop("wkb")
   }
@@ -67,8 +68,12 @@ object SpatialJoins {
   /** Point-in-polygon with the polygon side built into one [[PipIndex]] on
     * the driver and broadcast; the native `PipProbe` reads it once per task,
     * so the plan stays in whole-stage codegen and the point side is never
-    * shuffled. For dim-table layers (tiles, zones). Output: point columns +
-    * `poly_id`. */
+    * shuffled. A probe looks up the point's grid cell, then tests only the
+    * y-slab of its grid row in each polygon whose boundary may cross the
+    * cell, and returns the covering ids in a fresh array value (no copy;
+    * one shared empty value when none covers it), which `explode` turns
+    * into rows. For dim-table layers (tiles, zones). Output: point columns
+    * + `poly_id`. */
   def pointInPolygonBroadcastFast(points: DataFrame, polys: DataFrame): DataFrame = {
     val rows = polys.select("poly_id", "wkb").collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
     val bc = points.sparkSession.sparkContext.broadcast(PipIndex.fromWkb(rows))

@@ -82,18 +82,23 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
     }.toDF("poly_id", "wkb", "xmin", "ymin", "xmax", "ymax")
   }
 
-  /** (partitioned, broadcast) hit pairs */
+  /** (partitioned, broadcast) hit pairs over RDD-backed inputs, so the probe
+    * runs as generated code; both arms run again on the interpreted path,
+    * which must give the same pairs */
   private def bothArms(pts: Seq[(Long, Double, Double)],
                        polys: Seq[(Long, Geometry)]): (Set[(Long, Long)], Set[(Long, Long)]) = {
     val s = spark
     import s.implicits._
-    val (p, l) = (pts.toDF("pid", "x", "y"), layer(polys))
+    val (p, l) = (rddBacked(pts.toDF("pid", "x", "y")), rddBacked(layer(polys)))
     def pairs(df: DataFrame): Set[(Long, Long)] = {
       val rows = df.select("pid", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(rows.length == rows.toSet.size, "duplicate pair emission")
       rows.toSet
     }
-    (pairs(SpatialJoins.pointInPolygon(p, l, ci, 15)), pairs(SpatialJoins.pointInPolygonBroadcastFast(p, l)))
+    def arms = (pairs(SpatialJoins.pointInPolygon(p, l, ci, 15)), pairs(SpatialJoins.pointInPolygonBroadcastFast(p, l)))
+    val generated = arms
+    assert(withInterpretedEval(arms) == generated, "the interpreted path differs from generated code")
+    generated
   }
 
   /** vertices, edge midpoints and thirds of every ring */
@@ -175,6 +180,101 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
     val (part, bcast) = bothArms(pts.toSeq, polys.toSeq)
     assert(part == want)
     assert(bcast == want)
+  }
+
+  /** a polygon with `n` vertices on a wobbly ellipse around (cx, cy), radii r and 0.6 r */
+  private def wobbly(cx: Double, cy: Double, r: Double, n: Int, ccw: Boolean): Array[Coordinate] = {
+    val cs = Array.tabulate(n) { i =>
+      val a = 2 * math.Pi * i / n * (if (ccw) 1 else -1)
+      val w = 1 + 0.08 * math.sin(7 * a) + 0.03 * math.cos(31 * a)
+      new Coordinate(cx + r * w * math.cos(a), cy + 0.6 * r * w * math.sin(a))
+    }
+    cs :+ cs.head.copy()
+  }
+
+  test("both PIP arms equal JTS covers on grid row boundaries and horizontal edges lying on them") {
+    // staircases of one width between two corner boxes: moving a step or the bottom
+    // edge keeps the grid of the broadcast index, whose row boundaries it probes
+    val (w, h) = (97.25, 61.5)
+    val corner = Seq(0L -> JtsGeo.box(1000.3, 1000.1, 1000.3 + w, 1000.1 + h),
+      1L -> JtsGeo.box(1700.9, 1400.7 - h, 1700.9 + w, 1400.7))
+    val origin = (0 until 12).map(i => (1110.5 + (i % 4) * 140.25, 1090.2 + (i / 4) * 90.3))
+    /** staircase i: steps at absolute heights `levels(i)`, bottom edge from (x0, b0) to (x0 + w, b1) */
+    def layer(levels: Int => Seq[Double], bottom: Int => (Double, Double)): Seq[(Long, Geometry)] =
+      corner ++ origin.indices.map { i =>
+        val (x0, y0) = origin(i)
+        val (b0, b1) = bottom(i)
+        val steps = levels(i).zipWithIndex.flatMap { case (l, j) =>
+          Seq(new Coordinate(x0 + w - j * w / 8, l), new Coordinate(x0 + w - (j + 1) * w / 8, l))
+        }
+        val ring = new Coordinate(x0, b0) +: new Coordinate(x0 + w, b1) +: steps :+
+          new Coordinate(x0, y0 + h) :+ new Coordinate(x0, b0)
+        (i + 2L) -> (JtsGeo.factory.createPolygon(ring.toArray): Geometry)
+      }
+    def grid(polys: Seq[(Long, Geometry)]) = {
+      val g = PipIndex.fromWkb(polys.map { case (id, p) => (id, JtsGeo.toWkb(p)) }.toArray).grid
+      (g, (g.x0, g.y0, g.x1, g.y1, g.nx, g.ny))
+    }
+    val (g, shape) = grid(layer(i => (1 to 5).map(origin(i)._2 + 10.0 * _ + i % 3), i => (origin(i)._2, origin(i)._2)))
+    assert(g.ny >= 8, s"only ${g.ny} grid rows")
+    // row boundaries y0 + k·ch and the doubles next to them
+    val bounds = (0 to g.ny).map(k => g.y0 + k * g.ch)
+    def near(y: Double) = Seq(math.nextDown(math.nextDown(y)), math.nextDown(y), y, math.nextUp(y),
+      math.nextUp(math.nextUp(y)))
+    // each bottom edge rises by two ulps from a row boundary: it is almost horizontal
+    val bottoms = origin.map { case (_, y0) =>
+      bounds.find(b => b > y0 - 20 && b < y0 + 5).map(b => (b, math.nextUp(math.nextUp(b)))).get
+    }
+    val polys = layer(i => bounds.filter(b => b > origin(i)._2 + 5 && b < origin(i)._2 + 56).take(5)
+      .zipWithIndex.map { case (b, j) => near(b)(j % 5) }, bottoms)
+    assert(grid(polys)._2 == shape)
+    assert(polys.forall(_._2.isValid))
+    val xs = (0 until 200).map(i => 1000.3 + i * 3.71)
+    val onBounds = for (b <- bounds; y <- near(b); x <- xs) yield (x, y)
+    // exactly on each bottom edge, halfway along it
+    val onBottoms = origin.indices.map(i => (origin(i)._1 + w / 2, math.nextUp(bottoms(i)._1)))
+    val pts = (onBounds ++ onBottoms ++ polys.flatMap { case (_, p) => ringPoints(p) })
+      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val want = jtsCovers(pts, polys)
+    val (part, bcast) = bothArms(pts, polys)
+    assert(part == want)
+    assert(bcast == want)
+    assert(want.map(_._2) == polys.map(_._1).toSet)
+    assert(onBottoms.forall { case (x, y) => want.exists(h => pts(h._1.toInt) == ((h._1, x, y))) })
+  }
+
+  test("both PIP arms equal JTS covers for a point under more than 64 overlapping polygons") {
+    val polys: Seq[(Long, Geometry)] = (0 until 150).map { i =>
+      i.toLong -> JtsGeo.box(1000 + (i % 10) * 0.5, 1000 + (i / 10) * 0.25, 1100 + (i % 7), 1060 + (i % 5))
+    } :+ (150L -> JtsGeo.box(3000, 3000, 3010, 3010)) // another region: a sparser grid
+    val pts = (for (x <- 995 to 1110 by 3; y <- 995 to 1070 by 3) yield (x.toDouble + 0.5, y.toDouble + 0.5)) ++
+      polys.flatMap { case (_, p) => ringPoints(p) }.take(3000)
+    val indexed = pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val want = jtsCovers(indexed, polys)
+    assert(want.groupBy(_._1).values.map(_.size).max > 128, "no point under more than 128 polygons")
+    val (part, bcast) = bothArms(indexed, polys)
+    assert(part == want)
+    assert(bcast == want)
+  }
+
+  test("both PIP arms equal JTS covers on polygons of 10^3 and 10^4 vertices with holes") {
+    val polys: Seq[(Long, Geometry)] = Seq((1L, 1000, 5000.0), (2L, 10000, 9000.0)).map { case (id, n, cx) =>
+      val shell = JtsGeo.factory.createLinearRing(wobbly(cx, 5000, 1500, n, ccw = true))
+      val holes = Seq((cx - 500, n / 4), (cx + 600, n / 10)).map { case (hx, hn) =>
+        JtsGeo.factory.createLinearRing(wobbly(hx, 5000, 300, hn, ccw = false))
+      }
+      id -> (JtsGeo.factory.createPolygon(shell, holes.toArray): Geometry)
+    } :+ (3L -> JtsGeo.box(6000, 4000, 6500, 4100)) // overlaps the first
+    assert(polys.take(2).forall(_._2.isValid))
+    val rnd = new scala.util.Random(17)
+    val inBox = Seq.fill(20000)((3300 + 7400 * rnd.nextDouble(), 3900 + 2200 * rnd.nextDouble()))
+    val rings = polys.flatMap { case (_, p) => ringPoints(p) }
+    val pts = (inBox ++ rings.grouped(3).map(_.head)).zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val want = jtsCovers(pts, polys)
+    val (part, bcast) = bothArms(pts, polys)
+    assert(part == want)
+    assert(bcast == want)
+    assert(want.map(_._2) == Set(1L, 2L, 3L))
   }
 
   test("a non-areal geometry in the polygon layer raises IllegalArgumentException naming its poly_id") {
