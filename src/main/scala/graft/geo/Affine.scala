@@ -1,8 +1,5 @@
 package graft.geo
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** 6-coefficient affine georeferencing transform, rasterio/GDAL convention:
   *
   * {{{ x = c + a*col + b*row ;  y = f + d*col + e*row }}}
@@ -14,9 +11,6 @@ import org.apache.spark.sql.functions._
   *   - world→pixel applies the **inverse affine then floor** (`index(x, y)`).
   * Hence the round-trip law: world vertex → floor to int pixel → back-convert
   * lands on that pixel's centre. Property-tested in AffineSpec.
-  *
-  * All forms are pure arithmetic — Column versions stay inside whole-stage
-  * codegen (no UDF).
   */
 final case class Affine(a: Double, b: Double, c: Double, d: Double, e: Double, f: Double) {
 
@@ -29,29 +23,9 @@ final case class Affine(a: Double, b: Double, c: Double, d: Double, e: Double, f
 
   /** Inverse + floor — reference `geotiff.index(x, y)` → (row, col). */
   def worldToPixel(x: Double, y: Double): (Long, Long) = {
-    val (fc, fr) = worldToFrac(x, y)
-    (math.floor(fr).toLong, math.floor(fc).toLong)
-  }
-
-  /** Inverse without floor → fractional (col, row). */
-  def worldToFrac(x: Double, y: Double): (Double, Double) = {
     val dx = x - c; val dy = y - f
-    ((e * dx - b * dy) / det, (a * dy - d * dx) / det)
+    (math.floor((a * dy - d * dx) / det).toLong, math.floor((e * dx - b * dy) / det).toLong)
   }
-
-  // ---------- Column forms ----------
-
-  def pixelToWorldXCol(col: Column, row: Column): Column =
-    lit(c) + lit(a) * (col + lit(0.5)) + lit(b) * (row + lit(0.5))
-
-  def pixelToWorldYCol(col: Column, row: Column): Column =
-    lit(f) + lit(d) * (col + lit(0.5)) + lit(e) * (row + lit(0.5))
-
-  def worldToColCol(x: Column, y: Column): Column =
-    floor((lit(e) * (x - lit(c)) - lit(b) * (y - lit(f))) / lit(det)).cast("long")
-
-  def worldToRowCol(x: Column, y: Column): Column =
-    floor((lit(a) * (y - lit(f)) - lit(d) * (x - lit(c))) / lit(det)).cast("long")
 }
 
 object Affine {

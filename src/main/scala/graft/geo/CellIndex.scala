@@ -1,7 +1,10 @@
 package graft.geo
 
+import graft.functions.CellRange
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Hierarchical quadkey cell index (H3/S2-style, from scratch — no external
   * geo-index jar exists in this sandbox).
@@ -18,12 +21,12 @@ import org.apache.spark.sql.functions._
   * analog of the reference's fixed tile grid + `tile_{col}-{row}` naming
   * (reference: tiles.py:52-54,122-124) lifted to a resolution hierarchy.
   *
-  * Everything exists in three synchronized forms:
-  *   - pure-Scala (`encode`, `cellsCovering`, `ring`) for kernels and tests;
-  *   - Spark `Column` builders (`colOf`/`encodeCol`/…) that compile to
-  *     codegen-friendly built-in expressions (shiftleft/and/or — no UDF);
+  * A cell exists in three synchronized forms, cross-checked by a spec:
+  *   - pure Scala (`encode`) for kernels and tests;
+  *   - Spark `Column` builders (`encodeCol`/…): built-in shiftleft/and/or;
   *   - ANSI-SQL string emitters (`*Sql`) for the DuckDB correctness oracle.
-  * A spec cross-checks all three on random inputs.
+  * A cell rectangle (a cover, a disk) has one spelling, [[CellIndex.cellRange]],
+  * which the native column form [[CellIndex.cellRangeCol]] calls on both eval paths.
   */
 final case class CellIndex(originX: Double, originY: Double, size: Double) {
 
@@ -45,34 +48,25 @@ final case class CellIndex(originX: Double, originY: Double, size: Double) {
   def encode(x: Double, y: Double, level: Int): Long =
     pack(level, colOf(x, level), rowOf(y, level))
 
-  /** All cells at `level` whose box intersects the closed envelope. */
-  def cellsCovering(xmin: Double, ymin: Double, xmax: Double, ymax: Double, level: Int): Seq[Long] = {
-    val (c0, c1) = (colOf(xmin, level), colOf(xmax, level))
-    val (r0, r1) = (rowOf(ymin, level), rowOf(ymax, level))
-    for (c <- c0 to c1; r <- r0 to r1) yield pack(level, c, r)
-  }
+  /** All cells at `level` whose box intersects the closed envelope, in [[CellIndex.cellRange]] order. */
+  def cellsCovering(xmin: Double, ymin: Double, xmax: Double, ymax: Double, level: Int): Seq[Long] =
+    cellRange(level, colOf(xmin, level), colOf(xmax, level), rowOf(ymin, level), rowOf(ymax, level)).toSeq
 
   /** Cell ids at Chebyshev distance exactly `k` (k=0 → the cell itself),
     * clamped at world borders. Generalizes the reference's ±1 tile
     * neighbourhood (tiles.py:241-249) to arbitrary ring radius for kNN. */
   def ring(cell: Long, k: Int): Seq[Long] = {
-    val lvl = levelOf(cell); val n = 1L << lvl
     val (c, r) = (colDecode(cell), rowDecode(cell))
-    if (k == 0) Seq(cell)
-    else {
-      val out = Seq.newBuilder[Long]
-      for (dc <- -k to k; dr <- -k to k) {
-        if (math.max(math.abs(dc), math.abs(dr)) == k) {
-          val (nc, nr) = (c + dc, r + dr)
-          if (nc >= 0 && nc < n && nr >= 0 && nr < n) out += pack(lvl, nc, nr)
-        }
-      }
-      out.result()
-    }
+    disk(cell, k).filter(d => math.max(math.abs(colDecode(d) - c), math.abs(rowDecode(d) - r)) == k)
   }
 
-  /** Cells at Chebyshev distance ≤ k (the closed disk). */
-  def disk(cell: Long, k: Int): Seq[Long] = (0 to k).flatMap(ring(cell, _))
+  /** Cells at Chebyshev distance ≤ k (the closed disk), clamped at world
+    * borders: the square that kNN's ring join explodes. */
+  def disk(cell: Long, k: Int): Seq[Long] = {
+    val lvl = levelOf(cell); val last = (1L << lvl) - 1
+    val (c, r) = (colDecode(cell), rowDecode(cell))
+    cellRange(lvl, math.max(c - k, 0L), math.min(c + k, last), math.max(r - k, 0L), math.min(r + k, last)).toSeq
+  }
 
   private def clamp(v: Long, level: Int): Long =
     math.min(math.max(v, 0L), (1L << level) - 1L)
@@ -88,13 +82,10 @@ final case class CellIndex(originX: Double, originY: Double, size: Double) {
   def encodeCol(x: Column, y: Column, level: Int): Column =
     packCol(level, colOfCol(x, level), rowOfCol(y, level))
 
-  /** Array column of covering cell ids for an envelope (explode downstream). */
-  def cellsCoveringCol(xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: Int): Column = {
-    val (c0, c1) = (colOfCol(xmin, level), colOfCol(xmax, level))
-    val (r0, r1) = (rowOfCol(ymin, level), rowOfCol(ymax, level))
-    flatten(transform(sequence(c0, c1), c =>
-      transform(sequence(r0, r1), r => packCol(level, c, r))))
-  }
+  /** Array column of covering cell ids for an envelope (explode downstream):
+    * [[cellsCovering]] as a native expression. */
+  def cellsCoveringCol(xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: Int): Column =
+    cellRangeCol(level, colOfCol(xmin, level), colOfCol(xmax, level), rowOfCol(ymin, level), rowOfCol(ymax, level))
 
   private def clampCol(v: Column, level: Int): Column =
     greatest(lit(0L), least(v, lit((1L << level) - 1L)))
@@ -152,6 +143,23 @@ object CellIndex {
   def rowDecode(cell: Long): Long = gather((cell & MORTON_MASK) >> 1)
   private val MORTON_MASK = (1L << 58) - 1L
 
+  /** Packed ids at `level` of the cells (c, r) with c0 ≤ c ≤ c1 and
+    * r0 ≤ r ≤ r1, c outer and r inner: the one enumeration of a cell
+    * rectangle, which covers, disks and the `CellRange` expression call.
+    * An inverted range (c0 > c1 or r0 > r1) gives no cells. A rectangle of
+    * more than `MAX_ROUNDED_ARRAY_LENGTH` cells, the limit of a Spark
+    * array, is refused before anything is allocated. */
+  def cellRange(level: Int, c0: Long, c1: Long, r0: Long, r1: Long): Array[Long] = {
+    if (c0 > c1 || r0 > r1) return Array.emptyLongArray
+    val (nc, nr, limit) = (c1 - c0 + 1, r1 - r0 + 1, ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH) // < 0 on overflow
+    if (nc <= 0 || nr <= 0 || nc > limit / nr) throw new IllegalArgumentException(
+      s"a cell range of ${(BigInt(c1) - c0 + 1) * (BigInt(r1) - r0 + 1)} cells exceeds the array limit of $limit")
+    val out = new Array[Long]((nc * nr).toInt)
+    var i = 0
+    while (i < out.length) { out(i) = pack(level, c0 + i / nr, r0 + i % nr); i += 1 }
+    out
+  }
+
   def parent(cell: Long): Long = {
     val lvl = levelOf(cell)
     require(lvl > 0, s"level-0 cell has no parent: $cell")
@@ -159,9 +167,8 @@ object CellIndex {
   }
 
   def children(cell: Long): Seq[Long] = {
-    val lvl = levelOf(cell)
     val (c, r) = (colDecode(cell) << 1, rowDecode(cell) << 1)
-    for (dc <- 0 to 1; dr <- 0 to 1) yield pack(lvl + 1, c + dc, r + dr)
+    cellRange(levelOf(cell) + 1, c, c + 1, r, r + 1).toSeq
   }
 
   // ---------- Spark Column codec ----------
@@ -179,6 +186,10 @@ object CellIndex {
     lit(level.toLong << 58)
       .bitwiseOR(spreadCol(col))
       .bitwiseOR(shiftleft(spreadCol(row), 1))
+
+  /** [[cellRange]] of four long columns, as the native [[CellRange]] expression */
+  def cellRangeCol(level: Int, c0: Column, c1: Column, r0: Column, r1: Column): Column = Bridge.column(
+    CellRange(Bridge.expression(c0), Bridge.expression(c1), Bridge.expression(r0), Bridge.expression(r1), level))
 
   // ---------- ANSI-SQL emitters (for the DuckDB oracle) ----------
 

@@ -11,7 +11,8 @@ import org.apache.spark.storage.StorageLevel
   * (reference tiles.py:180-256, which is O(tiles²); SURVEY.md J8).
   *
   * Round r examines the Chebyshev disk of radius r around each query's
-  * cell (an equi-join on cell id — no cross join ever materializes).
+  * cell (an equi-join on cell id — no cross join ever materializes): the
+  * [[CellIndex.cellRangeCol]] square, clamped at the world border, exploded.
   * A query is settled once its k-th candidate distance is strictly
   * below `r · cellSize`: every unexamined point lies ≥ that far away,
   * so it cannot enter the top-k even on ties. Unsettled queries carry
@@ -65,10 +66,6 @@ object Knn {
     var cs = ci.cellSize(lvl)
     var n = 1L << lvl
 
-    def ptsCells(l: Int): DataFrame = pts0
-      .withColumn("pcell", CellIndex.packCol(l,
-        ci.colOfCol(col("px"), l), ci.rowOfCol(col("py"), l)))
-
     // Logical-plan barrier: re-root a (persisted, materialized) frame on
     // its own RDD. Without it every round's `remaining` nests the previous
     // round's join+explode plan — the TREE doubles per round even though
@@ -120,12 +117,10 @@ object Knn {
       val base =
         if (worldCovered) remaining.join(pts0)
         else remaining
-          .withColumn("_cell", explode(flatten(transform(
-            sequence(greatest(col("qc") - r, lit(0L)), least(col("qc") + r, lit(n - 1))),
-            c => transform(
-              sequence(greatest(col("qr") - r, lit(0L)), least(col("qr") + r, lit(n - 1))),
-              rr => CellIndex.packCol(lvl, c, rr))))))
-          .join(ptsCells(lvl), col("_cell") === col("pcell"))
+          .withColumn("_cell", explode(CellIndex.cellRangeCol(lvl,
+            greatest(col("qc") - r, lit(0L)), least(col("qc") + r, lit(n - 1)),
+            greatest(col("qr") - r, lit(0L)), least(col("qr") + r, lit(n - 1)))))
+          .join(pts0.withColumn("pcell", ci.encodeCol(col("px"), col("py"), lvl)), col("_cell") === col("pcell"))
       val cand = base
         .where(if (excludeSelf) col("qid") =!= col("pid") else lit(true))
         .withColumn("dist2",

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.geo.CellIndex
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cell-grid spatial joins (SURVEY.md §2.3 J1/J7, §4.1-2).
@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * The point side carries exactly one cell and the polygon side is exploded
   * over its covering cells, so each qualifying pair appears exactly once —
-  * no post-join dedup (and no extra shuffle for it).
+  * no post-join dedup (and no extra shuffle for it). Every cover, the fine
+  * one of [[pointInBoxAdaptive]] too, is the native [[CellIndex.cellRangeCol]];
+  * an inverted envelope covers nothing.
   *
   * Refine paths: pure arithmetic for boxes (whole-stage codegen, zero JTS),
   * and the exact [[PipIndex]] test for polygons in the two arms the north_star
@@ -23,6 +25,14 @@ import org.apache.spark.sql.functions._
   * broadcast (`pointInPolygonBroadcastFast`, one driver-built index).
   */
 object SpatialJoins {
+
+  /** one row per cell of the cover of the (`xmin`,`ymin`,`xmax`,`ymax`) envelope */
+  private def boxCells(ci: CellIndex, level: Int): Column =
+    explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level))
+
+  /** the arithmetic refine of the box joins: min ≤ p < max on both axes */
+  private def inBox: Column =
+    col("xmin") <= col("x") && col("x") < col("xmax") && col("ymin") <= col("y") && col("y") < col("ymax")
 
   /** Point-in-box join, arithmetic refine (half-open: min ≤ p < max).
     * `points` must have (`x`,`y`) columns; `boxes` (`xmin`,`ymin`,`xmax`,`ymax`).
@@ -33,13 +43,9 @@ object SpatialJoins {
   def pointInBox(points: DataFrame, boxes: DataFrame, ci: CellIndex, level: Int,
                  broadcastBoxes: Boolean = false): DataFrame = {
     val p = points.withColumn("_cell", ci.encodeCol(col("x"), col("y"), level))
-    val b0 = boxes.withColumn("_cell",
-      explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level)))
+    val b0 = boxes.withColumn("_cell", boxCells(ci, level))
     val b = if (broadcastBoxes) broadcast(b0) else b0
-    p.join(b, "_cell")
-      .where(col("xmin") <= col("x") && col("x") < col("xmax") &&
-             col("ymin") <= col("y") && col("y") < col("ymax"))
-      .drop("_cell")
+    p.join(b, "_cell").where(inBox).drop("_cell")
   }
 
   /** Point-in-polygon with partitioned refine. `polys` carries
@@ -49,10 +55,7 @@ object SpatialJoins {
     * and keeps a pair when [[PipIndex.covers]] holds, which allocates nothing per pair. */
   def pointInPolygon(points: DataFrame, polys: DataFrame, ci: CellIndex, level: Int): DataFrame = {
     val p = points.withColumn("_cell", ci.encodeCol(col("x"), col("y"), level))
-    val b = polys
-      .withColumn("_cell",
-        explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level)))
-      .select(col("_cell"), col("poly_id"), col("wkb"))
+    val b = polys.select(boxCells(ci, level).as("_cell"), col("poly_id"), col("wkb"))
     val joined = p.join(b, "_cell").drop("_cell")
     val Seq(xI, yI, idI, wI) = Seq("x", "y", "poly_id", "wkb").map(joined.schema.fieldIndex)
     joined.mapPartitions { it =>
@@ -97,17 +100,13 @@ object SpatialJoins {
         when(col("_hot").isNotNull,
           pmod(hash(col("x"), col("y")), lit(saltFactor))).otherwise(lit(0)))
       .drop("_hot")
-    val b0 = boxes.withColumn("_cell",
-      explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level)))
-    val b = b0.join(broadcast(hot), Seq("_cell"), "left")
+    val b = boxes.withColumn("_cell", boxCells(ci, level))
+      .join(broadcast(hot), Seq("_cell"), "left")
       .withColumn("_salt", explode(
         when(col("_hot").isNotNull, sequence(lit(0), lit(saltFactor - 1)))
           .otherwise(array(lit(0)))))
       .drop("_hot")
-    p.join(b, Seq("_cell", "_salt"))
-      .where(col("xmin") <= col("x") && col("x") < col("xmax") &&
-             col("ymin") <= col("y") && col("y") < col("ymax"))
-      .drop("_cell", "_salt")
+    p.join(b, Seq("_cell", "_salt")).where(inBox).drop("_cell", "_salt")
   }
 
   /** Adaptive cell splitting (north_rule's second skew tool, complementing
@@ -127,34 +126,27 @@ object SpatialJoins {
     require(fineLevel > level, "fineLevel must subdivide level")
     val k = 1L << (fineLevel - level)
     val p0 = points.withColumn("_c0", ci.encodeCol(col("x"), col("y"), level))
-    val hot = p0.groupBy("_c0").count().where(col("count") > hotThreshold)
-      .select(col("_c0"), lit(true).as("_hot"))
+    import points.sparkSession.implicits._
+    // the hot base cells with their column and row, which bound the fine cover
+    val hot = p0.groupBy("_c0").count().where(col("count") > hotThreshold).select("_c0").as[Long]
+      .map(c => (c, CellIndex.colDecode(c), CellIndex.rowDecode(c))).toDF("_c0", "_bc", "_br")
     val p = p0.join(broadcast(hot), Seq("_c0"), "left")
-      .withColumn("_cell", when(col("_hot").isNotNull,
+      .withColumn("_cell", when(col("_bc").isNotNull,
         ci.encodeCol(col("x"), col("y"), fineLevel)).otherwise(col("_c0")))
-      .drop("_c0", "_hot")
-    val b0 = boxes
-      .withColumn("_bc", explode(sequence(
-        ci.colOfCol(col("xmin"), level), ci.colOfCol(col("xmax"), level))))
-      .withColumn("_br", explode(sequence(
-        ci.rowOfCol(col("ymin"), level), ci.rowOfCol(col("ymax"), level))))
-      .withColumn("_c0", CellIndex.packCol(level, col("_bc"), col("_br")))
-    // fine columns/rows of the box cover clamped INSIDE this base cell —
-    // spilling into a neighbour's subcells would double-emit pairs there
-    val fc0 = greatest(ci.colOfCol(col("xmin"), fineLevel), col("_bc") * k)
-    val fc1 = least(ci.colOfCol(col("xmax"), fineLevel), (col("_bc") + 1) * k - 1)
-    val fr0 = greatest(ci.rowOfCol(col("ymin"), fineLevel), col("_br") * k)
-    val fr1 = least(ci.rowOfCol(col("ymax"), fineLevel), (col("_br") + 1) * k - 1)
-    val b = b0.join(broadcast(hot), Seq("_c0"), "left")
-      .withColumn("_cell", explode(when(col("_hot").isNotNull,
-          flatten(transform(sequence(fc0, fc1), c =>
-            transform(sequence(fr0, fr1), r => CellIndex.packCol(fineLevel, c, r)))))
+      .drop("_c0", "_bc", "_br")
+    // a hot cell's fine cells that meet the box, clamped INSIDE that cell —
+    // spilling into a neighbour's fine cells would double-emit pairs there
+    val b = boxes
+      .withColumn("_c0", boxCells(ci, level))
+      .join(broadcast(hot), Seq("_c0"), "left")
+      .withColumn("_cell", explode(when(col("_bc").isNotNull, CellIndex.cellRangeCol(fineLevel,
+          greatest(ci.colOfCol(col("xmin"), fineLevel), col("_bc") * k),
+          least(ci.colOfCol(col("xmax"), fineLevel), (col("_bc") + 1) * k - 1),
+          greatest(ci.rowOfCol(col("ymin"), fineLevel), col("_br") * k),
+          least(ci.rowOfCol(col("ymax"), fineLevel), (col("_br") + 1) * k - 1)))
         .otherwise(array(col("_c0")))))
-      .drop("_c0", "_bc", "_br", "_hot")
-    p.join(b, Seq("_cell"))
-      .where(col("xmin") <= col("x") && col("x") < col("xmax") &&
-             col("ymin") <= col("y") && col("y") < col("ymax"))
-      .drop("_cell")
+      .drop("_c0", "_bc", "_br")
+    p.join(b, Seq("_cell")).where(inBox).drop("_cell")
   }
 
   /** Envelope-intersects range join (reference J7, batch_geojson2coco.py:118)

@@ -3,9 +3,8 @@ package graft.queries
 import graft.geo.{Affine, CellIndex, GeomCols, JtsGeo}
 import graft.io.WebPages
 import graft.ops.{Knn, SpatialJoins}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Geospatial operator surface (SURVEY.md §2 G/J/P families) exercised over
   * points derived deterministically from `documents.doc_id` with pure integer
@@ -81,15 +80,18 @@ object GeoQueries {
         .orderBy("qid", "rnk")
     }),
 
-    // P2/P3: affine world→pixel (floor) and back to pixel centre
+    // P2/P3: affine world→pixel (floor) and back to pixel centre, by the
+    // scalar transforms that geojson2coco and coco2geojson run
     "q16_affine" -> ((s, dir) => {
+      import s.implicits._
       val aff = Affine.northUp(west = 0.0, north = 1048576.0, pixelW = 16.0, pixelH = 16.0)
-      docPoints(t(s, dir, "documents"))
-        .withColumn("pcol", aff.worldToColCol(col("x"), col("y")))
-        .withColumn("prow", aff.worldToRowCol(col("x"), col("y")))
-        .withColumn("cx", aff.pixelToWorldXCol(col("pcol"), col("prow")))
-        .withColumn("cy", aff.pixelToWorldYCol(col("pcol"), col("prow")))
-        .select("doc_id", "pcol", "prow", "cx", "cy")
+      docPoints(t(s, dir, "documents")).as[(Long, Double, Double)]
+        .map { case (id, x, y) =>
+          val (prow, pcol) = aff.worldToPixel(x, y)
+          val (cx, cy) = aff.pixelToWorld(pcol.toDouble, prow.toDouble)
+          (id, pcol, prow, cx, cy)
+        }
+        .toDF("doc_id", "pcol", "prow", "cx", "cy")
         .orderBy("doc_id")
     }),
 
@@ -198,33 +200,22 @@ object GeoQueries {
 
   /** JTS clip kernel driven through the cell cover — q17 implementation. */
   private def clipZonesToTiles(s: SparkSession): DataFrame = {
+    import s.implicits._
     val level = 4
     val cs = ci.cellSize(level) // 65536
-    val zones = WebPages.zones(s)
-      .withColumn("tile_col", explode(sequence(
-        ci.colOfCol(col("xmin"), level), ci.colOfCol(col("xmax"), level))))
-      .withColumn("tile_row", explode(sequence(
-        ci.rowOfCol(col("ymin"), level), ci.rowOfCol(col("ymax"), level))))
-      .select("poly_id", "wkb", "tile_col", "tile_row")
-
-    val outSchema = StructType(Seq(
-      StructField("poly_id", LongType), StructField("tile_col", LongType),
-      StructField("tile_row", LongType), StructField("ixmin", DoubleType),
-      StructField("iymin", DoubleType), StructField("ixmax", DoubleType),
-      StructField("iymax", DoubleType), StructField("area", DoubleType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    zones.mapPartitions { it =>
-      it.flatMap { r =>
-        val g = JtsGeo.fromWkb(r.getAs[Array[Byte]](1))
-        val (tc, tr) = (r.getLong(2), r.getLong(3))
+    WebPages.zones(s).select(col("poly_id"), col("wkb"),
+        explode(ci.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level)))
+      .as[(Long, Array[Byte], Long)]
+      .flatMap { case (id, wkb, cell) =>
+        val (tc, tr) = (CellIndex.colDecode(cell), CellIndex.rowDecode(cell))
         val tile = JtsGeo.box(tc * cs, tr * cs, (tc + 1) * cs, (tr + 1) * cs)
-        JtsGeo.clipToBox(g, tile).map { part =>
+        JtsGeo.clipToBox(JtsGeo.fromWkb(wkb), tile).map { part =>
           val e = part.getEnvelopeInternal
-          Row(r.getLong(0), tc, tr, e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
-            part.getArea)
+          (id, tc, tr, e.getMinX, e.getMinY, e.getMaxX, e.getMaxY, part.getArea)
         }
       }
-    }.orderBy("poly_id", "tile_col", "tile_row")
+      .toDF("poly_id", "tile_col", "tile_row", "ixmin", "iymin", "ixmax", "iymax", "area")
+      .orderBy("poly_id", "tile_col", "tile_row")
   }
 
   val oracleSql: Map[String, String] = Map(

@@ -1,7 +1,6 @@
 package graft.geo
 
 import graft.{PropHelpers, SparkSpec}
-import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 class AffineSpec extends SparkSpec with PropHelpers {
@@ -34,22 +33,5 @@ class AffineSpec extends SparkSpec with PropHelpers {
     assert(t.a == 0.5 && t.e == -0.5 && t.c == 0.0 && t.f == 50.0)
     // the far corner (col 200, row 100) is the (east, south) bound
     assert(t.c + t.a * 200 + t.b * 100 == 100.0 && t.f + t.d * 200 + t.e * 100 == 0.0)
-  }
-
-  test("Column forms agree with pure Scala") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rows = Seq.tabulate(300)(i => ((i * 37L) % 1500L, (i * 61L) % 1500L))
-    val df = rows.toDF("c", "r")
-      .withColumn("x", tf.pixelToWorldXCol(col("c"), col("r")))
-      .withColumn("y", tf.pixelToWorldYCol(col("c"), col("r")))
-      .withColumn("c2", tf.worldToColCol(col("x"), col("y")))
-      .withColumn("r2", tf.worldToRowCol(col("x"), col("y")))
-    df.select("c", "r", "x", "y", "c2", "r2").as[(Long, Long, Double, Double, Long, Long)]
-      .collect().foreach { case (c, r, x, y, c2, r2) =>
-        val (ex, ey) = tf.pixelToWorld(c.toDouble, r.toDouble)
-        assert(x == ex && y == ey)
-        assert(c2 == c && r2 == r)
-      }
   }
 }

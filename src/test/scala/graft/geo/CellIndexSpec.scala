@@ -102,20 +102,92 @@ class CellIndexSpec extends SparkSpec with PropHelpers {
     }
   }
 
-  test("cellsCoveringCol agrees with pure Scala") {
-    val ci = CellIndex.Unit20
+  /** the cover at `level` of each (xmin, ymin, xmax, ymax), through an RDD-backed frame */
+  private def covers(envs: Seq[(Double, Double, Double, Double)], level: Int): Seq[Seq[Long]] = {
     val spark2 = spark
     import spark2.implicits._
-    val rows = Seq.tabulate(60) { i =>
-      val x = (i * 7919L) % 1000000L; val y = (i * 104729L) % 1000000L
-      (x, y, x + (i * 131L) % 40000L, y + (i * 37L) % 40000L)
+    val df = rddBacked(envs.zipWithIndex.map { case ((a, b, c, d), i) => (i, a, b, c, d) }
+      .toDF("i", "xmin", "ymin", "xmax", "ymax"))
+    df.select(col("i"), CellIndex.Unit20.cellsCoveringCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"), level))
+      .as[(Int, Seq[Long])].collect().sortBy(_._1).map(_._2).toSeq
+  }
+
+  test("cellsCoveringCol equals a brute-force cover in both eval modes") {
+    val level = 6
+    val (n, s) = (1 << level, 1048576.0 / (1 << level))
+    // the cells whose box meets the closed envelope; the border cells reach past the world
+    def bruteForce(x0: Double, y0: Double, x1: Double, y1: Double): Seq[Long] = {
+      def meets(k: Int, lo: Double, hi: Double) =
+        (k == 0 || k * s <= hi) && (k == n - 1 || (k + 1) * s > lo)
+      for (c <- 0 until n if meets(c, x0, x1); r <- 0 until n if meets(r, y0, y1)) yield pack(level, c, r)
     }
-    val df = rows.toDF("xmin", "ymin", "xmax", "ymax").withColumn("cover",
-      ci.cellsCoveringCol(col("xmin").cast("double"), col("ymin").cast("double"),
-        col("xmax").cast("double"), col("ymax").cast("double"), 8))
-    df.select("xmin", "ymin", "xmax", "ymax", "cover").as[(Long, Long, Long, Long, Seq[Long])]
-      .collect().foreach { case (x0, y0, x1, y1, cover) =>
-        assert(cover == ci.cellsCovering(x0.toDouble, y0.toDouble, x1.toDouble, y1.toDouble, 8))
+    val random = Seq.tabulate(60) { i =>
+      val x = (i * 7919L) % 1000000L; val y = (i * 104729L) % 1000000L
+      (x.toDouble, y.toDouble, (x + (i * 131L) % 90000L).toDouble, (y + (i * 37L) % 90000L).toDouble)
+    }
+    val onEdges = Seq((s, 2 * s, 3 * s, 5 * s), (s - 1, 2 * s - 0.5, 3 * s - 1e-9, 5 * s + 1e-9), (0.0, 0.0, 0.0, 0.0),
+      (1048576.0 - s, 1048576.0 - s, 1048576.0, 1048576.0))
+    val pastTheWorld = Seq((-5e6, -1.0, 10.0, 3 * s), (1048575.0, 500.0, 9e9, 600.0), (-1e12, -1e12, 1e12, 1e12),
+      (-3.0, -2.0, -1.0, -0.5), (2e6, 2e6, 3e6, 3e6))
+    val envs = random ++ onEdges ++ pastTheWorld
+    def check(): Unit = {
+      val got = covers(envs, level)
+      envs.zip(got).foreach { case ((x0, y0, x1, y1), cover) =>
+        assert(cover == bruteForce(x0, y0, x1, y1), s"($x0, $y0, $x1, $y1)")
       }
+      assert(got.exists(_.size == n * n), "no envelope covers the whole world")
+    }
+    check()
+    withInterpretedEval(check())
+    // a null bound gives a null cover, which explodes to no rows
+    val spark2 = spark
+    import spark2.implicits._
+    val bounds = rddBacked(Seq[(Option[Long], Option[Long])]((None, Some(3L)), (Some(2L), None), (Some(1L), Some(2L)))
+      .toDF("lo", "hi"))
+    val cover = cellRangeCol(level, col("lo"), col("hi"), col("lo"), col("hi"))
+    def nulls(): Unit = {
+      assert(bounds.select(cover).as[Seq[Long]].collect().toSeq ==
+        Seq(null, null, Seq(pack(level, 1, 1), pack(level, 1, 2), pack(level, 2, 1), pack(level, 2, 2))))
+      assert(bounds.select(explode(cover)).count() == 4)
+    }
+    nulls()
+    withInterpretedEval(nulls())
+  }
+
+  test("an inverted envelope covers no cells in both eval modes") {
+    val ci = CellIndex.Unit20
+    val inverted = Seq((90000.0, 1000.0, 10000.0, 70000.0), (1000.0, 90000.0, 70000.0, 10000.0),
+      (900000.0, 900000.0, 100.0, 100.0))
+    for ((x0, y0, x1, y1) <- inverted) assert(ci.cellsCovering(x0, y0, x1, y1, 8).isEmpty)
+    def check(): Unit = assert(covers(inverted, 8) == Seq.fill(inverted.length)(Seq.empty))
+    check()
+    withInterpretedEval(check())
+  }
+
+  test("cellRange enumerates column by column and refuses past the array limit") {
+    assert(cellRange(3, 1, 2, 5, 7).toSeq == Seq(pack(3, 1, 5), pack(3, 1, 6), pack(3, 1, 7),
+      pack(3, 2, 5), pack(3, 2, 6), pack(3, 2, 7)))
+    assert(cellRange(3, 2, 1, 5, 7).isEmpty && cellRange(3, 1, 2, 7, 5).isEmpty)
+    val limit = org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
+    val refusals = Seq((0L, 0L, 0L, limit.toLong, BigInt(limit) + 1),
+      (0L, (1L << 28) - 1, 0L, (1L << 28) - 1, BigInt(1) << 56),
+      (Long.MinValue, Long.MaxValue, 0L, 0L, BigInt(1) << 64))
+    for ((c0, c1, r0, r1, count) <- refusals) {
+      val e = intercept[IllegalArgumentException](cellRange(28, c0, c1, r0, r1))
+      assert(e.getMessage.contains(s"$count cells"), e.getMessage)
+    }
+    // the expression refuses the whole world at level 28 on both paths
+    val spark2 = spark
+    import spark2.implicits._
+    val world = rddBacked(Seq((0.0, 1048576.0)).toDF("lo", "hi"))
+      .select(CellIndex.Unit20.cellsCoveringCol(col("lo"), col("lo"), col("hi"), col("hi"), 28))
+    def refused(): Unit = {
+      val e = intercept[Exception](world.collect())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(s"${BigInt(1) << 56} cells")), e.toString)
+    }
+    refused()
+    withInterpretedEval(refused())
   }
 }

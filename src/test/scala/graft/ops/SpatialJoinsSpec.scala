@@ -243,6 +243,53 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
     assert(onBottoms.forall { case (x, y) => want.exists(h => pts(h._1.toInt) == ((h._1, x, y))) })
   }
 
+  test("both PIP arms equal JTS covers where an inside cell reaches past its polygon's envelope") {
+    // Two anchor boxes fix the grid. Each of polygons 2 and 3 is a triangle with a
+    // hole reaching past its envelope, which JTS takes from the shell alone: inside
+    // the envelope the hole's points are covered (odd crossings), past it none is.
+    // Polygon 2's right edge and polygon 3's top edge lie on a computed cell edge
+    // that the grid maps points beyond the envelope into the cell inside it.
+    val anchors = Seq(0L -> JtsGeo.box(-700.3, -800.7, -700.3 + 300.25, -800.7 + 300.25),
+      1L -> JtsGeo.box(447.8 - 300.25, 347.4 - 300.25, 447.8, 347.4))
+    def index(polys: Seq[(Long, Geometry)]) = PipIndex.fromWkb(polys.map { case (id, p) => (id, JtsGeo.toWkb(p)) }.toArray)
+    val g = index(anchors).grid
+    val (cw, ch) = (g.cw, g.ch)
+    def ex(k: Int) = g.x0 + k * g.cw // the cell edges as the index computes them
+    def ey(k: Int) = g.y0 + k * g.ch
+    /** the doubles up to 8 ulps past `edge` that `cell` still maps to cell k */
+    def past(edge: Double, cell: Double => Int, k: Int) =
+      Iterator.iterate(edge)(math.nextUp).slice(1, 9).filter(cell(_) == k).toSeq
+    val cR = (14 to 18).find(c => past(ex(c + 1), g.col, c).nonEmpty).get
+    val rT = (14 to 18).find(r => past(ey(r + 1), g.row, r).nonEmpty).get
+    def ring(cs: (Double, Double)*) = JtsGeo.factory.createLinearRing((cs :+ cs.head).map { case (x, y) => new Coordinate(x, y) }.toArray)
+    def rect(x0: Double, y0: Double, x1: Double, y1: Double) = ring((x0, y0), (x0, y1), (x1, y1), (x1, y0))
+    // polygon 2: max x = B at its bottom vertex only, the hole spans grid row 4 past B
+    val (b, bot) = (ex(cR + 1), ey(1))
+    val right = JtsGeo.factory.createPolygon(ring((ex(cR - 5), bot), (b, bot), (ex(cR - 5), ey(7))),
+      Array(rect(b - 2.5 * cw, bot + 2.5 * ch, b + 2.5 * cw, bot + 4.5 * ch)))
+    // polygon 3: max y = T at its left vertex only, the hole spans grid column 4 past T
+    val (t, left) = (ey(rT + 1), ex(1))
+    val top = JtsGeo.factory.createPolygon(ring((left, ey(rT - 5)), (ex(7), ey(rT - 5)), (left, t)),
+      Array(rect(left + 2.5 * cw, t - 2.5 * ch, left + 4.5 * cw, t + 2.5 * ch)))
+    val polys = anchors ++ Seq(2L -> (right: Geometry), 3L -> (top: Geometry))
+    val g2 = index(polys).grid
+    assert((g2.x0, g2.y0, g2.x1, g2.y1, g2.nx, g2.ny) == ((g.x0, g.y0, g.x1, g.y1, g.nx, g.ny)))
+    // across the edge, in the hole: inside the edge's cell, the few doubles past the
+    // edge that stay in it, and the middles of the next three cells
+    def across(edge: Double, cell: Double => Int, k: Int, step: Double) =
+      Seq(edge - step / 2, math.nextDown(edge), edge) ++ past(edge, cell, k) ++ Seq(0.5, 1.5, 2.5).map(edge + _ * step)
+    val pts = (across(b, g.col, cR, cw).map((_, bot + 3.5 * ch)) ++ across(t, g.row, rT, ch).map((left + 3.5 * cw, _)))
+      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val want = jtsCovers(pts, polys)
+    assert(want.filter(_._2 >= 2).map(_._1) == pts.filter { case (_, x, y) => (x <= b && y < t - ch) || (y <= t && x < b) }
+      .map(_._1).toSet, "the hole is covered inside the envelope and only there")
+    val (part, bcast) = bothArms(pts, polys)
+    assert(part == want)
+    assert(bcast == want)
+    val idx = index(polys)
+    assert(pts.filter { case (_, x, y) => idx.covers(x, y) }.map(_._1).toSet == want.map(_._1))
+  }
+
   test("both PIP arms equal JTS covers for a point under more than 64 overlapping polygons") {
     val polys: Seq[(Long, Geometry)] = (0 until 150).map { i =>
       i.toLong -> JtsGeo.box(1000 + (i % 10) * 0.5, 1000 + (i / 10) * 0.25, 1100 + (i % 7), 1060 + (i % 5))
