@@ -87,7 +87,6 @@ object ScalingBench {
       val nBlocks = math.max(1L, n / rowsPerBlk)
       val spark = session(cores)
       spark.sparkContext.setLogLevel("WARN")
-      spark.conf.set("graft.similarity.broadcastBytes", "1") // distributed arms only
       import org.apache.spark.sql.functions._
       val base = s"target/benchdata/quant-$n-$dim-$rowsPerBlk"
       val (fDir, qDir, pDir) = (s"$base-float", s"$base-sq8", s"$base-pq")

@@ -87,8 +87,12 @@ final case class CellIndex(originX: Double, originY: Double, size: Double) {
   def cellsCoveringCol(xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: Int): Column =
     cellRangeCol(level, colOfCol(xmin, level), colOfCol(xmax, level), rowOfCol(ymin, level), rowOfCol(ymax, level))
 
-  private def clampCol(v: Column, level: Int): Column =
-    greatest(lit(0L), least(v, lit((1L << level) - 1L)))
+  // not greatest/least, which skip nulls: a null coordinate gives a null
+  // cell, as a comparison with null falls through to `otherwise(v)`
+  private def clampCol(v: Column, level: Int): Column = {
+    val last = (1L << level) - 1L
+    when(v < 0L, 0L).when(v > last, last).otherwise(v)
+  }
 }
 
 object CellIndex {

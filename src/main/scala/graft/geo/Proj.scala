@@ -23,7 +23,10 @@ object Proj {
 
   // ---------- spherical Mercator (EPSG:3857) ----------
 
-  def mercatorX(lon: Double): Double = R * math.toRadians(lon)
+  /** `R · ((lon · π) / 180)`, in that op order: bit-equal to the EPSG:3857
+    * x of gate q21 and its DuckDB oracle (`toRadians` multiplies by one
+    * rounded constant and differs in the last bit on some longitudes). */
+  def mercatorX(lon: Double): Double = R * ((lon * math.Pi) / 180.0)
   def mercatorY(lat: Double): Double =
     R * math.log(math.tan(math.Pi / 4 + math.toRadians(lat) / 2))
   def invMercatorLon(x: Double): Double = math.toDegrees(x / R)

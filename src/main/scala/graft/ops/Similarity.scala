@@ -227,8 +227,7 @@ object Similarity extends Serializable {
 
   /** Plan-stats size (bytes) below which [[scorePairs]] collects+broadcasts
     * the vector table; above it the vectors are shuffled onto the pairs.
-    * 256 MB of float vectors is dim-table territory for an 8g+ driver.
-    * Override per session with `graft.similarity.broadcastBytes`. */
+    * 256 MB of float vectors is dim-table territory for an 8g+ driver. */
   val BroadcastVecBytes: Long = 256L << 20
 
   /** Exact cosine for candidate (qid, pid) pairs — auto-selects the plan
@@ -238,10 +237,8 @@ object Similarity extends Serializable {
     * fold kernel per row, so results are bit-identical either way. */
   def scorePairs(pairs: DataFrame, emb: DataFrame, idCol: String,
                  vecCol: String): DataFrame = {
-    val threshold = emb.sparkSession.conf
-      .get("graft.similarity.broadcastBytes", BroadcastVecBytes.toString).toLong
     val bytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= BigInt(threshold)) scorePairsBroadcast(pairs, emb, idCol, vecCol)
+    if (bytes <= BigInt(BroadcastVecBytes)) scorePairsBroadcast(pairs, emb, idCol, vecCol)
     else scorePairsJoin(pairs, emb, idCol, vecCol)
   }
 
@@ -319,10 +316,8 @@ object Similarity extends Serializable {
     * pure plan choice. */
   def cosineTopKAuto(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                      blockCol: Option[String] = None): DataFrame = {
-    val threshold = emb.sparkSession.conf
-      .get("graft.similarity.broadcastBytes", BroadcastVecBytes.toString).toLong
     val bytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= BigInt(threshold)) cosineTopKBroadcast(emb, idCol, vecCol, k, blockCol)
+    if (bytes <= BigInt(BroadcastVecBytes)) cosineTopKBroadcast(emb, idCol, vecCol, k, blockCol)
     else cosineTopK(emb, idCol, vecCol, k, blockCol)
   }
 

@@ -38,7 +38,9 @@ import org.apache.spark.sql.Dataset
   * suppressed. The tables and the concat order are those of a sequential
   * run. One raster whose features are one partition runs two Spark jobs:
   * the category list and the annotation write; features in several
-  * partitions add the annotation ids' range exchange. Its resume runs none.
+  * partitions add the annotation ids' range sample and exchange, and a
+  * count when adaptive execution leaves more than one partition. Its resume
+  * runs none.
   */
 object BatchPipeline {
 

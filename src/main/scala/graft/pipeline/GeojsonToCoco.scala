@@ -121,8 +121,9 @@ object GeojsonToCoco {
 
     // annotation ids: global dense sequence in the reference's traversal
     // order (coordinates.py:246) — assigned by Ids.denseId (oracle-proven
-    // ≡ row_number by q08): one sorted partition with no exchange below its
-    // size threshold, the range-partitioned prefix-sum above it.
+    // ≡ row_number by q08): features in one partition are sorted in place
+    // with no exchange; any others are range-partitioned as AQE sizes the
+    // clipped rows, so a large raster's annotations are numbered by many tasks.
     val anns = graft.ops.Ids.denseId(rows, "id", Seq("imageId", "featureId", "partIdx"))
       .select(col("id"), col("imageId"), col("categoryId"),
         col("segmentation"), col("bbox"), col("area"), lit(0).as("iscrowd"))

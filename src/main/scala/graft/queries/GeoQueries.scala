@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.geo.{Affine, CellIndex, GeomCols, JtsGeo}
+import graft.geo.{Affine, CellIndex, GeomCols, JtsGeo, Proj}
 import graft.io.WebPages
 import graft.ops.{Knn, SpatialJoins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -171,29 +171,25 @@ object GeoQueries {
         .orderBy("doc_id", "poly_id")
     }),
 
-    // P7: spherical-Mercator forward projection. Transcendental outputs
+    // P7: spherical-Mercator forward projection, by the functions the
+    // EPSG:3857 hop of coco2geojson runs (Proj). Transcendental outputs
     // (ln/tan) differ between JVM and DuckDB libm in the last ulp, and
     // rounding cannot save a value straddling a rounding boundary — so the
-    // gate compares (a) `mx`, a pure multiply (bit-exact IEEE754 in both
-    // engines), and (b) an ENGINE-INTERNAL round-trip invariant: each engine
-    // computes its own forward + inverse Mercator and checks
+    // gate compares (a) `mx`, Proj.mercatorX's R·((lon·π)/180), three IEEE754
+    // ops in pinned association order (bit-exact in any engine), and (b) an
+    // ENGINE-INTERNAL round-trip invariant: each engine computes its own
+    // forward + inverse Mercator and checks
     // |invMercator(mercator(lat)) − lat| < 1e-9 (booleans hash identically).
     "q21_mercator" -> ((s, dir) => {
-      val R = 6378137.0
-      val d = t(s, dir, "documents")
-        .withColumn("lon", (col("doc_id") * 7 % 360 - 180).cast("double"))
-        .withColumn("lat", (col("doc_id") * 11 % 170 - 85).cast("double"))
-        .withColumn("my",
-          lit(R) * log(tan(lit(math.Pi / 4) + radians(col("lat")) / 2)))
-        .withColumn("lat_rt",
-          degrees(lit(2.0) * atan(exp(col("my") / R)) - lit(math.Pi / 2)))
-      // mx is written as the explicit sequence R·((lon·π)/180): three IEEE754
-      // ops in pinned association order — bit-exact in any engine (radians()
-      // itself is not: divide-then-multiply vs multiply-by-constant differ
-      // in the last ulp).
-      d.select(col("doc_id"),
-          (lit(R) * (col("lon") * lit(math.Pi) / lit(180.0))).as("mx"),
-          (abs(col("lat_rt") - col("lat")) < 1e-9).as("rt_ok"))
+      import s.implicits._
+      t(s, dir, "documents")
+        .select(col("doc_id"), (col("doc_id") * 7 % 360 - 180).cast("double"),
+          (col("doc_id") * 11 % 170 - 85).cast("double"))
+        .as[(Long, Double, Double)]
+        .map { case (id, lon, lat) =>
+          (id, Proj.mercatorX(lon), math.abs(Proj.invMercatorLat(Proj.mercatorY(lat)) - lat) < 1e-9)
+        }
+        .toDF("doc_id", "mx", "rt_ok")
         .orderBy("doc_id")
     })
   )

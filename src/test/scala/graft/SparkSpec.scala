@@ -29,19 +29,20 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     * through `eval`, so generated code would never run on it. */
   def rddBacked(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
 
-  /** Runs `f` on the interpreted expression path and restores both
-    * settings after: `factoryMode=NO_CODEGEN` makes projections and
-    * predicates call each expression's `eval`, and `wholeStage=false`
-    * keeps whole-stage codegen out. Switching `wholeStage` off alone
-    * still compiles every expression. */
-  def withInterpretedEval[T](f: => T): T = {
-    val settings = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
-      "spark.sql.codegen.wholeStage" -> "false")
-    val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** Runs `f` with the session settings `kvs` and restores each after. */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Runs `f` on the interpreted expression path: `factoryMode=NO_CODEGEN`
+    * makes projections and predicates call each expression's `eval`, and
+    * `wholeStage=false` keeps whole-stage codegen out. Switching
+    * `wholeStage` off alone still compiles every expression. */
+  def withInterpretedEval[T](f: => T): T =
+    withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")(f)
 }

@@ -154,6 +154,23 @@ class CellIndexSpec extends SparkSpec with PropHelpers {
     withInterpretedEval(nulls())
   }
 
+  test("a null coordinate gives a null cell and a null cover in both eval modes") {
+    val ci = CellIndex.Unit20
+    val spark2 = spark
+    import spark2.implicits._
+    val pts = rddBacked(Seq[(Int, Option[Double], Option[Double])]((0, None, Some(5.0)), (1, Some(5.0), None),
+      (2, None, None), (3, Some(70000.0), Some(9000.0))).toDF("i", "x", "y"))
+    def check(): Unit = {
+      val got = pts.select(col("i"), ci.colOfCol(col("x"), 4), ci.rowOfCol(col("y"), 4),
+          ci.encodeCol(col("x"), col("y"), 4), ci.cellsCoveringCol(lit(0.0), lit(0.0), col("x"), col("y"), 4))
+        .as[(Int, Option[Long], Option[Long], Option[Long], Option[Seq[Long]])].collect().sortBy(_._1).toSeq
+      got shouldBe Seq((0, None, Some(0L), None, None), (1, Some(0L), None, None, None), (2, None, None, None, None),
+        (3, Some(1L), Some(0L), Some(pack(4, 1, 0)), Some(Seq(pack(4, 0, 0), pack(4, 1, 0)))))
+    }
+    check()
+    withInterpretedEval(check())
+  }
+
   test("an inverted envelope covers no cells in both eval modes") {
     val ci = CellIndex.Unit20
     val inverted = Seq((90000.0, 1000.0, 10000.0, 70000.0), (1000.0, 90000.0, 70000.0, 10000.0),

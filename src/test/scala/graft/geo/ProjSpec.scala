@@ -20,6 +20,14 @@ class ProjSpec extends SparkSpec with PropHelpers {
     assert(math.abs(Proj.mercatorY(85.0511287798066) - 20037508.34) < 1.0)
   }
 
+  test("mercatorX is bit-equal to gate q21's R·((lon·π)/180) on every integer longitude") {
+    for (lon <- -180 until 180) {
+      val gate = 6378137.0 * ((lon * math.Pi) / 180.0)
+      assert(java.lang.Double.doubleToRawLongBits(Proj.mercatorX(lon)) ==
+        java.lang.Double.doubleToRawLongBits(gate), s"lon $lon")
+    }
+  }
+
   test("UTM forward matches closed-form anchors") {
     // on the central meridian: easting exactly 500 km, northing = K0 · arc
     val (e0, n0) = Proj.utmForward(0.0, -177.0, zone = 1, north = true)

@@ -21,15 +21,6 @@ class BucketedJoinSpec extends SparkSpec {
   private def nSorts(df: DataFrame): Int =
     "- Sort \\[".r.findAllIn(df.queryExecution.executedPlan.toString).size
 
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def noBroadcast[T](body: => T): T =
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 

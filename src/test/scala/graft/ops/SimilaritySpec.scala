@@ -53,14 +53,13 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosineTopKAuto routes by plan stats; both arms bit-identical") {
-    def run() = Similarity.cosineTopKAuto(emb, "vec_id", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val broadcastArm = run() // tiny table → under the default threshold
-    spark.conf.set("graft.similarity.broadcastBytes", "1")
-    try {
-      val distributedArm = run() // forced over the threshold → self-join arm
-      assert(broadcastArm == distributedArm)
-    } finally spark.conf.unset("graft.similarity.broadcastBytes")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val auto = Similarity.cosineTopKAuto(emb, "vec_id", "embedding", 3)
+    // tiny table → under the threshold: the broadcast arm, no exchange
+    assert(emb.queryExecution.optimizedPlan.stats.sizeInBytes <= Similarity.BroadcastVecBytes)
+    assert(!auto.queryExecution.executedPlan.toString.contains("Exchange"))
+    assert(rows(auto) == rows(Similarity.cosineTopK(emb, "vec_id", "embedding", 3)))
   }
 
   test("annLshBanded recall@3 beats single-table at the same total planes") {
