@@ -174,30 +174,6 @@ case class FloatVecSq8Bytes(child: Expression) extends FloatVecKernelExpr {
     copy(child = newChild)
 }
 
-/** Unpack BINARY SQ8 codes back to `array<long>`
-  * ([[VecKernels.bytesToLongs]]) — the read-side bridge from the at-rest
-  * layout to the `array<long>` scoring tier ([[LongVecDot]]). */
-case class Sq8BytesToLongs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"sq8_bytes_to_longs needs a binary argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sq8_bytes_to_longs"
-
-  override protected def nullSafeEval(a: Any): Any =
-    VecKernels.bytesToLongs(a.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"${VecKernels.Name}.bytesToLongs($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** PQ symmetric-distance (SDC) scoring directly over two BINARY code
   * columns ([[VecKernels.sdcDist]]): dist = Σ_s tbl[s][a_s][b_s], the
   * per-subspace codebook-pair L2 table flattened to one double array
@@ -294,10 +270,6 @@ object VecExprs {
   /** SQ8 codes packed as binary — one byte per dim ([[FloatVecSq8Bytes]]). */
   def sq8Bytes(a: Column): Column =
     Bridge.column(FloatVecSq8Bytes(Bridge.expression(a)))
-
-  /** binary SQ8 codes → `array<long>` ([[Sq8BytesToLongs]]). */
-  def sq8BytesToLongs(a: Column): Column =
-    Bridge.column(Sq8BytesToLongs(Bridge.expression(a)))
 
   /** integer dot directly over binary SQ8 code columns ([[BytesVecDot]]). */
   def dotB(a: Column, b: Column): Column =

@@ -98,14 +98,6 @@ object VecKernels {
     out
   }
 
-  /** signed-byte codes widened to `array<long>` */
-  def bytesToLongs(x: Array[Byte]): ArrayData = {
-    val out = new Array[Long](x.length)
-    var i = 0
-    while (i < x.length) { out(i) = x(i).toLong; i += 1 }
-    new GenericArrayData(out)
-  }
-
   /** One SRP-LSH band key: `rowsPerBand` sign bits of the projections on
     * planes [band·rowsPerBand, (band+1)·rowsPerBand), bit j set when
     * projection j is > 0. Plane component

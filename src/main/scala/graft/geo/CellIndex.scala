@@ -48,10 +48,6 @@ final case class CellIndex(originX: Double, originY: Double, size: Double) {
   def encode(x: Double, y: Double, level: Int): Long =
     pack(level, colOf(x, level), rowOf(y, level))
 
-  /** All cells at `level` whose box intersects the closed envelope, in [[CellIndex.cellRange]] order. */
-  def cellsCovering(xmin: Double, ymin: Double, xmax: Double, ymax: Double, level: Int): Seq[Long] =
-    cellRange(level, colOf(xmin, level), colOf(xmax, level), rowOf(ymin, level), rowOf(ymax, level)).toSeq
-
   /** Cell ids at Chebyshev distance exactly `k` (k=0 → the cell itself),
     * clamped at world borders. Generalizes the reference's ±1 tile
     * neighbourhood (tiles.py:241-249) to arbitrary ring radius for kNN. */
@@ -82,8 +78,9 @@ final case class CellIndex(originX: Double, originY: Double, size: Double) {
   def encodeCol(x: Column, y: Column, level: Int): Column =
     packCol(level, colOfCol(x, level), rowOfCol(y, level))
 
-  /** Array column of covering cell ids for an envelope (explode downstream):
-    * [[cellsCovering]] as a native expression. */
+  /** Array column of the ids of every cell at `level` whose box intersects
+    * the closed envelope, in [[CellIndex.cellRange]] order (explode
+    * downstream). */
   def cellsCoveringCol(xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: Int): Column =
     cellRangeCol(level, colOfCol(xmin, level), colOfCol(xmax, level), rowOfCol(ymin, level), rowOfCol(ymax, level))
 
@@ -168,11 +165,6 @@ object CellIndex {
     val lvl = levelOf(cell)
     require(lvl > 0, s"level-0 cell has no parent: $cell")
     pack(lvl - 1, colDecode(cell) >> 1, rowDecode(cell) >> 1)
-  }
-
-  def children(cell: Long): Seq[Long] = {
-    val (c, r) = (colDecode(cell) << 1, rowDecode(cell) << 1)
-    cellRange(levelOf(cell) + 1, c, c + 1, r, r + 1).toSeq
   }
 
   // ---------- Spark Column codec ----------

@@ -2,7 +2,7 @@ package graft.geo
 
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.util.GeometryFixer
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
+import org.locationtech.jts.io.{WKBReader, WKBWriter}
 import org.locationtech.jts.operation.union.UnaryUnionOp
 import org.locationtech.jts.algorithm.MinimumDiameter
 
@@ -28,11 +28,9 @@ object JtsGeo {
   // thread-confined codecs
   private val wkbR = ThreadLocal.withInitial[WKBReader](() => new WKBReader(factory))
   private val wkbW = ThreadLocal.withInitial[WKBWriter](() => new WKBWriter(2))
-  private val wktR = ThreadLocal.withInitial[WKTReader](() => new WKTReader(factory))
 
   def fromWkb(b: Array[Byte]): Geometry = wkbR.get.read(b)
   def toWkb(g: Geometry): Array[Byte] = wkbW.get.write(g)
-  def fromWkt(s: String): Geometry = wktR.get.read(s)
 
   def point(x: Double, y: Double): Point = factory.createPoint(new Coordinate(x, y))
 

@@ -25,8 +25,7 @@ import scala.jdk.CollectionConverters._
   *
   * Write: entity rows are rendered distributed via `to_json(struct(...))`;
   * the single-document envelope (reference `coco_json.toJSON`, coco.py:32-37)
-  * is assembled on the driver — correct for the reference's one-file
-  * contract; at fleet scale use `writeJsonl` (per-entity JSONL shards). */
+  * is assembled on the driver, the reference's one-file contract. */
 object Coco {
 
   /** The reference's default license (scripts/geojson2coco.py:224-228). */
@@ -155,13 +154,5 @@ object Coco {
   def write(t: CocoTables, path: String, nestedSegmentation: Boolean = false): Unit = {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       toJsonDocument(t, nestedSegmentation))
-  }
-
-  /** Scale path: per-entity JSONL shards (one dir per collection). */
-  def writeJsonl(t: CocoTables, dir: String, nestedSegmentation: Boolean = false): Unit = {
-    imageJson(t.images).write.mode("overwrite").text(s"$dir/images")
-    annotationJson(t.annotations, nestedSegmentation).write.mode("overwrite")
-      .text(s"$dir/annotations")
-    categoryJson(t.categories).write.mode("overwrite").text(s"$dir/categories")
   }
 }

@@ -144,66 +144,6 @@ object GeoJson {
     node
   }
 
-  /** One Feature object as a JSON string (shared by the single-document
-    * writer and the JSONL shard writer). */
-  def featureJson(mapper: ObjectMapper, code: Int, name: String, wkb: Array[Byte]): ObjectNode = {
-    val f = mapper.createObjectNode()
-    f.put("type", "Feature")
-    val props = mapper.createObjectNode()
-    props.put("zone_code", code); props.put("zone_name", name)
-    f.set[JsonNode]("properties", props)
-    f.set[JsonNode]("geometry", geometryToNode(mapper, JtsGeo.fromWkb(wkb)))
-    f
-  }
-
-  /** Scale path (S4): newline-delimited GeoJSON — one Feature per line
-    * ("GeoJSONL", the streaming-friendly sibling of FeatureCollection) —
-    * written DISTRIBUTED, no driver collect. Input rows:
-    * (zone_code:int, zone_name:string, wkb:binary). */
-  def writeJsonl(rows: org.apache.spark.sql.DataFrame, dir: String): Unit = {
-    import rows.sparkSession.implicits._
-    rows.select("zone_code", "zone_name", "wkb")
-      .as[(Int, String, Array[Byte])]
-      .mapPartitions { it =>
-        val mapper = new ObjectMapper()
-        it.map { case (code, name, wkb) =>
-          mapper.writeValueAsString(featureJson(mapper, code, name, wkb))
-        }
-      }
-      .write.mode("overwrite").text(dir)
-  }
-
-  /** Read newline-delimited GeoJSON features (inverse of [[writeJsonl]]) —
-    * distributed line-wise parse. featureIds are dense and unique in
-    * (file path, line CONTENT) order — byte-identical duplicate lines get
-    * arbitrary relative order among themselves (ids stay unique). */
-  def readJsonl(spark: SparkSession, path: String, classColumn: String = "zone_name",
-                classDefault: String = "class"): Dataset[Feature] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    val lines = spark.read.text(path)
-      .select(input_file_name().as("path"), col("value"))
-      .as[(String, String)]
-    val local = lines.mapPartitions { it =>
-      val mapper = new ObjectMapper()
-      it.map { case (p, line) =>
-        val f = mapper.readTree(line)
-        val geom = parseGeometry(f.get("geometry"))
-        val props = f.get("properties")
-        val propMap: Map[String, String] =
-          if (props == null) Map.empty
-          else props.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-        val cls = propMap.getOrElse(classColumn, classDefault)
-        val e = geom.getEnvelopeInternal
-        (p, line, JtsGeo.toWkb(geom), e.getMinX, e.getMinY, e.getMaxX, e.getMaxY,
-          cls, propMap)
-      }
-    }.toDF("path", "line", "wkb", "xmin", "ymin", "xmax", "ymax", "zoneName", "props")
-    graft.ops.Ids.denseId(local, "featureId", Seq("path", "line"))
-      .drop("path", "line")
-      .as[Feature]
-  }
-
   /** Single FeatureCollection document (driver assembly — reference
     * to_file contract); rows: (zone_code:int, zone_name:string, wkb). */
   def toDocument(rows: Seq[(Int, String, Array[Byte])]): String = {
@@ -212,7 +152,11 @@ object GeoJson {
     root.put("type", "FeatureCollection")
     val feats = mapper.createArrayNode()
     rows.foreach { case (code, name, wkb) =>
-      feats.add(featureJson(mapper, code, name, wkb))
+      val f = feats.addObject()
+      f.put("type", "Feature")
+      val props = f.putObject("properties")
+      props.put("zone_code", code); props.put("zone_name", name)
+      f.set[JsonNode]("geometry", geometryToNode(mapper, JtsGeo.fromWkb(wkb)))
     }
     root.set[JsonNode]("features", feats)
     mapper.writeValueAsString(root)

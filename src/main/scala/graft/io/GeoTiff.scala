@@ -577,19 +577,6 @@ object GeoTiff {
     buf.array()
   }
 
-  /** Float32 GeoTIFF write (SampleFormat=3) from typed samples — the
-    * DEM/NDVI output arm; samples are chunky row-major like [[write]]. */
-  def writeFloat(width: Int, height: Int, bands: Int, samples: Array[Float],
-                 a: Double, bAff: Double, c: Double, d: Double, e: Double,
-                 f: Double, compression: Int = 1): Array[Byte] = {
-    val raw = new Array[Byte](samples.length * 4)
-    val buf = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < samples.length) { buf.putFloat(i * 4, samples(i)); i += 1 }
-    write(width, height, bands, raw, a, bAff, c, d, e, f,
-      compression, bitsPerSample = 32, sampleFormat = 3)
-  }
-
   /** PNG sidecar (coco.py:140-169): keep the first `bands` bands; when
     * `colour` is false average them (truncating cast, numpy semantics). */
   def toPng(pixels: Array[Byte], width: Int, height: Int, sourceBands: Int,

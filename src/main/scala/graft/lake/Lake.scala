@@ -146,10 +146,6 @@ final class Lake(val root: String, spark: SparkSession) {
       .toDF("partitionId", "rows", "bytes", "jobId", "stage")
   }
 
-  /** stages of `jobId` with a committed snapshot */
-  def completedStages(jobId: String): Set[String] =
-    ls(s"$root/$jobId").map(_.getName).filter(s => snapshotIds(s"$jobId/$s").nonEmpty).toSet
-
   /** Idempotent stage: complete iff it has a committed manifest, and then read
     * back instead of recomputed (kill-and-resume equivalence — O9); else the
     * body runs once, in the write, and `meta` once after it, into the
@@ -164,24 +160,6 @@ final class Lake(val root: String, spark: SparkSession) {
 }
 
 object Lake {
-  /** Catalog-registered bucketed+sorted layout — the co-located-join story
-    * for the fact tables at 100 TB: two tables bucketed the same way on the
-    * join key sort-merge-join with NO shuffle exchange and NO sort on
-    * either side (Spark reads its own bucket metadata; assert via
-    * BucketedJoinSpec). Bucketing lives in the session catalog rather than
-    * the snapshot layer because Spark only recognizes bucket files through
-    * `saveAsTable` metadata — outside the sandbox an Iceberg catalog
-    * supplies the same property through its bucket partition transform. */
-  def writeBucketed(df: DataFrame, table: String, nBuckets: Int,
-                    key: String, sortCols: Seq[String] = Seq.empty): Unit = {
-    val sorted = if (sortCols.isEmpty) Seq(key) else sortCols
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, key)
-      .sortBy(sorted.head, sorted.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
   /** SQ8-quantized AT-REST layout for an embedding table: codes packed as
     * BINARY (one signed byte per dimension — the 4× size win is physical
     * parquet bytes, not an encoding artifact) plus the per-vector scale
@@ -205,16 +183,6 @@ object Lake {
       graft.ops.Quantize.sq8Scale(col(vecCol)).as("scale")) ++
       extraCols.map(col)
     emb.select(cols: _*).write.mode("overwrite").parquet(path)
-  }
-
-  /** Read the quantized layout back: (idCol, codes binary, scale double,
-    * extras…) plus a reconstructed `vec_approx` array<double> column
-    * (|v − v̂| ≤ scale/2 per dimension, the SQ8 distortion bound). */
-  def readQuantizedEmbeddings(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    df.withColumn("vec_approx",
-      transform(graft.ops.Quantize.bytesToCodes(col("codes")),
-        c => c.cast("double") * col("scale").cast("double")))
   }
 
   /** The PQ at-rest layout — the compression tier beyond

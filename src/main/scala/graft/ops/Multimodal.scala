@@ -4,25 +4,24 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (builder brief): image/audio/video payloads
-  * travel as opaque `binary` columns plus a typed metadata struct; decode /
-  * feature-extract / resize / frame-sample run as per-partition batch
+  * travel as opaque `binary` columns plus a typed metadata struct; decode
+  * and frame-extract run as per-partition batch
   * kernels over the binary column (the Scala analog of `mapInPandas` — same
   * batch shape: one task processes an iterator of rows, vectorizable
   * libraries plug in per partition).
   *
   * ALL THREE modalities decode for real: IMAGE via the JDK's javax.imageio
-  * ([[JdkImage]] decode / resample / channel stats), AUDIO via a
-  * hand-rolled RIFF/WAVE PCM16 codec ([[Wav]]: decode / encode /
-  * downsample / rms-peak stats), and VIDEO via TWO real codecs — a
+  * ([[JdkImage]] decode / encode / channel means), AUDIO via a
+  * hand-rolled RIFF/WAVE PCM16 codec ([[Wav]]: decode / encode), and
+  * VIDEO via TWO real codecs — a
   * hand-rolled animated-GIF codec ([[Gif]]: GIF-variant LZW, frame
   * delays, disposal, interlace, frame rendering) and a Motion-JPEG AVI
   * codec ([[graft.io.Avi]]: AVI RIFF container + per-frame JDK JPEG
   * decode, a TRUE bitstream format). A payload that none of these codecs
   * reads (an `image` ImageIO rejects, a `video` that is neither GIF nor
   * AVI, e.g. an interframe-coded H.264/VP9 stream) yields nulls, not a
-  * task failure: a null `meta` from [[decodeMeta]], a null `rgb_mean`
-  * from [[channelStats]], no row from [[extractFrames]], and an unchanged
-  * row from [[resizePayload]].
+  * task failure: a null `meta` from [[decodeMeta]] and no row from
+  * [[extractFrames]].
   */
 object Multimodal {
 
@@ -59,23 +58,6 @@ object Multimodal {
         y += 1
       }
       encodePng(img)
-    }
-
-    /** Real resample keeping aspect, bounded by maxSide; re-encoded PNG.
-      * An undecodable payload is returned unchanged. */
-    def resize(payload: Array[Byte], maxSide: Int): Array[Byte] = {
-      val img = decode(payload)
-      if (img == null) return payload
-      val scale = math.min(1.0, maxSide.toDouble / math.max(img.getWidth, img.getHeight))
-      if (scale >= 1.0) return payload
-      val (w, h) = (math.max(1, (img.getWidth * scale).toInt),
-        math.max(1, (img.getHeight * scale).toInt))
-      val out = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      val g = out.createGraphics()
-      g.drawImage(img.getScaledInstance(w, h, java.awt.Image.SCALE_AREA_AVERAGING), 0, 0, null)
-      g.dispose()
-      encodePng(out)
     }
 
     /** Mean R/G/B over the decoded pixels — the feature-extract stage with
@@ -159,8 +141,7 @@ object Multimodal {
 
   /** REAL audio codec: RIFF/WAVE PCM16 little-endian (the dominant
     * uncompressed interchange format), hand-rolled over the public RIFF
-    * spec — decode, encode, frame-decimating downsample, and per-channel
-    * stats. */
+    * spec — decode and encode. */
   object Wav {
     /** Mono/stereo PCM16 WAV bytes from interleaved samples. */
     def encode(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
@@ -210,58 +191,6 @@ object Multimodal {
       }
       require(rate > 0 && data != null, "missing fmt/data chunk")
       (rate, channels, data)
-    }
-
-    /** Keep every `factor`-th FRAME (all channels of it) and divide the
-      * declared sample rate — the audio analog of image resampling. */
-    def downsample(bytes: Array[Byte], factor: Int): Array[Byte] = {
-      val (rate, ch, s) = decode(bytes)
-      val frames = s.length / ch
-      val kept = (0 until frames by factor).toArray
-      val out = new Array[Short](kept.length * ch)
-      var o = 0
-      kept.foreach { f =>
-        var c = 0
-        while (c < ch) { out(o) = s(f * ch + c); o += 1; c += 1 }
-      }
-      encode(rate / factor, ch, out)
-    }
-
-    /** Per-channel (rms, peak) over normalized [-1, 1) samples plus the
-      * clip duration in seconds. */
-    def stats(bytes: Array[Byte]): (Double, Array[Double], Array[Double]) = {
-      val (rate, ch, s) = decode(bytes)
-      val frames = s.length / ch
-      val sumSq = new Array[Double](ch)
-      val peak = new Array[Double](ch)
-      var i = 0
-      while (i < s.length) {
-        val c = i % ch
-        val v = s(i) / 32768.0
-        sumSq(c) += v * v
-        if (math.abs(v) > peak(c)) peak(c) = math.abs(v)
-        i += 1
-      }
-      val rms = sumSq.map(x => math.sqrt(x / math.max(frames, 1)))
-      (frames.toDouble / rate, rms, peak)
-    }
-  }
-
-  /** FEATURE stage for audio payloads: duration + per-channel rms/peak. */
-  def audioStats(media: DataFrame): DataFrame = {
-    val schema = media.schema
-      .add("duration_s", DoubleType).add("rms", ArrayType(DoubleType))
-      .add("peak", ArrayType(DoubleType))
-    val pIdx = media.schema.fieldIndex("payload")
-    val kIdx = media.schema.fieldIndex("kind")
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.mapPartitions { it =>
-      it.map { r =>
-        if (r.getString(kIdx) == "audio") {
-          val (dur, rms, peak) = Wav.stats(r.getAs[Array[Byte]](pIdx))
-          Row.fromSeq(r.toSeq ++ Seq(dur, rms.toSeq, peak.toSeq))
-        } else Row.fromSeq(r.toSeq ++ Seq(null, null, null))
-      }
     }
   }
 
@@ -351,41 +280,6 @@ object Multimodal {
               .map(m => Row(id, "image", 0, 0, m.toSeq, payload))
           case _ => Seq.empty[Row]
         }
-      }
-    }
-  }
-
-  /** RESIZE stage with real payload rewrite for images (area-averaging
-    * resample, PNG re-encode); video rows and undecodable images pass
-    * through untouched. */
-  def resizePayload(media: DataFrame, maxSide: Int): DataFrame = {
-    val pIdx = media.schema.fieldIndex("payload")
-    val kIdx = media.schema.fieldIndex("kind")
-    implicit val enc = org.apache.spark.sql.Encoders.row(media.schema)
-    media.mapPartitions { it =>
-      it.map { r =>
-        if (r.getString(kIdx) == "image") {
-          val resized = JdkImage.resize(r.getAs[Array[Byte]](pIdx), maxSide)
-          Row.fromSeq(r.toSeq.updated(pIdx, resized))
-        } else r
-      }
-    }
-  }
-
-  /** FEATURE stage with a real decoder: mean R/G/B per image payload
-    * (null for non-image rows and undecodable images). */
-  def channelStats(media: DataFrame): DataFrame = {
-    val schema = media.schema.add("rgb_mean", ArrayType(DoubleType))
-    val pIdx = media.schema.fieldIndex("payload")
-    val kIdx = media.schema.fieldIndex("kind")
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.mapPartitions { it =>
-      it.map { r =>
-        val means =
-          if (r.getString(kIdx) == "image")
-            JdkImage.channelMeans(r.getAs[Array[Byte]](pIdx))
-          else null
-        Row.fromSeq(r.toSeq :+ means)
       }
     }
   }

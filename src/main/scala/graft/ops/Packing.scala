@@ -62,15 +62,4 @@ object Packing {
         expr(s"(_cum - 1) div $budget") > col("seq_id"))
       .drop("_cum", "_start")
   }
-
-  /** Per-sequence start stats: how many documents START in each packed
-    * sequence and how many of their tokens land in it (a straddling doc
-    * contributes only up to the chunk boundary; its continuation tokens
-    * belong to later sequences, counted under concatenation semantics by
-    * construction). One hash-agg keyed by (shard, seq_id). */
-  def sequenceFill(packed: DataFrame, tokenCol: String, budget: Long): DataFrame =
-    packed.groupBy("shard", "seq_id")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("straddles"), lit(budget) - col("seq_off"))
-          .otherwise(col(tokenCol))).as("tokens_in_seq"))
 }

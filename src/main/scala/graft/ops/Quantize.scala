@@ -401,10 +401,6 @@ object Quantize {
     * parquet embedding table stores d bytes per vector instead of 4d. */
   def sq8Bytes(vec: Column): Column = graft.functions.VecExprs.sq8Bytes(vec)
 
-  /** binary codes → `array<long>` (read-side bridge to the scoring tier) */
-  def bytesToCodes(codes: Column): Column =
-    graft.functions.VecExprs.sq8BytesToLongs(codes)
-
   /** Quantized brute-force cosine top-k DIRECTLY over the at-rest layout
     * (id, binary codes [, block]): same join/rank shape as [[annSq8]],
     * scored with the native [[graft.functions.BytesVecDot]] over the

@@ -21,23 +21,20 @@ object Robots {
 
   final case class Rule(pattern: String, allow: Boolean)
 
-  private final case class Group(agents: Seq[String], rules: Seq[Rule],
-                                 delay: Option[Double])
+  private final case class Group(agents: Seq[String], rules: Seq[Rule])
 
   /** One pass over the file into UA groups (RFC 9309: consecutive
     * User-agent lines share the rule block that follows; comments and
     * unknown directives are skipped; empty patterns are ignored — an
-    * empty Disallow allows everything). Crawl-delay is captured per
-    * group; malformed values are ignored. */
+    * empty Disallow allows everything). */
   private def scanGroups(robotsTxt: String): Vector[Group] = {
     val groups = Vector.newBuilder[Group]
     var agents = Vector.empty[String]
     var rules = Vector.empty[Rule]
-    var delay: Option[Double] = None
     var inRules = false
     def flush(): Unit = {
-      if (agents.nonEmpty) groups += Group(agents, rules, delay)
-      agents = Vector.empty; rules = Vector.empty; delay = None; inRules = false
+      if (agents.nonEmpty) groups += Group(agents, rules)
+      agents = Vector.empty; rules = Vector.empty; inRules = false
     }
     robotsTxt.linesIterator.foreach { raw =>
       val line = raw.takeWhile(_ != '#').trim
@@ -52,10 +49,7 @@ object Robots {
           case "allow" | "disallow" =>
             inRules = true
             if (value.nonEmpty) rules :+= Rule(value, key == "allow")
-          case "crawl-delay" =>
-            inRules = true
-            delay = value.toDoubleOption.filter(_ >= 0).orElse(delay)
-          case _ => inRules = true // sitemap, unknown, ... end the UA run
+          case _ => inRules = true // crawl-delay, sitemap, unknown, ... end the UA run
         }
       }
     }
@@ -72,9 +66,8 @@ object Robots {
     * files routinely repeat `User-agent: *` (or the same bot) across
     * several groups — so every group whose best matching token has the
     * winning length is merged, rules concatenated in file order; same for
-    * the `*` fallback. Crawl-delay: the last one any merged group defines
-    * wins. */
-  private def selectGroup(all: Vector[Group], userAgent: String): Option[Group] = {
+    * the `*` fallback. */
+  private def selectRules(all: Vector[Group], userAgent: String): Seq[Rule] = {
     val ua = userAgent.toLowerCase
     def tokenMatch(a: String): Boolean =
       a != "*" && (ua == a ||
@@ -87,51 +80,13 @@ object Robots {
         val maxLen = best.map(_._2).max
         best.collect { case (g, l) if l == maxLen => g }
       } else all.filter(_.agents.contains("*"))
-    if (winners.isEmpty) None
-    else Some(Group(winners.flatMap(_.agents).distinct,
-      winners.flatMap(_.rules), winners.flatMap(_.delay).lastOption))
+    winners.flatMap(_.rules)
   }
 
-  /** Rules of the group [[selectGroup]] picks for `userAgent`, in file
+  /** Rules of the groups [[selectRules]] picks for `userAgent`, in file
     * order. */
   def parse(robotsTxt: String, userAgent: String = "*"): Seq[Rule] =
-    selectGroup(scanGroups(robotsTxt), userAgent)
-      .map(_.rules.toSeq).getOrElse(Seq.empty)
-
-  /** All `Sitemap:` directives in the file (sitemaps.org protocol):
-    * group-independent per the spec — a crawl seeds its frontier from
-    * these regardless of which UA group applies. File order preserved. */
-  def sitemaps(robotsTxt: String): Seq[String] =
-    robotsTxt.linesIterator.flatMap { raw =>
-      val line = raw.takeWhile(_ != '#').trim
-      val i = line.indexOf(':')
-      if (i > 0 && line.substring(0, i).trim.equalsIgnoreCase("sitemap")) {
-        val v = line.substring(i + 1).trim
-        if (v.nonEmpty) Some(v) else None
-      } else None
-    }.toSeq
-
-  /** The `Crawl-delay:` of the group [[selectGroup]] picks for
-    * `userAgent` (a de-facto extension most crawlers honor): seconds, or
-    * None when the group carries none or the value does not parse. */
-  def crawlDelay(robotsTxt: String, userAgent: String = "*"): Option[Double] =
-    selectGroup(scanGroups(robotsTxt), userAgent).flatMap(_.delay)
-
-  /** robots pattern → SQL LIKE pattern (`*`→`%`, trailing `$` anchors,
-    * otherwise an implicit trailing `%`; LIKE metacharacters escaped with
-    * `\`). Identical semantics in Spark and DuckDB. */
-  def toLike(pattern: String): String = {
-    val (body, anchored) =
-      if (pattern.endsWith("$")) (pattern.dropRight(1), true) else (pattern, false)
-    val escaped = body.flatMap {
-      case '%' => "\\%"
-      case '_' => "\\_"
-      case '\\' => "\\\\"
-      case '*' => "%"
-      case c => c.toString
-    }
-    if (anchored) escaped else escaped + "%"
-  }
+    selectRules(scanGroups(robotsTxt), userAgent)
 
   /** rules: (host, pattern, allow) with robots-SYNTAX patterns; urls must
     * carry (host, path) plus `idCol`. Adds `allowed` under RFC 9309
@@ -140,7 +95,7 @@ object Robots {
     * The robots→LIKE translation (`*`→`%`, trailing `$` anchor, LIKE
     * metacharacters `%`/`_`/`\` escaped with `\` — percent-encoded paths
     * like `/search?q=%22` are common in real robots.txt) runs as column
-    * expressions mirroring [[toLike]], so the same rule rows evaluate
+    * expressions, so the same rule rows evaluate
     * identically in Spark and in the DuckDB oracle (which must spell the
     * match `LIKE ... ESCAPE '\'` — DuckDB has no default escape char). */
   /** `carryCols` (round 6): extra url-side columns carried through the
@@ -152,8 +107,8 @@ object Robots {
     * source twice that way). */
   def evaluate(urls: DataFrame, rules: DataFrame, idCol: String,
                carryCols: Seq[String] = Nil): DataFrame = {
-    // strip the trailing anchor, escape \ then % then _, THEN *->% — the
-    // same order toLike applies, so inserted escapes are never re-escaped
+    // strip the trailing anchor, escape \ then % then _, THEN *->%, so
+    // inserted escapes are never re-escaped
     val translated = regexp_replace(
       regexp_replace(
         regexp_replace(

@@ -234,7 +234,12 @@ object Similarity extends Serializable {
     * from the vector table's Catalyst size estimate (no extra job): a
     * dim-table-sized corpus takes the zero-shuffle broadcast arm, anything
     * bigger joins the vectors onto the pairs. Both arms run the same JVM
-    * fold kernel per row, so results are bit-identical either way. */
+    * fold kernel per row, so results are bit-identical either way.
+    *
+    * Every vector of an id counts: an id that `emb` holds more than once
+    * scores each of its vectors, so a pair gives one row per (query
+    * vector, candidate vector), as an inner join of the pairs with `emb`
+    * on each endpoint does. Both arms follow this rule. */
   def scorePairs(pairs: DataFrame, emb: DataFrame, idCol: String,
                  vecCol: String): DataFrame = {
     val bytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -271,19 +276,21 @@ object Similarity extends Serializable {
     }
   }
 
-  /** Exact cosine for candidate (qid, pid) pairs via a broadcast id→vector
-    * map and the JVM fold kernels ([[graft.functions.VecKernels.dot]]/
-    * `norm`), ~50× faster than evaluating a `zip_with`/`aggregate` HOF per
-    * pair. A pair with a null id or an id that `emb` lacks is dropped, as
-    * [[scorePairsJoin]]'s inner joins drop it. Driver-memory bound by
-    * construction — only [[scorePairs]] should call it, which routes
-    * anything past [[BroadcastVecBytes]] to [[scorePairsJoin]]. */
+  /** Exact cosine for candidate (qid, pid) pairs via a broadcast map from
+    * each id to all of its vectors, each with its norm, and the JVM fold
+    * kernels ([[graft.functions.VecKernels.dot]]/`norm`), ~50× faster than
+    * evaluating a `zip_with`/`aggregate` HOF per pair. A pair with a null
+    * id or an id that `emb` lacks is dropped, and a repeated id scores
+    * every one of its vectors, as [[scorePairsJoin]]'s inner joins do.
+    * Driver-memory bound by construction — only [[scorePairs]] should call
+    * it, which routes anything past [[BroadcastVecBytes]] to
+    * [[scorePairsJoin]]. */
   def scorePairsBroadcast(pairs: DataFrame, emb: DataFrame, idCol: String,
                           vecCol: String): DataFrame = {
     val spark = emb.sparkSession
     val vecs = emb.select(col(idCol).cast("long"), col(vecCol)).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val bc = spark.sparkContext.broadcast(vecs.toMap)
+      .groupMap(_.getLong(0)) { r => val v = r.getSeq[Float](1).toArray; (v, norm(v)) }
+    val bc = spark.sparkContext.broadcast(vecs)
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("pid", org.apache.spark.sql.types.LongType),
@@ -292,16 +299,11 @@ object Similarity extends Serializable {
     val ids = pairs.select(col("qid").cast("long"), col("pid").cast("long")).na.drop()
     ids.mapPartitions { it =>
       val m = bc.value
-      val norms = new java.util.HashMap[Long, java.lang.Double]()
-      def normOf(id: Long, v: Array[Float]): Double = {
-        val cached = norms.get(id)
-        if (cached != null) cached.doubleValue()
-        else { val n = norm(v); norms.put(id, n); n }
-      }
+      val none = Array.empty[(Array[Float], Double)]
       it.flatMap { r =>
         val (q, p) = (r.getLong(0), r.getLong(1))
-        for (qv <- m.get(q); pv <- m.get(p))
-          yield Row(q, p, dot(qv, pv) / (normOf(q, qv) * normOf(p, pv)))
+        for ((qv, qn) <- m.getOrElse(q, none).iterator; (pv, pn) <- m.getOrElse(p, none))
+          yield Row(q, p, dot(qv, pv) / (qn * pn))
       }
     }
   }
@@ -313,7 +315,11 @@ object Similarity extends Serializable {
     * self-join formulation ([[cosineTopK]]), which never collects. The two
     * arms are bit-identical (same left-to-right IEEE754 folds over the
     * same doubles — asserted in SimilaritySpec), so the selection is a
-    * pure plan choice. */
+    * pure plan choice for ids that occur once. A repeated id is not
+    * decided: both arms list each of its vectors as a candidate, but the
+    * join arm ranks all of the id's query vectors in one window (their
+    * rows share `qid`), while [[cosineTopKBroadcast]] ranks each query
+    * vector on its own, from 1, so the arms then give different rows. */
   def cosineTopKAuto(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                      blockCol: Option[String] = None): DataFrame = {
     val bytes = emb.queryExecution.optimizedPlan.stats.sizeInBytes

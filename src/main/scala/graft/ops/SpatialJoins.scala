@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * into an **equi-join on cell id** that Catalyst shuffles/broadcasts like
   * any other key join, followed by an exact refine step:
   *
-  * {{{ points ⋈ polys  ≡  encode(point) = explode(cellsCovering(env(poly))) , then refine }}}
+  * {{{ points ⋈ polys  ≡  encode(point) = explode(cellsCoveringCol(env(poly))) , then refine }}}
   *
   * The point side carries exactly one cell and the polygon side is exploded
   * over its covering cells, so each qualifying pair appears exactly once —

@@ -1,6 +1,7 @@
 package graft.geo
 
 import graft.{PropHelpers, SparkSpec}
+import graft.ops.RefTwins
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -9,6 +10,12 @@ class CellIndexSpec extends SparkSpec with PropHelpers {
 
   val coord: Gen[Long] = Gen.choose(0L, (1L << 28) - 1)
   val lvlGen: Gen[Int] = Gen.choose(0, 28)
+
+  /** the four cells one level below `cell`, the inverse [[parent]] is checked against */
+  def children(cell: Long): Seq[Long] = {
+    val (c, r) = (colDecode(cell) << 1, rowDecode(cell) << 1)
+    cellRange(levelOf(cell) + 1, c, c + 1, r, r + 1).toSeq
+  }
 
   test("interleave round-trips col/row at any level") {
     forAll(coord, coord, lvlGen) { (c0, r0, lvl) =>
@@ -53,7 +60,7 @@ class CellIndexSpec extends SparkSpec with PropHelpers {
     val g = Gen.choose(-2.0e7, 2.0e7)
     forAll(g, g, Gen.choose(0.0, 1e5), Gen.choose(0.0, 1e5), Gen.choose(4, 14)) {
       (x, y, w, h, lvl) =>
-        val cover = ci.cellsCovering(x, y, x + w, y + h, lvl).toSet
+        val cover = RefTwins.cellsCovering(ci, x, y, x + w, y + h, lvl).toSet
         // corners + centre must be covered
         for ((px, py) <- Seq((x, y), (x + w, y), (x, y + h), (x + w, y + h), (x + w / 2, y + h / 2)))
           assert(cover.contains(ci.encode(px, py, lvl)))
@@ -175,7 +182,7 @@ class CellIndexSpec extends SparkSpec with PropHelpers {
     val ci = CellIndex.Unit20
     val inverted = Seq((90000.0, 1000.0, 10000.0, 70000.0), (1000.0, 90000.0, 70000.0, 10000.0),
       (900000.0, 900000.0, 100.0, 100.0))
-    for ((x0, y0, x1, y1) <- inverted) assert(ci.cellsCovering(x0, y0, x1, y1, 8).isEmpty)
+    for ((x0, y0, x1, y1) <- inverted) assert(RefTwins.cellsCovering(ci, x0, y0, x1, y1, 8).isEmpty)
     def check(): Unit = assert(covers(inverted, 8) == Seq.fill(inverted.length)(Seq.empty))
     check()
     withInterpretedEval(check())

@@ -52,23 +52,6 @@ class GeoJsonSpec extends SparkSpec {
     assert(JtsGeo.fromWkb(f0.wkb).getArea == 96.0)
   }
 
-  test("GeoJSONL shard write → read round trip (distributed, no driver collect)") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rows = Seq(
-      (0, "building", JtsGeo.toWkb(JtsGeo.box(1.5, 2.5, 7.25, 9.75))),
-      (1, "road", JtsGeo.toWkb(JtsGeo.box(20, 20, 30, 30))))
-      .toDF("zone_code", "zone_name", "wkb")
-    val dir = java.nio.file.Files.createTempDirectory("gjl").toString + "/out"
-    GeoJson.writeJsonl(rows, dir)
-    val back = GeoJson.readJsonl(spark, dir).collect().sortBy(_.zoneName)
-    assert(back.length == 2)
-    assert(back.map(_.featureId).toSet == Set(0L, 1L))
-    assert(back(0).zoneName == "building" &&
-      JtsGeo.fromWkb(back(0).wkb).equalsExact(JtsGeo.box(1.5, 2.5, 7.25, 9.75)))
-    assert(back(1).props("zone_code") == "1")
-  }
-
   test("MultiLineString and GeometryCollection parse and round-trip (GDAL layers carry both)") {
     val gf = JtsGeo.factory
     val doc2 =

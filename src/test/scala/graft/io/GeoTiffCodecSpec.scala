@@ -293,11 +293,21 @@ class GeoTiffCodecSpec extends AnyFunSuite {
     }
   }
 
+  /** [[GeoTiff.write]]'s float32 arm (SampleFormat=3) from typed samples,
+    * chunky row-major, as a tile cut from a float raster writes them */
+  def writeFloat(width: Int, height: Int, samples: Array[Float], a: Double, c: Double,
+                 e: Double, f: Double, compression: Int): Array[Byte] = {
+    val raw = java.nio.ByteBuffer.allocate(samples.length * 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    samples.foreach(raw.putFloat)
+    GeoTiff.write(width, height, 1, raw.array(), a, 0, c, 0, e, f, compression,
+      bitsPerSample = 32, sampleFormat = 3)
+  }
+
   test("writeFloat round-trips float32 rasters incl. the affine tags") {
     val (w, h) = (12, 9)
     val vals = Array.tabulate(w * h)(i => (i * 0.125f) - 2f)
     for (comp <- Seq(1, 5, 8)) {
-      val t = GeoTiff.writeFloat(w, h, 1, vals, 0.5, 0, 10.0, 0, -0.5, 99.0, comp)
+      val t = writeFloat(w, h, vals, 0.5, 10.0, -0.5, 99.0, comp)
       val info = GeoTiff.parse(t)
       assert(info.sampleFormat == 3 && info.compression == comp)
       assert(GeoTiff.readWindowFloats(t, info, 0, 0, w, h).toSeq == vals.toSeq)

@@ -71,7 +71,7 @@ class LakeSpec extends SparkSpec {
     // a different stage still runs
     lake.runStage("job1", "stage2")(body())
     assert(bodyRuns == 2)
-    assert(lake.completedStages("job1") == Set("stage1", "stage2"))
+    assert(lake.snapshotIds("job1/stage1").nonEmpty && lake.snapshotIds("job1/stage2").nonEmpty)
   }
 
   /** total size of the parquet part files under `dir` */
@@ -135,7 +135,7 @@ class LakeSpec extends SparkSpec {
     var runs = 0
     val r = lake.runStage("j", "s") { runs += 1; spark.range(0, 10).toDF("id") }
     assert(runs == 0 && r.count() == 10)
-    assert(lake.snapshotIds("j/s") == Seq(0L) && lake.completedStages("j") == Set("s"))
+    assert(lake.snapshotIds("j/s") == Seq(0L))
   }
 
   test("crash before the manifest commit: the rerun runs the body once and succeeds") {
@@ -144,7 +144,7 @@ class LakeSpec extends SparkSpec {
     spark.range(0, 7).toDF("id").write.parquet(s"${lake.root}/j/s/data/snap-0")
     Files.createDirectories(Paths.get(s"${lake.root}/j/s/_meta"))
     Files.write(Paths.get(s"${lake.root}/j/s/_meta/_tmp-crashed.json"), "{\"snap".getBytes("UTF-8"))
-    assert(lake.completedStages("j").isEmpty && lake.readTable("j/s").isEmpty)
+    assert(lake.snapshotIds("j/s").isEmpty && lake.readTable("j/s").isEmpty)
     var runs = 0
     val r = lake.runStage("j", "s") { runs += 1; spark.range(0, 10).toDF("id") }
     assert(runs == 1 && r.count() == 10)
@@ -181,7 +181,7 @@ class LakeSpec extends SparkSpec {
     intercept[IllegalStateException] {
       lake.runStage("j", "s", throw new IllegalStateException("crash")) { spark.range(0, 7).toDF("id") }
     }
-    assert(lake.completedStages("j").isEmpty && lake.readTable("j/s").isEmpty)
+    assert(lake.snapshotIds("j/s").isEmpty && lake.readTable("j/s").isEmpty)
     assert(Files.list(Paths.get(s"${lake.root}/j/s/data")).count() == 1) // the orphan
     var runs = 0
     val r = lake.runStage("j", "s", metaOf("""{"k":2}""")) { runs += 1; spark.range(0, 10).toDF("id") }
@@ -223,6 +223,15 @@ class LakeSpec extends SparkSpec {
     assert(stats.get("v").get("min").asText == "k0" && stats.get("v").get("max").asText == "k9")
   }
 
+  /** the quantized layout read back: (id, codes binary, scale double,
+    * extras…) plus the reconstruction `vec_approx` = code_i · scale */
+  def readQuantizedEmbeddings(path: String) = {
+    val df = spark.read.parquet(path)
+    df.withColumn("vec_approx",
+      transform(graft.ops.RefTwins.bytesToCodes(col("codes")),
+        c => c.cast("double") * col("scale").cast("double")))
+  }
+
   test("quantized embedding layout: round trip, distortion bound, 4x-smaller files") {
     val spark2 = spark
     import spark2.implicits._
@@ -235,7 +244,7 @@ class LakeSpec extends SparkSpec {
     val fPath = s"$dir/float"
     Lake.writeQuantizedEmbeddings(emb, "vec_id", "embedding", qPath)
     emb.write.parquet(fPath)
-    val back = Lake.readQuantizedEmbeddings(spark, qPath)
+    val back = readQuantizedEmbeddings(qPath)
     back.count() shouldBe 2000L
     // reconstruction error within the exact SQ8 bound (double scale at rest)
     val joined = back.join(emb, "vec_id")
@@ -257,7 +266,7 @@ class LakeSpec extends SparkSpec {
     val codesOk = back
       .join(emb.select(col("vec_id"),
         graft.ops.Quantize.sq8Codes(col("embedding")).as("expect")), "vec_id")
-      .where(!(graft.ops.Quantize.bytesToCodes(col("codes")) === col("expect")))
+      .where(!(graft.ops.RefTwins.bytesToCodes(col("codes")) === col("expect")))
       .count()
     codesOk shouldBe 0L
     // the at-rest win is physical: quantized files are ~4x smaller

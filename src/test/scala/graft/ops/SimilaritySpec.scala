@@ -23,6 +23,9 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
   }
 
+  /** [[emb]] behind an RDD, so projections over it run generated code */
+  lazy val embRdd = rddBacked(emb)
+
   def bruteTopK(k: Int): Map[Long, Seq[Long]] = {
     val rows = emb.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     rows.map { case (q, qv) =>
@@ -45,21 +48,34 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosineTopKBroadcast is bit-identical to the windowed column formulation") {
-    val a = Similarity.cosineTopK(emb, "vec_id", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val b = Similarity.cosineTopKBroadcast(emb, "vec_id", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(a == b)
+    def check(): Unit = {
+      val a = Similarity.cosineTopK(embRdd, "vec_id", "embedding", 3)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      val b = Similarity.cosineTopKBroadcast(embRdd, "vec_id", "embedding", 3)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(a == b)
+    }
+    check()
+    withInterpretedEval(check())
   }
 
   test("cosineTopKAuto routes by plan stats; both arms bit-identical") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val auto = Similarity.cosineTopKAuto(emb, "vec_id", "embedding", 3)
-    // tiny table → under the threshold: the broadcast arm, no exchange
+    def hasExchange(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("Exchange")
+    // tiny local table → under the threshold: the broadcast arm, no exchange
     assert(emb.queryExecution.optimizedPlan.stats.sizeInBytes <= Similarity.BroadcastVecBytes)
-    assert(!auto.queryExecution.executedPlan.toString.contains("Exchange"))
-    assert(rows(auto) == rows(Similarity.cosineTopK(emb, "vec_id", "embedding", 3)))
+    assert(!hasExchange(Similarity.cosineTopKAuto(emb, "vec_id", "embedding", 3)))
+    // an RDD has no size estimate → past the threshold: the join arm
+    assert(embRdd.queryExecution.optimizedPlan.stats.sizeInBytes > Similarity.BroadcastVecBytes)
+    def check(): Unit = {
+      val auto = Similarity.cosineTopKAuto(embRdd, "vec_id", "embedding", 3)
+      assert(hasExchange(auto))
+      assert(rows(auto) == rows(Similarity.cosineTopKBroadcast(embRdd, "vec_id", "embedding", 3)))
+    }
+    check()
+    withInterpretedEval(check())
   }
 
   test("annLshBanded recall@3 beats single-table at the same total planes") {
@@ -167,17 +183,21 @@ class SimilaritySpec extends SparkSpec {
   test("scorePairsJoin is bit-identical to scorePairsBroadcast (the scale re-rank arm)") {
     val spark2 = spark
     import spark2.implicits._
-    val pairs = (0 until 200).flatMap(q => Seq(1, 7, 113).map(d => (q.toLong, ((q + d) % 200).toLong)))
-      .toDF("qid", "pid")
-    val viaJoin = Similarity.scorePairsJoin(pairs, emb, "vec_id", "embedding")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val viaBc = Similarity.scorePairsBroadcast(pairs, emb, "vec_id", "embedding")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(viaJoin.keySet == viaBc.keySet)
-    viaJoin.foreach { case (k, c) =>
-      assert(java.lang.Double.doubleToLongBits(c) ==
-        java.lang.Double.doubleToLongBits(viaBc(k)), s"pair $k differs")
+    val pairs = rddBacked((0 until 200).flatMap(q => Seq(1, 7, 113).map(d => (q.toLong, ((q + d) % 200).toLong)))
+      .toDF("qid", "pid"))
+    def check(): Unit = {
+      val viaJoin = Similarity.scorePairsJoin(pairs, embRdd, "vec_id", "embedding")
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      val viaBc = Similarity.scorePairsBroadcast(pairs, embRdd, "vec_id", "embedding")
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      assert(viaJoin.keySet == viaBc.keySet)
+      viaJoin.foreach { case (k, c) =>
+        assert(java.lang.Double.doubleToLongBits(c) ==
+          java.lang.Double.doubleToLongBits(viaBc(k)), s"pair $k differs")
+      }
     }
+    check()
+    withInterpretedEval(check())
   }
 
   test("annIvf list-size salt cap preserves output exactly (pure skew mitigation)") {
@@ -208,9 +228,13 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("id", "v", "blk"))
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val joinArm = rows(Similarity.cosineTopK(df, "id", "v", 3, Some("blk")))
-    joinArm.map(r => (r._1, r._3)) shouldBe Set((1L, 2L), (2L, 1L))
-    rows(Similarity.cosineTopKBroadcast(df, "id", "v", 3, Some("blk"))) shouldBe joinArm
+    def check(): Unit = {
+      val joinArm = rows(Similarity.cosineTopK(df, "id", "v", 3, Some("blk")))
+      joinArm.map(r => (r._1, r._3)) shouldBe Set((1L, 2L), (2L, 1L))
+      rows(Similarity.cosineTopKBroadcast(df, "id", "v", 3, Some("blk"))) shouldBe joinArm
+    }
+    check()
+    withInterpretedEval(check())
   }
 
   test("scorePairs arms drop a pair whose id is not in emb") {
@@ -221,8 +245,32 @@ class SimilaritySpec extends SparkSpec {
       .toDF("qid", "pid"))
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val joinArm = rows(Similarity.scorePairsJoin(pairs, emb, "vec_id", "embedding"))
-    joinArm.map(r => (r._1, r._2)) shouldBe Set((0L, 1L), (3L, 4L))
-    rows(Similarity.scorePairsBroadcast(pairs, emb, "vec_id", "embedding")) shouldBe joinArm
+    def check(): Unit = {
+      val joinArm = rows(Similarity.scorePairsJoin(pairs, embRdd, "vec_id", "embedding"))
+      joinArm.map(r => (r._1, r._2)) shouldBe Set((0L, 1L), (3L, 4L))
+      rows(Similarity.scorePairsBroadcast(pairs, embRdd, "vec_id", "embedding")) shouldBe joinArm
+    }
+    check()
+    withInterpretedEval(check())
+  }
+
+  test("scorePairs arms keep every vector of a repeated id: one row per vector pair") {
+    val spark2 = spark
+    import spark2.implicits._
+    // id 2 holds two vectors; (2, 2) pairs each of them with both
+    val vecs = rddBacked(Seq((1L, Array(1f, 0f)), (2L, Array(1f, 1f)), (2L, Array(0.5f, 2f)),
+      (3L, Array(3f, 1f))).toDF("id", "v"))
+    val pairs = rddBacked(Seq((1L, 2L), (2L, 1L), (2L, 2L), (1L, 3L)).toDF("qid", "pid"))
+    // a multiset of (qid, pid, cos bits)
+    def rows(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted
+    def check(): Unit = {
+      val joinArm = rows(Similarity.scorePairsJoin(pairs, vecs, "id", "v"))
+      joinArm.map(r => (r._1, r._2)) shouldBe Seq((1L, 2L), (1L, 2L), (1L, 3L), (2L, 1L), (2L, 1L),
+        (2L, 2L), (2L, 2L), (2L, 2L), (2L, 2L))
+      rows(Similarity.scorePairsBroadcast(pairs, vecs, "id", "v")) shouldBe joinArm
+    }
+    check()
+    withInterpretedEval(check())
   }
 }

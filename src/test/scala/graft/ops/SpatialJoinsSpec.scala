@@ -7,6 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, Geometry, Polygon}
 import org.locationtech.jts.geom.prep.PreparedGeometryFactory
+import org.locationtech.jts.io.WKTReader
 import org.scalacheck.Gen
 
 class SpatialJoinsSpec extends SparkSpec with PropHelpers {
@@ -15,6 +16,8 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
   lazy val pages = WebPages.pages(spark, 2000, 8)
   lazy val pts = WebPages.features(pages).select(col("id") * 10 + col("f") as "pid", col("x"), col("y"))
   lazy val zones = WebPages.zones(spark, 64)
+
+  def fromWkt(s: String): Geometry = new WKTReader(JtsGeo.factory).read(s)
 
   /** brute-force oracle: nested-loop PIP on collected rows */
   lazy val expected: Set[(Long, Long)] = {
@@ -115,16 +118,16 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
   test("both PIP arms equal JTS covers on vertices, edges, holes, multipolygons and rectangles") {
     val polys: Seq[(Long, Geometry)] = Seq(
       1L -> JtsGeo.box(1000, 1000, 1010, 1020), // JTS's isRectangle shortcut
-      2L -> JtsGeo.fromWkt("POLYGON ((1100 1000, 1140 1000, 1140 1040, 1120 1050, 1100 1040, 1100 1000), " +
+      2L -> fromWkt("POLYGON ((1100 1000, 1140 1000, 1140 1040, 1120 1050, 1100 1040, 1100 1000), " +
         "(1110 1010, 1110 1030, 1130 1030, 1130 1010, 1110 1010))"),
-      3L -> JtsGeo.fromWkt("MULTIPOLYGON (((1200 1000, 1230 1000, 1215 1025, 1200 1000)), " +
+      3L -> fromWkt("MULTIPOLYGON (((1200 1000, 1230 1000, 1215 1025, 1200 1000)), " +
         "((1240 1000, 1270 1000, 1270 1030, 1260 1030, 1260 1010, 1250 1010, 1250 1030, 1240 1030, 1240 1000)))"),
-      4L -> JtsGeo.fromWkt("POLYGON ((1300.5 1000.25, 1330.75 1010.5, 1320.125 1040.875, 1295.3 1030.1, 1300.5 1000.25))"),
+      4L -> fromWkt("POLYGON ((1300.5 1000.25, 1330.75 1010.5, 1320.125 1040.875, 1295.3 1030.1, 1300.5 1000.25))"),
       5L -> JtsGeo.box(1005, 1005, 1050, 1015), // overlaps 1: two hits per point
       // invalid: holes reaching past the shell, which alone bounds JTS's envelope
-      6L -> JtsGeo.fromWkt("POLYGON ((1400 1000, 1420 1000, 1420 1020, 1400 1020, 1400 1000), " +
+      6L -> fromWkt("POLYGON ((1400 1000, 1420 1000, 1420 1020, 1400 1020, 1400 1000), " +
         "(1410 1005, 1430 1005, 1430 1015, 1410 1015, 1410 1005), (1435 1000, 1455 1000, 1455 1020, 1435 1000))"),
-      7L -> JtsGeo.fromWkt("POLYGON ((1500 1010, 1510 1000, 1520 1010, 1510 1020, 1500 1010), " +
+      7L -> fromWkt("POLYGON ((1500 1010, 1510 1000, 1520 1010, 1510 1020, 1500 1010), " +
         "(1515 1001, 1530 1001, 1530 1019, 1515 1019, 1515 1001))"),
       8L -> JtsGeo.box(1540, 990, 1550, 1030)) // widens the grid past 6 and 7
     val onRings = polys.flatMap { case (_, g) => ringPoints(g) }
@@ -328,7 +331,7 @@ class SpatialJoinsSpec extends SparkSpec with PropHelpers {
     val s = spark
     import s.implicits._
     val pts = Seq((0L, 1005.0, 1005.0)).toDF("pid", "x", "y")
-    for (bad <- Seq(JtsGeo.point(1005, 1005), JtsGeo.fromWkt("LINESTRING (1000 1000, 1010 1010)"))) {
+    for (bad <- Seq(JtsGeo.point(1005, 1005), fromWkt("LINESTRING (1000 1000, 1010 1010)"))) {
       val polys = layer(Seq(1L -> JtsGeo.box(1000, 1000, 1010, 1010), 7L -> bad))
       val e = intercept[IllegalArgumentException](SpatialJoins.pointInPolygonBroadcastFast(pts, polys))
       assert(e.getMessage.contains("poly_id 7"))

@@ -36,7 +36,7 @@ class BatchPipelineSpec extends SparkSpec {
     assert(out.categories.count() == 1) // "building" deduped by name
 
     // one stage per raster checkpointed; rerun must read back, not recompute
-    assert(lake.completedStages("job") == Set("rA_annotations", "rB_annotations"))
+    assert(Seq("rA", "rB").forall(r => lake.snapshotIds(s"job/${r}_annotations").nonEmpty))
     val out2 = BatchPipeline.run(lake, "job", pairs, p)
     assert(out2.annotations.collect().map(a => (a.id, a.imageId, a.area)).toSet ==
       out.annotations.collect().map(a => (a.id, a.imageId, a.area)).toSet)
@@ -54,7 +54,7 @@ class BatchPipelineSpec extends SparkSpec {
     val lake = freshLake()
     val e = intercept[IllegalArgumentException](BatchPipeline.run(lake, "job", pairs, p))
     e.getMessage should include("rA")
-    lake.completedStages("job") shouldBe empty
+    Seq("rA", "rB").map(r => lake.snapshotIds(s"job/${r}_annotations")) shouldBe Seq(Nil, Nil)
   }
 
   test("every job of the concurrent stages carries the caller's job group") {
@@ -66,7 +66,7 @@ class BatchPipelineSpec extends SparkSpec {
     val small = GeojsonToCoco.Params(tileWidth = 20, tileHeight = 20)
     val (out, inGroup, all) =
       JobCounter.countAll(spark.sparkContext)(BatchPipeline.run(lake, "job", pairs, small))
-    lake.completedStages("job").size shouldBe 4
+    assert((0 until 4).forall(i => lake.snapshotIds(s"job/r${i}_annotations").nonEmpty))
     inGroup should be >= 8 // at least the 4 category lists and the 4 annotation writes
     inGroup shouldBe all
     out.annotations.count() shouldBe 16
@@ -86,7 +86,8 @@ class BatchPipelineSpec extends SparkSpec {
     val lake = freshLake()
     intercept[org.apache.spark.SparkException](BatchPipeline.run(lake, "job",
       Seq((raster("bad", 1000.0), bad), (raster("good", 5000.0), features(5000.0))), p))
-    lake.completedStages("job") shouldBe Set("good_annotations")
+    lake.snapshotIds("job/good_annotations") should not be empty
+    lake.snapshotIds("job/bad_annotations") shouldBe empty
   }
 
   test("a stage committed without images and categories is refused on resume, naming it") {

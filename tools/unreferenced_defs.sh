@@ -11,12 +11,16 @@
 # of the name is not a use (`var dot = 0.0` does not call `def dot`; later
 # uses of such a local still count). `override def`s and `def main` are
 # skipped: Spark and the JVM call them, not Scala code in the tree. Each
-# line gives the definition site and the number of lines in src/test/scala
-# that name the def:
+# line gives the definition site, the number of lines in src/test/scala
+# that name the def, and the COVERAGE.md line of the first table row that
+# names the def as a whole word and cites a reference source line
+# (`<file>.py:<line>`), or `none` when no row does:
 #
-#   <file>:<line> <name> tests=<n>
+#   <file>:<line> <name> tests=<n> coverage=<line>|none
 #
-# and a last line `<n> unreferenced defs` with the number of lines above.
+# and a last line `<n> unreferenced defs, <m> without a COVERAGE.md row`.
+# It exits 1 when m > 0: a def that no main code calls must serve a
+# reference capability that COVERAGE.md names.
 #
 # Usage: tools/unreferenced_defs.sh   (from anywhere inside the repo)
 set -u
@@ -25,6 +29,7 @@ cd "$(dirname "$0")/.."
 MAIN=src/main/scala
 CALLERS=(src/main/scala perfbench/src)
 TESTS=src/test/scala
+COVERAGE=COVERAGE.md
 
 # lines under the given trees that name $1, comment lines dropped
 code_lines() {
@@ -60,6 +65,9 @@ grep -rnE '^[[:space:]]*((private|protected)(\[[A-Za-z.]+\])? |final |implicit |
         | grep -ow "$name" | wc -l)
       [ "$uses" -gt "$defs" ] && continue
       tests=$(code_lines "$name" "$TESTS" | wc -l)
-      echo "$site $name tests=$tests"
+      row=$(grep -nw -- "$name" "$COVERAGE" | grep -E '^[0-9]+:\|' \
+        | grep -E '[A-Za-z0-9_]+\.py:[0-9]+' | head -1 | cut -d: -f1)
+      echo "$site $name tests=$tests coverage=${row:-none}"
     done \
-  | awk '{ print } END { print NR " unreferenced defs" }'
+  | awk '{ print } / coverage=none$/ { bare++ }
+      END { print NR " unreferenced defs, " bare + 0 " without a COVERAGE.md row"; exit bare > 0 }'
